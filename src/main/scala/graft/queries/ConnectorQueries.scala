@@ -105,14 +105,11 @@ object ConnectorQueries {
       |FROM nation
       |ORDER BY n_nationkey""".stripMargin
 
-  /** OFFSET-pushdown pagination (r14, SURVEY §2.1 scan surface): supplier
+  /** Pagination over an excel scan (SURVEY §2.1 scan surface): supplier
     * written key-sorted into ONE workbook, then page 2 read back with
-    * `.offset(5).limit(10)` — the single-file single-sheet shape where
-    * the scan accepts complete OFFSET pushdown and skips the first 5
-    * data rows before any cell conversion (`ExcelConnectorSpec` pins the
-    * plan; this gate pins the VALUES against LIMIT/OFFSET in DuckDB).
-    * Were the pushdown ever declined, Spark applies the same offset
-    * above the scan — the gate is robust, the spec is the plan pin. */
+    * `.offset(5).limit(10)`. The scan does not take the OFFSET; Spark's
+    * own offset/limit operators run above it over the workbook's row
+    * order. The gate checks their VALUES against LIMIT/OFFSET in DuckDB. */
   def excelOffsetPage(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val supplier = spark.read.parquet(s"$dir/supplier.parquet")
@@ -133,17 +130,14 @@ object ConnectorQueries {
       |ORDER BY s_suppkey
       |LIMIT 10 OFFSET 5""".stripMargin
 
-  /** Partial TOP-N pushdown (r16, SURVEY §2.1 scan surface): supplier
+  /** TOP-N over an excel scan (SURVEY §2.1 scan surface): supplier
     * written UNSORTED into a sharded 4-file workbook directory so no
     * single partition holds the answer, then the 12 best rows read back
-    * via `ORDER BY s_acctbal DESC, s_suppkey LIMIT 12`. The scan caps
-    * every partition at its own 12 best rows in a bounded heap
-    * (`ExcelTopN`, `PushedTopN=` in the plan) while Spark keeps the
-    * global TakeOrderedAndProject — partial pushdown, so the gate stays
-    * exact even if the pushdown is ever declined. The tiebreak on the
-    * unique s_suppkey makes the oracle deterministic. `ExcelTopNSpec`
-    * pins the plan shape + null ordering; this gate pins the VALUES
-    * against DuckDB's ORDER BY ... LIMIT. */
+    * via `ORDER BY s_acctbal DESC, s_suppkey LIMIT 12`. Spark's own
+    * TakeOrderedAndProject runs above the multi-partition scan. The
+    * tiebreak on the unique s_suppkey makes the oracle deterministic.
+    * The connector's top-N spec pins null ordering; this gate checks
+    * the VALUES against DuckDB's ORDER BY ... LIMIT. */
   def excelTopN(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val supplier = spark.read.parquet(s"$dir/supplier.parquet")
@@ -227,11 +221,11 @@ object ConnectorQueries {
       |FROM customer
       |ORDER BY c_custkey""".stripMargin
 
-  /** Columnar connector path (SURVEY §2.1 row 2): part pushed through a
-    * sharded write and read back on the `enableArrow=true` fast path —
-    * cells decode straight into OnHeapColumnVectors / ColumnarBatches,
-    * composed with row-range splits, hash-checked against the source
-    * table. Converts the columnar scan from spec-only to oracle-checked. */
+  /** `enableArrow=true` read (SURVEY §2.1 row 2): part pushed through a
+    * sharded write and read back with the reference's Arrow option set,
+    * composed with row-range splits. The option is accepted and ignored,
+    * so this is the row scan under Spark's own sort; the gate checks its
+    * VALUES against the source table. */
   def excelArrowRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val part = spark.read.parquet(s"$dir/part.parquet")

@@ -148,9 +148,8 @@ class ExcelMicroBatchStream(fullSchema: StructType, schema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // offset is batch-only (cross-batch row order is meaningless), but a
-    // pushed sample must keep sampling here too — if the host engine ever
-    // pushes TABLESAMPLE into a streaming scan, dropping it silently
+    // a pushed sample must keep sampling here too — if the host engine
+    // ever pushes TABLESAMPLE into a streaming scan, dropping it silently
     // would return unsampled rows with the Sample node already removed
     ExcelPartitionReaderFactory(fullSchema, schema, opts, limit,
       new SerializableConfiguration(conf), filters, sample = sample)

@@ -10,34 +10,25 @@ import org.apache.spark.util.SerializableConfiguration
 /** Batch scan: one input partition per `.xlsx` file — preserving the
   * reference's observable contract that a directory of N files reads as N
   * partitions (`/root/reference/tests/test_excel_connector.py:162-187`).
-  * Supports column pruning ([[SupportsPushDownRequiredColumns]]) and limit
-  * pushdown ([[SupportsPushDownLimit]]); both stop per-cell decode work the
-  * reference always pays (it parses whole files with pandas,
-  * connector.py:185-200).
+  * Every batch scan but the `count(*)` tag scan runs one row reader,
+  * [[ExcelPartitionReader]]. Pushdown is limited to what saves reader
+  * work: column pruning, pushed filters (file/sheet pruning plus in-reader
+  * evaluation), the limit cap, TABLESAMPLE and a lone COUNT(*). Sorts,
+  * offsets and other aggregates stay Spark operators above the scan.
   */
 class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with SupportsPushDownLimit
-    with SupportsPushDownTopN
-    with SupportsPushDownOffset
     with SupportsPushDownTableSample
     with SupportsPushDownAggregates {
 
   private var requiredSchema: StructType = fullSchema
   private var limit: Int = -1
-  private var offset: Int = 0
-  // the single file the accepted OFFSET was planned against — frozen at
-  // pushdown time so a file landing in the directory between optimization
-  // and execution can't fan the scan out to N partitions that would each
-  // drop `offset` rows (plan-time listing snapshot, the same semantics
-  // Spark's own file sources give their file index)
-  private var offsetFile: Option[String] = None
   private var sample: Option[ExcelSample] = None
-  private var topN: Option[ExcelTopN] = None
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var pushedAggs: Seq[PushedExcelAgg] = Nil
+  private var countStar = false
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     this.requiredSchema = requiredSchema
@@ -64,78 +55,6 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     false // partial: each partition still caps rows, Spark re-applies the limit
   }
 
-  /** TOP-N pushdown, PARTIAL: each partition keeps only its own `limit`
-    * best rows under the pushed ordering in a bounded heap (state is n
-    * rows, independent of partition size), and Spark retains the global
-    * TakeOrderedAndProject — so correctness never depends on cross-
-    * partition order, while emit/convert work drops from partition-size
-    * to n. This is the order-by analogue of the partial `pushLimit`
-    * above: an `ORDER BY col LIMIT n` over a TB of sheets decodes
-    * everything (filter/sample still see every row) but ships only
-    * n·partitions rows into the sort. Declines non-column sort keys,
-    * unorderable types, the columnar path, and scans already claimed by
-    * aggregates or an accepted OFFSET (the reader's offset skip is
-    * defined on raw sheet order, not sorted order). */
-  override def pushTopN(orders: Array[
-      org.apache.spark.sql.connector.expressions.SortOrder],
-      limit: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NamedReference,
-      NullOrdering, SortDirection}
-    if (limit <= 0 || opts.enableArrow || pushedAggs.nonEmpty || offset > 0)
-      return false
-    val keys = orders.toSeq.map { so =>
-      so.expression() match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          val name = nr.fieldNames()(0)
-          fullSchema.fields.find(_.name == name)
-            .filter(f => ExcelTopN.orderable(f.dataType))
-            .map(_ => ExcelSortKey(name,
-              so.direction() == SortDirection.DESCENDING,
-              so.nullOrdering() == NullOrdering.NULLS_LAST))
-        case _ => None
-      }
-    }
-    if (keys.exists(_.isEmpty)) return false
-    topN = Some(ExcelTopN(keys.map(_.get), limit))
-    true
-  }
-
-  override def isPartiallyPushed(): Boolean = true
-
-  /** OFFSET pushdown is COMPLETE when accepted (Spark removes the Offset
-    * operator), so accept ONLY when this scan provably plans exactly one
-    * partition whose output order is the sheet's dense row order: a
-    * single listed file, one sheet, no row-range splits, no columnar
-    * batches, and no filters anywhere (Spark offers pushOffset only with
-    * no Filter between Offset and the relation; ours all stay post-scan,
-    * so a filtered query never reaches here — the guard is defensive).
-    * The reader then skips the first `offset` data rows without
-    * converting or emitting them. Multi-file scans decline: cross-
-    * partition row order is not defined, exactly why generic file
-    * sources don't push OFFSET at all. */
-  override def pushOffset(offset: Int): Boolean = {
-    // sample.isEmpty: Spark pushes TABLESAMPLE before OFFSET, and the
-    // reader applies the offset to raw PRE-sample rows — accepting both
-    // would skip `offset` raw rows where SQL semantics demand `offset`
-    // SAMPLED rows. One of the two must stay an operator; sample won.
-    if (opts.allSheets || opts.maxRowsPerPartition.nonEmpty ||
-      opts.enableArrow || pushed.nonEmpty || pushedAggs.nonEmpty ||
-      sample.nonEmpty || topN.nonEmpty) return false
-    val single =
-      try {
-        val conf = SparkSession.active.sessionState.newHadoopConf()
-        ExcelFiles.list(opts.path, conf, opts.recursiveFileLookup,
-          opts.xlsxOnly) match {
-          case Seq(only) => Some(only)
-          case _ => None
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    single match {
-      case Some(f) => this.offset = offset; this.offsetFile = Some(f); true
-      case None => false
-    }
-  }
-
   /** TABLESAMPLE pushdown (complete): each partition keeps a row iff a
     * uniform draw lands in [lower, upper) — exactly the Bernoulli
     * semantics of Spark's own `Sample` operator, evaluated BEFORE cell
@@ -143,172 +62,46 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     * sequence is seeded per (seed, file, startRow), so task retries and
     * repeated actions over the same scan reproduce the same sample.
     * Declines replacement sampling (Poisson multiplicities don't fit a
-    * keep/drop reader loop) and the columnar path. Sampling composes
-    * per-partition, so multi-file directories and row-range splits all
-    * qualify — unlike OFFSET, no cross-partition order is involved. */
+    * keep/drop reader loop). Sampling composes per-partition, so
+    * multi-file directories and row-range splits all qualify. */
   override def pushTableSample(lowerBound: Double, upperBound: Double,
       withReplacement: Boolean, seed: Long): Boolean = {
-    // offset == 0 is defensive (Spark pushes sample first; see pushOffset)
-    if (withReplacement || opts.enableArrow || pushedAggs.nonEmpty ||
-      offset > 0) return false
+    if (withReplacement || countStar) return false
     sample = Some(ExcelSample(lowerBound, upperBound, seed))
     true
   }
 
-  /** Unfiltered, ungrouped COUNT(*)/MIN/MAX are answered in-scan — a pure
-    * count by an XML tag scan (zero cell decode), MIN/MAX (optionally
-    * beside COUNT) by a single pass that decodes ONLY the referenced
-    * columns and emits one partial row per partition. Partial pushdown
-    * (supportCompletePushDown=false): Spark merges the per-file partials,
-    * so multi-file directories and AQE behave normally. */
+  /** An unfiltered, ungrouped, lone COUNT(*) is answered by an XML tag
+    * scan (zero cell decode). Partial pushdown
+    * (supportCompletePushDown=false): Spark sums the per-file counts, so
+    * multi-file directories and AQE behave normally. Every other
+    * aggregate runs in Spark above the pruned row scan. */
   override def supportCompletePushDown(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = false
 
   override def pushAggregation(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    import org.apache.spark.sql.connector.expressions.NamedReference
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    // a pushed filter means rows are conditionally kept — aggregates must
+    // a pushed filter means rows are conditionally kept — the count must
     // then come from the row reader (Spark only offers the aggregate when
     // it pushed all filters, but stay defensive). Multi-sheet reads fall
-    // back to the row reader (`_sheet` may be referenced; per-sheet scans
-    // would need the same probe anyway).
+    // back to the row reader.
     if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty || limit >= 0 ||
-      offset > 0 || sample.nonEmpty || opts.allSheets) return false
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
-      e match {
-        case nr: NamedReference if nr.fieldNames().length == 1 =>
-          Some(nr.fieldNames()(0)).filter(n => fullSchema.fieldNames.contains(n))
-        case _ => None
-      }
-    val resolved: Seq[Option[PushedExcelAgg]] =
-      agg.aggregateExpressions.toSeq.map {
-        case _: CountStar => Some(PushedCountStar)
-        case m: Min => colOf(m.column).map(PushedMin)
-        case m: Max => colOf(m.column).map(PushedMax)
-        case _ => None
-      }
-    if (resolved.nonEmpty && resolved.forall(_.isDefined)) {
-      pushedAggs = resolved.map(_.get)
-      true
-    } else false
+      sample.nonEmpty || opts.allSheets) return false
+    countStar = agg.aggregateExpressions.toSeq match {
+      case Seq(_: org.apache.spark.sql.connector.expressions.aggregate.CountStar) => true
+      case _ => false
+    }
+    countStar
   }
 
-  override def build(): Scan = pushedAggs match {
-    case Nil =>
-      new ExcelScan(fullSchema, requiredSchema, opts, limit, pushed, offset,
-        sample, offsetFile, topN)
-    case Seq(PushedCountStar) => new ExcelCountScan(opts) // tag-scan fast path
-    case aggs => new ExcelAggScan(fullSchema, opts, aggs)
-  }
+  override def build(): Scan =
+    if (countStar) new ExcelCountScan(opts) // tag-scan fast path
+    else new ExcelScan(fullSchema, requiredSchema, opts, limit, pushed, sample)
 }
 
 /** A pushed Bernoulli TABLESAMPLE: keep a row iff a uniform draw lands
   * in [lower, upper). */
 case class ExcelSample(lower: Double, upper: Double, seed: Long)
-
-/** One pushed sort key: column name + Spark SortOrder semantics. */
-case class ExcelSortKey(name: String, descending: Boolean, nullsLast: Boolean)
-
-/** A pushed PARTIAL top-N: each partition emits only its `n` best rows
-  * under `keys`; Spark keeps the global sort+limit. */
-case class ExcelTopN(keys: Seq[ExcelSortKey], n: Int)
-
-object ExcelTopN {
-  import org.apache.spark.sql.types._
-
-  /** Types the per-partition heap can order — exactly the set the excel
-    * schema inference produces. */
-  def orderable(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | DoubleType | BooleanType | StringType |
-      DateType | TimestampType => true
-    case _ => false
-  }
-
-  /** Total order on output rows matching Spark's SortOrder semantics for
-    * the pushed keys. Ties compare equal — partial pushdown permits any
-    * n-subset of tied boundary rows, since Spark re-sorts globally. */
-  def rowOrdering(schema: StructType,
-      keys: Seq[ExcelSortKey]): Ordering[InternalRow] = {
-    val cmps: Array[(InternalRow, InternalRow) => Int] = keys.toArray.map {
-      k =>
-        val i = schema.fieldIndex(k.name)
-        val dt = schema(i).dataType
-        (a: InternalRow, b: InternalRow) => {
-          val an = a.isNullAt(i)
-          val bn = b.isNullAt(i)
-          if (an && bn) 0
-          else if (an) { if (k.nullsLast) 1 else -1 }
-          else if (bn) { if (k.nullsLast) -1 else 1 }
-          else {
-            val c = dt match {
-              case IntegerType | DateType =>
-                java.lang.Integer.compare(a.getInt(i), b.getInt(i))
-              case LongType | TimestampType =>
-                java.lang.Long.compare(a.getLong(i), b.getLong(i))
-              case DoubleType =>
-                java.lang.Double.compare(a.getDouble(i), b.getDouble(i))
-              case BooleanType =>
-                java.lang.Boolean.compare(a.getBoolean(i), b.getBoolean(i))
-              case StringType =>
-                a.getUTF8String(i).compareTo(b.getUTF8String(i))
-              case other => throw new IllegalStateException(
-                s"unorderable pushed top-N key type: $other") // guarded at push
-            }
-            if (k.descending) -c else c
-          }
-        }
-    }
-    (a: InternalRow, b: InternalRow) => {
-      var r = 0
-      var i = 0
-      while (r == 0 && i < cmps.length) { r = cmps(i)(a, b); i += 1 }
-      r
-    }
-  }
-}
-
-/** Bounds a partition's output to its own top-n rows under the pushed
-  * ordering: a size-n max-heap absorbs the underlying reader's stream
-  * (rows must be copied — the inner reader may reuse buffers), then
-  * replays in heap order. Emitted order is deliberately arbitrary:
-  * Spark's retained TakeOrderedAndProject imposes the final order, this
-  * wrapper only caps what reaches it. Heap state is n rows regardless of
-  * partition size. */
-class TopNPartitionReader(under: PartitionReader[InternalRow],
-    schema: StructType, topN: ExcelTopN)
-    extends PartitionReader[InternalRow] {
-  private var it: Iterator[InternalRow] = null
-  private var current: InternalRow = _
-
-  private def drain(): Iterator[InternalRow] = {
-    val ord = ExcelTopN.rowOrdering(schema, topN.keys)
-    // PriorityQueue dequeues the MAX per `ord`: head is the worst kept
-    // row, replaced whenever a strictly better one arrives
-    val heap = new scala.collection.mutable.PriorityQueue[InternalRow]()(ord)
-    while (under.next()) {
-      val r = under.get().copy()
-      if (heap.size < topN.n) heap.enqueue(r)
-      else if (ord.lt(r, heap.head)) { heap.dequeue(); heap.enqueue(r) }
-    }
-    heap.iterator
-  }
-
-  override def next(): Boolean = {
-    if (it == null) it = drain()
-    if (it.hasNext) { current = it.next(); true } else false
-  }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit = under.close()
-}
-
-/** An aggregate the excel scan can answer itself. */
-sealed trait PushedExcelAgg
-case object PushedCountStar extends PushedExcelAgg
-case class PushedMin(col: String) extends PushedExcelAgg
-case class PushedMax(col: String) extends PushedExcelAgg
 
 /** Scan produced when count(*) was pushed: one partition per file, each
   * emitting a single row with the file's dense row count (exact tag scan
@@ -367,112 +160,10 @@ case class ExcelCountReaderFactory(opts: ExcelOptions,
   }
 }
 
-/** Scan produced when MIN/MAX (± COUNT(*)) were pushed: one partial row
-  * per partition, decoding ONLY the referenced columns — column pruning
-  * and aggregation collapse into the scan, so a `SELECT min(a), max(b)`
-  * over a wide workbook never builds full rows. Extremes are accumulated
-  * with Spark's own per-type interpreted ordering, so in-scan results
-  * agree exactly with the engine's final merge. */
-class ExcelAggScan(fullSchema: StructType, opts: ExcelOptions,
-    aggs: Seq[PushedExcelAgg]) extends Scan with Batch {
-
-  private[excel] val referenced: Seq[String] = aggs.collect {
-    case PushedMin(c) => c
-    case PushedMax(c) => c
-  }.distinct
-
-  override def readSchema(): StructType = StructType(aggs.map {
-    case PushedCountStar =>
-      org.apache.spark.sql.types.StructField("count_star",
-        org.apache.spark.sql.types.LongType, nullable = false)
-    case PushedMin(c) =>
-      org.apache.spark.sql.types.StructField(s"min($c)",
-        fullSchema(c).dataType, nullable = true)
-    case PushedMax(c) =>
-      org.apache.spark.sql.types.StructField(s"max($c)",
-        fullSchema(c).dataType, nullable = true)
-  })
-
-  override def description(): String = {
-    val rendered = aggs.map {
-      case PushedCountStar => "COUNT(*)"
-      case PushedMin(c) => s"MIN($c)"
-      case PushedMax(c) => s"MAX($c)"
-    }
-    s"ExcelScan path=${opts.pathOpt.getOrElse("?")} " +
-      s"PushedAggregation=[${rendered.mkString(", ")}]"
-  }
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    ExcelSplitPlanner.plan(
-      ExcelFiles.list(opts.path, conf, opts.recursiveFileLookup,
-      opts.xlsxOnly), opts, conf)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    ExcelAggReaderFactory(fullSchema, StructType(referenced.map(fullSchema(_))),
-      opts, conf, aggs)
-  }
-}
-
-case class ExcelAggReaderFactory(fullSchema: StructType, readFields: StructType,
-    opts: ExcelOptions, conf: SerializableConfiguration,
-    aggs: Seq[PushedExcelAgg]) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[ExcelInputPartition]
-    new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = !done && { done = true; true }
-      override def get(): InternalRow = {
-        val inner = new ExcelPartitionReader(p.filePath, fullSchema,
-          readFields, opts, -1, conf.value,
-          startRow = p.startRow, endRowExcl = p.endRowExcl, sheetOverride = p.sheet)
-        val orderings = readFields.fields.map(f =>
-          org.apache.spark.sql.graftbridge.ColumnBridge
-            .interpretedOrdering(f.dataType))
-        val mins = new Array[Any](readFields.length)
-        val maxs = new Array[Any](readFields.length)
-        var count = 0L
-        try {
-          while (inner.next()) {
-            val row = inner.get()
-            count += 1L
-            var j = 0
-            while (j < readFields.length) {
-              val v = row.get(j, readFields.fields(j).dataType)
-              if (v != null) { // SQL MIN/MAX ignore nulls
-                if (mins(j) == null || orderings(j).compare(v, mins(j)) < 0)
-                  mins(j) = v
-                if (maxs(j) == null || orderings(j).compare(v, maxs(j)) > 0)
-                  maxs(j) = v
-              }
-              j += 1
-            }
-          }
-        } finally inner.close()
-        val out = aggs.map {
-          case PushedCountStar => count.asInstanceOf[Any]
-          case PushedMin(c) => mins(readFields.fieldIndex(c))
-          case PushedMax(c) => maxs(readFields.fieldIndex(c))
-        }.toArray
-        new GenericInternalRow(out)
-      }
-      override def close(): Unit = ()
-    }
-  }
-}
-
 class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     opts: ExcelOptions, limit: Int,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    offset: Int = 0, sample: Option[ExcelSample] = None,
-    offsetFile: Option[String] = None, topN: Option[ExcelTopN] = None)
+    sample: Option[ExcelSample] = None)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
 
@@ -569,11 +260,6 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     s"ExcelScan path=${opts.pathOpt.getOrElse("?")} sheet=${opts.sheetName} " +
       s"columns=[${requiredSchema.fieldNames.mkString(",")}]" +
       (if (limit >= 0) s" limit=$limit" else "") +
-      topN.fold("")(t => s" PushedTopN=[${t.keys.map(k =>
-        k.name + (if (k.descending) " DESC" else " ASC") +
-          (if (k.nullsLast) " NULLS LAST" else " NULLS FIRST"))
-        .mkString(",")} n=${t.n}]") +
-      (if (offset > 0) s" PushedOffset=$offset" else "") +
       sample.fold("")(s =>
         s" PushedSample=[${s.lower},${s.upper},seed=${s.seed}]") +
       (if (filters.nonEmpty) s" PushedFilters=[${filters.mkString(", ")}]" else "")
@@ -586,14 +272,6 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
       checkpointLocation, filters, limit, sample)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    // accepted OFFSET: the scan is frozen to the single file the builder
-    // listed at pushdown time — a file landing in the directory between
-    // optimization and execution must not fan this scan out to N
-    // partitions that would EACH drop `offset` rows (the Offset operator
-    // is already gone from the plan)
-    offsetFile.foreach { f =>
-      return Array(ExcelInputPartition(f))
-    }
     val conf = SparkSession.active.sessionState.newHadoopConf()
     val listed = ExcelFiles.list(opts.path, conf, opts.recursiveFileLookup,
       opts.xlsxOnly)
@@ -617,7 +295,7 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     val conf = new SerializableConfiguration(
       SparkSession.active.sessionState.newHadoopConf())
     ExcelPartitionReaderFactory(fullSchema, requiredSchema, opts, limit, conf,
-      filters, offset, sample, topN)
+      filters, sample)
   }
 }
 
@@ -795,36 +473,14 @@ case class ExcelPartitionReaderFactory(fullSchema: StructType,
     requiredSchema: StructType,
     opts: ExcelOptions, limit: Int, conf: SerializableConfiguration,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    offset: Int = 0, sample: Option[ExcelSample] = None,
-    topN: Option[ExcelTopN] = None)
+    sample: Option[ExcelSample] = None)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ExcelInputPartition]
-    val base = new ExcelPartitionReader(p.filePath,
+    new ExcelPartitionReader(p.filePath,
       fullSchema, requiredSchema, opts, limit, conf.value, filters,
-      p.startRow, p.endRowExcl, p.sheet, offset, sample)
-    topN match {
-      // defensive: every key must be readable in the pruned schema (it
-      // always is — the retained Sort references the keys, so pruning
-      // keeps them)
-      case Some(t) if t.keys.forall(k =>
-          requiredSchema.fieldNames.contains(k.name)) =>
-        new TopNPartitionReader(base, requiredSchema, t)
-      case _ => base
-    }
-  }
-
-  // columnar fast path — the reference's enableArrow branch, in-JVM
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    opts.enableArrow
-
-  override def createColumnarReader(
-      partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[ExcelInputPartition]
-    new ExcelColumnarPartitionReader(p.filePath,
-      fullSchema, requiredSchema, opts, limit, conf.value, filters,
-      startRow = p.startRow, endRowExcl = p.endRowExcl, sheetOverride = p.sheet)
+      p.startRow, p.endRowExcl, p.sheet, sample)
   }
 }
 
@@ -838,7 +494,7 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
     opts: ExcelOptions, limit: Int, conf: org.apache.hadoop.conf.Configuration,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     startRow: Int = -1, endRowExcl: Int = -1, sheetOverride: String = null,
-    offset: Int = 0, sample: Option[ExcelSample] = None)
+    sample: Option[ExcelSample] = None)
     extends PartitionReader[InternalRow] {
 
   // pushed TABLESAMPLE: one deterministic draw sequence per (seed, file,
@@ -942,19 +598,14 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
           else fullSchema.fieldIndex(f.name)
         }, it)
       }
-    // pushed OFFSET (complete; builder accepted only for a single
-    // unfiltered single-sheet partition): skip the first `offset` data
-    // rows before any conversion or emission. Skipping precedes the
-    // limit cap — the pushed limit counts post-offset rows.
-    val offsetIter = if (offset > 0) dataIter.drop(offset) else dataIter
     // raw-iterator take(limit) is only sound with no pushed filters AND
     // no pushed sample; with either, the limit must count KEPT rows (see
     // `kept` in next()) or qualifying rows beyond the first `limit` raw
     // rows would be dropped
     (colIndex,
       if (limit >= 0 && structFilters.isEmpty && sample.isEmpty)
-        offsetIter.take(limit)
-      else offsetIter)
+        dataIter.take(limit)
+      else dataIter)
   }
   private var current: InternalRow = _
   private var kept: Long = 0L

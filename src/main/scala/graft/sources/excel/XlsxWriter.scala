@@ -63,6 +63,7 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
           "(option 'shardedOutput'), route rows across sheets (option " +
           "'sheetColumn'), or write parquet instead.")
     rowNum += 1
+    val rowStart = sheet.length
     val strAttrs =
       if (headerStyle) "\" s=\"3\" t=\"inlineStr\"" else "\" t=\"inlineStr\""
     sheet.append("<row r=\"").append(rowNum).append("\">")
@@ -72,6 +73,7 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
       v match {
         case null => () // sparse
         case s: String =>
+          checkCellChars(s, col, rowStart)
           sheet.append("<c r=\"").append(ref).append(strAttrs).append("><is><t xml:space=\"preserve\">")
             .append(escapeXml(s)).append("</t></is></c>")
         case b: java.lang.Boolean =>
@@ -88,13 +90,15 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
         case n: java.lang.Number =>
           numCell(ref, n.doubleValue(), style = 0, raw = formatNumber(n))
         case other =>
+          val s = other.toString
+          checkCellChars(s, col, rowStart)
           sheet.append("<c r=\"").append(ref).append("\" t=\"inlineStr\"><is><t xml:space=\"preserve\">")
-            .append(escapeXml(other.toString)).append("</t></is></c>")
+            .append(escapeXml(s)).append("</t></is></c>")
       }
       col += 1
     }
     if (col > XlsxWriter.MaxColsPerSheet)
-      throw new org.apache.spark.SparkException(
+      failRow(rowStart,
         s"Excel column limit exceeded: row $rowNum of sheet " +
           s"'${sheetNames.last}' has $col cells but the xlsx format caps a " +
           s"sheet at ${XlsxWriter.MaxColsPerSheet} columns (Excel refuses " +
@@ -102,6 +106,23 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
     sheet.append("</row>")
     if (sheet.length > (1 << 16)) flushSheet()
   }
+
+  /** Drop the partly written row, so the writer stays usable, and fail. */
+  private def failRow(rowStart: Int, msg: String): Nothing = {
+    sheet.setLength(rowStart)
+    rowNum -= 1
+    throw new org.apache.spark.SparkException(msg)
+  }
+
+  private def checkCellChars(s: String, col: Int, rowStart: Int): Unit =
+    if (s.length > XlsxWriter.MaxCellChars)
+      failRow(rowStart,
+        s"Excel cell limit exceeded: column ${XlsxReader.colName(col)} " +
+          s"(${col + 1}) of row $rowNum in sheet '${sheetNames.last}' holds " +
+          s"${s.length} characters but an xlsx cell caps text at " +
+          s"${XlsxWriter.MaxCellChars} (Excel truncates or refuses longer " +
+          "cells). Truncate the column upstream (e.g. substring) or write " +
+          "parquet instead.")
 
   private def numCell(ref: String, serial: Double, style: Int,
       raw: String = null): Unit = {
@@ -267,4 +288,6 @@ object XlsxWriter {
     * sharded, sheet-routed, streaming — fails loudly at the offending row. */
   val MaxRowsPerSheet: Int = 1048576
   val MaxColsPerSheet: Int = 16384
+  /** Excel's per-cell text cap, in characters; checked per string cell. */
+  val MaxCellChars: Int = 32767
 }

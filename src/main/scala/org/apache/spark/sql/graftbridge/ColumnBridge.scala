@@ -25,13 +25,4 @@ object ColumnBridge {
       filters: Seq[org.apache.spark.sql.sources.Filter],
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.catalyst.OrderedFilters =
     new org.apache.spark.sql.catalyst.OrderedFilters(filters, schema)
-
-  /** Spark's own per-type ordering over INTERNAL values (UTF8String binary
-    * order, integral/IEEE numerics, date/timestamp longs) — what the
-    * MIN/MAX aggregate pushdown accumulates with, so in-scan extremes agree
-    * exactly with the engine's. */
-  def interpretedOrdering(
-      dt: org.apache.spark.sql.types.DataType): Ordering[Any] =
-    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
-      .asInstanceOf[Ordering[Any]]
 }

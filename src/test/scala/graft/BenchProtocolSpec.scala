@@ -53,4 +53,19 @@ class BenchProtocolSpec extends AnyFunSuite {
       repeatsExecuted = 100, remainingGates = 200, effRepeats = 2,
       budgetS = 499.9))
   }
+
+  test("value_with_prep counts staging inside a prep build once") {
+    // 100 s best-of-N total; 20 s of prep builds, 8 s of which were
+    // cache-miss staging; 8 s of staging outside the reported minima
+    // (that same staging, dropped with repeat 1): 100 + 12 + 8
+    assert(Bench.valueWithPrepS(total = 100, prepBuildS = 20,
+      prepStagingS = 8, stagingExcludedS = 8) == 120.0)
+    // the staging repeat was the minimum: the 8 s are inside `total`
+    // instead, nothing is excluded, and they still count once
+    assert(Bench.valueWithPrepS(total = 108, prepBuildS = 20,
+      prepStagingS = 8, stagingExcludedS = 0) == 120.0)
+    // no staging inside prep: the plain sum
+    assert(Bench.valueWithPrepS(total = 100, prepBuildS = 20,
+      prepStagingS = 0, stagingExcludedS = 5) == 125.0)
+  }
 }

@@ -163,4 +163,26 @@ class SharedPrepSpec extends AnyFunSuite with BeforeAndAfterAll {
     SharedPrep.cached(spark, "sps-buildsec")(Seq(2).toDF("x"))
     assert(SharedPrep.buildSeconds(spark) == mid, "hits cost nothing")
   }
+
+  test("staging inside builds is recorded once, nested builds counted once") {
+    import spark.implicits._
+    val build0 = SharedPrep.buildSeconds(spark)
+    val staged0 = SharedPrep.buildStagingSeconds(spark)
+    SharedPrep.cached(spark, "sps-stage-outer") {
+      GateMetrics.staged(Thread.sleep(30))
+      SharedPrep.cached(spark, "sps-stage-inner") {
+        GateMetrics.staged(Thread.sleep(30)); Thread.sleep(200)
+        Seq(1).toDF("x")
+      }
+    }
+    val staged = SharedPrep.buildStagingSeconds(spark) - staged0
+    val built = SharedPrep.buildSeconds(spark) - build0
+    assert(staged >= 0.055 && staged < built, s"staging in builds: $staged")
+    // ~0.26 s of wall: the inner build (0.23 s) runs inside the outer
+    // one and must not be added a second time (that would read ≥ 0.49 s)
+    assert(built >= 0.255 && built < 0.45, s"build seconds: $built")
+    // staging outside any build is not prep staging
+    GateMetrics.staged(Thread.sleep(10))
+    assert(SharedPrep.buildStagingSeconds(spark) - staged0 == staged)
+  }
 }

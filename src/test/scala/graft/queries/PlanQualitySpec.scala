@@ -509,14 +509,12 @@ class PlanQualitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("columns=[n_name]"), p)
   }
 
-  test("excel_topn: gate plans the pushed heap AND keeps the global " +
-    "TakeOrderedAndProject (partial-pushdown contract)") {
+  test("excel_topn: TakeOrderedAndProject runs over the excel scan") {
     val p = plan("excel_topn")
-    // the per-partition bounded heap is active in the scan...
-    assert(p.contains("PushedTopN=[s_acctbal DESC"), p)
-    // ...and Spark still owns the global merge, so correctness never
-    // depends on cross-partition order
+    // Spark owns the per-partition heaps and the global merge, so
+    // correctness never depends on cross-partition order
     assert(p.contains("TakeOrderedAndProject"), p)
+    assert(p.contains("BatchScan excel"), p)
   }
 
   test("excel scan reports statistics: small side broadcasts, large does not") {

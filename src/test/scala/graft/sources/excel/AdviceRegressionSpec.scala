@@ -147,7 +147,7 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("min/max push down to a single-column scan; mixed with count(*)") {
+  test("min/max stay above the scan; a lone count(*) pushes") {
     import org.apache.spark.sql.functions._
     val dir = tmpDir()
     val mk = (name: String, rows: Seq[(Long, String, Double)]) => {
@@ -166,9 +166,13 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val agg = df.agg(min(col("id")).as("mn"), max(col("id")).as("mx"),
       max(col("name")).as("mxs"), min(col("score")).as("mns"),
       count(lit(1)).as("n"))
+    // min/max (even beside count(*)) stay Spark aggregates over the plain
+    // row scan; a lone count(*) still answers from the tag scan
     val plan = agg.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedAggregation=[MIN(id), MAX(id), MAX(name), MIN(score), COUNT(*)]"),
-      plan)
+    assert(!plan.contains("PushedAggregation"), plan)
+    assert(plan.contains("columns=[id,name,score]"), plan)
+    val countPlan = df.agg(count(lit(1))).queryExecution.executedPlan.toString
+    assert(countPlan.contains("PushedAggregation=[COUNT(*)]"), countPlan)
     val r = agg.collect().head
     assert((r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3), r.getLong(4)) ==
       ((2L, 9L, "zed", -3.0, 4L)))
@@ -346,6 +350,31 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
         ExcelOptions.fromMap(Map("path" -> "/tmp/unused.xlsx"))).build()
     }
     assert(e2.getMessage.contains("Excel column limit exceeded"), e2.getMessage)
+  }
+
+  test("cells past Excel's 32,767-character cap fail loudly") {
+    val f = new File(tmpDir(), "cellcap.xlsx")
+    val w = new XlsxWriter(new FileOutputStream(f))
+    val atCap = "x" * XlsxWriter.MaxCellChars
+    w.writeRow(Seq("id", "text"))
+    w.writeRow(Seq(1L, atCap)) // at the cap: fine
+    val e = intercept[org.apache.spark.SparkException] {
+      w.writeRow(Seq(2L, atCap + "y"))
+    }
+    Seq("Excel cell limit exceeded", "column B", "row 3",
+      "32767", "Truncate", "parquet").foreach { s =>
+      assert(e.getMessage.contains(s), e.getMessage)
+    }
+    // the failed row leaves no partial cells behind
+    w.writeRow(Seq(3L, "ok"))
+    w.close()
+    val rd = new XlsxReader(f)
+    try {
+      val rows = rd.rowIterator(rd.sheets.head).toSeq
+      assert(rows.length == 3, rows.map(_.toSeq))
+      assert(rows(1)(1) == atCap) // the at-cap cell round-trips whole
+      assert(rows(2)(1) == "ok", rows(2).toSeq)
+    } finally rd.close()
   }
 
   test("dot/underscore-prefixed files are invisible to directory listings") {

@@ -9,10 +9,10 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Partial TOP-N pushdown: `ORDER BY col LIMIT n` caps every partition's
-  * output at its own n best rows (bounded heap in the reader) while Spark
-  * keeps the global sort — so results are exact and the sort's input
-  * shrinks from partition-size to n·partitions. */
+/** `ORDER BY col LIMIT n` over a multi-file excel scan: the scan takes no
+  * part in the sort; Spark's TakeOrderedAndProject keeps each partition's
+  * n best rows and merges them. These cases pin values and null ordering
+  * across partitions, splits and non-column sort keys. */
 class ExcelTopNSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -51,18 +51,15 @@ class ExcelTopNSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def read(dir: File) =
     spark.read.format("excel").schema(schema).load(dir.getAbsolutePath)
 
-  test("orderBy+limit pushes partial top-N and stays exact") {
+  test("orderBy+limit plans TakeOrderedAndProject, stays exact") {
     val dir = tmpDir()
     writeFiles(dir)
     val df = read(dir).orderBy(col("id").desc).limit(5)
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedTopN=[id DESC"), plan)
-    // partial pushdown: the global TakeOrderedAndProject must survive
     assert(plan.contains("TakeOrderedAndProject"), plan)
     assert(df.collect().map(_.getInt(0)).toSeq == Seq(119, 118, 117, 116, 115))
     // ascending too, with the second column along for the ride
     val asc = read(dir).orderBy(col("id")).limit(4)
-    assert(asc.queryExecution.executedPlan.toString.contains("PushedTopN="))
     assert(asc.collect().map(r => (r.getInt(0), r.getString(1))).toSeq ==
       Seq((0, "row0"), (1, "row1"), (2, "row2"), (3, "row3")))
   }
@@ -104,7 +101,8 @@ class ExcelTopNSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = tmpDir()
     writeFiles(dir)
     val df = read(dir).orderBy((col("id") % 7).desc).limit(3)
-    assert(!df.queryExecution.executedPlan.toString.contains("PushedTopN"))
     assert(df.count() == 3)
+    // ties on the key: any three rows with the top key value qualify
+    assert(df.collect().forall(_.getInt(0) % 7 == 6))
   }
 }
