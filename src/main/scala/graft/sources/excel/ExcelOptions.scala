@@ -123,12 +123,12 @@ final case class ExcelOptions(options: Map[String, String]) {
   def sheetColumn: Option[String] = get("sheetcolumn")
 
   /** Cap on concurrently OPEN per-task sheet writers in [[sheetColumn]]
-    * routing (extension). Each open writer holds a zip stream + buffers,
+    * routing (extension). Each open writer holds a deflater + buffers,
     * so unbounded distinct routing values per task would exhaust memory /
     * file handles; past the cap the least-recently-used writer is closed
     * (its rows are complete — xlsx streams forward-only) and a value that
-    * reappears simply opens a fresh temp segment, concatenated in order at
-    * the driver merge. Default 32. */
+    * reappears simply opens a fresh temp segment, spliced in order at
+    * the driver commit. Default 32. */
   def maxOpenSheetWriters: Int = get("maxopensheetwriters").map { s =>
     val n = s.toInt
     require(n > 0, s"maxOpenSheetWriters must be positive, got $n")

@@ -2,10 +2,11 @@ package graft.sources.excel
 
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
@@ -13,17 +14,22 @@ import org.apache.spark.util.SerializableConfiguration
 /** Single-workbook batch write with a real commit protocol.
   *
   * The reference writer has none (bug B4: every task rewrites the same
-  * `path`, last-writer-wins — `/root/reference/src/pyspark_datasource/excel/
-  * connector.py:280-322`). Here every task streams its partition to a task
-  * temp file `<path>.__graft_tmp_<queryId>/part-NNNNN.xlsx`, and the driver
-  * `commit()` merges them *in partition order* into one workbook at `path`
-  * — preserving the reference's observable single-file contract and its
-  * round-trip test (`tests/test_excel_connector.py:189-216`) while making
+  * `path`, last-writer-wins). Here every task encodes and deflates its
+  * partition's rows, in parallel, into a temp segment
+  * `<path>.__graft_tmp_<queryId>/part-NNNNN-<task>.deflate`
+  * ([[XlsxRowSegment]]), and the driver `commit()` splices the segments
+  * *in partition order* into one workbook at `path` — preserving the
+  * reference's observable single-file contract while making
   * multi-partition writes deterministic. `abort()` removes the temp dir.
   *
-  * xlsx is an inherently single-file, non-appendable format — the merge is
-  * a driver-side stream (constant memory) and is the format's documented
-  * scale ceiling; large outputs belong in parquet, not xlsx.
+  * The splice is a byte copy: each sheet part is the driver's deflated
+  * head (XML prolog, `<cols>`, header row), the tasks' segments as they
+  * are, and a deflated tail, with the part's CRC-32 combined from theirs
+  * (see [[ExcelWrite.splice]]). The driver never inflates, decodes or
+  * re-encodes a row, so the commit costs one sequential copy of the
+  * compressed output; the xlsx caps (1,048,576 rows a sheet) still bound
+  * a single workbook, and larger outputs belong in `shardedOutput` or
+  * parquet.
   */
 class ExcelWriteBuilder(schema: StructType, opts: ExcelOptions)
     extends WriteBuilder with SupportsTruncate {
@@ -74,6 +80,16 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
 
   override def toBatch: BatchWrite = this
 
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    ExcelWriteMetrics.supported
+
+  @volatile private var spliceMs = 0L
+  @volatile private var splicedBytes = 0L
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = Array(
+    ExcelWriteMetrics.value(ExcelWriteMetrics.SpliceTimeMs, spliceMs),
+    ExcelWriteMetrics.value(ExcelWriteMetrics.SplicedBytes, splicedBytes))
+
   /** Streaming sink: `path` is a DIRECTORY; each epoch commits one
     * `batch-<epochId>.xlsx` (epoch-named → idempotent on epoch replay).
     * The reference has no streaming sink at all; this composes with the
@@ -115,7 +131,7 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
         errorClass = "PATH_ALREADY_EXISTS",
         messageParameters = Map("outputPath" -> opts.path))
     }
-    messages.collect { case m: ExcelCommitMessage => m }.foreach { m =>
+    messages.collect { case m: ExcelShardCommitMessage => m }.foreach { m =>
       val target = new Path(dir, f"part-${m.partitionId}%05d.xlsx")
       if (!fs.rename(new Path(m.tempPath), target))
         throw new org.apache.spark.SparkException(
@@ -145,60 +161,44 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
     // stage under a dot-prefixed sibling and rename: a concurrent directory
     // reader never lists a half-written workbook
     val staging = new Path(target.getParent, s".${target.getName}.inprogress")
-    def mergeTempInto(writer: XlsxWriter, tempPath: String): Unit = {
-      val (local, temp) = ExcelFiles.toLocal(tempPath, conf)
-      val r = new XlsxReader(local)
-      try r.rowIterator(r.sheets.head).foreach(row => writer.writeRow(row.toSeq))
-      finally { r.close(); if (temp) local.delete() }
+    val (sheets, names) = if (opts.sheetColumn.isEmpty) {
+      val parts = messages.collect { case m: ExcelCommitMessage => m }
+        .sortBy(_.partitionId)
+      (Seq(opts.writeSheetName -> parts.toSeq), schema.fieldNames.toSeq)
+    } else {
+      // sheet-routed merge: one sheet per distinct routing value (sheet
+      // order = sorted values — deterministic regardless of which task
+      // saw a value first), each concatenating its segments in partition
+      // order; data columns exclude the routing column
+      val parts = messages.collect { case m: ExcelSheetCommitMessage => m }
+        .sortBy(_.partitionId)
+      val sheetNames = parts.flatMap(_.sheets.map(_._1)).distinct.sorted
+      // Excel sheet names are case-INSENSITIVE: two routing values
+      // differing only in case came from different tasks' rows and would
+      // merge into a workbook Excel refuses to open (our reader would
+      // still round-trip it — exactly the silent-corruption hazard).
+      // Within one task the writer already rejects this at the first row.
+      val caseCollisions = sheetNames
+        .groupBy(_.toLowerCase(java.util.Locale.ROOT))
+        .filter(_._2.size > 1)
+      if (caseCollisions.nonEmpty)
+        throw new org.apache.spark.SparkException(
+          "sheetColumn values collide case-insensitively (Excel treats " +
+            "sheet names as case-insensitive): " +
+            caseCollisions.values.map(_.mkString(" / ")).mkString("; "))
+      val bySheet = sheetNames.toSeq.map(s => s -> parts.toSeq.flatMap(m =>
+        m.sheets.collect { case (`s`, path, seg) =>
+          ExcelCommitMessage(m.partitionId, path, seg) }))
+      // empty input: one empty sheet keeps the header contract
+      (if (bySheet.isEmpty) Seq(opts.writeSheetName -> Nil) else bySheet,
+        schema.fieldNames.toSeq.filterNot(_ == opts.sheetColumn.get))
     }
     try {
-      if (opts.sheetColumn.isEmpty) {
-        val parts = messages.collect { case m: ExcelCommitMessage => m }
-          .sortBy(_.partitionId)
-        val writer = new XlsxWriter(fs.create(staging, true), opts.writeSheetName,
-          opts.widthsFor(schema.fieldNames.toIndexedSeq))
-        try {
-          if (opts.header) ExcelWrite.header(writer, schema.fieldNames.toIndexedSeq, opts)
-          parts.foreach(m => mergeTempInto(writer, m.tempPath))
-        } finally writer.close()
-      } else {
-        // sheet-routed merge: one sheet per distinct routing value (sheet
-        // order = sorted values — deterministic regardless of which task
-        // saw a value first), each concatenating its temps in partition
-        // order; data columns exclude the routing column
-        val parts = messages.collect { case m: ExcelSheetCommitMessage => m }
-          .sortBy(_.partitionId)
-        val sheetNames = parts.flatMap(_.sheets.map(_._1)).distinct.sorted
-        // Excel sheet names are case-INSENSITIVE: two routing values
-        // differing only in case came from different tasks' rows and would
-        // merge into a workbook Excel refuses to open (our reader would
-        // still round-trip it — exactly the silent-corruption hazard).
-        // Within one task the writer already rejects this at the first row.
-        val caseCollisions = sheetNames
-          .groupBy(_.toLowerCase(java.util.Locale.ROOT))
-          .filter(_._2.size > 1)
-        if (caseCollisions.nonEmpty)
-          throw new org.apache.spark.SparkException(
-            "sheetColumn values collide case-insensitively (Excel treats " +
-              "sheet names as case-insensitive): " +
-              caseCollisions.values.map(_.mkString(" / ")).mkString("; "))
-        val dataNames = schema.fieldNames.filterNot(_ == opts.sheetColumn.get)
-        val writer = new XlsxWriter(fs.create(staging, true),
-          sheetNames.headOption.getOrElse(opts.writeSheetName),
-          opts.widthsFor(dataNames.toIndexedSeq))
-        try {
-          if (sheetNames.isEmpty) { // empty input: keep the header contract
-            if (opts.header) ExcelWrite.header(writer, dataNames.toIndexedSeq, opts)
-          } else sheetNames.zipWithIndex.foreach { case (s, i) =>
-            if (i > 0) writer.startSheet(s)
-            if (opts.header) ExcelWrite.header(writer, dataNames.toIndexedSeq, opts)
-            parts.foreach(_.sheets.collect {
-              case (`s`, tempPath) => mergeTempInto(writer, tempPath)
-            })
-          }
-        } finally writer.close()
-      }
-    } finally fs.delete(new Path(tmpDir), true)
+      val t0 = System.nanoTime()
+      splicedBytes = ExcelWrite.splice(fs, staging, sheets, names, opts)
+      spliceMs = (System.nanoTime() - t0) / 1000000L
+    } catch { case e: Throwable => fs.delete(staging, false); throw e }
+    finally fs.delete(new Path(tmpDir), true)
     if (!fs.rename(staging, target)) {
       fs.delete(staging, false)
       throw new org.apache.spark.SparkException(
@@ -211,7 +211,7 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
     if (opts.shardedOutput) {
       val dir = new Path(opts.path)
       val fs = dir.getFileSystem(conf)
-      messages.collect { case m: ExcelCommitMessage => m }
+      messages.collect { case m: ExcelShardCommitMessage => m }
         .foreach(m => fs.delete(new Path(m.tempPath), false))
       if (fs.exists(dir)) cleanupShardTemps(fs, dir)
     } else {
@@ -223,9 +223,45 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
 
 object ExcelWrite {
   /** Header row on a FINAL workbook: bold when `headerBold` is set. */
-  private[excel] def header(w: XlsxWriter, names: Seq[String],
+  private[excel] def header(w: XlsxRowEncoder, names: Seq[String],
       opts: ExcelOptions): Unit =
     if (opts.headerBold) w.writeHeaderRow(names) else w.writeRow(names)
+
+  /** Writes one workbook at `target` from the tasks' row segments: per
+    * sheet, in the given order, the header row (with `opts.header`) and
+    * then every segment's deflated bytes, copied as they are. Each sheet's
+    * row total and each temp file's length are checked against the
+    * commit messages before the first byte is written. `sheets` must be
+    * non-empty. Returns the number of segment bytes spliced. */
+  private[excel] def splice(fs: FileSystem, target: Path,
+      sheets: Seq[(String, Seq[ExcelCommitMessage])], names: Seq[String],
+      opts: ExcelOptions): Long = {
+    val headerRows = if (opts.header) 1L else 0L
+    sheets.foreach { case (sheet, parts) =>
+      if (headerRows + parts.map(_.segment.rows).sum > XlsxWriter.MaxRowsPerSheet)
+        throw XlsxWriter.rowLimitExceeded(sheet)
+      parts.foreach { p =>
+        val len = fs.getFileStatus(new Path(p.tempPath)).getLen
+        if (len != p.segment.deflatedBytes)
+          throw new org.apache.spark.SparkException(
+            s"Excel sink: temp segment ${p.tempPath} of partition " +
+              s"${p.partitionId} holds $len bytes but its task committed " +
+              s"${p.segment.deflatedBytes}; refusing to splice a truncated " +
+              "or altered segment")
+      }
+    }
+    val w = new XlsxWriter(fs.create(target, true), sheets.head._1,
+      opts.widthsFor(names))
+    try sheets.zipWithIndex.foreach { case ((sheet, parts), i) =>
+      if (i > 0) w.startSheet(sheet)
+      if (opts.header) header(w, names, opts)
+      parts.foreach { p =>
+        val in = fs.open(new Path(p.tempPath))
+        try w.appendSegment(in, p.segment) finally in.close()
+      }
+    } finally w.close()
+    sheets.map(_._2.map(_.segment.deflatedBytes).sum).sum
+  }
 
   private val ForbiddenSheetChars = ":\\/?*[]"
 
@@ -249,13 +285,52 @@ object ExcelWrite {
   }
 }
 
-case class ExcelCommitMessage(partitionId: Int, tempPath: String)
+/** Merged-write commit: this task's row segment, spliced at the driver. */
+case class ExcelCommitMessage(partitionId: Int, tempPath: String,
+    segment: XlsxWriter.Segment) extends WriterCommitMessage
+
+/** Sharded-write commit: this task's finished shard, renamed at the driver. */
+case class ExcelShardCommitMessage(partitionId: Int, tempPath: String)
     extends WriterCommitMessage
 
-/** Sheet-routing commit: this task's (sheet value → temp workbook) map,
-  * sheet-sorted. */
+/** Sheet-routing commit: this task's (sheet value, temp segment, segment)
+  * triples, sheet-sorted. */
 case class ExcelSheetCommitMessage(partitionId: Int,
-    sheets: Seq[(String, String)]) extends WriterCommitMessage
+    sheets: Seq[(String, String, XlsxWriter.Segment)])
+    extends WriterCommitMessage
+
+/** DSv2 write metrics: per task (summed over tasks) the rows and the
+  * compressed bytes written; on the driver the splice's time and bytes. */
+object ExcelWriteMetrics {
+  val RowsWritten = "rowsWritten"
+  val BytesWritten = "bytesWritten"
+  val SpliceTimeMs = "spliceTimeMs"
+  val SplicedBytes = "splicedBytes"
+
+  def supported: Array[CustomMetric] = Array(new ExcelRowsWrittenMetric,
+    new ExcelBytesWrittenMetric, new ExcelSpliceTimeMetric,
+    new ExcelSplicedBytesMetric)
+
+  def value(metric: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = metric
+    override def value(): Long = v
+  }
+}
+
+// Spark re-creates a metric by class name to aggregate it, so each one is
+// its own class with a no-argument constructor.
+abstract class ExcelSumMetric(metric: String, text: String) extends CustomSumMetric {
+  override def name(): String = metric
+  override def description(): String = text
+}
+class ExcelRowsWrittenMetric
+    extends ExcelSumMetric(ExcelWriteMetrics.RowsWritten, "rows written")
+class ExcelBytesWrittenMetric extends ExcelSumMetric(
+  ExcelWriteMetrics.BytesWritten, "compressed bytes written by tasks")
+class ExcelSpliceTimeMetric
+    extends ExcelSumMetric(ExcelWriteMetrics.SpliceTimeMs, "driver splice time (ms)")
+class ExcelSplicedBytesMetric
+    extends ExcelSumMetric(ExcelWriteMetrics.SplicedBytes, "bytes spliced by the driver")
 
 class ExcelStreamingWrite(schema: StructType, opts: ExcelOptions)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -282,7 +357,7 @@ class ExcelStreamingWrite(schema: StructType, opts: ExcelOptions)
       // any earlier attempt's shards for this epoch are removed first.
       Option(fs.globStatus(new Path(outDir, f"batch-$epochId%05d-part-*.xlsx")))
         .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-      messages.collect { case m: ExcelCommitMessage => m }.foreach { m =>
+      messages.collect { case m: ExcelShardCommitMessage => m }.foreach { m =>
         val target = new Path(outDir,
           f"batch-$epochId%05d-part-${m.partitionId}%05d.xlsx")
         if (!fs.rename(new Path(m.tempPath), target))
@@ -299,20 +374,10 @@ class ExcelStreamingWrite(schema: StructType, opts: ExcelOptions)
     val staging = new Path(outDir, f".batch-$epochId%05d.xlsx.inprogress")
     val parts = messages.collect { case m: ExcelCommitMessage => m }
       .sortBy(_.partitionId)
-    val writer = new XlsxWriter(fs.create(staging, true), opts.writeSheetName,
-      opts.widthsFor(schema.fieldNames.toIndexedSeq))
-    try {
-      if (opts.header) ExcelWrite.header(writer, schema.fieldNames.toIndexedSeq, opts)
-      parts.foreach { m =>
-        val (local, temp) = ExcelFiles.toLocal(m.tempPath, conf)
-        val r = new XlsxReader(local)
-        try r.rowIterator(r.sheets.head).foreach(row => writer.writeRow(row.toSeq))
-        finally { r.close(); if (temp) local.delete() }
-      }
-    } finally {
-      writer.close()
-      fs.delete(new Path(tmpDir(epochId)), true)
-    }
+    try ExcelWrite.splice(fs, staging, Seq(opts.writeSheetName -> parts.toSeq),
+      schema.fieldNames.toSeq, opts)
+    catch { case e: Throwable => fs.delete(staging, false); throw e }
+    finally fs.delete(new Path(tmpDir(epochId)), true)
     if (fs.exists(target)) fs.delete(target, false) // epoch replay: idempotent
     if (!fs.rename(staging, target)) {
       fs.delete(staging, false)
@@ -348,15 +413,15 @@ case class ExcelDataWriterFactory(schema: StructType, opts: ExcelOptions,
       sharded)
 }
 
-/** Streams one partition into a temp workbook on the target FS —
-  * headerless when destined for a driver-side merge, self-contained
-  * (dot-prefixed name + own header) in sharded mode.
+/** Streams one partition to the target FS: in sharded mode a finished
+  * workbook under a hidden name (its own header, styles applied); else a
+  * headerless row segment ([[XlsxRowSegment]]) for the driver's splice.
   *
-  * With `sheetColumn`, the task instead keeps one temp workbook open PER
-  * routing value seen (xlsx streams forward only — a sheet cannot be
-  * reopened, so interleaved values need separate files) and the commit
-  * message maps value → temp path; the driver merge concatenates each
-  * value's temps in partition order under one sheet. */
+  * With `sheetColumn`, the task instead keeps one segment open PER
+  * routing value seen (a segment streams forward only, so interleaved
+  * values need separate files) and the commit message lists each value's
+  * segments; the driver splices each value's segments in partition order
+  * under one sheet. */
 class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     partitionId: Int, taskId: Long,
     conf: org.apache.hadoop.conf.Configuration,
@@ -367,38 +432,42 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
 
   private val fs = new Path(tmpDir).getFileSystem(conf)
   private var closed = false
+  private var rowsWritten = 0L
 
-  // single-workbook mode state (sheetColumn unset)
+  // single-workbook mode state (sheetColumn unset): exactly one of these
   private val tempPath =
     if (sheetColIdx >= 0) null
     else if (sharded) // hidden in-place temp, renamed at commit
       new Path(tmpDir, f".part-$partitionId%05d-$taskId.xlsx.inprogress")
-    else new Path(tmpDir, f"part-$partitionId%05d-$taskId.xlsx")
-  private val writer =
-    if (sheetColIdx >= 0) null
-    else if (sharded) // a shard IS final output: styles apply
-      new XlsxWriter(fs.create(tempPath, true), opts.writeSheetName,
-        opts.widthsFor(schema.fieldNames.toIndexedSeq))
-    else new XlsxWriter(fs.create(tempPath, true), "data")
-  if (writer != null && sharded && opts.header)
-    ExcelWrite.header(writer, schema.fieldNames.toIndexedSeq, opts)
+    else new Path(tmpDir, f"part-$partitionId%05d-$taskId.deflate")
+  private val shard =
+    if (sheetColIdx >= 0 || !sharded) null
+    else new XlsxWriter(fs.create(tempPath, true), opts.writeSheetName,
+      opts.widthsFor(schema.fieldNames.toIndexedSeq))
+  private val segment =
+    if (sheetColIdx >= 0 || sharded) null
+    else new XlsxRowSegment(fs.create(tempPath, true), opts.writeSheetName)
+  private val writer: XlsxRowEncoder = if (shard != null) shard else segment
+  if (shard != null && opts.header)
+    ExcelWrite.header(shard, schema.fieldNames.toIndexedSeq, opts)
 
-  // sheet-routing mode state: value → (writer, temp path), kept in LRU
-  // order (a get re-inserts). Open writers are capped at
+  // sheet-routing mode state: value → (segment, temp path), kept in LRU
+  // order (a get re-inserts). Open segments are capped at
   // opts.maxOpenSheetWriters: past the cap the least-recently-used one is
   // closed and parked in `finishedSegments`; a value that reappears opens
-  // a fresh temp segment (xlsx streams forward-only), and the driver merge
-  // concatenates a sheet's segments in emission order.
+  // a fresh temp segment, and the driver splices a sheet's segments in
+  // emission order.
   private val routed =
-    scala.collection.mutable.LinkedHashMap.empty[String, (XlsxWriter, Path)]
-  private val finishedSegments =
-    scala.collection.mutable.ArrayBuffer.empty[(String, Path)]
+    scala.collection.mutable.LinkedHashMap.empty[String, (XlsxRowSegment, Path)]
+  private val finishedSegments = scala.collection.mutable.ArrayBuffer
+    .empty[(String, String, XlsxWriter.Segment)]
+  private var finishedBytes = 0L
   // case-insensitive collision guard: Excel sheet names are
   // case-insensitive, so "Foo" and "foo" routing values would produce a
   // workbook Excel rejects; fail at the first offending row instead
   private val lowerSeen = scala.collection.mutable.HashMap.empty[String, String]
   private var segmentSeq = 0
-  private def routedWriter(sheet: String): XlsxWriter =
+  private def routedWriter(sheet: String): XlsxRowSegment =
     routed.remove(sheet) match {
       case Some(entry) => routed.put(sheet, entry); entry._1 // LRU refresh
       case None =>
@@ -413,14 +482,15 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
         lowerSeen.update(lower, sheet)
         if (routed.size >= opts.maxOpenSheetWriters) {
           val (lruSheet, (w, p)) = routed.head
-          w.close()
-          finishedSegments += lruSheet -> p
+          val seg = w.close()
+          finishedSegments += ((lruSheet, p.toString, seg))
+          finishedBytes += seg.deflatedBytes
           routed.remove(lruSheet)
         }
         val p = new Path(tmpDir,
-          f"part-$partitionId%05d-$taskId-s$segmentSeq.xlsx")
+          f"part-$partitionId%05d-$taskId-s$segmentSeq.deflate")
         segmentSeq += 1
-        val w = new XlsxWriter(fs.create(p, true), "data")
+        val w = new XlsxRowSegment(fs.create(p, true), sheet)
         routed.put(sheet, (w, p))
         w
     }
@@ -462,7 +532,7 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     while (i < getters.length) { rowBuf(i) = getters(i)(row); i += 1 }
   }
 
-  override def write(row: InternalRow): Unit =
+  override def write(row: InternalRow): Unit = {
     if (sheetColIdx < 0) { fillRowBuf(row); writer.writeRow(rowView) }
     else {
       if (row.isNullAt(sheetColIdx))
@@ -473,15 +543,34 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
       fillRowBuf(row)
       w.writeRow(rowView)
     }
+    rowsWritten += 1
+  }
+
+  /** Spark reads the task metrics once more after this and before
+    * `commit()`; finishing the files here makes that last reading exact. */
+  override def writeAll(rows: java.util.Iterator[InternalRow]): Unit = {
+    while (rows.hasNext) write(rows.next())
+    closeAll()
+  }
+
+  override def currentMetricsValues(): Array[CustomTaskMetric] = {
+    val bytes =
+      if (writer != null) writer.bytesWritten
+      else finishedBytes + routed.values.map(_._1.bytesWritten).sum
+    Array(ExcelWriteMetrics.value(ExcelWriteMetrics.RowsWritten, rowsWritten),
+      ExcelWriteMetrics.value(ExcelWriteMetrics.BytesWritten, bytes))
+  }
 
   override def commit(): WriterCommitMessage = {
     closeAll()
-    if (sheetColIdx < 0) ExcelCommitMessage(partitionId, tempPath.toString)
+    if (shard != null) ExcelShardCommitMessage(partitionId, tempPath.toString)
+    else if (segment != null)
+      ExcelCommitMessage(partitionId, tempPath.toString, segment.close())
     else ExcelSheetCommitMessage(partitionId,
       // evicted segments first, then still-open ones; the sort is stable,
       // so a sheet's segments stay in emission (= row) order
-      (finishedSegments.toSeq ++ routed.map { case (s, (_, p)) => s -> p })
-        .map { case (s, p) => s -> p.toString }.sortBy(_._1))
+      (finishedSegments.toSeq ++ routed.map { case (s, (w, p)) =>
+        (s, p.toString, w.close()) }).sortBy(_._1))
   }
 
   override def abort(): Unit = {
@@ -489,14 +578,15 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     if (sheetColIdx < 0) fs.delete(tempPath, false)
     else {
       routed.values.foreach { case (_, p) => fs.delete(p, false) }
-      finishedSegments.foreach { case (_, p) => fs.delete(p, false) }
+      finishedSegments.foreach { case (_, p, _) => fs.delete(new Path(p), false) }
     }
   }
 
   override def close(): Unit = closeAll()
 
   private def closeAll(): Unit = if (!closed) {
-    if (writer != null) writer.close()
+    if (shard != null) shard.close()
+    if (segment != null) segment.close()
     routed.values.foreach(_._1.close())
     closed = true
   }

@@ -553,18 +553,6 @@ object XlsxReader {
     col - 1
   }
 
-  /** 0-based column index → "A", "Z", "AA"… */
-  def colName(idx: Int): String = {
-    val sb = new StringBuilder
-    var i = idx + 1
-    while (i > 0) {
-      val rem = (i - 1) % 26
-      sb.insert(0, ('A' + rem).toChar)
-      i = (i - 1) / 26
-    }
-    sb.toString
-  }
-
   /** Builtin date/time number-format ids (ECMA-376 §18.8.30). */
   private val BuiltinDateOnly = Set(14, 15, 16, 17, 27, 28, 29, 30, 31, 34, 35, 36,
     50, 51, 52, 53, 54, 55, 56, 57, 58)

@@ -1,21 +1,168 @@
 package graft.sources.excel
 
-import java.io.{BufferedOutputStream, OutputStream}
+import java.io.{BufferedOutputStream, InputStream, OutputStream}
+import java.nio.{ByteBuffer, CharBuffer}
+import java.nio.charset.CodingErrorAction
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{LocalDate, LocalDateTime}
-import java.util.zip.{ZipEntry, ZipOutputStream}
 
-/** Streaming single-sheet `.xlsx` writer on JDK built-ins (constant memory —
-  * the reference's writer materializes the whole partition in a pandas
-  * DataFrame first, `/root/reference/src/pyspark_datasource/excel/
-  * connector.py:313-319`; we stream row by row instead).
+/** The `<row>` encoding shared by [[XlsxWriter]] (whole workbooks) and
+  * [[XlsxRowSegment]] (one task's rows of a merged sheet).
+  *
+  * Rows and cells are positional: neither carries an `r` reference (both
+  * are optional, ECMA-376 Part 1 §18.3.1.73 and §18.3.1.4), so encoded
+  * rows do not depend on where they land in the sheet and a driver can
+  * concatenate the tasks' rows as they are. An interior null is an empty
+  * `<c/>` that keeps the following cells in place; trailing nulls are
+  * omitted.
   *
   * Strings are written inline (`t="inlineStr"`) rather than via a shared
-  * string table so a single pass suffices. Dates/timestamps are written as
+  * string table, so a single pass suffices. Dates/timestamps are written as
   * Excel serial numbers with a date or datetime number format; booleans as
-  * `t="b"`; numbers bare; nulls as absent (sparse) cells.
+  * `t="b"`; numbers bare.
   *
   * Accepted cell types: String, java.lang.Boolean, numbers (Byte…Double),
   * LocalDate / LocalDateTime, java.sql.Date / java.sql.Timestamp, null.
+  */
+sealed abstract class XlsxRowEncoder {
+
+  /** The sheet named in limit errors. */
+  protected def sheetLabel: String
+
+  /** Receives the sheet's UTF-8 bytes, in order: `bytes(0 until len)`,
+    * valid until the call returns. */
+  protected def emit(bytes: Array[Byte], len: Int): Unit
+
+  /** Compressed bytes written so far (final once closed). */
+  def bytesWritten: Long
+
+  protected val sheet = new java.lang.StringBuilder(1 << 16)
+  protected var rowNum = 0
+
+  /** Append one row; values per the accepted cell types above. */
+  def writeRow(values: Iterable[Any]): Unit = writeRow(values, headerStyle = false)
+
+  /** Append a row rendered with the bold header style (style extension —
+    * the data semantics are identical to [[writeRow]]). */
+  def writeHeaderRow(values: Iterable[Any]): Unit = writeRow(values, headerStyle = true)
+
+  private def writeRow(values: Iterable[Any], headerStyle: Boolean): Unit = {
+    if (rowNum >= XlsxWriter.MaxRowsPerSheet)
+      throw XlsxWriter.rowLimitExceeded(sheetLabel)
+    rowNum += 1
+    val rowStart = sheet.length
+    val strOpen =
+      if (headerStyle) "<c s=\"3\" t=\"inlineStr\"><is><t xml:space=\"preserve\">"
+      else XlsxWriter.InlineStrOpen
+    sheet.append("<row>")
+    var col = 0
+    var nulls = 0 // interior nulls not yet written: only a later value does
+    values.foreach { v =>
+      if (v == null) nulls += 1
+      else {
+        while (nulls > 0) { sheet.append("<c/>"); nulls -= 1 }
+        v match {
+          case s: String => strCell(strOpen, s, col, rowStart)
+          case b: java.lang.Boolean =>
+            sheet.append(if (b) "<c t=\"b\"><v>1</v></c>" else "<c t=\"b\"><v>0</v></c>")
+          case d: LocalDate => numCell(ExcelSerialDate.fromDate(d), style = 1)
+          case dt: LocalDateTime => numCell(ExcelSerialDate.fromDateTime(dt), style = 2)
+          case d: java.sql.Date =>
+            numCell(ExcelSerialDate.fromDate(d.toLocalDate), style = 1)
+          case ts: java.sql.Timestamp =>
+            numCell(ExcelSerialDate.fromDateTime(ts.toLocalDateTime), style = 2)
+          case n: java.lang.Number =>
+            sheet.append("<c><v>")
+            appendNumber(n)
+            sheet.append("</v></c>")
+          case other =>
+            strCell(XlsxWriter.InlineStrOpen, other.toString, col, rowStart)
+        }
+      }
+      col += 1
+    }
+    if (col > XlsxWriter.MaxColsPerSheet)
+      failRow(rowStart,
+        s"Excel column limit exceeded: row $rowNum of sheet " +
+          s"'$sheetLabel' has $col cells but the xlsx format caps a " +
+          s"sheet at ${XlsxWriter.MaxColsPerSheet} columns (Excel refuses " +
+          "to open wider sheets).")
+    sheet.append("</row>")
+    if (sheet.length > (1 << 16)) flushSheet()
+  }
+
+  /** Drop the partly written row, so the writer stays usable, and fail. */
+  private def failRow(rowStart: Int, msg: String): Nothing = {
+    sheet.setLength(rowStart)
+    rowNum -= 1
+    throw new org.apache.spark.SparkException(msg)
+  }
+
+  private def strCell(open: String, s: String, col: Int, rowStart: Int): Unit = {
+    if (s.length > XlsxWriter.MaxCellChars)
+      failRow(rowStart,
+        s"Excel cell limit exceeded: column ${XlsxWriter.colName(col)} " +
+          s"(${col + 1}) of row $rowNum in sheet '$sheetLabel' holds " +
+          s"${s.length} characters but an xlsx cell caps text at " +
+          s"${XlsxWriter.MaxCellChars} (Excel truncates or refuses longer " +
+          "cells). Truncate the column upstream (e.g. substring) or write " +
+          "parquet instead.")
+    sheet.append(open)
+    XlsxWriter.appendEscaped(sheet, s)
+    sheet.append("</t></is></c>")
+  }
+
+  private def numCell(serial: Double, style: Int): Unit = {
+    sheet.append("<c s=\"").append(style).append("\"><v>")
+    appendDouble(serial)
+    sheet.append("</v></c>")
+  }
+
+  /** Integral numbers without a trailing `.0` (Excel convention; also what
+    * pandas emits for int columns). */
+  private def appendNumber(n: java.lang.Number): Unit = n match {
+    case d: java.lang.Double => appendDouble(d)
+    case f: java.lang.Float => appendDouble(f.doubleValue())
+    case l: java.lang.Long => sheet.append(l.longValue())
+    case i: java.lang.Integer => sheet.append(i.intValue())
+    case other => sheet.append(other.toString)
+  }
+
+  private def appendDouble(d: Double): Unit =
+    if (d == math.floor(d) && !d.isInfinite && math.abs(d) < 1e15)
+      sheet.append(d.toLong)
+    else sheet.append(d)
+
+  // UTF-8 encoding through reused buffers, so a flush allocates no copy
+  // of the text (unpaired surrogates become '?', as in String.getBytes)
+  private val utf8 = UTF_8.newEncoder()
+    .onMalformedInput(CodingErrorAction.REPLACE)
+    .onUnmappableCharacter(CodingErrorAction.REPLACE)
+  private var chars = new Array[Char](0)
+  private var bytes = new Array[Byte](0)
+
+  protected def flushSheet(): Unit = if (sheet.length > 0) {
+    val n = sheet.length
+    if (chars.length < n) { chars = new Array[Char](n); bytes = new Array[Byte](3 * n) }
+    sheet.getChars(0, n, chars, 0)
+    val out = ByteBuffer.wrap(bytes)
+    utf8.reset()
+    utf8.encode(CharBuffer.wrap(chars, 0, n), out, true)
+    utf8.flush(out)
+    emit(bytes, out.position())
+    sheet.setLength(0)
+  }
+}
+
+/** Streaming `.xlsx` writer on JDK built-ins (constant memory — the
+  * reference's writer materializes the whole partition in a pandas
+  * DataFrame first; we stream row by row instead). Rows are encoded as
+  * described on [[XlsxRowEncoder]].
+  *
+  * Each sheet part is a sequence of raw-DEFLATE pieces: the writer's own
+  * text, and any task segments spliced in with [[appendSegment]], which
+  * are copied without being inflated. The part's CRC-32 is combined from
+  * the pieces' CRCs (see [[ZipWriter.crc32Combine]]).
   *
   * Presentation extensions (both optional, applied to every sheet):
   * `columnWidths` — (0-based column index, width in characters) pairs
@@ -23,16 +170,26 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * the bold header style.
   */
 final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
-    columnWidths: Seq[(Int, Double)] = Nil) {
+    columnWidths: Seq[(Int, Double)] = Nil) extends XlsxRowEncoder {
 
-  private val zip = new ZipOutputStream(new BufferedOutputStream(out))
-  private val sheet = new java.lang.StringBuilder(1 << 16)
-  private var rowNum = 0
+  private val zip = new ZipWriter(out)
+  private var piece: DeflatePiece = null // the open piece of the sheet part
+  private var partCrc = 0L
+  private var partBytes = 0L
   private var closed = false
   private val sheetNames = scala.collection.mutable.ArrayBuffer(sheetName)
 
   writeStaticParts()
   startSheetStream()
+
+  protected def sheetLabel: String = sheetNames.last
+
+  protected def emit(bytes: Array[Byte], len: Int): Unit = {
+    if (piece == null) piece = new DeflatePiece(zip.data)
+    piece.write(bytes, 0, len)
+  }
+
+  def bytesWritten: Long = zip.bytesWritten
 
   /** Finish the current sheet and begin a new one (multi-sheet workbooks;
     * the workbook catalog parts are emitted at close, when all names are
@@ -47,102 +204,18 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
     startSheetStream()
   }
 
-  /** Append one row; values per the accepted cell types above. */
-  def writeRow(values: Iterable[Any]): Unit = writeRow(values, headerStyle = false)
-
-  /** Append a row rendered with the bold header style (style extension —
-    * the data semantics are identical to [[writeRow]]). */
-  def writeHeaderRow(values: Iterable[Any]): Unit = writeRow(values, headerStyle = true)
-
-  private def writeRow(values: Iterable[Any], headerStyle: Boolean): Unit = {
-    if (rowNum >= XlsxWriter.MaxRowsPerSheet)
-      throw new org.apache.spark.SparkException(
-        s"Excel row limit exceeded: sheet '${sheetNames.last}' cannot hold " +
-          s"more than ${XlsxWriter.MaxRowsPerSheet} rows (the xlsx format's " +
-          "hard cap; Excel refuses to open larger sheets). Shard the output " +
-          "(option 'shardedOutput'), route rows across sheets (option " +
-          "'sheetColumn'), or write parquet instead.")
-    rowNum += 1
-    val rowStart = sheet.length
-    val strAttrs =
-      if (headerStyle) "\" s=\"3\" t=\"inlineStr\"" else "\" t=\"inlineStr\""
-    sheet.append("<row r=\"").append(rowNum).append("\">")
-    var col = 0
-    values.foreach { v =>
-      val ref = XlsxReader.colName(col) + rowNum
-      v match {
-        case null => () // sparse
-        case s: String =>
-          checkCellChars(s, col, rowStart)
-          sheet.append("<c r=\"").append(ref).append(strAttrs).append("><is><t xml:space=\"preserve\">")
-            .append(escapeXml(s)).append("</t></is></c>")
-        case b: java.lang.Boolean =>
-          sheet.append("<c r=\"").append(ref).append("\" t=\"b\"><v>")
-            .append(if (b) "1" else "0").append("</v></c>")
-        case d: LocalDate =>
-          numCell(ref, ExcelSerialDate.fromDate(d), style = 1)
-        case dt: LocalDateTime =>
-          numCell(ref, ExcelSerialDate.fromDateTime(dt), style = 2)
-        case d: java.sql.Date =>
-          numCell(ref, ExcelSerialDate.fromDate(d.toLocalDate), style = 1)
-        case ts: java.sql.Timestamp =>
-          numCell(ref, ExcelSerialDate.fromDateTime(ts.toLocalDateTime), style = 2)
-        case n: java.lang.Number =>
-          numCell(ref, n.doubleValue(), style = 0, raw = formatNumber(n))
-        case other =>
-          val s = other.toString
-          checkCellChars(s, col, rowStart)
-          sheet.append("<c r=\"").append(ref).append("\" t=\"inlineStr\"><is><t xml:space=\"preserve\">")
-            .append(escapeXml(s)).append("</t></is></c>")
-      }
-      col += 1
+  /** Append a [[XlsxRowSegment]]'s rows to the current sheet by copying
+    * its deflated bytes: `in` supplies exactly `seg.deflatedBytes` bytes. */
+  def appendSegment(in: InputStream, seg: XlsxWriter.Segment): Unit = {
+    require(!closed, "writer is closed")
+    if (rowNum + seg.rows > XlsxWriter.MaxRowsPerSheet)
+      throw XlsxWriter.rowLimitExceeded(sheetLabel)
+    if (seg.deflatedBytes > 0) {
+      endPiece(last = false)
+      ZipWriter.copy(in, zip.data, seg.deflatedBytes)
+      addToPart(seg)
+      rowNum += seg.rows.toInt
     }
-    if (col > XlsxWriter.MaxColsPerSheet)
-      failRow(rowStart,
-        s"Excel column limit exceeded: row $rowNum of sheet " +
-          s"'${sheetNames.last}' has $col cells but the xlsx format caps a " +
-          s"sheet at ${XlsxWriter.MaxColsPerSheet} columns (Excel refuses " +
-          "to open wider sheets).")
-    sheet.append("</row>")
-    if (sheet.length > (1 << 16)) flushSheet()
-  }
-
-  /** Drop the partly written row, so the writer stays usable, and fail. */
-  private def failRow(rowStart: Int, msg: String): Nothing = {
-    sheet.setLength(rowStart)
-    rowNum -= 1
-    throw new org.apache.spark.SparkException(msg)
-  }
-
-  private def checkCellChars(s: String, col: Int, rowStart: Int): Unit =
-    if (s.length > XlsxWriter.MaxCellChars)
-      failRow(rowStart,
-        s"Excel cell limit exceeded: column ${XlsxReader.colName(col)} " +
-          s"(${col + 1}) of row $rowNum in sheet '${sheetNames.last}' holds " +
-          s"${s.length} characters but an xlsx cell caps text at " +
-          s"${XlsxWriter.MaxCellChars} (Excel truncates or refuses longer " +
-          "cells). Truncate the column upstream (e.g. substring) or write " +
-          "parquet instead.")
-
-  private def numCell(ref: String, serial: Double, style: Int,
-      raw: String = null): Unit = {
-    sheet.append("<c r=\"").append(ref).append('"')
-    if (style > 0) sheet.append(" s=\"").append(style).append('"')
-    sheet.append("><v>")
-      .append(if (raw != null) raw else formatNumber(java.lang.Double.valueOf(serial)))
-      .append("</v></c>")
-  }
-
-  /** Integral numbers without a trailing `.0` (Excel convention; also what
-    * pandas emits for int columns). */
-  private def formatNumber(n: java.lang.Number): String = n match {
-    case d: java.lang.Double =>
-      if (d == math.floor(d) && !d.isInfinite && math.abs(d) < 1e15)
-        d.longValue().toString
-      else d.toString
-    case f: java.lang.Float =>
-      formatNumber(java.lang.Double.valueOf(f.doubleValue()))
-    case other => other.toString
   }
 
   def close(): Unit = {
@@ -154,31 +227,55 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
     }
   }
 
-  private def endSheetStream(): Unit = {
-    sheet.append("</sheetData></worksheet>")
-    flushSheet()
-    zip.closeEntry()
-    rowNum = 0
-  }
-
   // ----------------------------------------------------------- internals
 
-  private def entry(name: String, content: String): Unit = {
-    zip.putNextEntry(new ZipEntry(name))
-    zip.write(content.getBytes("UTF-8"))
-    zip.closeEntry()
+  /** Closes the open piece; the part's `last` one always exists. */
+  private def endPiece(last: Boolean): Unit = {
+    flushSheet()
+    if (piece == null && last) piece = new DeflatePiece(zip.data)
+    if (piece != null) { addToPart(piece.close(last)); piece = null }
+  }
+
+  private def addToPart(s: XlsxWriter.Segment): Unit = {
+    partCrc = ZipWriter.crc32Combine(partCrc, s.crc, s.rawBytes)
+    partBytes += s.rawBytes
+  }
+
+  private def startSheetStream(): Unit = {
+    zip.beginEntry(s"xl/worksheets/sheet${sheetNames.length}.xml")
+    sheet.append("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
+      .append("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""")
+    if (columnWidths.nonEmpty) {
+      sheet.append("<cols>")
+      columnWidths.sortBy(_._1).foreach { case (idx, w) =>
+        sheet.append("<col min=\"").append(idx + 1).append("\" max=\"")
+          .append(idx + 1).append("\" width=\"").append(w)
+          .append("\" customWidth=\"1\"/>")
+      }
+      sheet.append("</cols>")
+    }
+    sheet.append("<sheetData>")
+  }
+
+  private def endSheetStream(): Unit = {
+    sheet.append("</sheetData></worksheet>")
+    endPiece(last = true)
+    zip.endEntry(partCrc, partBytes)
+    partCrc = 0L
+    partBytes = 0L
+    rowNum = 0
   }
 
   /** Parts independent of the sheet list — written up front. */
   private def writeStaticParts(): Unit = {
-    entry("_rels/.rels",
+    zip.entry("_rels/.rels",
       """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
         |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
         |<Relationship Id="rId1" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument" Target="xl/workbook.xml"/>
         |</Relationships>""".stripMargin)
     // style 0: General; style 1: builtin date (14); style 2: builtin
     // datetime (22); style 3: bold header (General format, bold font)
-    entry("xl/styles.xml",
+    zip.entry("xl/styles.xml",
       """<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
         |<styleSheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
         |<fonts count="2"><font><sz val="11"/><name val="Calibri"/></font><font><b/><sz val="11"/><name val="Calibri"/></font></fonts>
@@ -200,7 +297,7 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
     val overrides = sheetNames.indices.map(i =>
       s"""<Override PartName="/xl/worksheets/sheet${i + 1}.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.worksheet+xml"/>""")
       .mkString("\n")
-    entry("[Content_Types].xml",
+    zip.entry("[Content_Types].xml",
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
          |<Types xmlns="http://schemas.openxmlformats.org/package/2006/content-types">
          |<Default Extension="rels" ContentType="application/vnd.openxmlformats-package.relationships+xml"/>
@@ -210,9 +307,9 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
          |<Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>
          |</Types>""".stripMargin)
     val sheetsXml = sheetNames.zipWithIndex.map { case (n, i) =>
-      s"""<sheet name="${escapeXml(n)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
+      s"""<sheet name="${XlsxWriter.escapeXml(n)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
     }.mkString
-    entry("xl/workbook.xml",
+    zip.entry("xl/workbook.xml",
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
          |<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
          |<sheets>$sheetsXml</sheets>
@@ -220,33 +317,92 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
     val rels = sheetNames.indices.map(i =>
       s"""<Relationship Id="rId${i + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/worksheet" Target="worksheets/sheet${i + 1}.xml"/>""")
       .mkString("\n")
-    entry("xl/_rels/workbook.xml.rels",
+    zip.entry("xl/_rels/workbook.xml.rels",
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
          |<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
          |$rels
          |<Relationship Id="rId${sheetNames.length + 1}" Type="http://schemas.openxmlformats.org/officeDocument/2006/relationships/styles" Target="styles.xml"/>
          |</Relationships>""".stripMargin)
   }
+}
 
-  private def startSheetStream(): Unit = {
-    zip.putNextEntry(new ZipEntry(s"xl/worksheets/sheet${sheetNames.length}.xml"))
-    sheet.append("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-      .append("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""")
-    if (columnWidths.nonEmpty) {
-      sheet.append("<cols>")
-      columnWidths.sortBy(_._1).foreach { case (idx, w) =>
-        sheet.append("<col min=\"").append(idx + 1).append("\" max=\"")
-          .append(idx + 1).append("\" width=\"").append(w)
-          .append("\" customWidth=\"1\"/>")
-      }
-      sheet.append("</cols>")
-    }
-    sheet.append("<sheetData>")
+/** One task's rows of a merged sheet: the `<row>` elements alone, raw
+  * DEFLATE closed with `SYNC_FLUSH`, so [[XlsxWriter.appendSegment]] can
+  * splice them into a workbook byte for byte. [[close]] returns what the
+  * splice needs; no rows means no bytes. */
+final class XlsxRowSegment(out: OutputStream, sheetName: String)
+    extends XlsxRowEncoder {
+
+  private val os = new BufferedOutputStream(out, 1 << 16)
+  private var piece: DeflatePiece = null
+  private var result: XlsxWriter.Segment = null
+
+  protected def sheetLabel: String = sheetName
+
+  protected def emit(bytes: Array[Byte], len: Int): Unit = {
+    if (piece == null) piece = new DeflatePiece(os)
+    piece.write(bytes, 0, len)
   }
 
-  private def flushSheet(): Unit = {
-    zip.write(sheet.toString.getBytes("UTF-8"))
-    sheet.setLength(0)
+  def bytesWritten: Long =
+    if (result != null) result.deflatedBytes
+    else if (piece == null) 0L else piece.deflatedBytes
+
+  def close(): XlsxWriter.Segment = {
+    if (result == null) {
+      flushSheet()
+      val s = if (piece == null) XlsxWriter.Segment(0L, 0L, 0L, 0L)
+        else piece.close(last = false)
+      os.close()
+      result = s.copy(rows = rowNum.toLong)
+    }
+    result
+  }
+}
+
+object XlsxWriter {
+  /** Excel's hard per-sheet caps (xlsx stores a 20-bit row index and a
+    * 14-bit column index; real Excel refuses to open anything larger, while
+    * our own reader would happily round-trip it — exactly the
+    * silent-corruption hazard the sheet-name validation closed for names).
+    * Enforced by every row write and every splice, so each write mode —
+    * merged, sharded, sheet-routed, streaming — fails loudly. */
+  val MaxRowsPerSheet: Int = 1048576
+  val MaxColsPerSheet: Int = 16384
+  /** Excel's per-cell text cap, in characters; checked per string cell. */
+  val MaxCellChars: Int = 32767
+
+  /** A raw-DEFLATE run of sheet bytes: the rows it holds, the length and
+    * CRC-32 of its uncompressed bytes, and its compressed length. */
+  final case class Segment(rows: Long, rawBytes: Long, crc: Long,
+      deflatedBytes: Long)
+
+  def rowLimitExceeded(sheet: String): org.apache.spark.SparkException =
+    new org.apache.spark.SparkException(
+      s"Excel row limit exceeded: sheet '$sheet' cannot hold " +
+        s"more than $MaxRowsPerSheet rows (the xlsx format's " +
+        "hard cap; Excel refuses to open larger sheets). Shard the output " +
+        "(option 'shardedOutput'), route rows across sheets (option " +
+        "'sheetColumn'), or write parquet instead.")
+
+  /** 0-based column index → column letters ("A", …, "Z", "AA", …). */
+  def colName(idx: Int): String = {
+    val sb = new StringBuilder
+    var i = idx + 1
+    while (i > 0) {
+      val rem = (i - 1) % 26
+      sb.insert(0, ('A' + rem).toChar)
+      i = (i - 1) / 26
+    }
+    sb.toString
+  }
+
+  private[excel] val InlineStrOpen = "<c t=\"inlineStr\"><is><t xml:space=\"preserve\">"
+
+  private def escapeXml(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 16)
+    appendEscaped(sb, s)
+    sb.toString
   }
 
   /** Is s(i) the start of a literal `_xHHHH_` sequence? */
@@ -257,8 +413,7 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
         (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
       }
 
-  private def escapeXml(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 16)
+  private[excel] def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
     var i = 0
     while (i < s.length) {
       s.charAt(i) match {
@@ -275,19 +430,5 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
       }
       i += 1
     }
-    sb.toString
   }
-}
-
-object XlsxWriter {
-  /** Excel's hard per-sheet caps (xlsx stores a 20-bit row index and a
-    * 14-bit column index; real Excel refuses to open anything larger, while
-    * our own reader would happily round-trip it — exactly the
-    * silent-corruption hazard the sheet-name validation closed for names).
-    * Enforced in [[XlsxWriter.writeRow]] so every write mode — merged,
-    * sharded, sheet-routed, streaming — fails loudly at the offending row. */
-  val MaxRowsPerSheet: Int = 1048576
-  val MaxColsPerSheet: Int = 16384
-  /** Excel's per-cell text cap, in characters; checked per string cell. */
-  val MaxCellChars: Int = 32767
 }

@@ -329,6 +329,21 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e2).exists(_.contains("Excel row limit exceeded")),
       msgs(e2).toString)
+
+    // merged total: two partitions of half the cap each fit on their own,
+    // and so does their sum; the header row tips the sheet over. The
+    // driver counts header + segment rows before it writes any byte.
+    val out2 = new File(tmpDir(), "twoparts.xlsx")
+    val e3 = intercept[Exception] {
+      spark.range(0, XlsxWriter.MaxRowsPerSheet.toLong, 1, 2).toDF("id")
+        .write.format("excel").option("header", "true")
+        .mode("overwrite").save(out2.getAbsolutePath)
+    }
+    assert(msgs(e3).exists(_.contains("Excel row limit exceeded")),
+      msgs(e3).toString)
+    assert(!out2.exists(), "no workbook may be committed past the cap")
+    assert(out2.getParentFile.list().isEmpty,
+      s"no staging or temp litter: ${out2.getParentFile.list().mkString(", ")}")
   }
 
   test("writes past Excel's 16,384-column sheet cap fail loudly") {

@@ -313,6 +313,74 @@ class ExcelConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids == (0 until 100)) // partition-ordered merge ⇒ deterministic
   }
 
+  test("merged write: a truncated temp segment fails the commit, never spliced") {
+    val dir = tmpDir()
+    val out = new File(dir, "guard.xlsx")
+    spark.conf // the commit reads the active session's Hadoop conf
+    val schema = StructType(Seq(StructField("id", LongType)))
+    val write = new ExcelWriteBuilder(schema,
+      ExcelOptions.fromMap(Map("path" -> out.getAbsolutePath))).build()
+    val factory = write.toBatch.createBatchWriterFactory(
+      new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
+        override def numPartitions(): Int = 2
+      })
+    val messages = (0 until 2).map { p =>
+      val w = factory.createWriter(p, p.toLong)
+      (0 until 2000).foreach(i =>
+        w.write(org.apache.spark.sql.catalyst.InternalRow(i.toLong * (p + 1))))
+      w.commit()
+    }
+    val victim = messages(1).asInstanceOf[ExcelCommitMessage]
+    val raf = new java.io.RandomAccessFile(victim.tempPath, "rw")
+    try raf.setLength(raf.length() - 1) finally raf.close()
+    val e = intercept[org.apache.spark.SparkException](
+      write.toBatch.commit(messages.toArray))
+    assert(e.getMessage.contains(victim.tempPath) &&
+      e.getMessage.contains("partition 1"), e.getMessage)
+    assert(dir.list().isEmpty, s"nothing committed: ${dir.list().mkString(", ")}")
+  }
+
+  test("write metrics: per-task rows and bytes, driver splice time and bytes") {
+    import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case other => other.collect { case n => n }
+    }
+    val out = new File(tmpDir(), "metrics.xlsx").getAbsolutePath
+    spark.listenerManager.register(listener)
+    val metrics = try {
+      spark.range(0, 1000, 1, 4).toDF("id")
+        .write.format("excel").mode("overwrite").save(out)
+      // listener events are delivered asynchronously
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      var found: Option[Map[String, Long]] = None
+      while (found.isEmpty && System.nanoTime() < deadline) {
+        found = plans.toArray(Array.empty[SparkPlan]).iterator
+          .flatMap(nodes).map(_.metrics)
+          .find(_.contains(ExcelWriteMetrics.SplicedBytes))
+          .map(_.map { case (k, m) => k -> m.value })
+        if (found.isEmpty) Thread.sleep(50)
+      }
+      found.getOrElse(fail("no executed write plan carries the excel metrics"))
+    } finally spark.listenerManager.unregister(listener)
+    assert(metrics(ExcelWriteMetrics.RowsWritten) == 1000)
+    // the driver splices exactly the bytes its tasks wrote
+    assert(metrics(ExcelWriteMetrics.BytesWritten) > 0)
+    assert(metrics(ExcelWriteMetrics.SplicedBytes) ==
+      metrics(ExcelWriteMetrics.BytesWritten), metrics)
+    assert(metrics(ExcelWriteMetrics.SplicedBytes) < new File(out).length())
+    assert(metrics(ExcelWriteMetrics.SpliceTimeMs) >= 0)
+  }
+
   test("write round-trip across all six types incl. date/timestamp/bool") {
     val dir = tmpDir()
     val out = new File(dir, "types.xlsx").getAbsolutePath

@@ -94,7 +94,7 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
     def rowsXml(cell: String => String): String =
       rows.zipWithIndex.map { case (r, i) =>
         s"""<row r="${i + 1}">${r.zipWithIndex.map { case (v, j) =>
-          s"""<c r="${XlsxReader.colName(j)}${i + 1}" ${cell(v)}</c>"""
+          s"""<c r="${XlsxWriter.colName(j)}${i + 1}" ${cell(v)}</c>"""
         }.mkString}</row>"""
       }.mkString
     val shared = zipFile(Seq(workbookXml(),
@@ -129,7 +129,7 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
       case (r, i) if r.exists(_.isDefined) =>
         s"""<row r="${i + 1}">${r.zipWithIndex.collect {
           case (Some(v), j) =>
-            s"""<c r="${XlsxReader.colName(j)}${i + 1}"><v>$v</v></c>"""
+            s"""<c r="${XlsxWriter.colName(j)}${i + 1}"><v>$v</v></c>"""
         }.mkString}</row>"""
     }.mkString
     val f = zipFile(Seq(workbookXml(), sheetXml(body)))
@@ -179,7 +179,7 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
     "convention; non-date styles stay Double") =
     Prop.forAll(genSerialCells, Gen.oneOf(false, true)) { (cells, d1904) =>
       val body = s"""<row r="1">${cells.zipWithIndex.map { case ((v, s), j) =>
-        s"""<c r="${XlsxReader.colName(j)}1" s="$s"><v>$v</v></c>"""
+        s"""<c r="${XlsxWriter.colName(j)}1" s="$s"><v>$v</v></c>"""
       }.mkString}</row>"""
       val f = zipFile(Seq(workbookXml(d1904), sheetXml(body), stylesXml))
       try {
@@ -305,7 +305,7 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
       val body = rows.zipWithIndex.map { case (r, i) =>
         s"""<row r="${i + 1}" spans="1:${r.length}" customHeight="1">${
           r.zipWithIndex.map { case (v, j) =>
-            s"""<c r="${XlsxReader.colName(j)}${i + 1}" t="inlineStr" cm="1">""" +
+            s"""<c r="${XlsxWriter.colName(j)}${i + 1}" t="inlineStr" cm="1">""" +
               s"""<is><t xml:space="preserve">${xmlEscape(v)}</t></is>""" +
               """<extLst><ext uri="x"><junk a="1">noise</junk></ext></extLst></c>"""
           }.mkString}</row>"""
@@ -322,7 +322,7 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
     Prop.forAll(genStringTable, Gen.chooseNum(0.0, 0.95)) { (rows, cut) =>
       val body = rows.zipWithIndex.map { case (r, i) =>
         s"""<row r="${i + 1}">${r.zipWithIndex.map { case (v, j) =>
-          s"""<c r="${XlsxReader.colName(j)}${i + 1}" t="inlineStr"><is><t>${
+          s"""<c r="${XlsxWriter.colName(j)}${i + 1}" t="inlineStr"><is><t>${
             xmlEscape(v)}</t></is></c>"""
         }.mkString}</row>"""
       }.mkString

@@ -17,11 +17,11 @@ class XlsxCodecSpec extends AnyFunSuite {
   test("column ref round-trip A..ZZZ") {
     val rnd = new scala.util.Random(42)
     (0 until 1000).map(_ => rnd.nextInt(100000)).foreach { n =>
-      assert(XlsxReader.colIndex(XlsxReader.colName(n) + "1") == n)
+      assert(XlsxReader.colIndex(XlsxWriter.colName(n) + "1") == n)
     }
-    assert(XlsxReader.colName(0) == "A")
-    assert(XlsxReader.colName(25) == "Z")
-    assert(XlsxReader.colName(26) == "AA")
+    assert(XlsxWriter.colName(0) == "A")
+    assert(XlsxWriter.colName(25) == "Z")
+    assert(XlsxWriter.colName(26) == "AA")
     assert(XlsxReader.colIndex("C5") == 2)
   }
 
@@ -228,5 +228,35 @@ class XlsxCodecSpec extends AnyFunSuite {
     val v = r.rowIterator(r.sheets.head).next().head
     r.close()
     assert(v == 9.007199254740992E15) // reader collapses to double (documented)
+  }
+
+  test("a sheet part past 4 GiB gets ZIP64 sizes that ZipFile reads and verifies") {
+    // 65 copies of one 64 MiB run of zeros, spliced: 4.06 GiB uncompressed
+    // in a file of a few MB. Zeros are not sheet XML, but the container
+    // neither knows nor cares; the point is the size fields.
+    val zeros = new Array[Byte](64 << 20)
+    val buf = new java.io.ByteArrayOutputStream
+    val piece = new DeflatePiece(buf)
+    piece.write(zeros, 0, zeros.length)
+    val seg = piece.close(last = false)
+    val bytes = buf.toByteArray
+    val f = tmpFile()
+    val w = new XlsxWriter(new FileOutputStream(f))
+    (1 to 65).foreach(_ => w.appendSegment(new java.io.ByteArrayInputStream(bytes), seg))
+    w.close()
+    val zf = new java.util.zip.ZipFile(f)
+    try {
+      val e = zf.getEntry("xl/worksheets/sheet1.xml")
+      assert(e.getSize > 0xffffffffL && e.getSize > 65L * zeros.length, e.getSize)
+      val crc = new java.util.zip.CRC32
+      val in = zf.getInputStream(e)
+      var n = 0L
+      try {
+        var r = in.read(zeros)
+        while (r >= 0) { crc.update(zeros, 0, r); n += r; r = in.read(zeros) }
+      } finally in.close()
+      assert(n == e.getSize && crc.getValue == e.getCrc)
+      assert(zf.getEntry("xl/workbook.xml") != null) // entries after it still resolve
+    } finally zf.close()
   }
 }

@@ -1,7 +1,8 @@
 package graft.sources.excel
 
-import java.io.{File, FileOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, File, FileInputStream, FileOutputStream}
 import java.time.{LocalDate, LocalDateTime}
+import java.util.zip.{ZipFile, ZipInputStream}
 
 import org.scalacheck.{Gen, Prop, Properties}
 
@@ -117,5 +118,80 @@ object XlsxRoundTripProps extends Properties("xlsx.roundtrip") {
           }
       } finally r.close()
     } finally f.delete()
+  }
+
+  // ------------------------------------------------------------- splice
+  // The driver's merge: rows cut into segments (some empty), each
+  // deflated on its own by XlsxRowSegment, then copied into one workbook
+  // with appendSegment. It must read back as one XlsxWriter over the
+  // same rows would, and every entry must pass the JDK's CRC and size
+  // checks (ZipInputStream verifies both per entry) as well as ZipFile.
+
+  private def genCuts(n: Int): Gen[Seq[Int]] =
+    Gen.chooseNum(0, 5).flatMap(k => Gen.listOfN(k, Gen.chooseNum(0, n)))
+      .map(_.sorted)
+
+  /** `sheets` of (name, rows, cuts); the first row of a sheet, when
+    * present, is written directly (as the driver writes a header). */
+  private def splice(f: File, sheets: Seq[(String, Seq[Seq[Any]], Seq[Int])]): Unit = {
+    val w = new XlsxWriter(new FileOutputStream(f), sheets.head._1)
+    sheets.zipWithIndex.foreach { case ((name, rows, cuts), i) =>
+      if (i > 0) w.startSheet(name)
+      rows.take(1).foreach(w.writeRow)
+      val body = rows.drop(1)
+      (0 +: cuts.map(math.min(_, body.length)) :+ body.length).sliding(2)
+        .foreach { case Seq(from, to) =>
+          val buf = new ByteArrayOutputStream
+          val seg = new XlsxRowSegment(buf, name)
+          body.slice(from, to).foreach(seg.writeRow)
+          val stats = seg.close()
+          w.appendSegment(new ByteArrayInputStream(buf.toByteArray), stats)
+        }
+    }
+    w.close()
+  }
+
+  private def readAll(f: File): Seq[(String, Vector[Seq[Any]])] = {
+    val r = new XlsxReader(f)
+    try r.sheets.map(sh => sh.name -> r.rowIterator(sh).map(_.toSeq).toVector)
+    finally r.close()
+  }
+
+  private def zipChecksPass(f: File): Boolean = {
+    val zin = new ZipInputStream(new FileInputStream(f))
+    val entries = try Iterator.continually(zin.getNextEntry).takeWhile(_ != null)
+      .map { e => zin.readAllBytes(); e.getName }.toVector
+    finally zin.close()
+    val zf = new ZipFile(f)
+    try entries.nonEmpty && entries.forall(n =>
+      zf.getInputStream(zf.getEntry(n)).readAllBytes().length == zf.getEntry(n).getSize)
+    finally zf.close()
+  }
+
+  private def splicedEqualsWhole(sheets: Seq[(String, Seq[Seq[Any]], Seq[Int])]): Boolean = {
+    val whole = File.createTempFile("graft-prop-whole", ".xlsx")
+    val cut = File.createTempFile("graft-prop-splice", ".xlsx")
+    try {
+      val w = new XlsxWriter(new FileOutputStream(whole), sheets.head._1)
+      sheets.zipWithIndex.foreach { case ((name, rows, _), i) =>
+        if (i > 0) w.startSheet(name)
+        rows.foreach(w.writeRow)
+      }
+      w.close()
+      splice(cut, sheets)
+      zipChecksPass(cut) && readAll(cut) == readAll(whole)
+    } finally { whole.delete(); cut.delete() }
+  }
+
+  property("splice == one writer (single sheet)") = Prop.forAll(
+    genTable.flatMap(rows => genCuts(rows.length).map(c => (rows, c)))) {
+    case (rows, cuts) => splicedEqualsWhole(Seq(("Sheet1", rows, cuts)))
+  }
+
+  property("splice == one writer (multi-sheet)") = Prop.forAll(
+    genWorkbook.flatMap(sheets => Gen.sequence[Seq[Seq[Int]], Seq[Int]](
+      sheets.map(s => genCuts(s._2.length))).map(cs =>
+      sheets.zip(cs).map { case ((n, rows), c) => (n, rows, c) }))) {
+    sheets => splicedEqualsWhole(sheets)
   }
 }
