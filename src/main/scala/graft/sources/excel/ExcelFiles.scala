@@ -20,7 +20,7 @@ object ExcelFiles {
   /** Listing admits `.xlsx` (the reference's surface) plus `.xlsm` —
     * macro-enabled workbooks are the same OOXML zip (identical
     * worksheet parts under `xl/worksheets`, plus a vbaProject part the
-    * reader never opens), so the StAX codec reads them unchanged. Legacy
+    * reader never opens), so the reader reads them unchanged. Legacy
     * binary `.xls` (BIFF, not a zip) stays excluded, matching the
     * reference's B6 listing. `xlsxOnly` (the `xlsxOnly` option) drops
     * the `.xlsm` superset for strict parity with the reference's

@@ -3,6 +3,7 @@ package graft.sources.excel
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
@@ -10,25 +11,24 @@ import org.apache.spark.util.SerializableConfiguration
 /** Batch scan: one input partition per `.xlsx` file — preserving the
   * reference's observable contract that a directory of N files reads as N
   * partitions (`/root/reference/tests/test_excel_connector.py:162-187`).
-  * Every batch scan but the `count(*)` tag scan runs one row reader,
-  * [[ExcelPartitionReader]]. Pushdown is limited to what saves reader
-  * work: column pruning, pushed filters (file/sheet pruning plus in-reader
-  * evaluation), the limit cap, TABLESAMPLE and a lone COUNT(*). Sorts,
-  * offsets and other aggregates stay Spark operators above the scan.
+  * Every batch scan runs one row reader, [[ExcelPartitionReader]].
+  * Pushdown is limited to what saves reader work: column pruning (only
+  * projected cells are decoded), pushed filters (file/sheet pruning plus
+  * in-reader evaluation), the limit cap and TABLESAMPLE. Sorts, offsets
+  * and aggregates stay Spark operators above the scan; `count()` reads
+  * an empty projection, whose rows the scanner steps over whole.
   */
 class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
     with SupportsPushDownLimit
-    with SupportsPushDownTableSample
-    with SupportsPushDownAggregates {
+    with SupportsPushDownTableSample {
 
   private var requiredSchema: StructType = fullSchema
   private var limit: Int = -1
   private var sample: Option[ExcelSample] = None
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
-  private var countStar = false
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     this.requiredSchema = requiredSchema
@@ -66,99 +66,18 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     * multi-file directories and row-range splits all qualify. */
   override def pushTableSample(lowerBound: Double, upperBound: Double,
       withReplacement: Boolean, seed: Long): Boolean = {
-    if (withReplacement || countStar) return false
+    if (withReplacement) return false
     sample = Some(ExcelSample(lowerBound, upperBound, seed))
     true
   }
 
-  /** An unfiltered, ungrouped, lone COUNT(*) is answered by an XML tag
-    * scan (zero cell decode). Partial pushdown
-    * (supportCompletePushDown=false): Spark sums the per-file counts, so
-    * multi-file directories and AQE behave normally. Every other
-    * aggregate runs in Spark above the pruned row scan. */
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = false
-
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    // a pushed filter means rows are conditionally kept — the count must
-    // then come from the row reader (Spark only offers the aggregate when
-    // it pushed all filters, but stay defensive). Multi-sheet reads fall
-    // back to the row reader.
-    if (agg.groupByExpressions.nonEmpty || pushed.nonEmpty || limit >= 0 ||
-      sample.nonEmpty || opts.allSheets) return false
-    countStar = agg.aggregateExpressions.toSeq match {
-      case Seq(_: org.apache.spark.sql.connector.expressions.aggregate.CountStar) => true
-      case _ => false
-    }
-    countStar
-  }
-
   override def build(): Scan =
-    if (countStar) new ExcelCountScan(opts) // tag-scan fast path
-    else new ExcelScan(fullSchema, requiredSchema, opts, limit, pushed, sample)
+    new ExcelScan(fullSchema, requiredSchema, opts, limit, pushed, sample)
 }
 
 /** A pushed Bernoulli TABLESAMPLE: keep a row iff a uniform draw lands
   * in [lower, upper). */
 case class ExcelSample(lower: Double, upper: Double, seed: Long)
-
-/** Scan produced when count(*) was pushed: one partition per file, each
-  * emitting a single row with the file's dense row count (exact tag scan
-  * — never the `<dimension>` hint, which may be stale). */
-class ExcelCountScan(opts: ExcelOptions) extends Scan with Batch {
-
-  override def readSchema(): StructType =
-    new StructType().add("count_star", org.apache.spark.sql.types.LongType, false)
-
-  override def description(): String =
-    s"ExcelScan path=${opts.pathOpt.getOrElse("?")} PushedAggregation=[COUNT(*)]"
-
-  override def toBatch: Batch = this
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    ExcelFiles.list(opts.path, conf, opts.recursiveFileLookup,
-      opts.xlsxOnly)
-      .map(f => ExcelInputPartition(f): InputPartition).toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    ExcelCountReaderFactory(opts, conf)
-  }
-}
-
-case class ExcelCountReaderFactory(opts: ExcelOptions,
-    conf: SerializableConfiguration) extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val filePath = partition.asInstanceOf[ExcelInputPartition].filePath
-    new PartitionReader[InternalRow] {
-      private var done = false
-      override def next(): Boolean = !done && { done = true; true }
-      override def get(): InternalRow = {
-        val (local, temp) = ExcelFiles.toLocal(filePath, conf.value)
-        val n =
-          try {
-            val rd =
-              try new XlsxReader(local)
-              catch {
-                case e: Exception => throw new org.apache.spark.SparkException(
-                  s"Failed to open excel file $filePath: ${e.getMessage}", e)
-              }
-            try rd.lastRowNumber(rd.resolveSheet(opts.sheetName),
-              trustDimension = false)
-            finally rd.close()
-          } finally if (temp) local.delete()
-        val dataRows = math.max(0L, n.toLong - (if (opts.header) 1L else 0L))
-        new GenericInternalRow(Array[Any](dataRows))
-      }
-      override def close(): Unit = ()
-    }
-  }
-}
 
 class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     opts: ExcelOptions, limit: Int,
@@ -265,6 +184,8 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
       (if (filters.nonEmpty) s" PushedFilters=[${filters.mkString(", ")}]" else "")
 
   override def toBatch: Batch = this
+
+  override def supportedCustomMetrics(): Array[CustomMetric] = ExcelScanMetrics.supported
 
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
@@ -549,63 +470,57 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
   private val sheetNameValue =
     org.apache.spark.unsafe.types.UTF8String.fromString(resolvedSheet.name)
 
-  private val (indices: Array[Int], rowIter: Iterator[Array[Any]]) = {
-    val sheet = resolvedSheet
-    // ranged partition: the header (dense row 1) is outside the data range,
-    // so it is read through its own short-range stream; the data stream
-    // then decodes only [startRow, endRowExcl)
-    val it =
-      if (ranged) reader.rowIterator(sheet, startRow, endRowExcl)
-      else reader.rowIterator(sheet)
-    val headerOpt: Option[Array[Any]] =
-      if (!opts.header) None
-      else if (ranged) {
-        val hIt = reader.rowIterator(sheet, 1, 2)
-        if (hIt.hasNext) Some(hIt.next()) else None
-      } else if (it.hasNext) Some(it.next())
+  // the header (dense row 1) is always read through its own one-row
+  // stream, all columns; the data stream then decodes only the resolved
+  // columns of [first data row or startRow, endRowExcl)
+  private val headerRow: Option[Array[Any]] =
+    if (!opts.header) None
+    else {
+      val it = reader.rowIterator(resolvedSheet, 1, 2)
+      if (it.hasNext) Some(it.next()) else None
+    }
+
+  private val indices: Array[Int] = {
+    def meta(name: String): Option[Int] =
+      if (opts.allSheets && name == ExcelSchema.SheetColumn) Some(SheetIdx)
+      else if (filePathIsMeta && name == ExcelSchema.FilePathColumn) Some(FilePathIdx)
       else None
-    val (colIndex, dataIter) =
-      if (opts.header) {
-        if (headerOpt.isEmpty) (requiredSchema.fields.map(_ => -1), it)
-        else {
-          val headerRow = headerOpt.get
-          // width must match inference (ExcelSchema.inferFromFile uses the
-          // max of header and widest sampled data row), so positional
-          // 'Unnamed: N' fallbacks resolve for data-wider-than-header files
-          val names = ExcelSchema.columnNames(Some(headerRow),
-            math.max(headerRow.length, fullSchema.length), header = true)
-          val nameToIdx = names.zipWithIndex.toMap
-          val idx = requiredSchema.fields.map { f =>
-            if (opts.allSheets && f.name == ExcelSchema.SheetColumn) SheetIdx
-            else if (filePathIsMeta && f.name == ExcelSchema.FilePathColumn)
-              FilePathIdx
-            else nameToIdx.getOrElse(f.name,
-              if (allowMissing) -1
-              else throw new org.apache.spark.SparkException(
-                s"Column '${f.name}' not found in $filePath " +
-                  s"(sheet columns: ${names.mkString(", ")})"))
-          }
-          (idx, it)
-        }
-      } else {
+    headerRow match {
+      case Some(header) =>
+        // width must match inference (ExcelSchema.inferFromFile uses the
+        // max of header and widest sampled data row), so positional
+        // 'Unnamed: N' fallbacks resolve for data-wider-than-header files
+        val names = ExcelSchema.columnNames(Some(header),
+          math.max(header.length, fullSchema.length), header = true)
+        val nameToIdx = names.zipWithIndex.toMap
+        requiredSchema.fields.map(f => meta(f.name).getOrElse(
+          nameToIdx.getOrElse(f.name,
+            if (allowMissing) -1
+            else throw new org.apache.spark.SparkException(
+              s"Column '${f.name}' not found in $filePath " +
+                s"(sheet columns: ${names.mkString(", ")})"))))
+      case None if opts.header => requiredSchema.fields.map(_ => -1)
+      case None =>
         // positional: field ← its position in the FULL schema (pruning must
         // not shift positions — requiredSchema indices would read the wrong
         // file columns after a select())
-        (requiredSchema.fields.map { f =>
-          if (opts.allSheets && f.name == ExcelSchema.SheetColumn) SheetIdx
-          else if (filePathIsMeta && f.name == ExcelSchema.FilePathColumn)
-            FilePathIdx
-          else fullSchema.fieldIndex(f.name)
-        }, it)
-      }
+        requiredSchema.fields.map(f =>
+          meta(f.name).getOrElse(fullSchema.fieldIndex(f.name)))
+    }
+  }
+
+  private val rowIter: Iterator[Array[Any]] = {
+    val columns = new Array[Boolean](indices.foldLeft(0)((w, i) => math.max(w, i + 1)))
+    indices.foreach(i => if (i >= 0) columns(i) = true)
+    val dataStart = if (opts.header) 2 else 1
+    val it = reader.rowIterator(resolvedSheet, if (ranged) startRow else dataStart,
+      if (ranged) endRowExcl else Int.MaxValue, columns)
     // raw-iterator take(limit) is only sound with no pushed filters AND
     // no pushed sample; with either, the limit must count KEPT rows (see
     // `kept` in next()) or qualifying rows beyond the first `limit` raw
     // rows would be dropped
-    (colIndex,
-      if (limit >= 0 && structFilters.isEmpty && sample.isEmpty)
-        dataIter.take(limit)
-      else dataIter)
+    if (limit >= 0 && structFilters.isEmpty && sample.isEmpty) it.take(limit)
+    else it
   }
   private var current: InternalRow = _
   private var kept: Long = 0L
@@ -665,8 +580,43 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
 
   override def get(): InternalRow = current
 
+  override def currentMetricsValues(): Array[CustomTaskMetric] =
+    ExcelScanMetrics.values(reader.counters)
+
   override def close(): Unit = {
     reader.close()
     if (isTemp) localFile.delete()
   }
 }
+
+/** DSv2 scan metrics, summed over a scan's partitions: what the sheet
+  * scanner read, decoded and stepped over. */
+object ExcelScanMetrics {
+  val SheetBytes = "sheetBytesScanned"
+  val Rows = "rowsScanned"
+  val CellsDecoded = "cellsDecoded"
+  val CellsSkipped = "cellsSkipped"
+  val SharedStrings = "sharedStringsParsed"
+
+  def supported: Array[CustomMetric] = Array(new ExcelSheetBytesMetric,
+    new ExcelRowsScannedMetric, new ExcelCellsDecodedMetric,
+    new ExcelCellsSkippedMetric, new ExcelSharedStringsMetric)
+
+  def values(c: ScanCounters): Array[CustomTaskMetric] = Array(
+    ExcelWriteMetrics.value(SheetBytes, c.sheetBytes),
+    ExcelWriteMetrics.value(Rows, c.rows),
+    ExcelWriteMetrics.value(CellsDecoded, c.cellsDecoded),
+    ExcelWriteMetrics.value(CellsSkipped, c.cellsSkipped),
+    ExcelWriteMetrics.value(SharedStrings, c.sstEntries))
+}
+
+class ExcelSheetBytesMetric extends ExcelSumMetric(
+  ExcelScanMetrics.SheetBytes, "inflated sheet bytes scanned")
+class ExcelRowsScannedMetric
+    extends ExcelSumMetric(ExcelScanMetrics.Rows, "sheet rows scanned")
+class ExcelCellsDecodedMetric
+    extends ExcelSumMetric(ExcelScanMetrics.CellsDecoded, "cells decoded")
+class ExcelCellsSkippedMetric extends ExcelSumMetric(
+  ExcelScanMetrics.CellsSkipped, "cells skipped (column not read)")
+class ExcelSharedStringsMetric extends ExcelSumMetric(
+  ExcelScanMetrics.SharedStrings, "shared-string entries parsed")

@@ -6,17 +6,19 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Streaming `.xlsx` reader on JDK built-ins only (java.util.zip + StAX) —
-  * no Apache POI on the classpath (SURVEY.md §7).
+/** Streaming `.xlsx` reader on JDK built-ins only — no Apache POI on the
+  * classpath (SURVEY.md §7).
   *
-  * An xlsx file is a ZIP of OOXML parts; we parse `xl/workbook.xml` (sheet
+  * An xlsx file is a ZIP of OOXML parts (read with java.util.zip). The
+  * kilobyte-sized cold parts go through StAX: `xl/workbook.xml` (sheet
   * catalog + 1904 date system flag), `xl/_rels/workbook.xml.rels` (sheet →
-  * worksheet part), `xl/sharedStrings.xml` (string table), `xl/styles.xml`
-  * (number formats, to tell dates from plain numbers), and stream the chosen
-  * `xl/worksheets/sheetN.xml` row by row in constant memory (the shared
-  * string table is the only whole-file structure held, as in openpyxl —
-  * the parser behind the reference, `/root/reference/src/pyspark_datasource/
-  * excel/connector.py:83`).
+  * worksheet part) and `xl/styles.xml` (number formats, to tell dates from
+  * plain numbers). The hot parts go through [[XmlScanner]], a byte-level
+  * scanner: `xl/worksheets/sheetN.xml` streams row by row in constant
+  * memory, decoding only the cells of the columns asked for, and
+  * `xl/sharedStrings.xml` is parsed on demand, only as far as the highest
+  * index a decoded cell has asked for (openpyxl, the parser behind the
+  * reference connector, loads it whole).
   *
   * Cell values surface as: `null`, `java.lang.Boolean`, `java.lang.Double`,
   * `String`, `java.time.LocalDate` (date-only format, no time fraction) or
@@ -34,13 +36,15 @@ final class XlsxReader(file: File) extends AutoCloseable {
     f
   }
 
-  private def open(entry: String): Option[InputStream] =
+  private[excel] def open(entry: String): Option[InputStream] =
     Option(zip.getEntry(entry)).map(zip.getInputStream)
 
-  import XlsxReader.Sheet
+  import XlsxReader._
+
+  /** What this reader's scans have done so far (the DSv2 scan metrics). */
+  val counters = new ScanCounters
 
   val (sheets: Seq[Sheet], date1904: Boolean) = parseWorkbook()
-  private val sharedStrings: IndexedSeq[String] = parseSharedStrings()
   private val styleIsDate: IndexedSeq[DateKind.Value] = parseStyles()
 
   /** Sheet index for an option value that may be a name or a 0-based index
@@ -71,37 +75,33 @@ final class XlsxReader(file: File) extends AutoCloseable {
   def lastRowNumber(sheet: Sheet): Int = lastRowNumber(sheet, trustDimension = true)
 
   /** With `trustDimension=false`: the EXACT last present row number via a
-    * full tag scan (still no cell decode) — what count(*) pushdown needs,
-    * since the dense row sequence the reader emits ends exactly there. */
+    * full scan that steps over every row without entering a cell — the
+    * dense row sequence the reader emits ends exactly there. */
   def lastRowNumber(sheet: Sheet, trustDimension: Boolean): Int = {
     val in = open(sheet.entry).getOrElse(return 0)
-    val r = xmlIn.createXMLStreamReader(in)
+    var last = 0
+    val sc = sheetScanner(in, sheet, () => last)
+    val tags = new SheetTags(sc)
     try {
-      var last = 0
-      while (r.hasNext) r.next() match {
-        case XMLStreamConstants.START_ELEMENT =>
-          r.getLocalName match {
-            case "dimension" if trustDimension =>
-              val ref = attr(r, "ref")
-              if (ref != null) {
-                // "A1:H5000" → 5000; "A1" → 1
-                val lastCell = ref.substring(ref.indexOf(':') + 1)
-                var i = 0
-                while (i < lastCell.length && lastCell.charAt(i).isLetter) i += 1
-                val digits = lastCell.substring(i)
-                if (digits.nonEmpty && digits.forall(_.isDigit)) return digits.toInt
-              }
-            case "row" =>
-              val a = attr(r, "r")
-              last = if (a == null) last + 1 else a.toInt
-            case _ => ()
+      while (true) {
+        if (!tags.next()) return last
+        if (sc.isEnd) { if (sc.nameIs(SheetData)) return last }
+        else if (sc.nameIs(Row)) {
+          last = rowNumber(sc, last)
+          if (!sc.selfClosing) sc.skipTo(Row)
+        } else if (sc.nameIs(SheetData) && sc.selfClosing) return last
+        else if (trustDimension && sc.nameIs(Dimension)) {
+          while (sc.nextAttr()) if (sc.attrIs(Ref)) {
+            // "A1:H5000" → 5000; "A1" → 1
+            val ref = sc.value
+            val lastCell = ref.substring(ref.indexOf(':') + 1)
+            val digits = lastCell.dropWhile(_.isLetter)
+            if (digits.nonEmpty && digits.forall(_.isDigit)) return digits.toInt
           }
-        case _ => ()
+        }
       }
       last
-    } finally {
-      try { r.close(); in.close() } catch { case _: Exception => () }
-    }
+    } finally sc.close()
   }
 
   /** Stream the rows of one sheet. Each row is a possibly-ragged array —
@@ -110,239 +110,290 @@ final class XlsxReader(file: File) extends AutoCloseable {
   def rowIterator(sheet: Sheet): Iterator[Array[Any]] =
     rowIterator(sheet, 1, Int.MaxValue)
 
+  def rowIterator(sheet: Sheet, startRow: Int,
+      endRowExcl: Int): Iterator[Array[Any]] =
+    rowIterator(sheet, startRow, endRowExcl, null)
+
   /** Stream rows whose dense (1-based) row number is in
     * [startRow, endRowExcl). Because interior gaps materialize as empty
     * arrays, the k-th dense row IS sheet row k, so ranges over emitted
-    * positions and over sheet row numbers coincide. Out-of-range `<row>`
-    * subtrees are skipped without cell decode, and the stream closes as
-    * soon as a row at/after endRowExcl is seen — a partition pays XML
-    * traversal for the prefix but value decode only for its own slice. */
-  def rowIterator(sheet: Sheet, startRow: Int,
-      endRowExcl: Int): Iterator[Array[Any]] = {
+    * positions and over sheet row numbers coincide. Rows before the range
+    * are stepped over without entering a cell, and the stream closes as
+    * soon as a row at/after endRowExcl is seen.
+    *
+    * `columns` (null = all) is the mask of 0-based columns to decode: any
+    * other cell reads as null without its value being looked at, and when
+    * no column is masked each row comes back empty. A part that ends
+    * before `</sheetData>` throws rather than reading as fewer rows. */
+  def rowIterator(sheet: Sheet, startRow: Int, endRowExcl: Int,
+      columns: Array[Boolean]): Iterator[Array[Any]] = {
     val in = open(sheet.entry).getOrElse(
       throw new IllegalStateException(s"Missing worksheet part ${sheet.entry}"))
-    val r = xmlIn.createXMLStreamReader(in)
-    new Iterator[Array[Any]] with AutoCloseable {
-      private var nextRow: Array[Any] = _
-      private var lastRowNum = 0 // 1-based row number of last seen row
-      private var pendingGap = 0 // in-range empty rows to emit before nextRow
-      private var exhausted = false
+    new RowScan(in, sheet, startRow, endRowExcl, columns)
+  }
 
-      advance()
+  private final class RowScan(in: InputStream, sheet: Sheet, startRow: Int,
+      endRowExcl: Int, columns: Array[Boolean])
+      extends Iterator[Array[Any]] with AutoCloseable {
+    private var lastRowNum = 0 // 1-based row number of last seen row
+    private val sc = sheetScanner(in, sheet, () => lastRowNum)
+    private val tags = new SheetTags(sc)
+    // null decodes every column: a mask that is all true, and true past
+    // its end too, so both modes run the same test on a cell
+    private val mask = if (columns == null) Array.fill(64)(true) else columns
+    private val pastMask = columns == null
+    private val noCells = columns != null && !columns.contains(true)
+    private var cells = new Array[Any](16) // the row being read; null past width
+    private var nextRow: Array[Any] = _
+    private var pendingGap = 0 // in-range empty rows to emit before nextRow
+    private var exhausted = false
 
-      private def advance(): Unit = {
-        nextRow = null
-        while (nextRow == null && pendingGap == 0 && !exhausted) {
-          if (!r.hasNext) { exhausted = true; closeQuietly() }
-          else r.next() match {
-            case XMLStreamConstants.START_ELEMENT if r.getLocalName == "row" =>
-              val rAttr = attr(r, "r")
-              val rowNum =
-                if (rAttr == null) lastRowNum + 1
-                else rAttr.toInt
-              if (rowNum >= endRowExcl) {
-                // emit any in-range gap before the out-of-range row, then stop
-                pendingGap = gapSize(lastRowNum, endRowExcl)
-                exhausted = true
-                closeQuietly()
-              } else {
-                pendingGap = gapSize(lastRowNum, rowNum)
-                lastRowNum = rowNum
-                if (rowNum >= startRow) nextRow = readRow()
-                else skipRow()
-              }
-            case _ => ()
+    advance()
+
+    private def advance(): Unit = {
+      nextRow = null
+      while (nextRow == null && pendingGap == 0 && !exhausted) {
+        if (!tags.next()) finish()
+        else if (sc.isEnd) { if (sc.nameIs(SheetData)) finish() }
+        else if (sc.nameIs(Row)) {
+          counters.rows += 1
+          val rowNum = rowNumber(sc, lastRowNum)
+          if (rowNum >= endRowExcl) {
+            // emit any in-range gap before the out-of-range row, then stop
+            pendingGap = gapSize(lastRowNum, endRowExcl)
+            finish()
+          } else {
+            pendingGap = gapSize(lastRowNum, rowNum)
+            lastRowNum = rowNum
+            if (rowNum < startRow || noCells) {
+              if (!sc.selfClosing) sc.skipTo(Row)
+              if (rowNum >= startRow) nextRow = EmptyRow
+            } else nextRow = readRow()
           }
+        } else if (sc.nameIs(SheetData) && sc.selfClosing) finish()
+      }
+    }
+
+    /** Rows strictly between lastSeen and next that fall in range. */
+    private def gapSize(lastSeen: Int, next: Int): Int = {
+      val from = math.max(lastSeen + 1, startRow)
+      val to = math.min(next - 1, endRowExcl - 1)
+      math.max(0, to - from + 1)
+    }
+
+    /** The cells of the current `<row>`; a cell whose reference repeats
+      * an earlier column overwrites it. */
+    private def readRow(): Array[Any] = {
+      if (sc.selfClosing) return EmptyRow
+      var width = 0
+      while (true) {
+        if (!sc.nextTag()) sc.truncated()
+        if (sc.isEnd) {
+          if (sc.nameIs(Row)) {
+            val row = java.util.Arrays.copyOf(cells.asInstanceOf[Array[AnyRef]], width)
+            // skipped cells widen the row without growing `cells`
+            java.util.Arrays.fill(cells.asInstanceOf[Array[AnyRef]], 0,
+              math.min(width, cells.length), null)
+            return row.asInstanceOf[Array[Any]]
+          }
+        } else if (sc.nameIs(C)) {
+          var col = width
+          var wanted = if (col < mask.length) mask(col) else pastMask
+          var kind = CellNumber
+          var style = NoStyle
+          var attrs = sc.nextAttr()
+          while (attrs) {
+            if (sc.attrIs('r')) {
+              col = sc.columnValue
+              if (col < 0) sc.fail("a cell reference without a column")
+              wanted = if (col < mask.length) mask(col) else pastMask
+            } else if (sc.attrIs('t')) kind = cellKind(sc)
+            else if (sc.attrIs('s')) style = sc.intValue(trim = true, BadStyle)
+            // a cell not asked for needs nothing but its column
+            attrs = (wanted || !sc.attrIs('r')) && sc.nextAttr()
+          }
+          if (wanted) {
+            val v = readCell(kind, style)
+            if (col >= cells.length)
+              cells = java.util.Arrays.copyOf(cells.asInstanceOf[Array[AnyRef]],
+                math.max(col + 1, cells.length * 2)).asInstanceOf[Array[Any]]
+            cells(col) = v
+            counters.cellsDecoded += 1
+          } else {
+            if (!sc.selfClosing) sc.skipTo(C)
+            counters.cellsSkipped += 1
+          }
+          width = math.max(width, col + 1)
         }
       }
+      EmptyRow
+    }
 
-      /** Rows strictly between lastSeen and next that fall in range. */
-      private def gapSize(lastSeen: Int, next: Int): Int = {
-        val from = math.max(lastSeen + 1, startRow)
-        val to = math.min(next - 1, endRowExcl - 1)
-        math.max(0, to - from + 1)
-      }
-
-      /** Skip the current `<row>` subtree without decoding cells. */
-      private def skipRow(): Unit = {
-        var depth = 1
-        while (depth > 0) r.next() match {
-          case XMLStreamConstants.START_ELEMENT => depth += 1
-          case XMLStreamConstants.END_ELEMENT => depth -= 1
-          case _ => ()
-        }
-      }
-
-      /** Parse one `<row>` element's cells (reader is on START row). */
-      private def readRow(): Array[Any] = {
-        val cells = ArrayBuffer.empty[Any]
+    /** The value of the current `<c>`: its `<v>` and `<is>` children
+      * (at any depth; a formula's `<f>` is stepped over). */
+    private def readCell(kind: Int, style: Int): Any = {
+      var v: String = null
+      var inlineStr: String = null
+      if (!sc.selfClosing) {
         var done = false
         while (!done) {
-          r.next() match {
-            case XMLStreamConstants.START_ELEMENT if r.getLocalName == "c" =>
-              val ref = attr(r, "r")
-              val col =
-                if (ref == null) cells.length
-                else XlsxReader.colIndex(ref)
-              while (cells.length < col) cells += null
-              val v = readCell()
-              if (cells.length == col) cells += v
-              else cells(col) = v // defensive: out-of-order refs
-            case XMLStreamConstants.END_ELEMENT if r.getLocalName == "row" =>
-              done = true
-            case _ => ()
-          }
-        }
-        cells.toArray
-      }
-
-      /** Parse one `<c>` element into a value (reader is on START c). */
-      private def readCell(): Any = {
-        val t = attr(r, "t")
-        val s = attr(r, "s")
-        var v: String = null
-        var inlineStr: String = null
-        var done = false
-        while (!done) {
-          r.next() match {
-            case XMLStreamConstants.START_ELEMENT =>
-              r.getLocalName match {
-                case "v" => v = readText()
-                case "is" => inlineStr = readRichText("is")
-                case "f" => skipElement("f")
-                case _ => ()
-              }
-            case XMLStreamConstants.END_ELEMENT if r.getLocalName == "c" =>
-              done = true
-            case _ => ()
-          }
-        }
-        decodeCell(t, s, v, inlineStr)
-      }
-
-      /** Text content until the current element ends. */
-      private def readText(): String = {
-        val sb = new java.lang.StringBuilder
-        var depth = 0
-        var done = false
-        while (!done) {
-          r.next() match {
-            case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA =>
-              sb.append(r.getText)
-            case XMLStreamConstants.START_ELEMENT => depth += 1
-            case XMLStreamConstants.END_ELEMENT =>
-              if (depth == 0) done = true else depth -= 1
-            case _ => ()
-          }
-        }
-        sb.toString
-      }
-
-      /** Concatenate all `<t>` runs under an element (rich text / `<is>`),
-        * EXCLUDING `<rPh>` phonetic runs — their `<t>` children are
-        * furigana annotations, not cell text (openpyxl's rule; see the
-        * matching guard in parseSharedStrings). */
-      private def readRichText(outer: String): String = {
-        val sb = new java.lang.StringBuilder
-        var rPhDepth = 0
-        var done = false
-        while (!done) {
-          r.next() match {
-            case XMLStreamConstants.START_ELEMENT if r.getLocalName == "rPh" =>
-              rPhDepth += 1
-            case XMLStreamConstants.START_ELEMENT
-                if r.getLocalName == "t" && rPhDepth == 0 =>
-              sb.append(readText())
-            case XMLStreamConstants.END_ELEMENT if r.getLocalName == "rPh" =>
-              if (rPhDepth > 0) rPhDepth -= 1
-            case XMLStreamConstants.END_ELEMENT if r.getLocalName == outer =>
-              done = true
-            case _ => ()
-          }
-        }
-        sb.toString
-      }
-
-      private def skipElement(name: String): Unit = {
-        var depth = 1
-        while (depth > 0) {
-          r.next() match {
-            case XMLStreamConstants.START_ELEMENT => depth += 1
-            case XMLStreamConstants.END_ELEMENT => depth -= 1
-            case _ => ()
-          }
+          if (!sc.nextTag()) sc.truncated()
+          if (sc.isEnd) done = sc.nameIs(C)
+          else if (sc.nameIs(V)) v = sc.text()
+          else if (sc.nameIs(Is)) inlineStr = sc.richText(Is)
+          else if (sc.nameIs(F) && !sc.selfClosing) sc.skipTo(F)
         }
       }
+      decodeCell(kind, style, v, inlineStr)
+    }
 
-      private def decodeCell(t: String, s: String, v: String,
-          inlineStr: String): Any = t match {
-        case "inlineStr" => XlsxReader.unescapeOoxml(inlineStr)
-        case "s" =>
-          if (v == null) null else sharedStrings(v.trim.toInt)
-        case "str" =>
-          if (v == null) null else XlsxReader.unescapeOoxml(v) // cached formula result
-        case "b" =>
-          if (v == null) null
-          else java.lang.Boolean.valueOf(v.trim == "1" || v.trim.equalsIgnoreCase("true"))
-        case "d" => // ISO-8601 date cell (ECMA-376 §18.17.4.7, rare but
-          // legal — previously fell into the numeric branch and threw
-          // NumberFormatException on a valid workbook)
-          if (v == null || v.trim.isEmpty) null
-          else {
-            val s = v.trim
-            // xsd ISO-8601 legally carries an optional zone designator
-            // ("…T00:00:00Z", "…+09:00") — a zone-free-only parse would
-            // crash on a valid workbook, the same class of bug the local
-            // branch fixed (ADVICE r19). Offsets are normalized to UTC
-            // (same instant) for datetimes and dropped for pure dates
-            // (ISO_DATE accepts-and-ignores a trailing offset).
-            if (s.contains("T"))
-              try java.time.LocalDateTime.parse(s,
-                java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
-              catch { case _: java.time.format.DateTimeParseException =>
-                java.time.OffsetDateTime.parse(s,
-                    java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
-                  .withOffsetSameInstant(java.time.ZoneOffset.UTC)
-                  .toLocalDateTime
-              }
-            else
-              java.time.LocalDate.parse(s,
-                java.time.format.DateTimeFormatter.ISO_DATE)
-          }
-        case "e" => null // error cell (#DIV/0! …)
-        case _ => // numeric (or date, per cell style)
-          if (v == null || v.isEmpty) null
-          else {
-            val d = v.trim.toDouble
-            styleKind(s) match {
-              case DateKind.DateOnly if d == math.floor(d) =>
-                ExcelSerialDate.toDate(d, date1904)
-              case DateKind.DateOnly | DateKind.DateTime =>
-                ExcelSerialDate.toDateTime(d, date1904)
-              case DateKind.None => java.lang.Double.valueOf(d)
-            }
-          }
+    private def finish(): Unit = { exhausted = true; sc.close() }
+
+    override def hasNext: Boolean = pendingGap > 0 || nextRow != null
+    override def next(): Array[Any] = {
+      if (pendingGap > 0) { pendingGap -= 1; EmptyRow }
+      else {
+        val out = nextRow
+        advance()
+        out
       }
+    }
+    override def close(): Unit = sc.close()
+  }
 
-      private def styleKind(s: String): DateKind.Value =
-        if (s == null) DateKind.None
-        else {
-          val i = s.trim.toInt
-          if (i >= 0 && i < styleIsDate.length) styleIsDate(i) else DateKind.None
-        }
+  /** The tags of a sheet part, for the loops that look for `<row>`s. Until
+    * `<sheetData>` opens it counts the open elements, so that the end of
+    * input tells a complete part with no `<sheetData>` (a chart sheet, which
+    * reads as no rows) from one cut short, which fails as truncated. */
+  private final class SheetTags(sc: XmlScanner) {
+    private var depth = 0
+    private var inData = false
+    private var rootClosed = false
 
-      override def hasNext: Boolean = pendingGap > 0 || nextRow != null
-      override def next(): Array[Any] = {
-        if (pendingGap > 0) { pendingGap -= 1; Array.empty[Any] }
-        else {
-          val out = nextRow
-          advance()
-          out
+    /** Steps to the next tag; false at the end of a complete part. */
+    def next(): Boolean = {
+      if (!sc.nextTag()) { if (rootClosed) return false else sc.truncated() }
+      if (!inData) {
+        if (sc.isEnd) { depth -= 1; rootClosed = depth == 0 }
+        else if (sc.selfClosing) rootClosed = depth == 0
+        else if (sc.nameIs(SheetData)) inData = true
+        else depth += 1
+      }
+      true
+    }
+  }
+
+  private def sheetScanner(in: InputStream, sheet: Sheet, row: () => Int): XmlScanner =
+    new XmlScanner(in, n => counters.sheetBytes += n,
+      () => s"${file.getPath}, sheet '${sheet.name}' (${sheet.entry}), row ${row()}")
+
+  /** The current `<row>`'s `r` attribute, or the one after `last`. */
+  private def rowNumber(sc: XmlScanner, last: Int): Int = {
+    while (sc.nextAttr()) if (sc.attrIs('r')) {
+      val n = sc.intValue(trim = false, Int.MinValue)
+      if (n == Int.MinValue) sc.fail(s"a row number '${sc.value}'")
+      return n
+    }
+    last + 1
+  }
+
+  private def cellKind(sc: XmlScanner): Int =
+    if (sc.valueIs(TypeShared)) CellShared
+    else if (sc.valueIs(TypeInline)) CellInline
+    else if (sc.valueIs(TypeStr)) CellStr
+    else if (sc.valueIs(TypeBool)) CellBool
+    else if (sc.valueIs(TypeDate)) CellDate
+    else if (sc.valueIs(TypeError)) CellError
+    else CellNumber
+
+  /** One cell's value from its type (a `Cell*` kind), style index
+    * ([[NoStyle]] when absent, [[BadStyle]] when not a number), `<v>` text
+    * and `<is>` rich text. */
+  private[excel] def decodeCell(kind: Int, style: Int, v: String,
+      inlineStr: String): Any = kind match {
+    case CellInline => if (inlineStr == null) null else unescapeOoxml(inlineStr)
+    case CellShared => if (v == null) null else sharedString(v.trim.toInt)
+    case CellStr =>
+      if (v == null) null else unescapeOoxml(v) // cached formula result
+    case CellBool =>
+      if (v == null) null
+      else java.lang.Boolean.valueOf(v.trim == "1" || v.trim.equalsIgnoreCase("true"))
+    case CellDate => // ISO-8601 date cell (ECMA-376 §18.17.4.7, rare but legal)
+      if (v == null || v.trim.isEmpty) null
+      else {
+        val s = v.trim
+        // xsd ISO-8601 legally carries an optional zone designator
+        // ("…T00:00:00Z", "…+09:00"). Offsets are normalized to UTC
+        // (same instant) for datetimes and dropped for pure dates
+        // (ISO_DATE accepts-and-ignores a trailing offset).
+        if (s.contains("T"))
+          try java.time.LocalDateTime.parse(s,
+            java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
+          catch { case _: java.time.format.DateTimeParseException =>
+            java.time.OffsetDateTime.parse(s,
+                java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
+              .withOffsetSameInstant(java.time.ZoneOffset.UTC)
+              .toLocalDateTime
+          }
+        else
+          java.time.LocalDate.parse(s,
+            java.time.format.DateTimeFormatter.ISO_DATE)
+      }
+    case CellError => null // error cell (#DIV/0! …)
+    case _ => // numeric (or date, per cell style)
+      if (v == null || v.isEmpty) null
+      else {
+        val d = v.trim.toDouble
+        styleKind(style) match {
+          case DateKind.DateOnly if d == math.floor(d) =>
+            ExcelSerialDate.toDate(d, date1904)
+          case DateKind.DateOnly | DateKind.DateTime =>
+            ExcelSerialDate.toDateTime(d, date1904)
+          case DateKind.None => java.lang.Double.valueOf(d)
         }
       }
-      override def close(): Unit = closeQuietly()
-      private def closeQuietly(): Unit =
-        try { r.close(); in.close() } catch { case _: Exception => () }
+  }
+
+  private def styleKind(style: Int): DateKind.Value =
+    if (style == BadStyle) throw new NumberFormatException("malformed cell style index")
+    else if (style >= 0 && style < styleIsDate.length) styleIsDate(style)
+    else DateKind.None
+
+  // ------------------------------------------------------- shared strings
+
+  // `xl/sharedStrings.xml` is parsed on demand: the first shared-string
+  // cell opens it, and each lookup reads only as far as its index, so a
+  // scan that decodes no string column never touches the table
+  private var sstScanner: XmlScanner = _
+  private var sstDone = false
+  private val sstTable = ArrayBuffer.empty[String]
+
+  private def sharedString(i: Int): String = {
+    while (i >= sstTable.length && !sstDone) readSharedString()
+    sstTable(i)
+  }
+
+  /** Parses the next `<si>` entry, or finds the table's end. */
+  private def readSharedString(): Unit = {
+    if (sstScanner == null) open(SharedStringsPart) match {
+      case None => sstDone = true; return
+      case Some(in) =>
+        sstScanner = new XmlScanner(in, _ => (),
+          () => s"${file.getPath}, $SharedStringsPart, entry ${sstTable.length}")
+    }
+    val sc = sstScanner
+    while (true) {
+      if (!sc.nextTag()) sc.truncated()
+      if (sc.nameIs(Sst) && (sc.isEnd || sc.selfClosing)) {
+        sstDone = true
+        sc.close()
+        return
+      }
+      if (!sc.isEnd && sc.nameIs(Si)) {
+        sstTable += unescapeOoxml(sc.richText(Si))
+        counters.sstEntries += 1
+        return
+      }
     }
   }
 
@@ -405,46 +456,6 @@ final class XlsxReader(file: File) extends AutoCloseable {
     }
   }
 
-  private def parseSharedStrings(): IndexedSeq[String] =
-    open("xl/sharedStrings.xml") match {
-      case None => IndexedSeq.empty
-      case Some(in) =>
-        try {
-          val r = xmlIn.createXMLStreamReader(in)
-          val out = ArrayBuffer.empty[String]
-          var inSi = false
-          var sb: java.lang.StringBuilder = null
-          var inT = false
-          // <rPh> phonetic runs (furigana annotations) carry their own
-          // <t> children which are NOT part of the cell text — openpyxl
-          // (the reference's parser) excludes them, so concatenating
-          // them here would diverge on any workbook with phonetic
-          // annotations. Same rule in readRichText for inline strings.
-          var rPhDepth = 0
-          while (r.hasNext) r.next() match {
-            case XMLStreamConstants.START_ELEMENT =>
-              r.getLocalName match {
-                case "si" => inSi = true; sb = new java.lang.StringBuilder
-                case "rPh" if inSi => rPhDepth += 1
-                case "t" if inSi && rPhDepth == 0 => inT = true
-                case _ => ()
-              }
-            case XMLStreamConstants.CHARACTERS | XMLStreamConstants.CDATA =>
-              if (inT) sb.append(r.getText)
-            case XMLStreamConstants.END_ELEMENT =>
-              r.getLocalName match {
-                case "si" => inSi = false; out += XlsxReader.unescapeOoxml(sb.toString)
-                case "rPh" => if (rPhDepth > 0) rPhDepth -= 1
-                case "t" => inT = false
-                case _ => ()
-              }
-            case _ => ()
-          }
-          r.close()
-          out.toIndexedSeq
-        } finally in.close()
-    }
-
   /** cellXfs style index → date kind, via numFmtId (builtin or custom). */
   private def parseStyles(): IndexedSeq[DateKind.Value] =
     open("xl/styles.xml") match {
@@ -498,7 +509,19 @@ final class XlsxReader(file: File) extends AutoCloseable {
     null
   }
 
-  override def close(): Unit = zip.close()
+  override def close(): Unit = {
+    if (sstScanner != null) sstScanner.close()
+    zip.close()
+  }
+}
+
+/** Running totals of one reader's scans. */
+final class ScanCounters {
+  var sheetBytes = 0L   // inflated worksheet bytes the scanner read
+  var rows = 0L         // `<row>` elements met, stepped over or read
+  var cellsDecoded = 0L // cells whose value was decoded
+  var cellsSkipped = 0L // cells of a read row stepped over (column not asked for)
+  var sstEntries = 0L   // shared-string entries parsed
 }
 
 /** What a cell's number format says about its meaning. */
@@ -510,6 +533,41 @@ object XlsxReader {
 
   /** One sheet: display name + ZIP entry of its worksheet part. */
   final case class Sheet(name: String, entry: String)
+
+  private[excel] val SharedStringsPart = "xl/sharedStrings.xml"
+
+  // element and attribute names the scanner matches
+  private val SheetData = XmlScanner.bytes("sheetData")
+  private val Dimension = XmlScanner.bytes("dimension")
+  private val Ref = XmlScanner.bytes("ref")
+  private val Row = XmlScanner.bytes("row")
+  private val C = XmlScanner.bytes("c")
+  private val V = XmlScanner.bytes("v")
+  private val F = XmlScanner.bytes("f")
+  private val Is = XmlScanner.bytes("is")
+  private val Sst = XmlScanner.bytes("sst")
+  private val Si = XmlScanner.bytes("si")
+
+  // cell kinds, from the `t` attribute
+  private[excel] final val CellNumber = 0
+  private[excel] final val CellShared = 1
+  private[excel] final val CellInline = 2
+  private[excel] final val CellStr = 3
+  private[excel] final val CellBool = 4
+  private[excel] final val CellDate = 5
+  private[excel] final val CellError = 6
+  private val TypeShared = XmlScanner.bytes("s")
+  private val TypeInline = XmlScanner.bytes("inlineStr")
+  private val TypeStr = XmlScanner.bytes("str")
+  private val TypeBool = XmlScanner.bytes("b")
+  private val TypeDate = XmlScanner.bytes("d")
+  private val TypeError = XmlScanner.bytes("e")
+
+  /** An `s` attribute's style index: absent, or not a number. */
+  private[excel] final val NoStyle = -1
+  private[excel] final val BadStyle = Int.MinValue
+
+  private val EmptyRow = Array.empty[Any]
 
   /** Decode OOXML `_xHHHH_` character escapes (ECMA-376 §22.9.2.19 / the
     * convention openpyxl applies): `_x000D_` → CR etc. A literal leading

@@ -26,7 +26,7 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
 
   // ------------------------------------------------------ zip assembly
 
-  private def xmlEscape(s: String): String = {
+  private[excel] def xmlEscape(s: String): String = {
     val sb = new java.lang.StringBuilder
     s.foreach {
       case '&' => sb.append("&amp;")
@@ -38,7 +38,7 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
     sb.toString
   }
 
-  private def zipFile(entries: Seq[(String, Array[Byte])]): File = {
+  private[excel] def zipFile(entries: Seq[(String, Array[Byte])]): File = {
     val f = File.createTempFile("graft-adv", ".xlsx")
     val z = new ZipOutputStream(new FileOutputStream(f))
     try entries.foreach { case (name, bytes) =>
@@ -49,7 +49,7 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
     f
   }
 
-  private def workbookXml(date1904: Boolean = false): (String, Array[Byte]) =
+  private[excel] def workbookXml(date1904: Boolean = false): (String, Array[Byte]) =
     "xl/workbook.xml" -> (s"""<?xml version="1.0"?>
       |<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
       |${if (date1904) "<workbookPr date1904=\"1\"/>" else ""}
@@ -61,9 +61,11 @@ object XlsxAdversarialProps extends Properties("xlsx.adversarial") {
       |<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">
       |<sheetData>$body</sheetData></worksheet>""".stripMargin.getBytes("UTF-8"))
 
+  /** The first sheet's rows, read by the scanner and checked against the
+    * StAX spec (`SheetScannerProps.checked`). */
   private def readAll(f: File): Vector[Vector[Any]] = {
     val r = new XlsxReader(f)
-    try r.rowIterator(r.sheets.head).map(_.toVector).toVector
+    try SheetScannerProps.checked(r, r.sheets.head).map(_.toVector)
     finally r.close()
   }
 

@@ -57,8 +57,7 @@ object XlsxRoundTripProps extends Properties("xlsx.roundtrip") {
       rows.foreach(w.writeRow)
       w.close()
       val r = new XlsxReader(f)
-      val got = r.rowIterator(r.sheets.head).toVector
-      r.close()
+      val got = try SheetScannerProps.checked(r, r.sheets.head) finally r.close()
 
       val want = rows.map(_.map(expected))
       // trailing nulls are sparse (absent); compare padded
@@ -110,7 +109,7 @@ object XlsxRoundTripProps extends Properties("xlsx.roundtrip") {
       try {
         r.sheets.map(_.name) == sheets.map(_._1) &&
           r.sheets.zip(sheets).forall { case (sh, (_, rows)) =>
-            val got = r.rowIterator(sh).toVector
+            val got = SheetScannerProps.checked(r, sh)
             val want = rows.map(_.map(expected))
             got.size == want.size && got.zip(want).forall { case (g, ww) =>
               g.padTo(ww.length, null).toSeq == ww
@@ -153,7 +152,7 @@ object XlsxRoundTripProps extends Properties("xlsx.roundtrip") {
 
   private def readAll(f: File): Seq[(String, Vector[Seq[Any]])] = {
     val r = new XlsxReader(f)
-    try r.sheets.map(sh => sh.name -> r.rowIterator(sh).map(_.toSeq).toVector)
+    try r.sheets.map(sh => sh.name -> SheetScannerProps.checked(r, sh).map(_.toSeq))
     finally r.close()
   }
 
