@@ -394,9 +394,10 @@ object Bench {
     // in the min).
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     // Per-gate staging attribution (VERDICT r18 #2): gates that pay
-    // deterministic input prep inside their wall (the 11 excel_stream_*
-    // xlsx stagings) wrap it in GateMetrics.staged; the snapshot diff
-    // around the reported (min-wall) repeat splits its time into
+    // deterministic input prep inside their wall (the xlsx stagings of
+    // the 13 stream gates, the 11 excel_stream_* plus d08 and d16, all in
+    // StreamGate.cachedStaging) wrap it in GateMetrics.staged; the
+    // snapshot diff around the reported (min-wall) repeat splits its time into
     // {stage_s, engine_s} so an IO-degraded artifact self-attributes
     // instead of needing a hand re-run to tell staging from engine.
     val stageByGate = scala.collection.mutable.LinkedHashMap[String, Double]()

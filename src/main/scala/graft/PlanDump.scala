@@ -7,11 +7,12 @@ package graft
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> gate[,gate...]
   *
-  * Streaming gates (excel_stream_*, d08, d16) EXECUTE on plan resolution
-  * (the returned frame reads a memory sink that only exists after the
-  * stream runs); their dumped plan is the post-run readout plan, which is
-  * still the honest "what does a consumer of this gate's result scan"
-  * record.
+  * The 13 streaming gates (the 11 excel_stream_* gates, d08 and d16, all
+  * run through `graft.queries.StreamGate`) EXECUTE on plan resolution:
+  * the returned frame reads a memory sink (excel_stream_roundtrip: the
+  * excel sink's output dir) that only exists after the stream runs.
+  * Their dumped plan is the post-run readout plan, which is still the
+  * honest "what does a consumer of this gate's result scan" record.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -94,21 +94,17 @@ object SharedPrep {
   /** Sessions that already have an eviction listener installed. */
   private val listenerInstalled = ConcurrentHashMap.newKeySet[String]()
 
-  /** `SparkSession.sessionUUID` — unique and stable for the session's
-    * lifetime, but `private[sql]` at the Scala level (bytecode-public),
-    * so it is read through a cached reflective handle. Fallback (would
-    * only trigger on a Spark that removed the field): applicationId +
-    * identityHashCode — unique while the session is live, which the
-    * eviction listener then bounds. */
-  private lazy val sessionUuidMethod: Option[java.lang.reflect.Method] =
-    try Some(classOf[SparkSession].getMethod("sessionUUID"))
-    catch { case _: Exception => None }
-
-  private def sessionKey(spark: SparkSession): String =
-    sessionUuidMethod.flatMap { m =>
-      try Option(m.invoke(spark).asInstanceOf[String])
-      catch { case _: Exception => None }
-    }.getOrElse(
+  /** `sessionUUID` of the session — unique and stable for its lifetime,
+    * but `private[sql]` at the Scala level (bytecode-public) and declared
+    * on the runtime class (`classic.SparkSession` in Spark 4), not on the
+    * `SparkSession` API class, so it is read reflectively from
+    * `spark.getClass`. Fallback (a session class without the field):
+    * applicationId + identityHashCode — unique while the session is live,
+    * which the eviction listener then bounds. */
+  private[graft] def sessionKey(spark: SparkSession): String =
+    (try Option(spark.getClass.getMethod("sessionUUID").invoke(spark)
+      .asInstanceOf[String])
+    catch { case _: Exception => None }).getOrElse(
       spark.sparkContext.applicationId + "@" + System.identityHashCode(spark))
 
   /** Is (this context's) `rddId` a registered shared-prep block set that

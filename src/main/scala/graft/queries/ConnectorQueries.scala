@@ -10,85 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * any loss in the writer→codec→reader→conversion chain hash-mismatches. */
 object ConnectorQueries {
 
-  /** Distinguishes per-invocation stream state (checkpoint dir, memory
-    * sink name) for gates whose INPUT staging is session-cached — see
-    * [[excelStreamStreamJoin]], [[excelStreamCdc]],
-    * [[excelStreamLateData]]. A reused AvailableNow checkpoint over
-    * cached inputs would admit zero new files and return an empty
-    * table, so checkpoints are always fresh even when staging is not. */
-  private[queries] val streamRunCounter = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** Shard fan-out for a staged stream batch: enough files that the
-    * per-batch xlsx DECODE parallelizes (a coalesce(1) sheet decodes on
-    * ONE task — measured as d08/d16's bottleneck), scale-adaptive so no
-    * shard approaches Excel's 1,048,576-row sheet cap (400k rows/shard
-    * leaves 2.6× headroom AT ANY VOLUME — shards grow ∝ rows with no
-    * cap, the ssjoin staging precedent; the former min(64, …) cap would
-    * have eroded the headroom above ~25.6M rows/batch and hit the
-    * writer's loud sheet-cap guard above ~67M, ADVICE r20), floor 4 for
-    * local parallelism. Runs one count() job — callers invoke it INSIDE
-    * their cachedStaging build so a session pays it once. */
-  private[queries] def streamBatchShards(df: DataFrame): Int =
-    math.max(4, math.ceil(df.count() / 400000.0).toInt)
-
-  /** The shard count actually staged in `dir` (local listing — cache
-    * hits must never re-count the corpus). Drives maxFilesPerTrigger so
-    * one micro-batch admits exactly one staged batch: admission is a
-    * name-ordered prefix and ".../a/part-*" sorts before ".../b/part-*". */
-  private[queries] def stagedShardCount(dir: File): Int =
-    math.max(1, Option(dir.listFiles())
-      .map(_.count(_.getName.endsWith(".xlsx"))).getOrElse(1))
-
-  /** Recursive .xlsx count under a staged root — drives
-    * maxFilesPerTrigger for the order-commutative gates that admit ALL
-    * staged batches in one micro-batch (VERDICT r20 #3: one WAL/state
-    * commit instead of one per batch). Local listing only; cache hits
-    * never re-count the corpus. */
-  private[queries] def stagedXlsxTotal(dir: File): Int = {
-    def walk(f: File): Int =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0)
-      else if (f.getName.endsWith(".xlsx")) 1
-      else 0
-    math.max(1, walk(dir))
-  }
-
-  /** Private session for a streaming gate: 8 shuffle partitions (state
-    * fan-out A/B'd in r19 — one store per partition per operator, 32 was
-    * pure small-file overhead) and a parameterized state-store provider.
-    * The default stays Spark's HDFS-backed store — A/B'd against RocksDB
-    * this round (r21): at this state size RocksDB's per-partition
-    * instance + changelog machinery measured flat-to-slower, but at
-    * 100 TB state (multi-GB keyed state per partition) RocksDB is the
-    * production choice, so the knob is an env/conf, not a code fork.
-    * A PRIVATE session scopes both confs to this query instead of
-    * mutating the caller's session. */
-  private[queries] def streamSession(spark: SparkSession): SparkSession = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", "8")
-    sys.env.get("SPARK_GRAFT_STATE_STORE").foreach(p =>
-      ss.conf.set("spark.sql.streaming.stateStore.providerClass", p))
-    ss
-  }
-
-  /** Remove a PRIOR run's per-invocation stream dirs (out_N / ckpt_N)
-    * under a gate's tmp base: these were only reclaimed by the next
-    * cache-miss rm(base), so a long-lived session invoking streaming
-    * gates repeatedly accumulated checkpoint/sink dirs without bound
-    * (ADVICE r20). Called at gate entry before the new run's dirs are
-    * created; bench/verify sessions run gates sequentially, so no live
-    * run's dirs can match. */
-  private[queries] def cleanStreamRunDirs(base: File): Unit =
-    Option(base.listFiles()).foreach(_.foreach { f =>
-      if (f.getName.matches("(out|ckpt)_\\d+")) {
-        def rm(g: File): Unit = {
-          if (g.isDirectory) Option(g.listFiles()).foreach(_.foreach(rm))
-          g.delete()
-        }
-        rm(f)
-      }
-    })
-
   def excelRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val nation = spark.read.parquet(s"$dir/nation.parquet")
@@ -172,11 +93,7 @@ object ConnectorQueries {
     val base = new File(
       System.getProperty("java.io.tmpdir"),
       s"graft_excel_xlsxonly_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(base)
+    StreamGate.deleteTree(base)
     base.mkdirs()
     nation.coalesce(1).write.format("excel").mode("overwrite")
       .save(new File(base, "real.xlsx").getAbsolutePath)
@@ -253,7 +170,7 @@ object ConnectorQueries {
     * of workbooks → `readStream.format("excel")` (micro-batch discovery,
     * replayable offsets — SURVEY §2.1 rows 5-8) → a stateless transform →
     * the STREAMING excel sink (epoch-named workbooks) under
-    * Trigger.AvailableNow → batch read-back, hash-checked against the
+    * AvailableNow → batch read-back, hash-checked against the
     * source table. Covers offset management, stream batch planning, the
     * shared stream scan, commit, and the streaming sink in one oracle. */
   def excelStreamRoundtrip(spark: SparkSession, dir: String): DataFrame = {
@@ -261,45 +178,13 @@ object ConnectorQueries {
     val supplier = spark.read.parquet(s"$dir/supplier.parquet")
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
         col("s_acctbal"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_stream_${math.abs(dir.hashCode)}")
-    // clean slate: a prior run's checkpoint/epoch files would double-count
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    val out = StreamGate.runToExcel(spark, "excel_stream_roundtrip", dir,
+        Seq(Seq(supplier))) { case Seq(in) =>
+      in.withColumn("name_up", upper(col("s_name")))
     }
-    // input staging cached per (session, corpus) — the ssjoin/cdc
-    // pattern: the staged xlsx is a pure function of the corpus, so a
-    // session pays the encode once; sink dir + checkpoint stay FRESH per
-    // invocation (a reused AvailableNow checkpoint would admit zero new
-    // files). Cache misses are attributed via GateMetrics inside
-    // cachedStaging → {stage_s, engine_s} in bench_full.json.
-    val Seq(inPath) = cachedStaging(spark, s"streamRtStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      supplier.repartition(3).write.format("excel")
-        .option("shardedOutput", "true")
-        .mode("overwrite").save(in.getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' dirs (ADVICE r20)
-    val out = new File(base, s"out_$run")
-    val ckpt = new File(base, s"ckpt_$run")
-    val q = spark.readStream.format("excel").schema(supplier.schema)
-      .load(in.getAbsolutePath)
-      .withColumn("name_up", upper(col("s_name")))
-      .writeStream.format("excel")
-      .option("path", out.getAbsolutePath)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val outSchema = supplier.schema
       .add("name_up", org.apache.spark.sql.types.StringType)
-    spark.read.format("excel").schema(outSchema).load(out.getAbsolutePath)
+    spark.read.format("excel").schema(outSchema).load(out)
       .orderBy(col("s_suppkey"))
   }
 
@@ -325,47 +210,13 @@ object ConnectorQueries {
       .select(col("o_orderkey"),
         col("o_orderdate").cast("timestamp").as("ts"),
         col("o_totalprice"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_window_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    StreamGate.run(spark, "excel_stream_window", dir, Seq(Seq(orders)),
+        StreamGate.AllAtOnce, "complete") { case Seq(in) =>
+      in.withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "30 days"))
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total"))
     }
-    // input staging cached per (session, corpus); checkpoint fresh per
-    // invocation (the ssjoin/cdc pattern)
-    val Seq(inPath) = cachedStaging(spark, s"windowStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      orders.repartition(2).write.format("excel")
-        .option("shardedOutput", "true")
-        .mode("overwrite").save(in.getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_window_${math.abs(dir.hashCode)}_$run"
-    // window-agg state: 8 shuffle partitions instead of 32 cuts the
-    // per-batch state-checkpoint fan-out 4x at identical results. The
-    // stream runs on a PRIVATE session (own SQLConf over the shared
-    // context) so the lowered conf can't leak into queries running
-    // concurrently on the caller's session.
-    val ss = streamSession(spark)
-    val q = ss.readStream.format("excel").schema(orders.schema)
-      .load(in.getAbsolutePath)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "30 days"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("total"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(qname)
       .select(col("window.start").cast("date").as("window_start"),
         col("n_orders"), col("total"))
       .orderBy("window_start")
@@ -392,49 +243,15 @@ object ConnectorQueries {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("lang"))
     val langTotals = docs.groupBy("lang").agg(count(lit(1)).as("lang_total"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_sjoin_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    // input staging cached per (session, corpus); checkpoint fresh per
-    // invocation (the ssjoin/cdc pattern)
-    val Seq(inPath) = cachedStaging(spark, s"sjoinStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      docs.filter(pmod(col("doc_id"), lit(2)) === 0).coalesce(1)
-        .write.format("excel").mode("overwrite")
-        .save(new File(in, "a.xlsx").getAbsolutePath)
-      docs.filter(pmod(col("doc_id"), lit(2)) === 1).coalesce(1)
-        .write.format("excel").mode("overwrite")
-        .save(new File(in, "b.xlsx").getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    // ONE micro-batch admits both staged files (VERDICT r20 #3): this is
-    // a STATELESS stream-static join in append mode — each row's output
-    // is independent of batching and the readout sorts by doc_id — so
-    // one AvailableNow micro-batch pays the WAL commit once instead of
-    // twice. The two-file input layout is unchanged.
-    val admit = stagedXlsxTotal(in)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_join_${math.abs(dir.hashCode)}_$run"
-    val q = spark.readStream.format("excel").schema(docs.schema)
-      .option("maxFilesPerTrigger", admit.toString)
-      .load(in.getAbsolutePath)
-      .join(broadcast(langTotals), "lang")
-      .select(col("doc_id"), col("lang"), col("lang_total"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(qname).orderBy("doc_id")
+    // a stateless append-mode join: each row's output is independent of
+    // batching, so both id-parity batches enter one micro-batch
+    StreamGate.run(spark, "excel_stream_join", dir,
+        Seq(Seq(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+          docs.filter(pmod(col("doc_id"), lit(2)) === 1))),
+        StreamGate.AllAtOnce, "append") { case Seq(in) =>
+      in.join(broadcast(langTotals), "lang")
+        .select(col("doc_id"), col("lang"), col("lang_total"))
+    }.orderBy("doc_id")
   }
 
   val excelStreamJoinSql: String =
@@ -442,48 +259,6 @@ object ConnectorQueries {
       |FROM documents d JOIN (
       |  SELECT lang, COUNT(*) AS lang_total FROM documents GROUP BY lang) l
       |USING (lang) ORDER BY d.doc_id""".stripMargin
-
-  /** SharedPrep-cached xlsx staging with a HIT-TIME completeness check.
-    * The SharedPrep fingerprint covers the SOURCE corpus dir, never the
-    * staged tmp output — so a hit can hand back java.io.tmpdir paths
-    * whose files vanished (OS tmp reaper during a long session, or a
-    * second session over the same corpus running its own cache-miss
-    * `rm(base)`), and an AvailableNow stream over a gutted dir admits
-    * fewer files and SILENTLY returns a partial table instead of
-    * failing loudly. The build-time per-dir .xlsx count is recorded in
-    * the cached value and every hit re-counts (one local walk, ≤ a few
-    * dozen entries — cheap vs seconds of staging); ANY difference —
-    * including a partially-reaped subdir that still holds some files
-    * (ADVICE r20: the previous any-one-xlsx check passed that) —
-    * invalidates the entry and re-stages. */
-  private[queries] def cachedStaging(spark: SparkSession, key: String, dir: String)(
-      build: => Seq[String]): Seq[String] = {
-    def countXlsx(p: String): Int = {
-      val root = java.nio.file.Paths.get(p)
-      if (!java.nio.file.Files.exists(root)) 0
-      else {
-        val it = java.nio.file.Files.walk(root)
-        try it.filter(q => q.toString.endsWith(".xlsx") &&
-          java.nio.file.Files.isRegularFile(q)).count().toInt
-        finally it.close()
-      }
-    }
-    def stage(): (Seq[String], Seq[Int]) = {
-      val dirs = graft.GateMetrics.staged(build)
-      (dirs, dirs.map(countXlsx))
-    }
-    val (dirs, counts) = graft.SharedPrep.cached(spark, key, dir)(stage())
-    val intact = dirs.zip(counts).forall { case (d, c) =>
-      c > 0 && countXlsx(d) == c
-    }
-    if (intact) dirs
-    else {
-      System.err.println(
-        s"[staging] cached dirs for $key lost staged xlsx files — re-staging")
-      graft.SharedPrep.invalidate(spark, key)
-      graft.SharedPrep.cached(spark, key, dir)(stage())._1
-    }
-  }
 
   // ----------------------------------------- excel_stream_stream_join
   /** STREAM-STREAM interval join, oracle-checked: a sampled orders stream
@@ -505,97 +280,19 @@ object ConnectorQueries {
       .filter(pmod(col("l_orderkey"), lit(5)) === 0)
       .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
         col("l_shipdate").cast("timestamp").as("l_ts"), col("l_quantity"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_ssjoin_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    // xlsx inputs staged ONCE per (session, corpus) via SharedPrep — the
-    // r17 regression hunt (VERDICT item 4) measured the two sharded
-    // staging writes at ~2.5 s of the gate's 5.5 s wall: deterministic
-    // input-prep a production session pays once, exactly the near-dup
-    // pair-list precedent. Stream state (checkpoint dir, memory-sink
-    // query name) stays FRESH per invocation — an AvailableNow restart
-    // over a reused checkpoint would read zero new files and return an
-    // empty table.
-    val Seq(inLPath, inRPath) = cachedStaging(
-        spark, s"ssjoinStage:$dir", dir) {
-      val t0 = System.nanoTime()
-      rm(base)
-      val l = new File(base, "in_l"); val r = new File(base, "in_r")
-      // shard count ∝ rows: each shard is ONE sheet, and Excel's hard
-      // cap is 1,048,576 rows/sheet — the r18 30× stress hit the
-      // writer's loud cap guard with a fixed 2-way split (3.6M sampled
-      // lineitem rows → 1.8M/shard). 800k keeps headroom; parquet
-      // count(*) is a metadata read. 1× behavior unchanged (still 2).
-      def shards(df: DataFrame): Int =
-        math.max(2, math.ceil(df.count() / 800000.0).toInt)
-      orders.repartition(shards(orders)).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(l.getAbsolutePath)
-      line.repartition(shards(line)).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(r.getAbsolutePath)
-      System.err.println(
-        f"[ssjoin] staged xlsx inputs in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      Seq(l.getAbsolutePath, r.getAbsolutePath)
-    }
-    val inL = new File(inLPath); val inR = new File(inRPath)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_stream_join_${math.abs(dir.hashCode)}_$run"
-    // join state checkpoints one store PER shuffle partition PER side —
-    // at this volume 32 partitions is pure small-file overhead (it
-    // dominated the gate's wall time); 8 keeps the state path exercised
-    // at a quarter of the checkpoint fan-out. The whole stream — sources
-    // included — runs on a PRIVATE session so the lowered conf is scoped
-    // to this query instead of mutating the shared session.
-    val ss = streamSession(spark)
-    val left = ss.readStream.format("excel").schema(orders.schema)
-      .load(inL.getAbsolutePath)
-      .withWatermark("o_ts", "3650 days")
-    val right = ss.readStream.format("excel").schema(line.schema)
-      .load(inR.getAbsolutePath)
-      .withWatermark("l_ts", "3650 days")
-    val q = left.join(right, expr(
-        """o_orderkey = l_orderkey
-          |AND l_ts >= o_ts
-          |AND l_ts <= o_ts + interval 365 days""".stripMargin))
-      .select(col("o_orderkey"), col("l_linenumber"),
-        col("o_ts").cast("date").as("o_date"),
-        col("l_ts").cast("date").as("l_date"),
-        col("l_quantity"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // attribution instrumentation (stderr, not on the result surface):
-    // micro-batch count + engine-reported batch durations separate
-    // micro-batch machinery from join-state cost when adjudicating this
-    // gate's wall time
-    locally {
-      val ps = q.recentProgress
-      val tot = ps.map(_.batchDuration).sum
-      System.err.println(
-        s"[ssjoin] ${ps.length} micro-batches, ${tot} ms engine batch time")
-      ps.foreach { p =>
-        val d = p.durationMs
-        val st = p.stateOperators.map(s =>
-          s"commit=${s.commitTimeMs}ms rows=${s.numRowsTotal}").mkString(";")
-        System.err.println(
-          s"[ssjoin]   batch ${p.batchId}: total=${p.batchDuration}ms " +
-            s"addBatch=${d.get("addBatch")}ms getBatch=${d.get("getBatch")}ms " +
-            s"planning=${d.get("queryPlanning")}ms " +
-            s"walCommit=${d.get("walCommit")}ms " +
-            s"stateCommit=${d.get("commitOffsets")}ms state[$st]")
-      }
-    }
-    ss.table(qname).orderBy("o_orderkey", "l_linenumber")
+    StreamGate.run(spark, "excel_stream_stream_join", dir,
+        Seq(Seq(orders), Seq(line)), StreamGate.AllAtOnce, "append") {
+      case Seq(left, right) =>
+        left.withWatermark("o_ts", "3650 days")
+          .join(right.withWatermark("l_ts", "3650 days"), expr(
+            """o_orderkey = l_orderkey
+              |AND l_ts >= o_ts
+              |AND l_ts <= o_ts + interval 365 days""".stripMargin))
+          .select(col("o_orderkey"), col("l_linenumber"),
+            col("o_ts").cast("date").as("o_date"),
+            col("l_ts").cast("date").as("l_date"),
+            col("l_quantity"))
+    }.orderBy("o_orderkey", "l_linenumber")
   }
 
   val excelStreamStreamJoinSql: String =
@@ -628,44 +325,13 @@ object ConnectorQueries {
     val ev = graft.queries.EventTime.load(spark, dir)
       .filter(pmod(col("user_id"), lit(10)) === 0)
       .select(col("user_id"), col("ts_us"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_session_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    StreamGate.run(spark, "excel_stream_session", dir, Seq(Seq(ev)),
+        StreamGate.AllAtOnce, "complete") { case Seq(in) =>
+      in.withColumn("ts", expr("timestamp_micros(ts_us)"))
+        .withWatermark("ts", "1 day")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(count(lit(1)).as("n_events"))
     }
-    // input staging cached per (session, corpus); checkpoint fresh per
-    // invocation (the ssjoin/cdc pattern)
-    val Seq(inPath) = cachedStaging(spark, s"sessionStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      ev.repartition(2).write.format("excel")
-        .option("shardedOutput", "true")
-        .mode("overwrite").save(in.getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_session_${math.abs(dir.hashCode)}_$run"
-    // session state: private session + 8 shuffle partitions, same
-    // state-store fan-out discipline as excel_stream_window
-    val ss = streamSession(spark)
-    val q = ss.readStream.format("excel").schema(ev.schema)
-      .load(in.getAbsolutePath)
-      .withColumn("ts", expr("timestamp_micros(ts_us)"))
-      .withWatermark("ts", "1 day")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-      .agg(count(lit(1)).as("n_events"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(qname)
       .select(col("user_id"),
         expr("unix_micros(session_window.start)").as("session_start_us"),
         expr("unix_micros(session_window.end)").as("session_end_us"),
@@ -700,7 +366,7 @@ object ConnectorQueries {
     * changelog over orders — inserts at seq 1, every 3rd key's price
     * revised at seq 2, every 5th key tombstoned at seq 3 — split across
     * TWO excel micro-batches (inserts first, then updates+deletes;
-    * name-sorted listing + maxFilesPerTrigger=1 pins the order). The
+    * [[StreamGate.PerBatch]] admission pins the order). The
     * keyed state must carry batch-1 inserts forward so batch-2 events
     * merge against STATE, never a rescan; the update-mode output log is
     * then compacted with the batch twin
@@ -724,61 +390,14 @@ object ConnectorQueries {
     val del = o.filter(pmod(col("o_orderkey"), lit(5)) === 0)
       .select(col("o_orderkey"), lit("D").as("op"), lit(3L).as("seq"),
         lit(0L).as("price_cents"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_cdc_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    // one micro-batch per batch: batch-2 events merging against carried
+    // batch-1 state is this gate's purpose
+    val log = StreamGate.run(spark, "excel_stream_cdc", dir,
+        Seq(Seq(ins, upd.unionByName(del))), StreamGate.PerBatch, "update") {
+      case Seq(in) => graft.streaming.StreamingCdc.latestState(
+        in, "o_orderkey", "seq", "op", "price_cents")
     }
-    // xlsx CDC log staged ONCE per (session, corpus) — two single-sheet
-    // encodes of the orders slice were the bulk of this gate's 10× wall
-    // (the ssjoin staging pattern); stream checkpoint + sink stay fresh
-    // per invocation
-    // per-batch SHARDED staging (the d08 layout): decode parallelizes,
-    // batch order stays exact (name-prefix admission over a/ then b/,
-    // maxFilesPerTrigger = shard count); within-batch shard order is
-    // immaterial — the keyed state merges on the explicit `seq`, not on
-    // arrival
-    val Seq(inPath) = cachedStaging(spark, s"cdcStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      val k = streamBatchShards(ins)
-      ins.repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "a").getAbsolutePath)
-      upd.unionByName(del).repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "b").getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    // two micro-batches KEPT: batch-2 events merging against carried
-    // batch-1 state is this gate's purpose. ADVICE r20's max(a, b) is
-    // REJECTED: admission is a name-ordered PREFIX, so a count above a's
-    // would let micro-batch 1 straddle a + the head of b; a's count at
-    // worst splits an oversized b (batch order preserved, seq-merge
-    // still exact). a and b stage the same k, and cachedStaging now
-    // validates staged file counts on every hit.
-    val shards = stagedShardCount(new File(in, "a"))
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_cdc_${math.abs(dir.hashCode)}_$run"
-    val ss = streamSession(spark)
-    val q = ss.readStream.format("excel").schema(ins.schema)
-      .option("maxFilesPerTrigger", shards.toString)
-      .option("recursiveFileLookup", "true")
-      .load(in.getAbsolutePath)
-      .transform(df => graft.streaming.StreamingCdc.latestState(
-        df, "o_orderkey", "seq", "op", "price_cents"))
-      .writeStream.outputMode("update")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.Cdc.latestSnapshot(ss.table(qname),
+    graft.operators.Cdc.latestSnapshot(log,
       "o_orderkey", "last_seq", "op", Seq("price_cents"))
       .orderBy(col("o_orderkey"))
   }
@@ -822,61 +441,15 @@ object ConnectorQueries {
     val d = spark.read.parquet(s"$dir/documents.parquet")
       .filter(pmod(col("doc_id"), lit(2)) === 0)
       .select(col("doc_id"), col("source"), col("text"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_hll_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    // the register max-merge is commutative, associative and idempotent
+    // (the property this gate pins), so both batches enter one micro-batch
+    val registers = StreamGate.run(spark, "excel_stream_hll", dir,
+        Seq(Seq(d.filter(pmod(col("doc_id"), lit(4)) === 0),
+          d.filter(pmod(col("doc_id"), lit(4)) === 2))),
+        StreamGate.AllAtOnce, "complete") { case Seq(in) =>
+      graft.operators.Sketches.hllRegisters(in, "source", "text")
     }
-    // input staging cached per (session, corpus); checkpoint fresh per
-    // invocation (the ssjoin/cdc pattern)
-    // per-batch SHARDED staging (the d08 layout): decode parallelizes,
-    // batch order stays exact (name-prefix admission over a/ then b/,
-    // maxFilesPerTrigger = shard count); within-batch shard order is
-    // immaterial — this gate's state merge is commutative by design
-    // (that is the mergeability property the gate pins)
-    val Seq(inPath) = cachedStaging(spark, s"hllStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      val k = streamBatchShards(d.filter(pmod(col("doc_id"), lit(4)) === 0))
-      d.filter(pmod(col("doc_id"), lit(4)) === 0)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "a").getAbsolutePath)
-      d.filter(pmod(col("doc_id"), lit(4)) === 2)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "b").getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    // ONE micro-batch admits BOTH staged batches (VERDICT r20 #3): the
-    // register max-merge is commutative/associative/idempotent — the
-    // mergeability property this gate pins — so the final state is
-    // identical whether the batches arrive in one commit or two, and one
-    // AvailableNow micro-batch pays the WAL + state-store commit ONCE.
-    // The two-batch input layout is unchanged.
-    val admit = stagedXlsxTotal(in)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_hll_${math.abs(dir.hashCode)}_$run"
-    val ss = streamSession(spark)
-    val q = graft.operators.Sketches.hllRegisters(
-      ss.readStream.format("excel").schema(d.schema)
-        .option("maxFilesPerTrigger", admit.toString)
-        .option("recursiveFileLookup", "true")
-        .load(in.getAbsolutePath),
-      "source", "text")
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val est = graft.operators.Sketches.hllFromRegisters(
-      ss.table(qname), "source")
+    val est = graft.operators.Sketches.hllFromRegisters(registers, "source")
     val exact = d.groupBy("source")
       .agg(countDistinct(col("text")).as("exact_distinct"))
     est.join(exact, "source")
@@ -965,59 +538,15 @@ object ConnectorQueries {
     val e = EventTime.load(spark, dir)
       .filter(pmod(col("event_id"), lit(2)) === 0)
       .select(col("event_id"), col("event_type"), col("ts_us"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_fresh_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    // the (count, max) state merge is commutative and associative (the
+    // property this gate pins), so both batches enter one micro-batch
+    val per = StreamGate.run(spark, "excel_stream_freshness", dir,
+        Seq(Seq(e.filter(pmod(col("event_id"), lit(4)) === 0),
+          e.filter(pmod(col("event_id"), lit(4)) === 2))),
+        StreamGate.AllAtOnce, "complete") { case Seq(in) =>
+      in.groupBy("event_type")
+        .agg(count(lit(1)).as("n_events"), max(col("ts_us")).as("max_ts_us"))
     }
-    // input staging cached per (session, corpus); checkpoint fresh per
-    // invocation (the ssjoin/cdc pattern)
-    // per-batch SHARDED staging (the d08 layout): decode parallelizes,
-    // batch order stays exact (name-prefix admission over a/ then b/,
-    // maxFilesPerTrigger = shard count); within-batch shard order is
-    // immaterial — this gate's state merge is commutative by design
-    // (that is the mergeability property the gate pins)
-    val Seq(inPath) = cachedStaging(spark, s"freshStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      val k = streamBatchShards(e.filter(pmod(col("event_id"), lit(4)) === 0))
-      e.filter(pmod(col("event_id"), lit(4)) === 0)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "a").getAbsolutePath)
-      e.filter(pmod(col("event_id"), lit(4)) === 2)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "b").getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    // ONE micro-batch admits BOTH staged batches (VERDICT r20 #3): the
-    // (count, max) state merge is commutative/associative — the property
-    // this gate pins — so the final state is identical in one commit or
-    // two, and one AvailableNow micro-batch pays the WAL + state-store
-    // commit ONCE. The two-batch input layout is unchanged.
-    val admit = stagedXlsxTotal(in)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_fresh_${math.abs(dir.hashCode)}_$run"
-    val ss = streamSession(spark)
-    val q = ss.readStream.format("excel").schema(e.schema)
-      .option("maxFilesPerTrigger", admit.toString)
-      .option("recursiveFileLookup", "true")
-      .load(in.getAbsolutePath)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n_events"), max(col("ts_us")).as("max_ts_us"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val per = ss.table(qname)
     val corpusMax = per.agg(max(col("max_ts_us")).as("corpus_max_us"))
     per.crossJoin(broadcast(corpusMax))
       .select(col("event_type"), col("n_events"), col("max_ts_us"),
@@ -1062,63 +591,18 @@ object ConnectorQueries {
       .select(col("o_orderkey"), col("o_orderstatus"),
         (col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
           .as("cents"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_kll_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    // the derandomized sketch state is a pure function of the row set
+    // (the property this gate pins), so both batches enter one
+    // micro-batch; the readout keeps only each slice's final snapshot
+    StreamGate.run(spark, "excel_stream_quantile", dir,
+        Seq(Seq(o.filter(pmod(col("o_orderkey"), lit(8)) === 0),
+          o.filter(pmod(col("o_orderkey"), lit(8)) === 4))),
+        StreamGate.AllAtOnce, "append") { case Seq(in) =>
+      graft.streaming.StreamingSketch.quantileSketch(
+        in, "o_orderstatus", "o_orderkey", "cents", capacity = 512)
     }
-    // input staging cached per (session, corpus); checkpoint fresh per
-    // invocation (the ssjoin/cdc pattern)
-    // per-batch SHARDED staging (the d08 layout): decode parallelizes,
-    // batch order stays exact (name-prefix admission over a/ then b/,
-    // maxFilesPerTrigger = shard count); within-batch shard order is
-    // immaterial — this gate's state merge is commutative by design
-    // (that is the mergeability property the gate pins)
-    val Seq(inPath) = cachedStaging(spark, s"kllStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      val k = streamBatchShards(o.filter(pmod(col("o_orderkey"), lit(8)) === 0))
-      o.filter(pmod(col("o_orderkey"), lit(8)) === 0)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "a").getAbsolutePath)
-      o.filter(pmod(col("o_orderkey"), lit(8)) === 4)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "b").getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    // ONE micro-batch admits BOTH staged batches (VERDICT r20 #3): the
-    // derandomized sketch state is a pure function of the row SET (the
-    // mergeability property this gate pins), so the final snapshot is
-    // identical in one commit or two, and one AvailableNow micro-batch
-    // pays the WAL + state-store commit ONCE. The readout below already
-    // keeps only the max-n_total (final) snapshot per slice, so fewer
-    // intermediate snapshots cannot change the result. The two-batch
-    // input layout is unchanged.
-    val admit = stagedXlsxTotal(in)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_quantile_${math.abs(dir.hashCode)}_$run"
-    val ss = streamSession(spark)
-    val q = graft.streaming.StreamingSketch.quantileSketch(
-      ss.readStream.format("excel").schema(o.schema)
-        .option("maxFilesPerTrigger", admit.toString)
-        .option("recursiveFileLookup", "true")
-        .load(in.getAbsolutePath),
-      "o_orderstatus", "o_orderkey", "cents", capacity = 512)
-      .writeStream.outputMode("append")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // n_total is monotone per slice, so the max-n_total snapshot is final
-    ss.table(qname).groupBy("slice")
+      // n_total is monotone per slice, so the max-n_total snapshot is final
+      .groupBy("slice")
       .agg(max(struct(col("n_total"), col("t_slice"), col("n_kept"),
         col("est_p50"))).as("m"))
       .select(col("slice"), col("m.n_total").as("n_total"),
@@ -1203,63 +687,18 @@ object ConnectorQueries {
     val o = spark.read.parquet(s"$dir/orders.parquet")
       .filter(pmod(col("o_orderkey"), lit(4)) === 0)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_hh_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    // count–min registers are sums (the property this gate pins), so both
+    // batches enter one micro-batch; every batch emits snapshots for all
+    // tracked keys and the readout keeps each key's final one
+    StreamGate.run(spark, "excel_stream_heavyhitters", dir,
+        Seq(Seq(o.filter(pmod(col("o_orderkey"), lit(8)) === 0),
+          o.filter(pmod(col("o_orderkey"), lit(8)) === 4))),
+        StreamGate.AllAtOnce, "append") { case Seq(in) =>
+      graft.streaming.StreamingHeavyHitters.countMin(
+        in, "o_orderstatus", "o_orderpriority")
     }
-    // input staging cached per (session, corpus); checkpoint fresh per
-    // invocation (the ssjoin/cdc pattern)
-    // per-batch SHARDED staging (the d08 layout): decode parallelizes,
-    // batch order stays exact (name-prefix admission over a/ then b/,
-    // maxFilesPerTrigger = shard count); within-batch shard order is
-    // immaterial — this gate's state merge is commutative by design
-    // (that is the mergeability property the gate pins)
-    val Seq(inPath) = cachedStaging(spark, s"hhStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      val k = streamBatchShards(o.filter(pmod(col("o_orderkey"), lit(8)) === 0))
-      o.filter(pmod(col("o_orderkey"), lit(8)) === 0)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "a").getAbsolutePath)
-      o.filter(pmod(col("o_orderkey"), lit(8)) === 4)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "b").getAbsolutePath)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    // ONE micro-batch admits BOTH staged batches (VERDICT r20 #3):
-    // count–min registers are SUMS (the mergeability property this gate
-    // pins), so the final state is identical in one commit or two, and
-    // one AvailableNow micro-batch pays the WAL + state-store commit
-    // ONCE. The readout keeps each key's max-n_total (final) snapshot —
-    // every batch emits snapshots for ALL tracked keys, so fewer
-    // intermediate snapshots cannot change it. Two-batch input layout
-    // unchanged.
-    val admit = stagedXlsxTotal(in)
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_hh_${math.abs(dir.hashCode)}_$run"
-    val ss = streamSession(spark)
-    val q = graft.streaming.StreamingHeavyHitters.countMin(
-      ss.readStream.format("excel").schema(o.schema)
-        .option("maxFilesPerTrigger", admit.toString)
-        .option("recursiveFileLookup", "true")
-        .load(in.getAbsolutePath),
-      "o_orderstatus", "o_orderpriority")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // n_total is monotone per slice: keep each key's final snapshot
-    ss.table(qname).groupBy("slice", "key")
+      // n_total is monotone per slice: keep each key's final snapshot
+      .groupBy("slice", "key")
       .agg(max(struct(col("n_total"), col("est_count"))).as("m"))
       .select(col("slice"), col("key"),
         col("m.n_total").as("n_total"), col("m.est_count").as("est_count"))
@@ -1288,74 +727,18 @@ object ConnectorQueries {
       .select(col("user_id"), col("event_id"), col("event_type"),
         (col("ts_us") + (pmod(col("event_id") * 7, lit(11)) - 5)
           * lit(7200000000L)).as("ts_eff"))
-    val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_late_${math.abs(dir.hashCode)}")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
+    // the sequence midpoint that splits the two batches, as a scalar
+    // subquery so only a staging build evaluates it
+    val thr = ev.agg(expr("max(event_id) div 2")).scalar()
+    // one micro-batch per batch: the operator sorts each user's rows by
+    // event_id within a micro-batch, so only the split between
+    // micro-batches must be sequence-monotone
+    StreamGate.run(spark, "excel_stream_latedata", dir,
+        Seq(Seq(ev.filter(col("event_id") <= thr),
+          ev.filter(col("event_id") > thr))),
+        StreamGate.PerBatch, "append") { case Seq(in) =>
+      graft.streaming.StreamingLateness.lateness(in)
     }
-    // two-batch xlsx staging ONCE per (session, corpus) — the ssjoin/cdc
-    // pattern; the midpoint scalar is only needed to stage.
-    // Per-batch SHARDED staging (r21, the d08 layout): the operator
-    // sorts each user's rows by event_id WITHIN a micro-batch
-    // (StreamingLateness's determinism contract), so only the
-    // cross-micro-batch split must be sequence-monotone — within-batch
-    // shard order is immaterial, and a coalesce(1) sheet per batch was
-    // a single-task encode AND single-task decode for the full events
-    // slice. Name-prefix admission over a/ then b/ with
-    // maxFilesPerTrigger = shard count keeps micro-batch 1 = batch a
-    // exactly, preserving the state-carry-forward the gate pins.
-    val Seq(inPath) = cachedStaging(spark, s"lateStage:$dir", dir) {
-      rm(base)
-      val in = new File(base, "in")
-      // 1-row scalar: the sequence midpoint that defines the two batches
-      val thr = ev.agg(max(col("event_id"))).head().getLong(0) / 2
-      val k = streamBatchShards(ev.filter(col("event_id") <= thr))
-      ev.filter(col("event_id") <= thr)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "a").getAbsolutePath)
-      ev.filter(col("event_id") > thr)
-        .repartition(k).write.format("excel")
-        .option("shardedOutput", "true").mode("overwrite")
-        .save(new File(in, "b").getAbsolutePath)
-      // batch a must process before batch b. The admission order is
-      // already deterministic BY NAME (ExcelFiles listings sort by path,
-      // so every ".../a/part-*" sorts before ".../b/part-*");
-      // additionally force strictly increasing mtimes so the gate stays
-      // correct even under a future mtime-ordered admission policy or an
-      // mtime tie on a coarse-granularity filesystem
-      def touch(f: File, t: Long): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(touch(_, t)))
-        f.setLastModified(t)
-      }
-      val t0 = (System.currentTimeMillis() / 1000L) * 1000L
-      touch(new File(in, "a"), t0 - 4000L)
-      touch(new File(in, "b"), t0 - 2000L)
-      Seq(in.getAbsolutePath)
-    }
-    val in = new File(inPath)
-    // batch a's staged shard count (a pure prefix — see the cdc note on
-    // why max(a, b) would be wrong for an order-pinned gate)
-    val shards = stagedShardCount(new File(in, "a"))
-    val run = streamRunCounter.incrementAndGet()
-    cleanStreamRunDirs(base) // reclaim prior runs' ckpt dirs (ADVICE r20)
-    val ckpt = new File(base, s"ckpt_$run")
-    val qname = s"excel_stream_late_${math.abs(dir.hashCode)}_$run"
-    val ss = streamSession(spark)
-    val q = graft.streaming.StreamingLateness.lateness(
-      ss.readStream.format("excel").schema(ev.schema)
-        .option("maxFilesPerTrigger", shards.toString)
-        .option("recursiveFileLookup", "true")
-        .load(in.getAbsolutePath))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(qname)
-      .option("checkpointLocation", ckpt.getAbsolutePath)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(qname)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(when(col("late_us") > 0, 1L).otherwise(0L)).as("n_late"),

@@ -723,11 +723,7 @@ object PipelineQueries {
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       val wh = new java.io.File(java.net.URI.create(
         spark.conf.get("spark.sql.warehouse.dir")).getPath, tbl)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(wh)
+      StreamGate.deleteTree(wh)
     }
     spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_custkey"), col("o_totalprice"))

@@ -7,11 +7,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Focused pins for the r21 streaming-staging infrastructure changes:
-  * the uncapped scale-adaptive shard fan-out (ADVICE r20 #1), the
-  * count-validated staging cache (ADVICE r20 #2 — a partially-reaped
-  * staged dir must re-stage, not silently return partial rows), and the
-  * per-run stream-dir reclaim (ADVICE r20 #3). */
+/** Pins for the streaming-gate harness ([[StreamGate]]): the uncapped
+  * scale-adaptive shard fan-out, the count-validated staging cache (a
+  * partially-reaped staged dir must re-stage, not silently return partial
+  * rows), and file ownership — two live sessions never delete each
+  * other's files, dead processes' staging is reclaimed, a run leaves no
+  * checkpoint behind, and the memory sink stays out of the caller's
+  * catalog. */
 class StagingInfraSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -26,7 +28,7 @@ class StagingInfraSpec extends AnyFunSuite with BeforeAndAfterAll {
     "shard stays 2.6x under the xlsx sheet cap at any volume") {
     import spark.implicits._
     def shards(n: Long): Int =
-      ConnectorQueries.streamBatchShards(
+      StreamGate.streamBatchShards(
         spark.range(n).toDF("id"))
     assert(shards(10) == 4, "small batches keep the parallelism floor")
     assert(shards(1600000) == 4, "floor covers up to 4 x 400k rows")
@@ -50,30 +52,67 @@ class StagingInfraSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(d.getAbsolutePath)
     }
     val key = s"stagingSpec:${root.getAbsolutePath}"
-    val first = ConnectorQueries.cachedStaging(spark, key, "")(build())
+    val first = StreamGate.cachedStaging(spark, key, "")(build())
     assert(builds == 1 && first.size == 1)
     // clean hit: no rebuild
-    ConnectorQueries.cachedStaging(spark, key, "")(build())
+    StreamGate.cachedStaging(spark, key, "")(build())
     assert(builds == 1, "intact staged dir must be a cache hit")
     // partial reap: delete ONE of three files — the pre-r21 any-one-xlsx
     // check passed this and the stream silently dropped rows
     assert(new File(first.head, "part-2.xlsx").delete())
-    val again = ConnectorQueries.cachedStaging(spark, key, "")(build())
+    val again = StreamGate.cachedStaging(spark, key, "")(build())
     assert(builds == 2, "a gutted staged dir must re-stage")
     assert(new File(again.head, "part-2.xlsx").exists())
   }
 
-  test("cleanStreamRunDirs: reclaims prior runs' out_N/ckpt_N, keeps " +
-    "everything else") {
-    val base = Files.createTempDirectory("graft_rundir_spec").toFile
-    Seq("out_3", "ckpt_3", "ckpt_12", "in").foreach { n =>
-      val d = new File(base, n); d.mkdirs()
-      Files.write(new File(d, "f").toPath, Array[Byte](1))
+  private val sf = "/root/testdata/sf0.001"
+
+  private def walk(f: File): Seq[File] =
+    f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+
+  test("two sessions run excel_stream_cdc concurrently and both return " +
+    "exactly the single-session rows") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def rows(s: SparkSession) =
+      ConnectorQueries.excelStreamCdc(s, sf).collect().toSeq
+    val single = rows(spark.newSession())
+    assert(single.nonEmpty)
+    val both = Future.sequence(Seq.fill(2)(spark.newSession())
+      .map(s => Future(rows(s))))
+    Await.result(both, 10.minutes).foreach(r => assert(r == single))
+  }
+
+  test("a cache miss reclaims staging dirs of dead processes and keeps a " +
+    "live process's other sessions; no checkpoint survives the run") {
+    import spark.implicits._
+    val gate = "staging_spec_gate"
+    val root = StreamGate.gateRoot(gate, "")
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val dead = new File(root, s"${child.pid()}_gone")
+    val live = new File(root, s"${ProcessHandle.current().pid()}_other")
+    Seq(dead, live).foreach { d =>
+      new File(d, "in0/a").mkdirs()
+      Files.write(new File(d, "in0/a/part-0.xlsx").toPath, Array[Byte](1))
     }
-    ConnectorQueries.cleanStreamRunDirs(base)
-    assert(!new File(base, "out_3").exists())
-    assert(!new File(base, "ckpt_3").exists())
-    assert(!new File(base, "ckpt_12").exists())
-    assert(new File(base, "in").exists(), "non-run dirs are untouched")
+    val out = StreamGate.run(spark.newSession(), gate, "",
+        Seq(Seq(Seq(1L, 2L, 3L).toDF("id"))), StreamGate.AllAtOnce,
+        "append")(_.head)
+    assert(out.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+    assert(!dead.exists(), "a dead process's staging is reclaimed")
+    assert(live.exists(), "a live process's other session is kept")
+    assert(!walk(root).exists(_.getName.startsWith("ckpt")),
+      "the checkpoint is deleted once the query terminates")
+  }
+
+  test("excel_stream_join leaves the caller's temp views unchanged") {
+    val s = spark.newSession()
+    def views = s.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    assert(ConnectorQueries.excelStreamJoin(s, sf).count() > 0)
+    assert(views == before)
   }
 }

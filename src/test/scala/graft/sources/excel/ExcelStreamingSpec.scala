@@ -105,6 +105,33 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(batches >= 3, s"AvailableNow ignored the limit: $batches batches")
   }
 
+  test("admission is name-ordered, not mtime-ordered: micro-batch 0 is " +
+    "exactly a/ even when b/'s files are older") {
+    val dir = Files.createTempDirectory("graft-order").toFile
+    val ckpt = Files.createTempDirectory("graft-order-ck").toFile
+    val a = new File(dir, "a"); val b = new File(dir, "b")
+    a.mkdirs(); b.mkdirs()
+    (1 to 3).foreach(i => writeFile(a, s"part-$i.xlsx", Seq(i -> s"a$i")))
+    (1 to 3).foreach(i => writeFile(b, s"part-$i.xlsx", Seq(100 + i -> s"b$i")))
+    val now = System.currentTimeMillis()
+    a.listFiles().foreach(_.setLastModified(now - 1000L))
+    b.listFiles().foreach(_.setLastModified(now - 60000L))
+    val batches = new java.util.concurrent.ConcurrentHashMap[Long, Seq[Int]]()
+    val q = spark.readStream.format("excel").schema(idName)
+      .option("maxFilesPerTrigger", a.listFiles().length.toString)
+      .option("recursiveFileLookup", "true")
+      .load(dir.getAbsolutePath)
+      .writeStream
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+        batches.put(id, df.collect().map(_.getInt(0)).toSeq.sorted); () }
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(60000)
+    assert(batches.get(0L) == Seq(1, 2, 3), s"micro-batch 0: ${batches.get(0L)}")
+    assert(batches.get(1L) == Seq(101, 102, 103))
+  }
+
   test("maxBytesPerTrigger drains a backlog in volume-bounded batches") {
     val dir = Files.createTempDirectory("graft-bytes").toFile
     val ckpt = Files.createTempDirectory("graft-bytes-ck").toFile
