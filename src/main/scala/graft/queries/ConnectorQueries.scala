@@ -292,7 +292,7 @@ object ConnectorQueries {
             col("o_ts").cast("date").as("o_date"),
             col("l_ts").cast("date").as("l_date"),
             col("l_quantity"))
-    }.orderBy("o_orderkey", "l_linenumber")
+    }.orderBy("o_orderkey", "l_linenumber", "o_date", "l_date", "l_quantity")
   }
 
   val excelStreamStreamJoinSql: String =
@@ -306,7 +306,7 @@ object ConnectorQueries {
       | AND l.l_shipdate >= o.o_orderdate
       | AND l.l_shipdate <= o.o_orderdate + INTERVAL 365 DAY
       |WHERE o.o_orderkey % 5 = 0
-      |ORDER BY o_orderkey, l_linenumber""".stripMargin
+      |ORDER BY o_orderkey, l_linenumber, o_date, l_date, l_quantity""".stripMargin
 
   // ---------------------------------------------- excel_stream_session
   /** Streaming SESSION-WINDOW aggregation, oracle-checked: per-user event

@@ -1,13 +1,14 @@
 package graft.sources.excel
 
-import java.io.File
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.AnalysisException
 
-/** File listing + local-access helpers on the Hadoop FileSystem API.
+/** Workbook listing on the Hadoop FileSystem API: every read surface
+  * (batch scans, inference, the streaming source) plans from
+  * [[ExcelFiles.listEntries]]; opening a listed workbook is
+  * [[XlsxReader.open]].
   *
   * The reference lists with `os.listdir` (local FS only, non-recursive,
   * case-insensitive `.xlsx` suffix — `/root/reference/src/pyspark_datasource/
@@ -78,22 +79,6 @@ object ExcelFiles {
       xlsxOnly: Boolean = false): Seq[String] =
     listEntries(pathStr, conf, recursive, xlsxOnly).map(_.uri)
 
-  /** Total on-disk bytes of the files [[list]] would plan. Feeds the
-    * scan's [[org.apache.spark.sql.connector.read.SupportsReportStatistics]]
-    * estimate so Catalyst can size excel relations for join planning.
-    * Swallows nothing: a missing path throws exactly like [[list]]. */
-  def totalBytes(pathStr: String, conf: Configuration,
-      recursive: Boolean = false, xlsxOnly: Boolean = false): Long =
-    listEntries(pathStr, conf, recursive, xlsxOnly).map(_.sizeBytes).sum
-
-  /** Like [[list]] but returning (uri, modificationTimeMs) pairs — the
-    * streaming source's retention compaction needs mtimes to expire old
-    * entries from its offset. Same visibility/suffix/recursion semantics. */
-  def listWithTimes(pathStr: String, conf: Configuration,
-      recursive: Boolean = false, xlsxOnly: Boolean = false): Seq[(String, Long)] =
-    listEntries(pathStr, conf, recursive, xlsxOnly)
-      .map(e => e.uri -> e.mtimeMs)
-
   private def hasGlob(p: String): Boolean =
     p.exists(c => c == '*' || c == '?' || c == '[' || c == '{')
 
@@ -114,22 +99,5 @@ object ExcelFiles {
       else dirs.filter(d => visible(d.getPath.getName))
         .flatMap(d => listDirEntries(fs, d.getPath, recursive = true, xlsxOnly))
     (here ++ below).sortBy(_.uri)
-  }
-
-  /** Open an xlsx for random access. ZIP needs a seekable local file, so a
-    * remote (hdfs/s3) object is staged to a local temp file first — bounded
-    * by the format's own ~1M-row ceiling, and per-task, so it scales with
-    * the cluster. Returns (file, deleteAfter). */
-  def toLocal(pathStr: String, conf: Configuration): (File, Boolean) = {
-    val path = new Path(pathStr)
-    val fs = path.getFileSystem(conf)
-    fs.getScheme match {
-      case "file" =>
-        (new File(path.toUri.getPath), false)
-      case _ =>
-        val tmp = File.createTempFile("graft-excel-stage", ".xlsx")
-        fs.copyToLocalFile(false, path, new Path(tmp.getAbsolutePath), true)
-        (tmp, true)
-    }
   }
 }

@@ -135,12 +135,20 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
       }
     }
 
+  // the path is listed once per scan, by whichever of statistics and
+  // planning asks first; a listing that throws is not kept (a lazy val
+  // initializer that throws runs again on the next access), so planning
+  // retries one that failed inside the statistics
+  private lazy val entries: Seq[ExcelFiles.Entry] = ExcelFiles.listEntries(
+    opts.path, SparkSession.active.sessionState.newHadoopConf(),
+    opts.recursiveFileLookup, opts.xlsxOnly)
+
   /** Relation sizing for Catalyst's join planning (CBO/broadcast
-    * threshold): sum of the listed files' on-disk bytes — already in hand
-    * from the same `FileStatus`es partition planning lists, no file is
-    * opened — inflated by [[ExcelOptions.statsSizeFactor]] (xlsx is
-    * zip-compressed; raw bytes under-report materialized size, the
-    * direction that mis-broadcasts big relations) and scaled down by the
+    * threshold): sum of the listed files' on-disk bytes — the same
+    * `FileStatus`es partition planning uses, no file is opened — inflated
+    * by [[ExcelOptions.statsSizeFactor]] (xlsx is zip-compressed; raw
+    * bytes under-report materialized size, the direction that
+    * mis-broadcasts big relations) and scaled down by the
     * pruned-column fraction, since Spark invokes this AFTER pushdown on
     * the pruned scan. Without this, DSv2 falls back to
     * `defaultSizeInBytes` (effectively "huge"), so a small excel dimension
@@ -148,11 +156,8 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     * open every workbook at plan time. */
   override def estimateStatistics(): Statistics = {
     val bytes =
-      try {
-        val conf = SparkSession.active.sessionState.newHadoopConf()
-        ExcelFiles.totalBytes(opts.path, conf, opts.recursiveFileLookup,
-          opts.xlsxOnly)
-      } catch {
+      try entries.map(_.sizeBytes).sum
+      catch {
         // planning must not die on a stats probe (path races with cleanup,
         // transient FS errors) — the scan itself will surface real errors
         case scala.util.control.NonFatal(_) => -1L
@@ -193,9 +198,7 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
       checkpointLocation, filters, limit, sample)
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val listed = ExcelFiles.list(opts.path, conf, opts.recursiveFileLookup,
-      opts.xlsxOnly)
+    val listed = entries.map(_.uri)
     // file-grained pruning: a file whose URI PROVABLY fails a pushed (or
     // runtime) `_file_path` predicate is never staged, opened, or parsed.
     // Conservative keep on anything inexact — Spark re-applies all filters
@@ -209,7 +212,8 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     val sheetFilters = runtimeSheets.fold(filters)(allowed =>
       filters :+ org.apache.spark.sql.sources.In(ExcelSchema.SheetColumn,
         allowed.toArray[Any]))
-    ExcelSplitPlanner.plan(files, opts, conf, sheetFilters)
+    ExcelSplitPlanner.plan(files, opts,
+      SparkSession.active.sessionState.newHadoopConf(), sheetFilters)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -350,17 +354,20 @@ object ExcelSplitPlanner {
 
   private def probe[T](f: String, conf: org.apache.hadoop.conf.Configuration)(
       body: XlsxReader => T): T = {
-    val (local, temp) = ExcelFiles.toLocal(f, conf)
-    try {
-      val rd =
-        try new XlsxReader(local)
-        catch {
-          case e: Exception => throw new org.apache.spark.SparkException(
-            s"Failed to open excel file $f: ${e.getMessage}", e)
-        }
-      try body(rd) finally rd.close()
-    } finally if (temp) local.delete()
+    val rd = open(f, conf)
+    try body(rd) finally rd.close()
   }
+
+  /** [[XlsxReader.open]], with the error normalization of the scan (the
+    * reference wraps all read failures, connector.py:202-203): a corrupt
+    * or non-zip file surfaces as a SparkException naming the path. */
+  private[excel] def open(f: String, conf: org.apache.hadoop.conf.Configuration)
+      : XlsxReader =
+    try XlsxReader.open(f, conf)
+    catch {
+      case e: Exception => throw new org.apache.spark.SparkException(
+        s"Failed to open excel file $f: ${e.getMessage}", e)
+    }
 
   /** Split one sheet into row-range partitions of at most `maxRows` data
     * rows, capped at `maxSplitsPerFile` splits (split P re-parses rows
@@ -453,20 +460,13 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
       .orderedFilters(applicable.toSeq, requiredSchema))
   }
 
-  private val (localFile, isTemp) = ExcelFiles.toLocal(filePath, conf)
-  // error normalization (reference wraps all read failures, connector.py:
-  // 202-203): corrupt/non-zip files surface as SparkException with the path
-  private val reader =
-    try new XlsxReader(localFile)
-    catch {
-      case e: Exception =>
-        if (isTemp) localFile.delete()
-        throw new org.apache.spark.SparkException(
-          s"Failed to open excel file $filePath: ${e.getMessage}", e)
-    }
+  private val reader = ExcelSplitPlanner.open(filePath, conf)
 
-  private val resolvedSheet = reader.resolveSheet(
-    if (sheetOverride != null) sheetOverride else opts.sheetName)
+  // a constructor that throws (no such sheet, a missing column, a
+  // truncated header row) leaves Spark no reader to close, so each step
+  // that can throw closes the workbook first
+  private val resolvedSheet = reader.closeOnError(reader.resolveSheet(
+    if (sheetOverride != null) sheetOverride else opts.sheetName))
   private val sheetNameValue =
     org.apache.spark.unsafe.types.UTF8String.fromString(resolvedSheet.name)
 
@@ -475,12 +475,12 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
   // columns of [first data row or startRow, endRowExcl)
   private val headerRow: Option[Array[Any]] =
     if (!opts.header) None
-    else {
+    else reader.closeOnError {
       val it = reader.rowIterator(resolvedSheet, 1, 2)
       if (it.hasNext) Some(it.next()) else None
     }
 
-  private val indices: Array[Int] = {
+  private val indices: Array[Int] = reader.closeOnError {
     def meta(name: String): Option[Int] =
       if (opts.allSheets && name == ExcelSchema.SheetColumn) Some(SheetIdx)
       else if (filePathIsMeta && name == ExcelSchema.FilePathColumn) Some(FilePathIdx)
@@ -509,7 +509,7 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
     }
   }
 
-  private val rowIter: Iterator[Array[Any]] = {
+  private val rowIter: Iterator[Array[Any]] = reader.closeOnError {
     val columns = new Array[Boolean](indices.foldLeft(0)((w, i) => math.max(w, i + 1)))
     indices.foreach(i => if (i >= 0) columns(i) = true)
     val dataStart = if (opts.header) 2 else 1
@@ -583,10 +583,7 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     ExcelScanMetrics.values(reader.counters)
 
-  override def close(): Unit = {
-    reader.close()
-    if (isTemp) localFile.delete()
-  }
+  override def close(): Unit = reader.close()
 }
 
 /** DSv2 scan metrics, summed over a scan's partitions: what the sheet

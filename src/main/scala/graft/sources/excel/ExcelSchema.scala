@@ -101,12 +101,10 @@ object ExcelSchema {
     * error normalization (connector.py:93-94). */
   def inferFromFile(filePath: String, opts: ExcelOptions,
       conf: Configuration): StructType = {
-    val (file, temp) = ExcelFiles.toLocal(filePath, conf)
     val reader =
-      try new XlsxReader(file)
+      try XlsxReader.open(filePath, conf)
       catch {
         case e: Exception =>
-          if (temp) file.delete()
           throw new org.apache.spark.sql.AnalysisException(
             errorClass = "UNABLE_TO_INFER_SCHEMA",
             messageParameters = Map("format" -> s"excel ($filePath: ${e.getMessage})"))
@@ -124,10 +122,7 @@ object ExcelSchema {
             else f))
         else merged.add(SheetColumn, StringType, nullable = true)
       } else inferSheet(reader, reader.resolveSheet(opts.sheetName), opts)
-    } finally {
-      reader.close()
-      if (temp) file.delete()
-    }
+    } finally reader.close()
   }
 
   /** Synthesized sheet-name column for `sheetName="*"` reads. */

@@ -2,50 +2,69 @@ package graft.sources.excel
 
 import java.io.{File, InputStream}
 import java.util.zip.ZipFile
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 
 /** Streaming `.xlsx` reader on JDK built-ins only — no Apache POI on the
   * classpath (SURVEY.md §7).
   *
-  * An xlsx file is a ZIP of OOXML parts (read with java.util.zip). The
-  * kilobyte-sized cold parts go through StAX: `xl/workbook.xml` (sheet
-  * catalog + 1904 date system flag), `xl/_rels/workbook.xml.rels` (sheet →
-  * worksheet part) and `xl/styles.xml` (number formats, to tell dates from
-  * plain numbers). The hot parts go through [[XmlScanner]], a byte-level
-  * scanner: `xl/worksheets/sheetN.xml` streams row by row in constant
-  * memory, decoding only the cells of the columns asked for, and
-  * `xl/sharedStrings.xml` is parsed on demand, only as far as the highest
-  * index a decoded cell has asked for (openpyxl, the parser behind the
-  * reference connector, loads it whole).
+  * An xlsx file is a ZIP of OOXML parts (read with java.util.zip), and
+  * every part goes through one byte-level tokenizer, [[XmlScanner]]:
+  *   - the kilobyte-sized cold parts are read whole when the reader opens:
+  *     `xl/workbook.xml` (sheet catalog + 1904 date system flag),
+  *     `xl/_rels/workbook.xml.rels` (sheet → worksheet part) and
+  *     `xl/styles.xml` (number formats, to tell dates from plain numbers);
+  *   - `xl/worksheets/sheetN.xml` streams row by row in constant memory,
+  *     decoding only the cells of the columns asked for;
+  *   - `xl/sharedStrings.xml` is parsed on demand, only as far as the
+  *     highest index a decoded cell has asked for (openpyxl, the parser
+  *     behind the reference connector, loads it whole).
+  * Any part that ends before its root element closes fails as truncated.
+  *
+  * [[XlsxReader.open]] is the one way the connector opens a workbook by
+  * URI; a workbook off the local file system is read from a temp copy that
+  * the reader deletes when it closes, or when it fails to open.
   *
   * Cell values surface as: `null`, `java.lang.Boolean`, `java.lang.Double`,
   * `String`, `java.time.LocalDate` (date-only format, no time fraction) or
   * `java.time.LocalDateTime` (any other date/time format). Sparse cells and
   * wholly skipped rows yield nulls, mirroring pandas' NaN fill.
   */
-final class XlsxReader(file: File) extends AutoCloseable {
-
-  private val zip = new ZipFile(file)
-  private val xmlIn = {
-    val f = XMLInputFactory.newInstance()
-    // hardening: no DTDs / external entities in workbook parts
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f
-  }
-
-  private[excel] def open(entry: String): Option[InputStream] =
-    Option(zip.getEntry(entry)).map(zip.getInputStream)
-
+final class XlsxReader private (file: File, name: String, staged: Boolean)
+    extends AutoCloseable {
   import XlsxReader._
+
+  /** Reads a workbook on the local file system. */
+  def this(file: File) = this(file, file.getPath, staged = false)
+
+  private val zip =
+    try new ZipFile(file)
+    catch { case e: Throwable => if (staged) file.delete(); throw e }
+
+  private[excel] def openPart(entry: String): Option[InputStream] =
+    Option(zip.getEntry(entry)).map(zip.getInputStream)
 
   /** What this reader's scans have done so far (the DSv2 scan metrics). */
   val counters = new ScanCounters
 
-  val (sheets: Seq[Sheet], date1904: Boolean) = parseWorkbook()
-  private val styleIsDate: IndexedSeq[DateKind.Value] = parseStyles()
+  // `xl/sharedStrings.xml` is parsed on demand: the first shared-string
+  // cell opens it, and each lookup reads only as far as its index, so a
+  // scan that decodes no string column never touches the table
+  private var sstScanner: XmlScanner = _
+  private var sstDone = false
+  private val sstTable = ArrayBuffer.empty[String]
+
+  val (sheets: Seq[Sheet], date1904: Boolean) = closeOnError(parseWorkbook(parseRels()))
+  /** Each `cellXfs` style index's date kind. */
+  private[excel] val styleKinds: IndexedSeq[DateKind.Value] = closeOnError(parseStyles())
+
+  /** Runs `body`, closing this reader if it throws: a constructor that
+    * throws after opening a reader leaves no caller to close it. */
+  private[excel] def closeOnError[T](body: => T): T =
+    try body catch { case e: Throwable => close(); throw e }
 
   /** Sheet index for an option value that may be a name or a 0-based index
     * (the reference accepts both: default `0`, or `sheetName="Sheet2"`). */
@@ -55,12 +74,12 @@ final class XlsxReader(file: File) extends AutoCloseable {
       val idx = try sheetOpt.toInt catch {
         case _: NumberFormatException =>
           throw new IllegalArgumentException(
-            s"Sheet '$sheetOpt' not found in ${file.getName}; " +
+            s"Sheet '$sheetOpt' not found in $name; " +
               s"available: ${sheets.map(_.name).mkString(", ")}")
       }
       if (idx < 0 || idx >= sheets.size)
         throw new IllegalArgumentException(
-          s"Sheet index $idx out of range (${sheets.size} sheets) in ${file.getName}")
+          s"Sheet index $idx out of range (${sheets.size} sheets) in $name")
       sheets(idx)
     }
   }
@@ -78,10 +97,10 @@ final class XlsxReader(file: File) extends AutoCloseable {
     * full scan that steps over every row without entering a cell — the
     * dense row sequence the reader emits ends exactly there. */
   def lastRowNumber(sheet: Sheet, trustDimension: Boolean): Int = {
-    val in = open(sheet.entry).getOrElse(return 0)
+    val in = openPart(sheet.entry).getOrElse(return 0)
     var last = 0
     val sc = sheetScanner(in, sheet, () => last)
-    val tags = new SheetTags(sc)
+    val tags = new PartTags(sc, SheetData)
     try {
       while (true) {
         if (!tags.next()) return last
@@ -127,7 +146,7 @@ final class XlsxReader(file: File) extends AutoCloseable {
     * before `</sheetData>` throws rather than reading as fewer rows. */
   def rowIterator(sheet: Sheet, startRow: Int, endRowExcl: Int,
       columns: Array[Boolean]): Iterator[Array[Any]] = {
-    val in = open(sheet.entry).getOrElse(
+    val in = openPart(sheet.entry).getOrElse(
       throw new IllegalStateException(s"Missing worksheet part ${sheet.entry}"))
     new RowScan(in, sheet, startRow, endRowExcl, columns)
   }
@@ -137,7 +156,7 @@ final class XlsxReader(file: File) extends AutoCloseable {
       extends Iterator[Array[Any]] with AutoCloseable {
     private var lastRowNum = 0 // 1-based row number of last seen row
     private val sc = sheetScanner(in, sheet, () => lastRowNum)
-    private val tags = new SheetTags(sc)
+    private val tags = new PartTags(sc, SheetData)
     // null decodes every column: a mask that is all true, and true past
     // its end too, so both modes run the same test on a cell
     private val mask = if (columns == null) Array.fill(64)(true) else columns
@@ -261,22 +280,24 @@ final class XlsxReader(file: File) extends AutoCloseable {
     override def close(): Unit = sc.close()
   }
 
-  /** The tags of a sheet part, for the loops that look for `<row>`s. Until
-    * `<sheetData>` opens it counts the open elements, so that the end of
-    * input tells a complete part with no `<sheetData>` (a chart sheet, which
-    * reads as no rows) from one cut short, which fails as truncated. */
-  private final class SheetTags(sc: XmlScanner) {
+  /** The tags of a part, counting open elements so that the end of input
+    * tells a complete part from one cut short, which fails as truncated.
+    * In a sheet part (`body` = `<sheetData>`) the count stops once the body
+    * opens, where the row loops take over and may skip whole elements; a
+    * complete part with no `<sheetData>` (a chart sheet) reads as no rows.
+    * With `body` null every tag is counted. */
+  private final class PartTags(sc: XmlScanner, body: Array[Byte]) {
     private var depth = 0
-    private var inData = false
+    private var inBody = false
     private var rootClosed = false
 
     /** Steps to the next tag; false at the end of a complete part. */
     def next(): Boolean = {
       if (!sc.nextTag()) { if (rootClosed) return false else sc.truncated() }
-      if (!inData) {
+      if (!inBody) {
         if (sc.isEnd) { depth -= 1; rootClosed = depth == 0 }
         else if (sc.selfClosing) rootClosed = depth == 0
-        else if (sc.nameIs(SheetData)) inData = true
+        else if (body != null && sc.nameIs(body)) inBody = true
         else depth += 1
       }
       true
@@ -285,7 +306,7 @@ final class XlsxReader(file: File) extends AutoCloseable {
 
   private def sheetScanner(in: InputStream, sheet: Sheet, row: () => Int): XmlScanner =
     new XmlScanner(in, n => counters.sheetBytes += n,
-      () => s"${file.getPath}, sheet '${sheet.name}' (${sheet.entry}), row ${row()}")
+      () => s"$name, sheet '${sheet.name}' (${sheet.entry}), row ${row()}")
 
   /** The current `<row>`'s `r` attribute, or the one after `last`. */
   private def rowNumber(sc: XmlScanner, last: Int): Int = {
@@ -356,17 +377,10 @@ final class XlsxReader(file: File) extends AutoCloseable {
 
   private def styleKind(style: Int): DateKind.Value =
     if (style == BadStyle) throw new NumberFormatException("malformed cell style index")
-    else if (style >= 0 && style < styleIsDate.length) styleIsDate(style)
+    else if (style >= 0 && style < styleKinds.length) styleKinds(style)
     else DateKind.None
 
   // ------------------------------------------------------- shared strings
-
-  // `xl/sharedStrings.xml` is parsed on demand: the first shared-string
-  // cell opens it, and each lookup reads only as far as its index, so a
-  // scan that decodes no string column never touches the table
-  private var sstScanner: XmlScanner = _
-  private var sstDone = false
-  private val sstTable = ArrayBuffer.empty[String]
 
   private def sharedString(i: Int): String = {
     while (i >= sstTable.length && !sstDone) readSharedString()
@@ -375,11 +389,11 @@ final class XlsxReader(file: File) extends AutoCloseable {
 
   /** Parses the next `<si>` entry, or finds the table's end. */
   private def readSharedString(): Unit = {
-    if (sstScanner == null) open(SharedStringsPart) match {
+    if (sstScanner == null) openPart(SharedStringsPart) match {
       case None => sstDone = true; return
       case Some(in) =>
         sstScanner = new XmlScanner(in, _ => (),
-          () => s"${file.getPath}, $SharedStringsPart, entry ${sstTable.length}")
+          () => s"$name, $SharedStringsPart, entry ${sstTable.length}")
     }
     val sc = sstScanner
     while (true) {
@@ -399,120 +413,83 @@ final class XlsxReader(file: File) extends AutoCloseable {
 
   // ------------------------------------------------------- workbook parts
 
-  private def parseWorkbook(): (Seq[Sheet], Boolean) = {
-    // r:id → worksheet part path
-    val rels: Map[String, String] = open("xl/_rels/workbook.xml.rels") match {
-      case None => Map.empty
-      case Some(in) =>
-        try {
-          val r = xmlIn.createXMLStreamReader(in)
-          val b = Map.newBuilder[String, String]
-          while (r.hasNext) r.next() match {
-            case XMLStreamConstants.START_ELEMENT
-                if r.getLocalName == "Relationship" =>
-              val id = attr(r, "Id")
-              val target = attr(r, "Target")
-              if (id != null && target != null) {
-                val entry =
-                  if (target.startsWith("/")) target.substring(1)
-                  else "xl/" + target
-                b += id -> entry
-              }
-            case _ => ()
-          }
-          r.close()
-          b.result()
-        } finally in.close()
+  /** Runs `onTag` at every tag of a cold part, if the part exists. Its
+    * bytes are not sheet bytes: they count toward no scan metric. */
+  private def scanPart(part: String)(onTag: XmlScanner => Unit): Unit =
+    openPart(part).foreach { in =>
+      val sc = new XmlScanner(in, _ => (), () => s"$name, $part")
+      val tags = new PartTags(sc, null)
+      try while (tags.next()) onTag(sc) finally sc.close()
     }
 
-    open("xl/workbook.xml") match {
-      case None => (Seq.empty, false)
-      case Some(in) =>
-        try {
-          val r = xmlIn.createXMLStreamReader(in)
-          val sheets = ArrayBuffer.empty[Sheet]
-          var date1904 = false
-          var sheetOrdinal = 0
-          while (r.hasNext) r.next() match {
-            case XMLStreamConstants.START_ELEMENT =>
-              r.getLocalName match {
-                case "workbookPr" =>
-                  val d = attr(r, "date1904")
-                  date1904 = d != null && (d == "1" || d.equalsIgnoreCase("true"))
-                case "sheet" =>
-                  sheetOrdinal += 1
-                  val name = attr(r, "name")
-                  val rid = Option(attrNs(r, "id")).getOrElse(attr(r, "id"))
-                  val entry = rels.getOrElse(rid,
-                    s"xl/worksheets/sheet$sheetOrdinal.xml")
-                  sheets += Sheet(if (name == null) s"Sheet$sheetOrdinal" else name, entry)
-                case _ => ()
-              }
-            case _ => ()
-          }
-          r.close()
-          (sheets.toSeq, date1904)
-        } finally in.close()
+  /** The current tag's values of the attributes `names`, null if absent. */
+  private def attrs(sc: XmlScanner, names: Array[Byte]*): Array[String] = {
+    val out = new Array[String](names.length)
+    while (sc.nextAttr()) {
+      val i = names.indexWhere(sc.attrIs)
+      if (i >= 0) out(i) = sc.value
     }
+    out
+  }
+
+  /** Relationship id → worksheet part path. */
+  private def parseRels(): Map[String, String] = {
+    val rels = Map.newBuilder[String, String]
+    scanPart("xl/_rels/workbook.xml.rels") { sc =>
+      if (!sc.isEnd && sc.nameIs(Relationship)) {
+        val Array(id, target) = attrs(sc, RelId, Target)
+        if (id != null && target != null)
+          rels += id -> (if (target.startsWith("/")) target.substring(1) else "xl/" + target)
+      }
+    }
+    rels.result()
+  }
+
+  /** The sheets in workbook order, and the 1904 date system flag. A sheet's
+    * `r:id` reads as `id`: the scanner drops attribute prefixes. */
+  private def parseWorkbook(rels: Map[String, String]): (Seq[Sheet], Boolean) = {
+    val sheets = ArrayBuffer.empty[Sheet]
+    var date1904 = false
+    scanPart("xl/workbook.xml") { sc =>
+      if (sc.isEnd) ()
+      else if (sc.nameIs(WorkbookPr)) {
+        val Array(d) = attrs(sc, Date1904)
+        date1904 = d != null && (d == "1" || d.equalsIgnoreCase("true"))
+      } else if (sc.nameIs(SheetTag)) {
+        val Array(sheetName, rid) = attrs(sc, Name, Id)
+        val n = sheets.length + 1
+        sheets += Sheet(if (sheetName == null) s"Sheet$n" else sheetName,
+          rels.getOrElse(rid, s"xl/worksheets/sheet$n.xml"))
+      }
+    }
+    (sheets.toSeq, date1904)
   }
 
   /** cellXfs style index → date kind, via numFmtId (builtin or custom). */
-  private def parseStyles(): IndexedSeq[DateKind.Value] =
-    open("xl/styles.xml") match {
-      case None => IndexedSeq.empty
-      case Some(in) =>
-        try {
-          val r = xmlIn.createXMLStreamReader(in)
-          val customFmts = scala.collection.mutable.Map.empty[Int, String]
-          val xfFmtIds = ArrayBuffer.empty[Int]
-          var inCellXfs = false
-          while (r.hasNext) r.next() match {
-            case XMLStreamConstants.START_ELEMENT =>
-              r.getLocalName match {
-                case "numFmt" =>
-                  val id = attr(r, "numFmtId")
-                  val code = attr(r, "formatCode")
-                  if (id != null && code != null) customFmts(id.toInt) = code
-                case "cellXfs" => inCellXfs = true
-                case "xf" if inCellXfs =>
-                  val id = attr(r, "numFmtId")
-                  xfFmtIds += (if (id == null) 0 else id.toInt)
-                case _ => ()
-              }
-            case XMLStreamConstants.END_ELEMENT if r.getLocalName == "cellXfs" =>
-              inCellXfs = false
-            case _ => ()
-          }
-          r.close()
-          xfFmtIds.map(id => XlsxReader.dateKindOf(id, customFmts.get(id))).toIndexedSeq
-        } finally in.close()
+  private def parseStyles(): IndexedSeq[DateKind.Value] = {
+    val customFmts = scala.collection.mutable.Map.empty[Int, String]
+    val xfFmtIds = ArrayBuffer.empty[Int]
+    var inCellXfs = false
+    scanPart("xl/styles.xml") { sc =>
+      if (sc.nameIs(CellXfs)) inCellXfs = !sc.isEnd && !sc.selfClosing
+      else if (sc.isEnd) ()
+      else if (sc.nameIs(NumFmt)) {
+        val Array(id, code) = attrs(sc, NumFmtId, FormatCode)
+        if (id != null && code != null) customFmts(id.toInt) = code
+      } else if (inCellXfs && sc.nameIs(Xf)) {
+        val Array(id) = attrs(sc, NumFmtId)
+        xfFmtIds += (if (id == null) 0 else id.toInt)
+      }
     }
-
-  private def attr(r: XMLStreamReader, name: String): String = {
-    var i = 0
-    while (i < r.getAttributeCount) {
-      if (r.getAttributeLocalName(i) == name) return r.getAttributeValue(i)
-      i += 1
-    }
-    null
+    xfFmtIds.map(id => dateKindOf(id, customFmts.get(id))).toIndexedSeq
   }
 
-  /** Attribute in the officeDocument relationships namespace (r:id). */
-  private def attrNs(r: XMLStreamReader, name: String): String = {
-    var i = 0
-    while (i < r.getAttributeCount) {
-      val ns = r.getAttributeNamespace(i)
-      if (r.getAttributeLocalName(i) == name && ns != null &&
-        ns.contains("relationships")) return r.getAttributeValue(i)
-      i += 1
-    }
-    null
-  }
-
-  override def close(): Unit = {
-    if (sstScanner != null) sstScanner.close()
-    zip.close()
-  }
+  /** Closes the workbook and deletes its temp copy, if it has one. */
+  override def close(): Unit =
+    try {
+      if (sstScanner != null) sstScanner.close()
+      zip.close()
+    } finally if (staged) file.delete()
 }
 
 /** Running totals of one reader's scans. */
@@ -534,6 +511,22 @@ object XlsxReader {
   /** One sheet: display name + ZIP entry of its worksheet part. */
   final case class Sheet(name: String, entry: String)
 
+  /** Opens the workbook at a Hadoop URI. `ZipFile` needs a seekable local
+    * file, so a workbook on any other file system (hdfs, s3) is first
+    * copied to a temp file: bounded by the format's own ~1M-row ceiling,
+    * and per task, so it scales with the cluster. */
+  def open(uri: String, conf: Configuration): XlsxReader = {
+    val path = new Path(uri)
+    val fs = path.getFileSystem(conf)
+    if (fs.getScheme == "file") new XlsxReader(new File(path.toUri.getPath))
+    else {
+      val copy = File.createTempFile("graft-excel-stage", ".xlsx")
+      try fs.copyToLocalFile(false, path, new Path(copy.getAbsolutePath), true)
+      catch { case e: Throwable => copy.delete(); throw e }
+      new XlsxReader(copy, uri, staged = true)
+    }
+  }
+
   private[excel] val SharedStringsPart = "xl/sharedStrings.xml"
 
   // element and attribute names the scanner matches
@@ -547,6 +540,19 @@ object XlsxReader {
   private val Is = XmlScanner.bytes("is")
   private val Sst = XmlScanner.bytes("sst")
   private val Si = XmlScanner.bytes("si")
+  private val Relationship = XmlScanner.bytes("Relationship")
+  private val RelId = XmlScanner.bytes("Id")
+  private val Target = XmlScanner.bytes("Target")
+  private val WorkbookPr = XmlScanner.bytes("workbookPr")
+  private val Date1904 = XmlScanner.bytes("date1904")
+  private val SheetTag = XmlScanner.bytes("sheet")
+  private val Name = XmlScanner.bytes("name")
+  private val Id = XmlScanner.bytes("id")
+  private val CellXfs = XmlScanner.bytes("cellXfs")
+  private val NumFmt = XmlScanner.bytes("numFmt")
+  private val NumFmtId = XmlScanner.bytes("numFmtId")
+  private val FormatCode = XmlScanner.bytes("formatCode")
+  private val Xf = XmlScanner.bytes("xf")
 
   // cell kinds, from the `t` attribute
   private[excel] final val CellNumber = 0

@@ -3,15 +3,16 @@ package graft.sources.excel
 import java.io.{ByteArrayInputStream, InputStream, InputStreamReader, Reader, SequenceInputStream}
 import java.nio.charset.{Charset, StandardCharsets}
 
-/** A pull tokenizer over the bytes of one OOXML part, for the hot parts
-  * (worksheets and the shared-strings table). It keeps a refillable
-  * window over the inflated stream and matches markup byte by byte:
+/** A pull tokenizer over the bytes of one OOXML part; `XlsxReader` reads
+  * every part of a workbook through it. It keeps a refillable window over
+  * the inflated stream and matches markup byte by byte:
   *
   *   - `nextTag` steps to the next start or end tag (element names may
   *     carry a `prefix:`), passing over text, comments, processing
   *     instructions and CDATA;
   *   - `nextAttr` walks the current tag's attributes (either quote, blanks
-  *     around `=`, entities decoded);
+  *     around `=`, entities decoded, a literal tab or line end read as a
+  *     space); a `prefix:` is dropped from attribute names too;
   *   - `text` / `richText` decode element content: entities, character
   *     references, CDATA and XML line-end normalization;
   *   - `skipTo` leaves an element by jumping from `<` to `<`, never looking
@@ -258,11 +259,15 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
     val q = buf(p)
     p += 1
     val from = p
-    var amp = false
-    while (p < end && buf(p) != q) { if (buf(p) == '&') amp = true; p += 1 }
+    var decode = false // an entity, or a blank that normalizes to a space
+    while (p < end && buf(p) != q) {
+      val c = buf(p)
+      if (c == '&' || (c < ' ' && c >= 0)) decode = true
+      p += 1
+    }
     if (p >= end) fail("an unterminated attribute value")
     attrPos = p + 1
-    if (amp) {
+    if (decode) {
       attrText.reset()
       decodeRun(from, p, attrText)
       valBuf = attrText.bytes; valFrom = 0; valTo = attrText.length
@@ -395,12 +400,18 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
     }
   }
 
-  /** Decodes [from, to) of the window (an attribute value) into `out`. */
+  /** Decodes [from, to) of the window (an attribute value) into `out`:
+    * entities, and each literal tab, LF, CR or CRLF as one space (XML 1.0
+    * §3.3.3; a character reference is kept as it is). */
   private def decodeRun(from: Int, to: Int, out: ByteBuilder): Unit = {
     var p = from
     while (p < to) {
-      if (buf(p) == '&') p = decodeEntity(buf, p, to, out)
-      else { out += buf(p); p += 1 }
+      val c = buf(p)
+      if (c == '&') p = decodeEntity(buf, p, to, out)
+      else if (c == '\t' || c == '\n' || c == '\r') {
+        out += ' '
+        p += (if (c == '\r' && p + 1 < to && buf(p + 1) == '\n') 2 else 1)
+      } else { out += c; p += 1 }
     }
   }
 

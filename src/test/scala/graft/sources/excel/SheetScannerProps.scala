@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 
 import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.Prop.propBoolean
 
 /** Differential properties: the byte scanner behind `XlsxReader` reads
   * every sheet exactly as the StAX spec ([[StaxSheetReader]]) does.
@@ -17,6 +18,9 @@ import org.scalacheck.{Gen, Prop, Properties}
   * references, literal CR and CRLF in text, single-quoted attributes with
   * blanks around `=`, `<c/>` and `<row/>`, rows with and without `r`, and
   * UTF-16 parts with a byte-order mark.
+  *
+  * A second property checks the cold parts (workbook, relationships and
+  * styles) against the StAX spec [[StaxWorkbookParts]].
   */
 object SheetScannerProps extends Properties("xlsx.scanner") {
 
@@ -90,6 +94,8 @@ object SheetScannerProps extends Properties("xlsx.scanner") {
       1 -> Gen.oneOf("\r", "\r\n", "\n")))
   }
 
+  private val RelNs = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
+
   private sealed trait Cell
   private final case class Num(v: Double) extends Cell
   private final case class Inline(text: Seq[String]) extends Cell
@@ -153,6 +159,20 @@ object SheetScannerProps extends Properties("xlsx.scanner") {
       value.toString
     }
 
+    /** `pieces` spelled as an attribute value between this rendering's
+      * quotes: `&` and `<` escaped, a quote as `&quot;` or `&apos;` where
+      * it must be and sometimes where it need not be, and single
+      * characters sometimes as character references. */
+    def attrText(pieces: Seq[String]): String = pieces.map {
+      case "&" => "&amp;"
+      case "<" => "&lt;"
+      case "\"" if !sp.singleQuotes || rnd.nextBoolean() => "&quot;"
+      case "'" if sp.singleQuotes || rnd.nextBoolean() => "&apos;"
+      case p if sp.charRefs && p.length == 1 && rnd.nextInt(4) == 0 =>
+        s"&#x${Integer.toHexString(p.charAt(0).toInt)};"
+      case p => p
+    }.mkString
+
     def shuffled(a: String, b: String): String = if (rnd.nextBoolean()) a + b else b + a
 
     def open(n: String, attrs: String = ""): Unit = sb.append(s"<${name(n)}$attrs>")
@@ -170,7 +190,8 @@ object SheetScannerProps extends Properties("xlsx.scanner") {
       val decl = sp.utf16.fold("UTF-8")(_ => "UTF-16")
       sb.append(s"""<?xml version="1.0" encoding="$decl"?>""")
       val ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-      sb.append(s"<${name(n)}${attr(if (sp.prefix) "xmlns:x" else "xmlns", ns)}>")
+      sb.append(s"<${name(n)}${attr(if (sp.prefix) "xmlns:x" else "xmlns", ns)}" +
+        s"${attr("xmlns:r", RelNs)}>")
       body
       close(n)
       sp.utf16 match {
@@ -251,5 +272,154 @@ object SheetScannerProps extends Properties("xlsx.scanner") {
       val r = new XlsxReader(f)
       try same(checked(r, r.sheets.head), want.result())
       finally { r.close(); f.delete() }
+    }
+
+  // ---------------------------------------------------------- cold parts
+
+  /** Attribute text: characters the markup must escape, blanks that
+    * normalize to a space, and non-ASCII. */
+  private val genAttrText: Gen[Seq[String]] = Gen.chooseNum(0, 8).flatMap { n =>
+    Gen.listOfN(n, Gen.frequency(
+      6 -> Gen.choose('a', 'z').map(_.toString),
+      2 -> Gen.oneOf("&", "<", ">", "\"", "'", " ", "é", "中", "😀"),
+      1 -> Gen.oneOf("\t", "\n", "\r\n")))
+  }
+
+  private val genFormatCode: Gen[Seq[String]] = Gen.chooseNum(0, 6).flatMap { n =>
+    Gen.listOfN(n, Gen.oneOf("yyyy", "mm", "d", "h", ":", "ss", "0.00", "#,##0", "@",
+      "\"", "&", "[Red]", "[h]", "[>100]", "\\", "AM/PM", " ", "é"))
+  }
+
+  /** A sheet entry: its name (None: no `name`), its relationship (None:
+    * no id; an index past the relationships: a dangling id) and whether
+    * the id is spelled `r:id` rather than `id`. */
+  private final case class BookSheet(name: Option[Seq[String]], rel: Option[Int],
+      prefixedId: Boolean)
+
+  /** A relationship's target: absolute or relative, None when absent. */
+  private final case class Rel(target: Option[(Boolean, Seq[String])])
+
+  /** `numFmtId`s: None leaves the attribute out. */
+  private final case class Styles(fmts: Seq[(Int, Seq[String])],
+      cellXfs: Option[Seq[(Option[Int], Boolean)]], // None: `<cellXfs/>`; (id, has a child)
+      styleXfs: Seq[Option[Int]], styleXfsFirst: Boolean, dxfFmt: Option[(Int, Seq[String])])
+
+  private final case class Book(workbookPr: Option[Option[String]],
+      sheets: Seq[BookSheet], rels: Option[Seq[Rel]], styles: Option[Styles])
+
+  private val genFmtId: Gen[Int] = Gen.oneOf(Gen.chooseNum(0, 60), Gen.chooseNum(164, 170))
+
+  private val genBook: Gen[Book] = for {
+    workbookPr <- Gen.option(Gen.option(Gen.oneOf("1", "0", "true", "TRUE", "false", " 1")))
+    nRels <- Gen.chooseNum(0, 5)
+    rels <- Gen.option(Gen.listOfN(nRels, Gen.option(for {
+      absolute <- Gen.oneOf(false, true)
+      text <- genAttrText
+    } yield (absolute, text)).map(Rel(_))))
+    nSheets <- Gen.chooseNum(0, 5)
+    sheets <- Gen.listOfN(nSheets, for {
+      name <- Gen.frequency(6 -> genAttrText.map(Some(_)), 1 -> Gen.const(None))
+      rel <- Gen.option(Gen.chooseNum(0, nRels))
+      prefixed <- Gen.oneOf(false, true)
+    } yield BookSheet(name, rel, prefixed))
+    styles <- Gen.option(for {
+      nFmts <- Gen.chooseNum(0, 4)
+      fmts <- Gen.listOfN(nFmts, Gen.zip(genFmtId, genFormatCode))
+      nXfs <- Gen.chooseNum(0, 6)
+      cellXfs <- Gen.option(Gen.listOfN(nXfs,
+        Gen.zip(Gen.option(genFmtId), Gen.oneOf(false, true))))
+      nStyleXfs <- Gen.chooseNum(0, 3)
+      styleXfs <- Gen.listOfN(nStyleXfs, Gen.option(genFmtId))
+      styleXfsFirst <- Gen.oneOf(false, true)
+      dxfFmt <- Gen.option(Gen.zip(genFmtId, genFormatCode))
+    } yield Styles(fmts, cellXfs, styleXfs, styleXfsFirst, dxfFmt))
+  } yield Book(workbookPr, sheets, rels, styles)
+
+  private def renderBook(sp: Spelling, book: Book, rnd: scala.util.Random)
+      : Seq[(String, Array[Byte])] = {
+    val workbook = new Render(sp, rnd)
+    val workbookXml = workbook.root("workbook", {
+      workbook.noise()
+      book.workbookPr.foreach(v =>
+        workbook.leaf("workbookPr", v.fold("")(workbook.attr("date1904", _))))
+      workbook.open("sheets")
+      book.sheets.zipWithIndex.foreach { case (sh, i) =>
+        workbook.noise()
+        val name = sh.name.fold("")(t => workbook.attr("name", workbook.attrText(t)))
+        val id = sh.rel.fold("")(k =>
+          workbook.attr(if (sh.prefixedId) "r:id" else "id", s"rId$k"))
+        val attrs = workbook.shuffled(name, workbook.attr("sheetId", (i + 1).toString) + id)
+        if (rnd.nextBoolean()) workbook.leaf("sheet", attrs)
+        else { workbook.open("sheet", attrs); workbook.close("sheet") }
+      }
+      workbook.close("sheets")
+    })
+    val rels = book.rels.map { rs =>
+      val r = new Render(sp, rnd)
+      "xl/_rels/workbook.xml.rels" -> r.root("Relationships", rs.zipWithIndex.foreach {
+        case (rel, k) =>
+          r.noise()
+          val target = rel.target.fold("") { case (absolute, text) =>
+            r.attr("Target", (if (absolute) "/xl/worksheets/" else "worksheets/") +
+              r.attrText(text) + ".xml")
+          }
+          r.leaf("Relationship", r.shuffled(r.attr("Id", s"rId$k"), target))
+      })
+    }
+    val styles = book.styles.map { st =>
+      val r = new Render(sp, rnd)
+      def fmtId(id: Option[Int]): String = id.fold("")(i => r.attr("numFmtId", i.toString))
+      def numFmt(id: Int, code: Seq[String]): Unit =
+        r.leaf("numFmt", r.shuffled(fmtId(Some(id)), r.attr("formatCode", r.attrText(code))))
+      def styleXfs(): Unit = {
+        r.open("cellStyleXfs")
+        st.styleXfs.foreach(id => r.leaf("xf", fmtId(id)))
+        r.close("cellStyleXfs")
+      }
+      "xl/styles.xml" -> r.root("styleSheet", {
+        r.open("numFmts", r.attr("count", st.fmts.length.toString))
+        st.fmts.foreach { case (id, code) => r.noise(); numFmt(id, code) }
+        r.close("numFmts")
+        if (st.styleXfsFirst) styleXfs()
+        st.cellXfs match {
+          case None => r.leaf("cellXfs", r.attr("count", "0"))
+          case Some(xfs) =>
+            r.open("cellXfs")
+            xfs.foreach { case (id, child) =>
+              r.noise()
+              if (!child) r.leaf("xf", fmtId(id))
+              else {
+                r.open("xf", fmtId(id))
+                r.leaf("alignment", r.attr("horizontal", "left"))
+                r.close("xf")
+              }
+            }
+            r.close("cellXfs")
+        }
+        if (!st.styleXfsFirst) styleXfs()
+        st.dxfFmt.foreach { case (id, code) =>
+          r.open("dxfs"); r.open("dxf"); numFmt(id, code); r.close("dxf"); r.close("dxfs")
+        }
+      })
+    }
+    Seq("xl/workbook.xml" -> workbookXml) ++ rels ++ styles
+  }
+
+  property("cold parts: scanner == StAX spec") =
+    Prop.forAll(genSpelling, genBook, Gen.long) { (sp, book, seed) =>
+      val parts = renderBook(sp, book, new scala.util.Random(seed))
+      val f = XlsxAdversarialProps.zipFile(parts)
+      try {
+        val want = outcome(StaxWorkbookParts.read(f))
+        val got = outcome {
+          val r = new XlsxReader(f)
+          try StaxWorkbookParts.Parts(r.sheets, r.date1904, r.styleKinds) finally r.close()
+        }
+        val shown = parts.map { case (n, b) =>
+          s"$n: ${new String(b, if (sp.utf16.isDefined) StandardCharsets.UTF_16
+            else StandardCharsets.UTF_8)}" }.mkString("\n")
+        (got.isRight && got == want && got.toOption.get.sheets.length == book.sheets.length) :|
+          s"scanner $got\nspec $want\n$shown"
+      } finally f.delete()
     }
 }

@@ -69,6 +69,84 @@ class SheetScannerSpec extends AnyFunSuite with BeforeAndAfterAll {
     try intercept[SparkException](rows(g)) finally g.delete()
   }
 
+  private val stylesXml =
+    """<?xml version="1.0" encoding="UTF-8"?><styleSheet xmlns=""" +
+      """"http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
+      """<numFmts count="1"><numFmt numFmtId="164" formatCode="yyyy-mm-dd"/></numFmts>""" +
+      """<cellXfs count="2"><xf numFmtId="0"/><xf numFmtId="164"/></cellXfs></styleSheet>"""
+
+  /** A one-sheet workbook with the given workbook and styles parts. */
+  private def coldParts(workbookXml: String, styles: String): File =
+    XlsxAdversarialProps.zipFile(Seq(
+      "xl/workbook.xml" -> workbookXml.getBytes(UTF_8),
+      "xl/styles.xml" -> styles.getBytes(UTF_8),
+      "xl/worksheets/sheet1.xml" -> sheet(s"""<row r="1">${cell("A1", "1")}</row>""")
+        .getBytes(UTF_8)))
+
+  private val workbookText = new String(XlsxAdversarialProps.workbookXml()._2, UTF_8)
+
+  test("a workbook or styles part cut before its root closes fails, naming file and part") {
+    val whole = coldParts(workbookText, stylesXml)
+    try {
+      val r = new XlsxReader(whole)
+      try {
+        assert(r.sheets.map(_.name) == Seq("S"))
+        assert(r.styleKinds == IndexedSeq(DateKind.None, DateKind.DateOnly))
+      } finally r.close()
+    } finally whole.delete()
+    val cuts = Seq(
+      "xl/workbook.xml" -> coldParts(
+        workbookText.substring(0, workbookText.indexOf("</sheets>")), stylesXml),
+      "xl/workbook.xml" -> coldParts("", stylesXml),
+      "xl/styles.xml" -> coldParts(workbookText,
+        stylesXml.substring(0, stylesXml.indexOf("</cellXfs>"))),
+      "xl/styles.xml" -> coldParts(workbookText,
+        stylesXml.substring(0, stylesXml.indexOf("<cellXfs"))))
+    cuts.foreach { case (part, f) =>
+      try {
+        val e = intercept[SparkException](new XlsxReader(f).close())
+        Seq("Truncated", f.getPath, part).foreach(s =>
+          assert(e.getMessage.contains(s), e.getMessage))
+        val e2 = intercept[Exception](spark.read.format("excel").load(f.getPath).collect())
+        assert(messages(e2).contains("Truncated"), messages(e2))
+      } finally f.delete()
+    }
+  }
+
+  test("a document type in a workbook or styles part fails") {
+    val doctype = """<!DOCTYPE x [<!ENTITY e "v">]>"""
+    def withDoctype(xml: String): String = {
+      val at = xml.indexOf("?>") + 2
+      xml.substring(0, at) + doctype + xml.substring(at)
+    }
+    Seq(
+      "xl/workbook.xml" -> coldParts(withDoctype(workbookText), stylesXml),
+      "xl/styles.xml" -> coldParts(workbookText, withDoctype(stylesXml))).foreach {
+      case (part, f) =>
+        try {
+          val e = intercept[SparkException](new XlsxReader(f).close())
+          Seq("document type", f.getPath, part).foreach(s =>
+            assert(e.getMessage.contains(s), e.getMessage))
+        } finally f.delete()
+    }
+  }
+
+  test("cold-part bytes are not sheet bytes") {
+    val f = coldParts(workbookText, stylesXml)
+    try {
+      val sheetSize = {
+        val z = new java.util.zip.ZipFile(f)
+        try z.getEntry("xl/worksheets/sheet1.xml").getSize finally z.close()
+      }
+      val r = new XlsxReader(f)
+      try {
+        assert(r.counters.sheetBytes == 0, "opening a reader scans no sheet byte")
+        assert(r.lastRowNumber(r.sheets.head, trustDimension = false) == 1)
+        assert(r.counters.sheetBytes == sheetSize)
+      } finally r.close()
+    } finally f.delete()
+  }
+
   test("a complete part with no sheetData (a chart sheet) reads as no rows") {
     val ns = "http://schemas.openxmlformats.org/officeDocument/2006/relationships"
     val chart =

@@ -14,28 +14,15 @@ import scala.collection.mutable.ArrayBuffer
   * whole, up front, from this reader's own StAX pass.
   */
 final class StaxSheetReader(reader: XlsxReader) {
+  import StaxSheetReader._
 
-  private val xmlIn = {
-    val f = XMLInputFactory.newInstance()
-    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f
-  }
+  private val xmlIn = newFactory()
 
   private lazy val sharedStrings: IndexedSeq[String] = parseSharedStrings()
 
-  private def attr(r: XMLStreamReader, name: String): String = {
-    var i = 0
-    while (i < r.getAttributeCount) {
-      if (r.getAttributeLocalName(i) == name) return r.getAttributeValue(i)
-      i += 1
-    }
-    null
-  }
-
   /** Same contract as `XlsxReader.lastRowNumber`. */
   def lastRowNumber(sheet: XlsxReader.Sheet, trustDimension: Boolean): Int = {
-    val in = reader.open(sheet.entry).getOrElse(return 0)
+    val in = reader.openPart(sheet.entry).getOrElse(return 0)
     val r = xmlIn.createXMLStreamReader(in)
     try {
       var last = 0
@@ -67,7 +54,7 @@ final class StaxSheetReader(reader: XlsxReader) {
     * endRowExcl)`, materialized. */
   def rows(sheet: XlsxReader.Sheet, startRow: Int = 1,
       endRowExcl: Int = Int.MaxValue): Vector[Array[Any]] = {
-    val in = reader.open(sheet.entry).getOrElse(
+    val in = reader.openPart(sheet.entry).getOrElse(
       throw new IllegalStateException(s"Missing worksheet part ${sheet.entry}"))
     val r = xmlIn.createXMLStreamReader(in)
     try rowsOf(r, startRow, endRowExcl)
@@ -203,7 +190,7 @@ final class StaxSheetReader(reader: XlsxReader) {
   }
 
   private def parseSharedStrings(): IndexedSeq[String] =
-    reader.open(XlsxReader.SharedStringsPart) match {
+    reader.openPart(XlsxReader.SharedStringsPart) match {
       case None => IndexedSeq.empty
       case Some(in: InputStream) =>
         try {
@@ -237,4 +224,25 @@ final class StaxSheetReader(reader: XlsxReader) {
           out.toIndexedSeq
         } finally in.close()
     }
+}
+
+object StaxSheetReader {
+
+  /** A StAX factory that reads no DTD and no external entity. */
+  def newFactory(): XMLInputFactory = {
+    val f = XMLInputFactory.newInstance()
+    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
+    f
+  }
+
+  /** The first attribute of the current element with local name `name`. */
+  def attr(r: XMLStreamReader, name: String): String = {
+    var i = 0
+    while (i < r.getAttributeCount) {
+      if (r.getAttributeLocalName(i) == name) return r.getAttributeValue(i)
+      i += 1
+    }
+    null
+  }
 }
