@@ -493,12 +493,13 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
         val names = ExcelSchema.columnNames(Some(header),
           math.max(header.length, fullSchema.length), header = true)
         val nameToIdx = names.zipWithIndex.toMap
+        // the error lists the header's own columns, not the padding
         requiredSchema.fields.map(f => meta(f.name).getOrElse(
           nameToIdx.getOrElse(f.name,
             if (allowMissing) -1
             else throw new org.apache.spark.SparkException(
               s"Column '${f.name}' not found in $filePath " +
-                s"(sheet columns: ${names.mkString(", ")})"))))
+                s"(sheet columns: ${names.take(header.length).mkString(", ")})"))))
       case None if opts.header => requiredSchema.fields.map(_ => -1)
       case None =>
         // positional: field ← its position in the FULL schema (pruning must

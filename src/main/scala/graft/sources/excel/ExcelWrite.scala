@@ -8,19 +8,39 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration
 
-/** Single-workbook batch write with a real commit protocol.
+/** The Excel sink, batch and streaming, with a real commit protocol.
   *
   * The reference writer has none (bug B4: every task rewrites the same
-  * `path`, last-writer-wins). Here every task encodes and deflates its
-  * partition's rows, in parallel, into a temp segment
-  * `<path>.__graft_tmp_<queryId>/part-NNNNN-<task>.deflate`
-  * ([[XlsxRowSegment]]), and the driver `commit()` splices the segments
-  * *in partition order* into one workbook at `path` — preserving the
-  * reference's observable single-file contract while making
-  * multi-partition writes deterministic. `abort()` removes the temp dir.
+  * `path`, last writer wins). Here a task writes in one of two modes:
+  *  - merged (the default): it encodes and deflates its partition's rows,
+  *    in parallel with the other tasks, into one row segment per sheet
+  *    ([[XlsxRowSegment]]). Without `sheetColumn` that is one segment for
+  *    the sheet `sheetName`; with it, one per routing value.
+  *  - sharded (`shardedOutput`): it writes one finished workbook, with
+  *    its own header.
+  * Tasks stage their files under one hidden temp dir next to the output:
+  * `.__graft_tmp_<queryId>` for a batch write, `.__graft_stream_tmp_<epoch>`
+  * for an epoch.
+  *
+  * The driver publishes every write in one order (`ExcelWrite.publish`):
+  * stage the new output (merged: splice the segments, sheet by sheet in
+  * partition order, into one staging workbook in the temp dir; sharded:
+  * the tasks' workbooks as they are), then delete the output it replaces,
+  * then rename the staged files to their visible names, then delete the
+  * temp dir. A commit that fails before the renames leaves the previous
+  * output as it was; `abort` only deletes the temp dir.
+  *
+  * Batch and streaming differ only in names and in what they replace. A
+  * batch write publishes `path` (merged) or `path/part-NNNNN.xlsx`
+  * (sharded) and replaces an existing output on overwrite, failing with
+  * `PATH_ALREADY_EXISTS` otherwise. An epoch publishes
+  * `path/batch-<epoch>.xlsx` or `path/batch-<epoch>-part-NNNNN.xlsx` and
+  * replaces whatever an earlier attempt of the same epoch published, so
+  * replaying an epoch is idempotent.
   *
   * The splice is a byte copy: each sheet part is the driver's deflated
   * head (XML prolog, `<cols>`, header row), the tasks' segments as they
@@ -76,9 +96,21 @@ class ExcelWriteBuilder(schema: StructType, opts: ExcelOptions)
 }
 
 class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
-    extends Write with BatchWrite {
+    extends Write with BatchWrite with StreamingWrite {
 
   override def toBatch: BatchWrite = this
+
+  /** Streaming sink: `path` is a DIRECTORY of epoch-named workbooks. The
+    * reference has no streaming sink at all; this composes with the
+    * directory reader so excel→transform→excel streams round-trip. */
+  override def toStreaming: StreamingWrite = {
+    if (opts.sheetColumn.isDefined) throw new UnsupportedOperationException(
+      "sheetColumn is not supported by the streaming excel sink")
+    this
+  }
+
+  // BatchWrite and StreamingWrite both default this to true; Scala needs it said once
+  override def useCommitCoordinator(): Boolean = true
 
   override def supportedCustomMetrics(): Array[CustomMetric] =
     ExcelWriteMetrics.supported
@@ -90,134 +122,109 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
     ExcelWriteMetrics.value(ExcelWriteMetrics.SpliceTimeMs, spliceMs),
     ExcelWriteMetrics.value(ExcelWriteMetrics.SplicedBytes, splicedBytes))
 
-  /** Streaming sink: `path` is a DIRECTORY; each epoch commits one
-    * `batch-<epochId>.xlsx` (epoch-named → idempotent on epoch replay).
-    * The reference has no streaming sink at all; this composes with the
-    * directory reader so excel→transform→excel streams round-trip. */
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    if (opts.sheetColumn.isDefined) throw new UnsupportedOperationException(
-      "sheetColumn is not supported by the streaming excel sink")
-    new ExcelStreamingWrite(schema, opts)
-  }
+  private def hadoopConf() = SparkSession.active.sessionState.newHadoopConf()
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    if (opts.shardedOutput)
-      // shards stream straight into the target directory under hidden
-      // temp names (no driver merge, no second copy); each task writes
-      // its own header
-      ExcelDataWriterFactory(schema, opts, opts.path, conf, sharded = true)
-    else ExcelDataWriterFactory(schema, opts, tmpDir, conf)
-  }
-
+  private val out = new Path(opts.path)
   private val queryId = java.util.UUID.randomUUID().toString.take(8)
-  private def tmpDir: String = s"${opts.path}.__graft_tmp_$queryId"
+  // the temp dirs sit, hidden, in the directory the output is renamed into
+  private val batchTmp = new Path(if (opts.shardedOutput) out else out.getParent,
+    s".__graft_tmp_$queryId")
+  private val streamTmp = new Path(out, ".__graft_stream_tmp")
+  private def epochTmp(epochId: Long) =
+    new Path(ExcelWrite.epochTmp(streamTmp.toString, epochId))
+  private def factory(tmp: Path) = ExcelDataWriterFactory(schema, opts,
+    tmp.toString, new SerializableConfiguration(hadoopConf()))
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    factory(batchTmp)
+
+  override def createStreamingWriterFactory(
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = factory(streamTmp)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    if (opts.shardedOutput) commitSharded(messages) else commitMerged(messages)
+    publish(batchTmp, messages, out, p => f"part-$p%05d.xlsx") { fs =>
+      val existing =
+        if (!fs.exists(out)) Nil
+        else if (opts.shardedOutput) ExcelFiles.list(opts.path, fs.getConf).map(new Path(_))
+        else Seq(out)
+      if (existing.nonEmpty && !truncate)
+        throw new org.apache.spark.sql.AnalysisException(
+          errorClass = "PATH_ALREADY_EXISTS",
+          messageParameters = Map("outputPath" -> opts.path))
+      existing
+    }
 
-  /** Scale-out commit: rename every shard to its visible name — O(parts)
-    * metadata operations, zero data movement. */
-  private def commitSharded(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val dir = new Path(opts.path)
-    val fs = dir.getFileSystem(conf)
-    fs.mkdirs(dir)
-    val existing = ExcelFiles.list(opts.path, conf)
-    if (existing.nonEmpty) {
-      if (truncate) existing.foreach(f => fs.delete(new Path(f), false))
-      else throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "PATH_ALREADY_EXISTS",
-        messageParameters = Map("outputPath" -> opts.path))
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
+    val batch = f"batch-$epochId%05d"
+    publish(epochTmp(epochId), messages, new Path(out, s"$batch.xlsx"),
+      p => f"$batch-part-$p%05d.xlsx") { fs =>
+      // epoch replay: replace whatever an earlier attempt of it published
+      Option(fs.globStatus(new Path(out, s"$batch{.xlsx,-part-*.xlsx}")))
+        .toSeq.flatten.map(_.getPath)
     }
-    messages.collect { case m: ExcelShardCommitMessage => m }.foreach { m =>
-      val target = new Path(dir, f"part-${m.partitionId}%05d.xlsx")
-      if (!fs.rename(new Path(m.tempPath), target))
-        throw new org.apache.spark.SparkException(
-          s"Excel sharded sink failed to rename ${m.tempPath} to $target")
-    }
-    cleanupShardTemps(fs, dir) // losers of speculative/retried attempts
   }
 
-  /** Remove leftover hidden shard temps (failed or speculative task
-    * attempts whose commit message lost). Invisible to readers either
-    * way; this keeps the directory from accumulating litter. */
-  private def cleanupShardTemps(fs: org.apache.hadoop.fs.FileSystem,
-      dir: Path): Unit =
-    Option(fs.globStatus(new Path(dir, ".part-*.xlsx.inprogress")))
-      .foreach(_.foreach(s => fs.delete(s.getPath, false)))
+  override def abort(messages: Array[WriterCommitMessage]): Unit = deleteTmp(batchTmp)
 
-  private def commitMerged(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val target = new Path(opts.path)
-    val fs = target.getFileSystem(conf)
-    if (fs.exists(target)) {
-      if (truncate) fs.delete(target, false)
-      else throw new org.apache.spark.sql.AnalysisException(
-        errorClass = "PATH_ALREADY_EXISTS",
-        messageParameters = Map("outputPath" -> opts.path))
-    }
-    // stage under a dot-prefixed sibling and rename: a concurrent directory
-    // reader never lists a half-written workbook
-    val staging = new Path(target.getParent, s".${target.getName}.inprogress")
-    val (sheets, names) = if (opts.sheetColumn.isEmpty) {
-      val parts = messages.collect { case m: ExcelCommitMessage => m }
-        .sortBy(_.partitionId)
-      (Seq(opts.writeSheetName -> parts.toSeq), schema.fieldNames.toSeq)
-    } else {
-      // sheet-routed merge: one sheet per distinct routing value (sheet
-      // order = sorted values — deterministic regardless of which task
-      // saw a value first), each concatenating its segments in partition
-      // order; data columns exclude the routing column
-      val parts = messages.collect { case m: ExcelSheetCommitMessage => m }
-        .sortBy(_.partitionId)
-      val sheetNames = parts.flatMap(_.sheets.map(_._1)).distinct.sorted
-      // Excel sheet names are case-INSENSITIVE: two routing values
-      // differing only in case came from different tasks' rows and would
-      // merge into a workbook Excel refuses to open (our reader would
-      // still round-trip it — exactly the silent-corruption hazard).
-      // Within one task the writer already rejects this at the first row.
-      val caseCollisions = sheetNames
-        .groupBy(_.toLowerCase(java.util.Locale.ROOT))
-        .filter(_._2.size > 1)
-      if (caseCollisions.nonEmpty)
-        throw new org.apache.spark.SparkException(
-          "sheetColumn values collide case-insensitively (Excel treats " +
-            "sheet names as case-insensitive): " +
-            caseCollisions.values.map(_.mkString(" / ")).mkString("; "))
-      val bySheet = sheetNames.toSeq.map(s => s -> parts.toSeq.flatMap(m =>
-        m.sheets.collect { case (`s`, path, seg) =>
-          ExcelCommitMessage(m.partitionId, path, seg) }))
-      // empty input: one empty sheet keeps the header contract
-      (if (bySheet.isEmpty) Seq(opts.writeSheetName -> Nil) else bySheet,
-        schema.fieldNames.toSeq.filterNot(_ == opts.sheetColumn.get))
-    }
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    deleteTmp(epochTmp(epochId))
+
+  private def deleteTmp(tmp: Path): Unit =
+    tmp.getFileSystem(hadoopConf()).delete(tmp, true)
+
+  /** The one publish sequence of every commit. Stages the new output in
+    * `tmp`: a merged write's segments spliced into one workbook bound for
+    * `target` (sheets in sorted order, one empty sheet for empty input), a
+    * sharded write's workbooks bound for `path/<shardName(partition)>`.
+    * Then deletes the files `replaced` names (it runs before staging, so
+    * it may also refuse the write), renames the staged files into place,
+    * and deletes `tmp`, whether or not the commit succeeded. */
+  private def publish(tmp: Path, messages: Array[WriterCommitMessage],
+      target: Path, shardName: Int => String)(
+      replaced: FileSystem => Seq[Path]): Unit = {
+    val fs = tmp.getFileSystem(hadoopConf())
     try {
-      val t0 = System.nanoTime()
-      splicedBytes = ExcelWrite.splice(fs, staging, sheets, names, opts)
-      spliceMs = (System.nanoTime() - t0) / 1000000L
-    } catch { case e: Throwable => fs.delete(staging, false); throw e }
-    finally fs.delete(new Path(tmpDir), true)
-    if (!fs.rename(staging, target)) {
-      fs.delete(staging, false)
-      throw new org.apache.spark.SparkException(
-        s"Excel sink failed to rename $staging to $target")
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    if (opts.shardedOutput) {
-      val dir = new Path(opts.path)
-      val fs = dir.getFileSystem(conf)
-      messages.collect { case m: ExcelShardCommitMessage => m }
-        .foreach(m => fs.delete(new Path(m.tempPath), false))
-      if (fs.exists(dir)) cleanupShardTemps(fs, dir)
-    } else {
-      val fs = new Path(tmpDir).getFileSystem(conf)
-      fs.delete(new Path(tmpDir), true)
-    }
+      val old = replaced(fs)
+      val staged = if (opts.shardedOutput) {
+        messages.toSeq.collect { case m: ExcelShardCommitMessage =>
+          new Path(m.tempPath) -> new Path(out, shardName(m.partitionId)) }
+      } else {
+        val parts = messages.toSeq.collect { case m: ExcelCommitMessage => m }
+          .sortBy(_.partitionId)
+        // one sheet per distinct name, in sorted order: deterministic
+        // whichever task saw a routing value first
+        val sheetNames = parts.flatMap(_.segments.map(_.sheet)).distinct.sorted
+        // Excel sheet names are case-INSENSITIVE: two routing values
+        // differing only in case came from different tasks' rows and would
+        // merge into a workbook Excel refuses to open (our reader would
+        // still round-trip it — exactly the silent-corruption hazard).
+        // Within one task the writer already rejects this at the first row.
+        val caseCollisions = sheetNames
+          .groupBy(_.toLowerCase(java.util.Locale.ROOT))
+          .filter(_._2.size > 1)
+        if (caseCollisions.nonEmpty)
+          throw new org.apache.spark.SparkException(
+            "sheetColumn values collide case-insensitively (Excel treats " +
+              "sheet names as case-insensitive): " +
+              caseCollisions.values.map(_.mkString(" / ")).mkString("; "))
+        val sheets = sheetNames.map(s => s -> parts.map(m =>
+          m.copy(segments = m.segments.filter(_.sheet == s))))
+        val staging = new Path(tmp, s".${target.getName}.inprogress")
+        val t0 = System.nanoTime()
+        splicedBytes = ExcelWrite.splice(fs, staging,
+          // empty input: one empty sheet keeps the header contract
+          if (sheets.isEmpty) Seq(opts.writeSheetName -> Nil) else sheets,
+          schema.fieldNames.toSeq.filterNot(opts.sheetColumn.contains), opts)
+        spliceMs = (System.nanoTime() - t0) / 1000000L
+        Seq(staging -> target)
+      }
+      old.foreach(fs.delete(_, false))
+      if (opts.shardedOutput) fs.mkdirs(out)
+      staged.foreach { case (from, to) =>
+        if (!fs.rename(from, to)) throw new org.apache.spark.SparkException(
+          s"Excel sink failed to rename $from to $to")
+      }
+    } finally fs.delete(tmp, true)
   }
 }
 
@@ -227,26 +234,31 @@ object ExcelWrite {
       opts: ExcelOptions): Unit =
     if (opts.headerBold) w.writeHeaderRow(names) else w.writeRow(names)
 
+  /** A streaming task stages under `<tmp>_<epochId>`. */
+  private[excel] def epochTmp(tmp: String, epochId: Long): String = s"${tmp}_$epochId"
+
   /** Writes one workbook at `target` from the tasks' row segments: per
     * sheet, in the given order, the header row (with `opts.header`) and
     * then every segment's deflated bytes, copied as they are. Each sheet's
     * row total and each temp file's length are checked against the
     * commit messages before the first byte is written. `sheets` must be
-    * non-empty. Returns the number of segment bytes spliced. */
+    * non-empty; each lists its own segments only. Returns the number of
+    * segment bytes spliced. */
   private[excel] def splice(fs: FileSystem, target: Path,
       sheets: Seq[(String, Seq[ExcelCommitMessage])], names: Seq[String],
       opts: ExcelOptions): Long = {
     val headerRows = if (opts.header) 1L else 0L
     sheets.foreach { case (sheet, parts) =>
-      if (headerRows + parts.map(_.segment.rows).sum > XlsxWriter.MaxRowsPerSheet)
+      if (headerRows + parts.flatMap(_.segments).map(_.segment.rows).sum >
+          XlsxWriter.MaxRowsPerSheet)
         throw XlsxWriter.rowLimitExceeded(sheet)
-      parts.foreach { p =>
-        val len = fs.getFileStatus(new Path(p.tempPath)).getLen
-        if (len != p.segment.deflatedBytes)
+      for (p <- parts; s <- p.segments) {
+        val len = fs.getFileStatus(new Path(s.tempPath)).getLen
+        if (len != s.segment.deflatedBytes)
           throw new org.apache.spark.SparkException(
-            s"Excel sink: temp segment ${p.tempPath} of partition " +
+            s"Excel sink: temp segment ${s.tempPath} of partition " +
               s"${p.partitionId} holds $len bytes but its task committed " +
-              s"${p.segment.deflatedBytes}; refusing to splice a truncated " +
+              s"${s.segment.deflatedBytes}; refusing to splice a truncated " +
               "or altered segment")
       }
     }
@@ -255,12 +267,12 @@ object ExcelWrite {
     try sheets.zipWithIndex.foreach { case ((sheet, parts), i) =>
       if (i > 0) w.startSheet(sheet)
       if (opts.header) header(w, names, opts)
-      parts.foreach { p =>
-        val in = fs.open(new Path(p.tempPath))
-        try w.appendSegment(in, p.segment) finally in.close()
+      for (p <- parts; s <- p.segments) {
+        val in = fs.open(new Path(s.tempPath))
+        try w.appendSegment(in, s.segment) finally in.close()
       }
     } finally w.close()
-    sheets.map(_._2.map(_.segment.deflatedBytes).sum).sum
+    sheets.flatMap(_._2.flatMap(_.segments)).map(_.segment.deflatedBytes).sum
   }
 
   private val ForbiddenSheetChars = ":\\/?*[]"
@@ -285,18 +297,17 @@ object ExcelWrite {
   }
 }
 
-/** Merged-write commit: this task's row segment, spliced at the driver. */
-case class ExcelCommitMessage(partitionId: Int, tempPath: String,
-    segment: XlsxWriter.Segment) extends WriterCommitMessage
+/** One task's rows of one sheet: the temp file holding them deflated and
+  * the totals the splice checks it against. */
+case class ExcelSegment(sheet: String, tempPath: String, segment: XlsxWriter.Segment)
+
+/** Merged-write commit: this task's row segments, sheet-sorted; one
+  * sheet's segments in row order. Spliced at the driver. */
+case class ExcelCommitMessage(partitionId: Int, segments: Seq[ExcelSegment])
+    extends WriterCommitMessage
 
 /** Sharded-write commit: this task's finished shard, renamed at the driver. */
 case class ExcelShardCommitMessage(partitionId: Int, tempPath: String)
-    extends WriterCommitMessage
-
-/** Sheet-routing commit: this task's (sheet value, temp segment, segment)
-  * triples, sheet-sorted. */
-case class ExcelSheetCommitMessage(partitionId: Int,
-    sheets: Seq[(String, String, XlsxWriter.Segment)])
     extends WriterCommitMessage
 
 /** DSv2 write metrics: per task (summed over tasks) the rows and the
@@ -332,100 +343,33 @@ class ExcelSpliceTimeMetric
 class ExcelSplicedBytesMetric
     extends ExcelSumMetric(ExcelWriteMetrics.SplicedBytes, "bytes spliced by the driver")
 
-class ExcelStreamingWrite(schema: StructType, opts: ExcelOptions)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
+/** Builds every task's writer, batch and streaming alike; a streaming
+  * task stages under its epoch's temp dir. */
+case class ExcelDataWriterFactory(schema: StructType, opts: ExcelOptions,
+    tmpDir: String, conf: SerializableConfiguration)
+    extends DataWriterFactory with StreamingDataWriterFactory {
 
-  private def tmpDir(epochId: Long): String =
-    s"${opts.path}/.__graft_stream_tmp_$epochId"
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    ExcelStreamingWriterFactory(schema, opts, conf)
-  }
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val outDir = new Path(opts.path)
-    val fs = outDir.getFileSystem(conf)
-    fs.mkdirs(outDir)
-    if (opts.shardedOutput) {
-      // scale-out epochs: every task's shard renames into place —
-      // batch-<epoch>-part-<partition>.xlsx. Idempotent on epoch replay:
-      // any earlier attempt's shards for this epoch are removed first.
-      Option(fs.globStatus(new Path(outDir, f"batch-$epochId%05d-part-*.xlsx")))
-        .foreach(_.foreach(s => fs.delete(s.getPath, false)))
-      messages.collect { case m: ExcelShardCommitMessage => m }.foreach { m =>
-        val target = new Path(outDir,
-          f"batch-$epochId%05d-part-${m.partitionId}%05d.xlsx")
-        if (!fs.rename(new Path(m.tempPath), target))
-          throw new org.apache.spark.SparkException(
-            s"Excel streaming sink failed to rename ${m.tempPath} to $target")
-      }
-      fs.delete(new Path(tmpDir(epochId)), true)
-      return
-    }
-    val target = new Path(outDir, f"batch-$epochId%05d.xlsx")
-    // write under a dot-prefixed name (invisible to ExcelFiles.list) and
-    // rename into place, so a concurrent excel streaming reader can never
-    // admit a half-written workbook into an offset
-    val staging = new Path(outDir, f".batch-$epochId%05d.xlsx.inprogress")
-    val parts = messages.collect { case m: ExcelCommitMessage => m }
-      .sortBy(_.partitionId)
-    try ExcelWrite.splice(fs, staging, Seq(opts.writeSheetName -> parts.toSeq),
-      schema.fieldNames.toSeq, opts)
-    catch { case e: Throwable => fs.delete(staging, false); throw e }
-    finally fs.delete(new Path(tmpDir(epochId)), true)
-    if (fs.exists(target)) fs.delete(target, false) // epoch replay: idempotent
-    if (!fs.rename(staging, target)) {
-      fs.delete(staging, false)
-      throw new org.apache.spark.SparkException(
-        s"Excel streaming sink failed to rename $staging to $target")
-    }
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val fs = new Path(opts.path).getFileSystem(conf)
-    fs.delete(new Path(tmpDir(epochId)), true)
-  }
-}
-
-case class ExcelStreamingWriterFactory(schema: StructType, opts: ExcelOptions,
-    conf: SerializableConfiguration)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new ExcelDataWriter(schema, opts, tmpDir, partitionId, taskId, conf.value)
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new ExcelDataWriter(schema, opts,
-      s"${opts.path}/.__graft_stream_tmp_$epochId", partitionId, taskId,
-      conf.value, sharded = opts.shardedOutput)
+    new ExcelDataWriter(schema, opts, ExcelWrite.epochTmp(tmpDir, epochId),
+      partitionId, taskId, conf.value)
 }
 
-case class ExcelDataWriterFactory(schema: StructType, opts: ExcelOptions,
-    tmpDir: String, conf: SerializableConfiguration,
-    sharded: Boolean = false) extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ExcelDataWriter(schema, opts, tmpDir, partitionId, taskId, conf.value,
-      sharded)
-}
-
-/** Streams one partition to the target FS: in sharded mode a finished
-  * workbook under a hidden name (its own header, styles applied); else a
-  * headerless row segment ([[XlsxRowSegment]]) for the driver's splice.
-  *
-  * With `sheetColumn`, the task instead keeps one segment open PER
-  * routing value seen (a segment streams forward only, so interleaved
-  * values need separate files) and the commit message lists each value's
-  * segments; the driver splices each value's segments in partition order
+/** Streams one partition into files under `tmpDir`, in one of two modes.
+  * Sharded: one finished workbook (its own header, styles applied).
+  * Merged: headerless row segments ([[XlsxRowSegment]]), one per sheet,
+  * for the driver's splice. An unrouted write has the one sheet
+  * `sheetName` and writes every row to its segment directly. With
+  * `sheetColumn`, the task keeps one segment open PER routing value seen
+  * (a segment streams forward only, so interleaved values need separate
+  * files); the driver splices each value's segments in partition order
   * under one sheet. */
 class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     partitionId: Int, taskId: Long,
-    conf: org.apache.hadoop.conf.Configuration,
-    sharded: Boolean = false) extends DataWriter[InternalRow] {
+    conf: org.apache.hadoop.conf.Configuration) extends DataWriter[InternalRow] {
 
   private val sheetColIdx: Int =
     opts.sheetColumn.map(schema.fieldIndex).getOrElse(-1)
@@ -434,42 +378,58 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
   private var closed = false
   private var rowsWritten = 0L
 
-  // single-workbook mode state (sheetColumn unset): exactly one of these
-  private val tempPath =
-    if (sheetColIdx >= 0) null
-    else if (sharded) // hidden in-place temp, renamed at commit
-      new Path(tmpDir, f".part-$partitionId%05d-$taskId.xlsx.inprogress")
-    else new Path(tmpDir, f"part-$partitionId%05d-$taskId.deflate")
+  private val temps = scala.collection.mutable.ArrayBuffer.empty[Path]
+  private def newTemp(ext: String): Path = {
+    val p = new Path(tmpDir, f"part-$partitionId%05d-$taskId-${temps.size}.$ext")
+    temps += p
+    p
+  }
+
   private val shard =
-    if (sheetColIdx >= 0 || !sharded) null
-    else new XlsxWriter(fs.create(tempPath, true), opts.writeSheetName,
+    if (!opts.shardedOutput) null
+    else new XlsxWriter(fs.create(newTemp("xlsx"), true), opts.writeSheetName,
       opts.widthsFor(schema.fieldNames.toIndexedSeq))
-  private val segment =
-    if (sheetColIdx >= 0 || sharded) null
-    else new XlsxRowSegment(fs.create(tempPath, true), opts.writeSheetName)
-  private val writer: XlsxRowEncoder = if (shard != null) shard else segment
   if (shard != null && opts.header)
     ExcelWrite.header(shard, schema.fieldNames.toIndexedSeq, opts)
 
-  // sheet-routing mode state: value → (segment, temp path), kept in LRU
-  // order (a get re-inserts). Open segments are capped at
-  // opts.maxOpenSheetWriters: past the cap the least-recently-used one is
-  // closed and parked in `finishedSegments`; a value that reappears opens
-  // a fresh temp segment, and the driver splices a sheet's segments in
-  // emission order.
-  private val routed =
+  // merged mode: sheet → open segment, kept in LRU order (a routed get
+  // re-inserts). Open segments are capped at opts.maxOpenSheetWriters:
+  // past the cap the least-recently-used one is closed into `finished`; a
+  // value that reappears opens a fresh temp segment, and the driver
+  // splices a sheet's segments in emission order.
+  private val open =
     scala.collection.mutable.LinkedHashMap.empty[String, (XlsxRowSegment, Path)]
-  private val finishedSegments = scala.collection.mutable.ArrayBuffer
-    .empty[(String, String, XlsxWriter.Segment)]
-  private var finishedBytes = 0L
+  private val finished = scala.collection.mutable.ArrayBuffer.empty[ExcelSegment]
+  private def finish(sheet: String): Unit = open.remove(sheet).foreach {
+    case (w, p) => finished += ExcelSegment(sheet, p.toString, w.close())
+  }
+  private def openSegment(sheet: String): XlsxRowSegment = {
+    if (open.size >= opts.maxOpenSheetWriters) finish(open.head._1)
+    val p = newTemp("deflate")
+    val w = new XlsxRowSegment(fs.create(p, true), sheet)
+    open.put(sheet, (w, p))
+    w
+  }
+
+  /** The one encoder of an unrouted write (its shard or its one segment);
+    * null when `sheetColumn` routes each row. */
+  private val writer: XlsxRowEncoder =
+    if (shard != null) shard
+    else if (sheetColIdx < 0) openSegment(opts.writeSheetName)
+    else null
+
   // case-insensitive collision guard: Excel sheet names are
   // case-insensitive, so "Foo" and "foo" routing values would produce a
   // workbook Excel rejects; fail at the first offending row instead
   private val lowerSeen = scala.collection.mutable.HashMap.empty[String, String]
-  private var segmentSeq = 0
-  private def routedWriter(sheet: String): XlsxRowSegment =
-    routed.remove(sheet) match {
-      case Some(entry) => routed.put(sheet, entry); entry._1 // LRU refresh
+  private def routedWriter(row: InternalRow): XlsxRowEncoder = {
+    if (row.isNullAt(sheetColIdx))
+      throw new org.apache.spark.SparkException(
+        s"sheetColumn '${opts.sheetColumn.get}' is null for a row; " +
+          "null sheet names are not representable — filter or fill first")
+    val sheet = row.getUTF8String(sheetColIdx).toString
+    open.remove(sheet) match {
+      case Some(entry) => open.put(sheet, entry); entry._1 // LRU refresh
       case None =>
         ExcelWrite.validateSheetName(sheet,
           s"sheetColumn '${opts.sheetColumn.get}' row value")
@@ -480,20 +440,9 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
               "case-insensitively (Excel treats sheet names as " +
               "case-insensitive)"))
         lowerSeen.update(lower, sheet)
-        if (routed.size >= opts.maxOpenSheetWriters) {
-          val (lruSheet, (w, p)) = routed.head
-          val seg = w.close()
-          finishedSegments += ((lruSheet, p.toString, seg))
-          finishedBytes += seg.deflatedBytes
-          routed.remove(lruSheet)
-        }
-        val p = new Path(tmpDir,
-          f"part-$partitionId%05d-$taskId-s$segmentSeq.deflate")
-        segmentSeq += 1
-        val w = new XlsxRowSegment(fs.create(p, true), sheet)
-        routed.put(sheet, (w, p))
-        w
+        openSegment(sheet)
     }
+  }
 
   private def mkGetter(f: StructField, i: Int): InternalRow => Any = {
     val g: InternalRow => Any = f.dataType match {
@@ -533,16 +482,9 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
   }
 
   override def write(row: InternalRow): Unit = {
-    if (sheetColIdx < 0) { fillRowBuf(row); writer.writeRow(rowView) }
-    else {
-      if (row.isNullAt(sheetColIdx))
-        throw new org.apache.spark.SparkException(
-          s"sheetColumn '${opts.sheetColumn.get}' is null for a row; " +
-            "null sheet names are not representable — filter or fill first")
-      val w = routedWriter(row.getUTF8String(sheetColIdx).toString)
-      fillRowBuf(row)
-      w.writeRow(rowView)
-    }
+    val w = if (writer != null) writer else routedWriter(row)
+    fillRowBuf(row)
+    w.writeRow(rowView)
     rowsWritten += 1
   }
 
@@ -555,39 +497,30 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
 
   override def currentMetricsValues(): Array[CustomTaskMetric] = {
     val bytes =
-      if (writer != null) writer.bytesWritten
-      else finishedBytes + routed.values.map(_._1.bytesWritten).sum
+      if (shard != null) shard.bytesWritten
+      else finished.map(_.segment.deflatedBytes).sum + open.values.map(_._1.bytesWritten).sum
     Array(ExcelWriteMetrics.value(ExcelWriteMetrics.RowsWritten, rowsWritten),
       ExcelWriteMetrics.value(ExcelWriteMetrics.BytesWritten, bytes))
   }
 
   override def commit(): WriterCommitMessage = {
     closeAll()
-    if (shard != null) ExcelShardCommitMessage(partitionId, tempPath.toString)
-    else if (segment != null)
-      ExcelCommitMessage(partitionId, tempPath.toString, segment.close())
-    else ExcelSheetCommitMessage(partitionId,
-      // evicted segments first, then still-open ones; the sort is stable,
-      // so a sheet's segments stay in emission (= row) order
-      (finishedSegments.toSeq ++ routed.map { case (s, (w, p)) =>
-        (s, p.toString, w.close()) }).sortBy(_._1))
+    if (shard != null) ExcelShardCommitMessage(partitionId, temps.head.toString)
+    // evicted segments first, then the ones closed last; the sort is
+    // stable, so a sheet's segments stay in emission (= row) order
+    else ExcelCommitMessage(partitionId, finished.toSeq.sortBy(_.sheet))
   }
 
   override def abort(): Unit = {
     closeAll()
-    if (sheetColIdx < 0) fs.delete(tempPath, false)
-    else {
-      routed.values.foreach { case (_, p) => fs.delete(p, false) }
-      finishedSegments.foreach { case (_, p, _) => fs.delete(new Path(p), false) }
-    }
+    temps.foreach(fs.delete(_, false))
   }
 
   override def close(): Unit = closeAll()
 
   private def closeAll(): Unit = if (!closed) {
     if (shard != null) shard.close()
-    if (segment != null) segment.close()
-    routed.values.foreach(_._1.close())
+    open.keys.toList.foreach(finish)
     closed = true
   }
 }

@@ -313,13 +313,17 @@ class ExcelConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids == (0 until 100)) // partition-ordered merge ⇒ deterministic
   }
 
-  test("merged write: a truncated temp segment fails the commit, never spliced") {
-    val dir = tmpDir()
-    val out = new File(dir, "guard.xlsx")
+  /** Drives a two-task merged write of `out` by hand, cuts the last byte
+    * off task 1's temp segment and commits: the commit must refuse it.
+    * Returns the commit's error and the victim segment's temp path. */
+  private def commitTruncatedSegment(out: File,
+      truncate: Boolean): (org.apache.spark.SparkException, String) = {
     spark.conf // the commit reads the active session's Hadoop conf
     val schema = StructType(Seq(StructField("id", LongType)))
-    val write = new ExcelWriteBuilder(schema,
-      ExcelOptions.fromMap(Map("path" -> out.getAbsolutePath))).build()
+    val builder = new ExcelWriteBuilder(schema,
+      ExcelOptions.fromMap(Map("path" -> out.getAbsolutePath)))
+    if (truncate) builder.truncate()
+    val write = builder.build()
     val factory = write.toBatch.createBatchWriterFactory(
       new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
         override def numPartitions(): Int = 2
@@ -330,14 +334,59 @@ class ExcelConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
         w.write(org.apache.spark.sql.catalyst.InternalRow(i.toLong * (p + 1))))
       w.commit()
     }
-    val victim = messages(1).asInstanceOf[ExcelCommitMessage]
-    val raf = new java.io.RandomAccessFile(victim.tempPath, "rw")
+    val victim = messages(1).asInstanceOf[ExcelCommitMessage].segments.head.tempPath
+    val raf = new java.io.RandomAccessFile(victim, "rw")
     try raf.setLength(raf.length() - 1) finally raf.close()
-    val e = intercept[org.apache.spark.SparkException](
-      write.toBatch.commit(messages.toArray))
-    assert(e.getMessage.contains(victim.tempPath) &&
+    (intercept[org.apache.spark.SparkException](
+      write.toBatch.commit(messages.toArray)), victim)
+  }
+
+  /** Temp dirs and staging files a write left behind in `dir`. */
+  private def litter(dir: File): Seq[String] = dir.list().toSeq
+    .filter(n => n.contains("__graft") || n.contains("inprogress"))
+
+  test("merged write: a truncated temp segment fails the commit, never spliced") {
+    val dir = tmpDir()
+    val (e, victim) = commitTruncatedSegment(new File(dir, "guard.xlsx"), truncate = false)
+    assert(e.getMessage.contains(victim) &&
       e.getMessage.contains("partition 1"), e.getMessage)
     assert(dir.list().isEmpty, s"nothing committed: ${dir.list().mkString(", ")}")
+  }
+
+  test("overwrite: a truncated temp segment leaves the previous workbook as it was") {
+    val dir = tmpDir()
+    val out = sampleFile(dir, "guard.xlsx", Seq(7 -> "seven"))
+    val before = Files.readAllBytes(out.toPath)
+    val (e, victim) = commitTruncatedSegment(out, truncate = true)
+    assert(e.getMessage.contains(victim), e.getMessage)
+    assert(out.isFile && java.util.Arrays.equals(Files.readAllBytes(out.toPath), before),
+      "the failed overwrite must not touch the old workbook")
+    assert(spark.read.format("excel").schema(idName).load(out.getAbsolutePath)
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq == Seq(7 -> "seven"))
+    assert(litter(dir).isEmpty, litter(dir))
+  }
+
+  test("overwrite: a commit that rejects colliding sheet names keeps the previous workbook") {
+    val dir = tmpDir()
+    val out = new File(dir, "keep.xlsx")
+    import spark.implicits._
+    Seq((1, "one")).toDF("id", "name").coalesce(1)
+      .write.format("excel").mode("overwrite").save(out.getAbsolutePath)
+    val before = Files.readAllBytes(out.toPath)
+    // "Foo" and "foo" arrive in different tasks (one row in each of two
+    // partitions): only the driver's commit sees both
+    val routed = spark.range(0, 2, 1, 2).select(col("id").cast("int").as("id"),
+      when(col("id") === 0, lit("Foo")).otherwise(lit("foo")).as("region"))
+    assert(routed.rdd.getNumPartitions == 2)
+    val e = intercept[Exception](routed
+      .write.format("excel").option("sheetColumn", "region")
+      .mode("overwrite").save(out.getAbsolutePath))
+    assert(msgs(e).exists(_.contains("collide case-insensitively")), msgs(e))
+    assert(out.isFile && java.util.Arrays.equals(Files.readAllBytes(out.toPath), before),
+      "the failed overwrite must not touch the old workbook")
+    assert(spark.read.format("excel").schema(idName).load(out.getAbsolutePath)
+      .collect().map(r => (r.getInt(0), r.getString(1))).toSeq == Seq(1 -> "one"))
+    assert(litter(dir).isEmpty, litter(dir))
   }
 
   test("write metrics: per-task rows and bytes, driver splice time and bytes") {

@@ -169,4 +169,16 @@ class ExcelOpenSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(after - before < 8, s"open files $before -> $after")
     } finally deleteTree(dir)
   }
+
+  test("a missing-column error lists the header's columns, not the schema's width") {
+    val dir = tempDir()
+    try {
+      writeWorkbook(new File(dir, "a.xlsx"), 3)
+      val e = intercept[Exception](spark.read.format("excel")
+        .schema(schema.add("nope", StringType)).load(dir.getPath).collect())
+      assert(messages(e).contains("Column 'nope' not found"), messages(e))
+      assert(messages(e).contains("(sheet columns: id, name, score)"), messages(e))
+      assert(!messages(e).contains("Unnamed"), messages(e))
+    } finally deleteTree(dir)
+  }
 }

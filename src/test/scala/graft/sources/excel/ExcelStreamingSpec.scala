@@ -303,19 +303,19 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming sink writers are the batch writer class (no forked path)") {
-    // the streaming factory must delegate to the SAME per-task writer the
-    // batch factory builds — if the two paths ever fork, writer fixes
-    // (validation, buffering, temp-file hygiene) silently apply to one
-    // side only
+    // one factory builds the batch and the streaming task writers, and
+    // both must be the SAME per-task writer class — if the two paths ever
+    // fork, writer fixes (validation, buffering, temp-file hygiene)
+    // silently apply to one side only
     import org.apache.spark.util.SerializableConfiguration
     val dir = Files.createTempDirectory("graft-writer-reuse").toFile
     val opts = ExcelOptions.fromMap(Map("path" -> dir.getAbsolutePath))
     val conf = new SerializableConfiguration(
       new org.apache.hadoop.conf.Configuration())
-    val batch = ExcelDataWriterFactory(idName, opts,
-      new File(dir, "b").getAbsolutePath, conf).createWriter(0, 0L)
-    val streaming = ExcelStreamingWriterFactory(idName, opts, conf)
-      .createWriter(0, 0L, epochId = 1L)
+    val factory = ExcelDataWriterFactory(idName, opts,
+      new File(dir, "t").getAbsolutePath, conf)
+    val batch = factory.createWriter(0, 0L)
+    val streaming = factory.createWriter(0, 0L, epochId = 1L)
     try {
       assert(batch.getClass == classOf[ExcelDataWriter])
       assert(streaming.getClass == classOf[ExcelDataWriter],
