@@ -1,5 +1,7 @@
 package graft.sources.excel
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
@@ -34,11 +36,14 @@ import org.apache.spark.util.SerializableConfiguration
   * genuinely new content, indistinguishable from a new file without
   * unbounded seen-name state (which is exactly what compaction exists to
   * avoid).
+  *
+  * Spark's micro-batch engine builds a streaming scan without pushing
+  * anything into it (no pruned columns, filters, limit or sample), so the
+  * stream reads every column of `fullSchema` and runs Spark's operators
+  * above the same row reader as the batch scan.
   */
-class ExcelMicroBatchStream(fullSchema: StructType, schema: StructType,
-    opts: ExcelOptions, checkpointLocation: String,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    limit: Int = -1, sample: Option[ExcelSample] = None)
+class ExcelMicroBatchStream(fullSchema: StructType, opts: ExcelOptions,
+    checkpointLocation: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private def conf = SparkSession.active.sessionState.newHadoopConf()
@@ -133,26 +138,15 @@ class ExcelMicroBatchStream(fullSchema: StructType, schema: StructType,
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val seen = start.asInstanceOf[ExcelStreamOffset].names.toSet
-    val freshAll = end.asInstanceOf[ExcelStreamOffset].names.filterNot(seen)
-    // static `_file_path` pruning, same contract as the batch scan: a file
-    // provably failing a pushed predicate is never opened (it still enters
-    // the offset — admission is listing-driven, so pruning can't re-admit)
-    val fresh =
-      if (filters.nonEmpty &&
-        !fullSchema.fieldNames.contains(ExcelSchema.FilePathColumn))
-        freshAll.filter(f => ExcelScan.fileMayMatch(f, filters))
-      else freshAll
     // maxRowsPerPartition applies per admitted file: a large workbook
     // landing in a micro-batch fans out across executors like in batch
-    ExcelSplitPlanner.plan(fresh, opts, conf, filters)
+    ExcelSplitPlanner.plan(
+      end.asInstanceOf[ExcelStreamOffset].names.filterNot(seen), opts, conf)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // a pushed sample must keep sampling here too — if the host engine
-    // ever pushes TABLESAMPLE into a streaming scan, dropping it silently
-    // would return unsampled rows with the Sample node already removed
-    ExcelPartitionReaderFactory(fullSchema, schema, opts, limit,
-      new SerializableConfiguration(conf), filters, sample = sample)
+    ExcelPartitionReaderFactory(fullSchema, fullSchema, opts, -1,
+      new SerializableConfiguration(conf))
 
   override def commit(end: Offset): Unit = () // offsets are self-contained
 
@@ -166,21 +160,37 @@ class ExcelMicroBatchStream(fullSchema: StructType, schema: StructType,
   *    with every checkpoint written before retention existed;
   *  - compacted: `{"wm":<maxMtime>,"files":[["a",<mtime>],...]}` — entries
   *    carry mtimes so expiry is a pure function of the offset.
-  * `fromJson` accepts both; legacy entries get mtime=Long.MaxValue so a
-  * checkpoint written without retention never expires entries spuriously
-  * (and thus never re-reads) when retention is later enabled. */
+  * Both are written and read with Jackson, which escapes every control
+  * character: Spark's offset log is line-based, so a raw line break in a
+  * file name would split the offset. `fromJson` accepts both; legacy
+  * entries get mtime=Long.MaxValue so a checkpoint written without
+  * retention never expires entries spuriously (and thus never re-reads)
+  * when retention is later enabled. */
 case class ExcelStreamOffset(entries: Seq[(String, Long)], watermark: Long = 0L,
     compacted: Boolean = false) extends Offset {
 
   def names: Seq[String] = entries.map(_._1)
 
-  private def esc(f: String): String =
-    "\"" + f.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
-  override def json(): String =
-    if (!compacted) names.map(esc).mkString("{\"files\":[", ",", "]}")
-    else entries.map { case (n, t) => s"[${esc(n)},$t]" }
-      .mkString(s"""{"wm":$watermark,"files":[""", ",", "]}")
+  override def json(): String = {
+    val out = new java.io.StringWriter
+    val g = ExcelStreamOffset.Json.getFactory.createGenerator(out)
+    g.writeStartObject()
+    if (compacted) g.writeNumberField("wm", watermark)
+    g.writeArrayFieldStart("files")
+    entries.foreach { case (n, t) =>
+      if (!compacted) g.writeString(n)
+      else {
+        g.writeStartArray()
+        g.writeString(n)
+        g.writeNumber(t)
+        g.writeEndArray()
+      }
+    }
+    g.writeEndArray()
+    g.writeEndObject()
+    g.close()
+    out.toString
+  }
 }
 
 object ExcelStreamOffset {
@@ -224,63 +234,20 @@ object ExcelStreamOffset {
         compacted = true)
   }
 
-  /** Minimal parser for the two exact shapes [[ExcelStreamOffset.json]]
-    * emits. */
+  // a checkpoint written before offsets went through Jackson may hold an
+  // unescaped tab or other control character inside a name
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper(
+    new com.fasterxml.jackson.core.JsonFactoryBuilder()
+      .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+      .build())
+
+  /** Parses either shape [[ExcelStreamOffset.json]] writes. */
   def fromJson(json: String): ExcelStreamOffset = {
-    val trimmed = json.trim
-    if (trimmed.startsWith("{\"wm\":")) {
-      val afterWm = trimmed.stripPrefix("{\"wm\":")
-      val comma = afterWm.indexOf(",\"files\":[")
-      val wm = afterWm.substring(0, comma).toLong
-      val body = afterWm.substring(comma + ",\"files\":[".length).stripSuffix("]}")
-      ExcelStreamOffset(parseEntries(body), wm, compacted = true)
-    } else {
-      val body = trimmed.stripPrefix("{\"files\":[").stripSuffix("]}")
-      ExcelStreamOffset(parseStrings(body).map(_ -> Long.MaxValue), 0L,
-        compacted = false)
-    }
-  }
-
-  /** `"a","b"` → names (quote/backslash escapes honored). */
-  private def parseStrings(body: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inStr = false
-    var esc = false
-    body.foreach { c =>
-      if (esc) { sb.append(c); esc = false }
-      else if (c == '\\') esc = true
-      else if (c == '"') {
-        if (inStr) { out += sb.toString; sb.clear() }
-        inStr = !inStr
-      } else if (inStr) sb.append(c)
-    }
-    out.toSeq
-  }
-
-  /** `["a",1],["b",2]` → (name, mtime) pairs. */
-  private def parseEntries(body: String): Seq[(String, Long)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val sb = new StringBuilder
-    val num = new StringBuilder
-    var inStr = false
-    var esc = false
-    var name: String = null
-    body.foreach { c =>
-      if (esc) { sb.append(c); esc = false }
-      else if (inStr) {
-        if (c == '\\') esc = true
-        else if (c == '"') { name = sb.toString; sb.clear(); inStr = false }
-        else sb.append(c)
-      } else c match {
-        case '"' => inStr = true
-        case d if d.isDigit || d == '-' => num.append(d)
-        case ']' if name != null =>
-          out += (name -> num.toString.toLong)
-          name = null; num.clear()
-        case _ => ()
-      }
-    }
-    out.toSeq
+    val root = Json.readTree(json)
+    val files = root.get("files").elements().asScala.toSeq
+    if (root.has("wm"))
+      ExcelStreamOffset(files.map(e => e.get(0).asText() -> e.get(1).asLong()),
+        root.get("wm").asLong(), compacted = true)
+    else ExcelStreamOffset(files.map(_.asText() -> Long.MaxValue))
   }
 }

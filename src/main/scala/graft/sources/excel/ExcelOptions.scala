@@ -93,7 +93,8 @@ final case class ExcelOptions(options: Map[String, String]) {
   /** Row-range split size for parallel single-file reads (extension;
     * unset = the reference's 1-file-1-partition contract). When set, a
     * file's sheet is split into partitions of at most this many data rows
-    * — planning probes each file's last row number (its `<dimension>`
+    * (at most 64 per sheet: past that, rows per split grow, since split P
+    * re-parses rows 1..start) — planning probes each file's last row number (its `<dimension>`
     * header when present, a tag scan otherwise), so use it for directories
     * of few large workbooks, not thousands of small ones. */
   def maxRowsPerPartition: Option[Int] = get("maxrowsperpartition").map { s =>
@@ -101,18 +102,6 @@ final case class ExcelOptions(options: Map[String, String]) {
     require(n > 0, s"maxRowsPerPartition must be positive, got $n")
     n
   }
-
-  /** Upper bound on row-range splits per (file, sheet) — xlsx has no
-    * random access inside the deflate stream, so split P must re-parse
-    * rows 1..start: P splits of one file cost O(P²·rows) parse work. The
-    * cap keeps that quadratic bounded; when a sheet would exceed it,
-    * rows-per-split grows instead (maxRowsPerPartition is best-effort
-    * above the cap). Default 64 ≈ ≤32× re-parse amplification. */
-  def maxSplitsPerFile: Int = get("maxsplitsperfile").map { s =>
-    val n = s.toInt
-    require(n > 0, s"maxSplitsPerFile must be positive, got $n")
-    n
-  }.getOrElse(64)
 
   /** Write-side extension: route each row to a sheet named by this STRING
     * column's value — the workbook analogue of `partitionBy`. The routing
@@ -176,18 +165,6 @@ final case class ExcelOptions(options: Map[String, String]) {
     require(n > 0, s"maxFileAgeMs must be positive, got $n")
     n
   }
-
-  /** Decompressed-size multiplier for the scan's reported statistics
-    * (extension). xlsx is zip-compressed sheetML: the row data Spark
-    * materializes is typically 5–15× the on-disk bytes, and
-    * UNDER-estimating is the dangerous direction (a "small" relation gets
-    * broadcast and OOMs executors at scale), so the default is a
-    * conservative 8. Set to 1 to report raw listed bytes. */
-  def statsSizeFactor: Double = get("statssizefactor").map { s =>
-    val f = s.toDouble
-    require(f > 0, s"statsSizeFactor must be positive, got $f")
-    f
-  }.getOrElse(8.0)
 
   /** When true, a schema column absent from a file reads as nulls instead
     * of erroring (extension — needed for merged multi-file schemas; default

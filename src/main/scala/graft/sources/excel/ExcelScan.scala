@@ -11,41 +11,39 @@ import org.apache.spark.util.SerializableConfiguration
 /** Batch scan: one input partition per `.xlsx` file — preserving the
   * reference's observable contract that a directory of N files reads as N
   * partitions (`/root/reference/tests/test_excel_connector.py:162-187`).
-  * Every batch scan runs one row reader, [[ExcelPartitionReader]].
-  * Pushdown is limited to what saves reader work: column pruning (only
-  * projected cells are decoded), pushed filters (file/sheet pruning plus
-  * in-reader evaluation), the limit cap and TABLESAMPLE. Sorts, offsets
-  * and aggregates stay Spark operators above the scan; `count()` reads
-  * an empty projection, whose rows the scanner steps over whole.
+  * Every batch scan and stream runs one row reader, [[ExcelPartitionReader]].
+  * Pushdown is limited to what skips files, sheets or rows: column pruning
+  * (only projected cells are decoded), `_file_path` and `_sheet` filters
+  * (whole files and sheets are never planned) and the limit cap. Filters,
+  * samples, sorts, offsets and aggregates stay Spark operators above the
+  * scan; `count()` reads an empty projection, whose rows the scanner steps
+  * over whole.
   */
 class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters
-    with SupportsPushDownLimit
-    with SupportsPushDownTableSample {
+    with SupportsPushDownLimit {
 
   private var requiredSchema: StructType = fullSchema
   private var limit: Int = -1
-  private var sample: Option[ExcelSample] = None
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     this.requiredSchema = requiredSchema
   }
 
+  /** Keeps the filters planning acts on: those on `_file_path` (when no
+    * data column shadows the metadata column) and on `_sheet` (with
+    * `sheetName="*"`). Every filter also stays post-scan. */
   override def pushFilters(
       filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    // widen with the `_file_path` metadata column (when not shadowed by a
-    // real data column) so its filters survive into `pushed` — that is
-    // what lets planInputPartitions drop whole files statically
-    val filterSchema =
-      if (fullSchema.fieldNames.contains(ExcelSchema.FilePathColumn)) fullSchema
-      else fullSchema.add(ExcelSchema.FilePathColumn,
-        org.apache.spark.sql.types.StringType, nullable = false)
-    pushed = org.apache.spark.sql.graftbridge.ColumnBridge
-      .supportedFilters(filters, filterSchema)
-    filters // all stay post-scan: Spark re-applies (cheap, simple correctness)
+    def only(col: String)(f: org.apache.spark.sql.sources.Filter) =
+      f.references.nonEmpty && f.references.forall(_ == col)
+    pushed = filters.filter(f =>
+      (ExcelScan.filePathIsMeta(fullSchema) && only(ExcelSchema.FilePathColumn)(f)) ||
+        (opts.allSheets && only(ExcelSchema.SheetColumn)(f)))
+    filters
   }
 
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
@@ -55,43 +53,19 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
     false // partial: each partition still caps rows, Spark re-applies the limit
   }
 
-  /** TABLESAMPLE pushdown (complete): each partition keeps a row iff a
-    * uniform draw lands in [lower, upper) — exactly the Bernoulli
-    * semantics of Spark's own `Sample` operator, evaluated BEFORE cell
-    * conversion so dropped rows never build InternalRows. The draw
-    * sequence is seeded per (seed, file, startRow), so task retries and
-    * repeated actions over the same scan reproduce the same sample.
-    * Declines replacement sampling (Poisson multiplicities don't fit a
-    * keep/drop reader loop). Sampling composes per-partition, so
-    * multi-file directories and row-range splits all qualify. */
-  override def pushTableSample(lowerBound: Double, upperBound: Double,
-      withReplacement: Boolean, seed: Long): Boolean = {
-    if (withReplacement) return false
-    sample = Some(ExcelSample(lowerBound, upperBound, seed))
-    true
-  }
-
   override def build(): Scan =
-    new ExcelScan(fullSchema, requiredSchema, opts, limit, pushed, sample)
+    new ExcelScan(fullSchema, requiredSchema, opts, limit, pushed)
 }
-
-/** A pushed Bernoulli TABLESAMPLE: keep a row iff a uniform draw lands
-  * in [lower, upper). */
-case class ExcelSample(lower: Double, upper: Double, seed: Long)
 
 class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     opts: ExcelOptions, limit: Int,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    sample: Option[ExcelSample] = None)
+    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeV2Filtering {
 
   override def readSchema(): StructType = requiredSchema
 
-  // `_file_path` acts as a metadata column only when no data column took
-  // the name (shadow rule — mirrored in the reader's resolution)
-  private def filePathIsMeta: Boolean =
-    !fullSchema.fieldNames.contains(ExcelSchema.FilePathColumn)
+  private def filePathIsMeta: Boolean = ExcelScan.filePathIsMeta(fullSchema)
 
   // ---- runtime (join-driven) pruning -------------------------------------
   // Spark materializes the build side of an eligible join, converts its
@@ -146,14 +120,12 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
   /** Relation sizing for Catalyst's join planning (CBO/broadcast
     * threshold): sum of the listed files' on-disk bytes — the same
     * `FileStatus`es partition planning uses, no file is opened — inflated
-    * by [[ExcelOptions.statsSizeFactor]] (xlsx is zip-compressed; raw
-    * bytes under-report materialized size, the direction that
-    * mis-broadcasts big relations) and scaled down by the
-    * pruned-column fraction, since Spark invokes this AFTER pushdown on
-    * the pruned scan. Without this, DSv2 falls back to
-    * `defaultSizeInBytes` (effectively "huge"), so a small excel dimension
-    * is never broadcast. numRows stays empty — counting rows exactly would
-    * open every workbook at plan time. */
+    * by [[ExcelScan.StatsSizeFactor]] and scaled down by the pruned-column
+    * fraction, since Spark invokes this AFTER pushdown on the pruned scan.
+    * Without this, DSv2 falls back to `defaultSizeInBytes` (effectively
+    * "huge"), so a small excel dimension is never broadcast. numRows stays
+    * empty — counting rows exactly would open every workbook at plan
+    * time. */
   override def estimateStatistics(): Statistics = {
     val bytes =
       try entries.map(_.sizeBytes).sum
@@ -165,16 +137,11 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     val colFrac =
       if (fullSchema.isEmpty) 1.0
       else math.max(1, requiredSchema.length).toDouble / fullSchema.length
-    // a pushed TABLESAMPLE shrinks the relation's output by its keep
-    // fraction — without this a sample(0.01) of a big directory reports
-    // 100x its real size and Catalyst declines broadcasts the sampled
-    // output easily qualifies for
-    val sampleFrac = sample.fold(1.0)(s => math.max(0.0, s.upper - s.lower))
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         if (bytes < 0) java.util.OptionalLong.empty()
         else java.util.OptionalLong.of(math.max(1L,
-          (bytes * opts.statsSizeFactor * colFrac * sampleFrac).toLong))
+          (bytes * ExcelScan.StatsSizeFactor * colFrac).toLong))
       override def numRows(): java.util.OptionalLong =
         java.util.OptionalLong.empty()
     }
@@ -184,8 +151,6 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     s"ExcelScan path=${opts.pathOpt.getOrElse("?")} sheet=${opts.sheetName} " +
       s"columns=[${requiredSchema.fieldNames.mkString(",")}]" +
       (if (limit >= 0) s" limit=$limit" else "") +
-      sample.fold("")(s =>
-        s" PushedSample=[${s.lower},${s.upper},seed=${s.seed}]") +
       (if (filters.nonEmpty) s" PushedFilters=[${filters.mkString(", ")}]" else "")
 
   override def toBatch: Batch = this
@@ -194,8 +159,7 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
 
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ExcelMicroBatchStream(fullSchema, requiredSchema, opts,
-      checkpointLocation, filters, limit, sample)
+    new ExcelMicroBatchStream(fullSchema, opts, checkpointLocation)
 
   override def planInputPartitions(): Array[InputPartition] = {
     val listed = entries.map(_.uri)
@@ -219,12 +183,24 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = new SerializableConfiguration(
       SparkSession.active.sessionState.newHadoopConf())
-    ExcelPartitionReaderFactory(fullSchema, requiredSchema, opts, limit, conf,
-      filters, sample)
+    ExcelPartitionReaderFactory(fullSchema, requiredSchema, opts, limit, conf)
   }
 }
 
 object ExcelScan {
+
+  /** Decompressed-size multiplier for the reported statistics. xlsx is
+    * zip-compressed sheetML: the row data Spark materializes is typically
+    * 5–15× the on-disk bytes, and UNDER-estimating is the dangerous
+    * direction (a "small" relation gets broadcast and OOMs executors at
+    * scale), so the factor is a conservative 8. */
+  private val StatsSizeFactor = 8
+
+  /** `_file_path` acts as a metadata column only when no data column took
+    * the name (shadow rule of the scan, its pushed filters and the
+    * reader). */
+  private[excel] def filePathIsMeta(fullSchema: StructType): Boolean =
+    !fullSchema.fieldNames.contains(ExcelSchema.FilePathColumn)
 
   /** Parse a runtime V2 predicate of shape `col = lit` / `col IN (lits…)`
     * into (column, allowed string values); None for anything else —
@@ -247,7 +223,7 @@ object ExcelScan {
 
   /** Exactly-evaluable `_file_path` predicates a listed URI must satisfy
     * to stay planned; inexact shapes conservatively keep the file. */
-  private[excel] def fileMayMatch(path: String,
+  private def fileMayMatch(path: String,
       filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
     import org.apache.spark.sql.sources._
     val C = ExcelSchema.FilePathColumn
@@ -369,9 +345,14 @@ object ExcelSplitPlanner {
         s"Failed to open excel file $f: ${e.getMessage}", e)
     }
 
+  /** Upper bound on row-range splits per (file, sheet): xlsx has no
+    * random access inside the deflate stream, so split P re-parses rows
+    * 1..start and P splits of one sheet cost O(P²·rows) parse work; 64
+    * keeps that at ≤32× re-parse amplification. */
+  private val MaxSplitsPerFile = 64
+
   /** Split one sheet into row-range partitions of at most `maxRows` data
-    * rows, capped at `maxSplitsPerFile` splits (split P re-parses rows
-    * 1..start — the cap bounds that quadratic; rows-per-split grows
+    * rows, capped at [[MaxSplitsPerFile]] splits (rows-per-split grows
     * instead). The probed last row may under-report (stale `<dimension>`),
     * so the FINAL range is always unbounded — a wrong dimension can cost
     * balance, never rows. */
@@ -380,7 +361,7 @@ object ExcelSplitPlanner {
     val dataStart = if (opts.header) 2 else 1
     val dataRows = math.max(0, lastRow - dataStart + 1)
     val wanted = math.max(1, math.ceil(dataRows.toDouble / maxRows).toInt)
-    val capped = math.min(wanted, opts.maxSplitsPerFile)
+    val capped = math.min(wanted, MaxSplitsPerFile)
     val perSplit = math.max(maxRows, math.ceil(dataRows.toDouble / capped).toInt)
     // the cap can grow perSplit past maxRows, covering the sheet in fewer
     // splits than `capped`; recompute so no split starts past the probed
@@ -399,42 +380,27 @@ object ExcelSplitPlanner {
 
 case class ExcelPartitionReaderFactory(fullSchema: StructType,
     requiredSchema: StructType,
-    opts: ExcelOptions, limit: Int, conf: SerializableConfiguration,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    sample: Option[ExcelSample] = None)
+    opts: ExcelOptions, limit: Int, conf: SerializableConfiguration)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ExcelInputPartition]
-    new ExcelPartitionReader(p.filePath,
-      fullSchema, requiredSchema, opts, limit, conf.value, filters,
-      p.startRow, p.endRowExcl, p.sheet, sample)
+    new ExcelPartitionReader(p.filePath, fullSchema, requiredSchema, opts,
+      limit, conf.value, p.startRow, p.endRowExcl, p.sheet)
   }
 }
 
 /** Streams one file's chosen sheet as InternalRows, converting only the
-  * required columns. Column resolution: by header name when header=true
-  * (missing required column → error, matching the reference's tested
-  * intent, tests/test_excel_connector.py:93-112; extra file columns are
-  * ignored, :73-91); positional when header=false. */
+  * required columns of its row range, at most `limit` rows (-1: all).
+  * Column resolution: by header name when header=true (missing required
+  * column → error, matching the reference's tested intent,
+  * tests/test_excel_connector.py:93-112; extra file columns are ignored,
+  * :73-91); positional when header=false. */
 class ExcelPartitionReader(filePath: String, fullSchema: StructType,
     requiredSchema: StructType,
     opts: ExcelOptions, limit: Int, conf: org.apache.hadoop.conf.Configuration,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    startRow: Int = -1, endRowExcl: Int = -1, sheetOverride: String = null,
-    sample: Option[ExcelSample] = None)
+    startRow: Int = -1, endRowExcl: Int = -1, sheetOverride: String = null)
     extends PartitionReader[InternalRow] {
-
-  // pushed TABLESAMPLE: one deterministic draw sequence per (seed, file,
-  // startRow) — task retries and repeated actions over the same scan
-  // reproduce the same sample
-  private val sampleRng: java.util.Random = sample.map(s =>
-    new java.util.Random(s.seed
-      ^ graft.functions.GraftHash.fnv1a64(
-        filePath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      ^ (startRow.toLong * 0x9e3779b97f4a7c15L))).orNull
-  private val sampleLower = sample.fold(0.0)(_.lower)
-  private val sampleUpper = sample.fold(1.0)(_.upper)
 
   private val ranged = startRow > 0
   // multi-sheet mode: sheets legitimately differ in columns → absent
@@ -444,21 +410,9 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
   private val allowMissing = opts.allowMissingColumns || opts.allSheets
   private val SheetIdx = -2
   private val FilePathIdx = -3
-  private val filePathIsMeta =
-    !fullSchema.fieldNames.contains(ExcelSchema.FilePathColumn)
+  private val filePathIsMeta = ExcelScan.filePathIsMeta(fullSchema)
   private val filePathValue =
     org.apache.spark.unsafe.types.UTF8String.fromString(filePath)
-
-  // pushed-filter evaluation via Catalyst's own OrderedFilters (exact Spark
-  // comparison semantics); an optimization only — Spark re-applies all
-  // filters above the scan regardless
-  private val structFilters = {
-    val applicable = org.apache.spark.sql.graftbridge.ColumnBridge
-      .supportedFilters(filters, requiredSchema)
-    if (applicable.isEmpty) None
-    else Some(org.apache.spark.sql.graftbridge.ColumnBridge
-      .orderedFilters(applicable.toSeq, requiredSchema))
-  }
 
   private val reader = ExcelSplitPlanner.open(filePath, conf)
 
@@ -516,35 +470,13 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
     val dataStart = if (opts.header) 2 else 1
     val it = reader.rowIterator(resolvedSheet, if (ranged) startRow else dataStart,
       if (ranged) endRowExcl else Int.MaxValue, columns)
-    // raw-iterator take(limit) is only sound with no pushed filters AND
-    // no pushed sample; with either, the limit must count KEPT rows (see
-    // `kept` in next()) or qualifying rows beyond the first `limit` raw
-    // rows would be dropped
-    if (limit >= 0 && structFilters.isEmpty && sample.isEmpty) it.take(limit)
-    else it
+    if (limit >= 0) it.take(limit) else it
   }
   private var current: InternalRow = _
-  private var kept: Long = 0L
 
   override def next(): Boolean = {
-    if (limit >= 0 && kept >= limit) return false
-    while (rowIter.hasNext) {
-      val raw = rowIter.next()
-      // pushed TABLESAMPLE decides BEFORE any cell conversion: a dropped
-      // row never builds an InternalRow. The draw is consumed exactly
-      // once per raw row, keeping the sequence aligned across reads.
-      if (sampleRng != null) {
-        val x = sampleRng.nextDouble()
-        if (x >= sampleLower && x < sampleUpper && convertAndFilter(raw))
-          return true
-      } else if (convertAndFilter(raw)) return true
-    }
-    false
-  }
-
-  /** Convert `raw` to an InternalRow, evaluate pushed filters; on keep,
-    * set `current`, count it against the limit, and return true. */
-  private def convertAndFilter(raw: Array[Any]): Boolean = {
+    if (!rowIter.hasNext) return false
+    val raw = rowIter.next()
     val values = new Array[Any](requiredSchema.length)
     var i = 0
     while (i < indices.length) {
@@ -559,24 +491,8 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
       }
       i += 1
     }
-    val row = new GenericInternalRow(values)
-    val keep = structFilters match {
-      case None => true
-      case Some(sf) =>
-        sf.reset()
-        var j = 0
-        var skip = false
-        while (j < requiredSchema.length && !skip) {
-          if (sf.skipRow(row, j)) skip = true
-          j += 1
-        }
-        !skip
-    }
-    if (keep) {
-      current = row
-      kept += 1
-    }
-    keep
+    current = new GenericInternalRow(values)
+    true
   }
 
   override def get(): InternalRow = current

@@ -12,17 +12,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Catalyst's own pushed-filter machinery (what CSV/JSON sources use):
-    * exact Spark comparison semantics — UTF8 binary string order, integral
-    * long compares, IEEE ±0.0 — instead of hand-rolled re-implementations. */
-  def supportedFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter],
-      schema: org.apache.spark.sql.types.StructType): Array[org.apache.spark.sql.sources.Filter] =
-    org.apache.spark.sql.catalyst.StructFilters.pushedFilters(filters, schema)
-
-  def orderedFilters(
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.catalyst.OrderedFilters =
-    new org.apache.spark.sql.catalyst.OrderedFilters(filters, schema)
 }

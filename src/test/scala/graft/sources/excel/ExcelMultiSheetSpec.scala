@@ -155,6 +155,28 @@ class ExcelMultiSheetSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(both.count() == 3)
   }
 
+  test("sampling sheetName=* draws each sheet's rows independently") {
+    // two sheets holding the same ids: a sample seeded per file and row
+    // range, not per sheet, keeps the same row positions on both
+    val f = new File(tmpDir(), "twins.xlsx")
+    val w = new XlsxWriter(new FileOutputStream(f), "a")
+    w.writeRow(Seq("id"))
+    (1 to 200).foreach(i => w.writeRow(Seq(i.toLong)))
+    w.startSheet("b")
+    w.writeRow(Seq("id"))
+    (1 to 200).foreach(i => w.writeRow(Seq(i.toLong)))
+    w.close()
+    val df = spark.read.format("excel")
+      .option("sheetName", "*").load(f.getAbsolutePath)
+    Seq(1L, 2L, 3L).foreach { seed =>
+      val kept = df.sample(withReplacement = false, fraction = 0.5, seed = seed)
+        .collect().groupBy(_.getString(1)).map { case (sheet, rows) =>
+          sheet -> rows.map(_.getInt(0)).toSet }
+      assert(kept.keySet == Set("a", "b"), kept.keySet)
+      assert(kept("a") != kept("b"), s"seed $seed kept the same rows on both sheets")
+    }
+  }
+
   test("sheetColumn write routes rows to sheets and round-trips via _sheet") {
     import spark.implicits._
     val out = new File(tmpDir(), "routed.xlsx")

@@ -127,22 +127,15 @@ class ExcelSplitReadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("splits per file are capped (maxSplitsPerFile) with rows intact") {
     val f = bigFile(tmpDir(), rows = 1000)
-    // wanted = 100 splits of 10 rows; cap 8 → 8 splits of 125
+    // the cap (64) binds: perSplit grows to ceil(1000/64) = 16, which
+    // covers the sheet in ceil(1000/16) = 63 splits — the split count is
+    // recomputed so no empty trailing split is planned
     val df = spark.read.format("excel").schema(idName)
-      .option("maxRowsPerPartition", "10")
-      .option("maxSplitsPerFile", "8")
-      .load(f.getAbsolutePath)
-    assert(df.rdd.getNumPartitions == 8)
-    assert(df.count() == 1000)
-    assert(df.agg(sum(col("id"))).collect().head.getLong(0) == 1000L * 1001 / 2)
-    // default cap (64) also binds: perSplit grows to ceil(1000/64) = 16,
-    // which covers the sheet in ceil(1000/16) = 63 splits — the split
-    // count is recomputed so no empty trailing split is planned
-    val dfDefault = spark.read.format("excel").schema(idName)
       .option("maxRowsPerPartition", "2")
       .load(f.getAbsolutePath)
-    assert(dfDefault.rdd.getNumPartitions == 63)
-    assert(dfDefault.count() == 1000)
+    assert(df.rdd.getNumPartitions == 63)
+    assert(df.count() == 1000)
+    assert(df.agg(sum(col("id"))).collect().head.getLong(0) == 1000L * 1001 / 2)
   }
 
   test("planning a 100-file directory probes in parallel with stable output") {

@@ -254,6 +254,8 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c = ExcelStreamOffset(
       Seq("/p/a \"x\".xlsx" -> 11L, "/p/b\\c.xlsx" -> 22L),
       watermark = 99L, compacted = true)
+    assert(c.json() ==
+      """{"wm":99,"files":[["/p/a \"x\".xlsx",11],["/p/b\\c.xlsx",22]]}""")
     assert(ExcelStreamOffset.fromJson(c.json()) == c)
 
     // a legacy checkpoint parsed under retention must never expire: times
@@ -261,6 +263,20 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val legacy = ExcelStreamOffset.fromJson("""{"files":["/p/old.xlsx"]}""")
     assert(legacy.entries == Seq("/p/old.xlsx" -> Long.MaxValue))
     assert(!legacy.compacted)
+  }
+
+  test("offset JSON escapes line breaks and control characters in names") {
+    // Spark's offset log is line-based: a raw line terminator in an
+    // offset splits it, and the next restart fails
+    val name = "/p/a\nb\rc\td\u0001e.xlsx"
+    val exact = ExcelStreamOffset(Seq(name -> Long.MaxValue))
+    val compacted = ExcelStreamOffset(Seq(name -> 5L), watermark = 7L,
+      compacted = true)
+    Seq(exact, compacted).foreach { o =>
+      val json = o.json()
+      assert(!json.exists(c => c == '\n' || c == '\r'), json)
+      assert(ExcelStreamOffset.fromJson(json) == o)
+    }
   }
 
   test("maxFileAgeMs compacts offsets and ignores too-old files") {
@@ -274,7 +290,7 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     val opts = ExcelOptions.fromMap(Map(
       "path" -> dir.getAbsolutePath, "maxFileAgeMs" -> "500000"))
-    val stream = new ExcelMicroBatchStream(idName, idName, opts, "/tmp/ckpt-x")
+    val stream = new ExcelMicroBatchStream(idName, opts, "/tmp/ckpt-x")
 
     val start = stream.initialOffset().asInstanceOf[ExcelStreamOffset]
     assert(start.compacted)
@@ -331,7 +347,7 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new File(dir, "a.xlsx").setLastModified(1000000L))
     val opts = ExcelOptions.fromMap(Map(
       "path" -> dir.getAbsolutePath, "maxFileAgeMs" -> "500000"))
-    val stream = new ExcelMicroBatchStream(idName, idName, opts, "/tmp/ckpt-ow")
+    val stream = new ExcelMicroBatchStream(idName, opts, "/tmp/ckpt-ow")
     val start = stream.initialOffset().asInstanceOf[ExcelStreamOffset]
     val end = stream.latestOffset(start, ReadLimit.allAvailable())
       .asInstanceOf[ExcelStreamOffset]
