@@ -1,14 +1,17 @@
 package graft.sources.excel
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Workbook listing on the Hadoop FileSystem API: every read surface
   * (batch scans, inference, the streaming source) plans from
   * [[ExcelFiles.listEntries]]; opening a listed workbook is
-  * [[XlsxReader.open]].
+  * [[XlsxReader.open]], with the configuration every task gets from
+  * [[ExcelFiles.broadcastConf]].
   *
   * The reference lists with `os.listdir` (local FS only, non-recursive,
   * case-insensitive `.xlsx` suffix — `/root/reference/src/pyspark_datasource/
@@ -31,13 +34,28 @@ object ExcelFiles {
     n.endsWith(".xlsx") || (!xlsxOnly && n.endsWith(".xlsm"))
   }
 
+  /** The one way a task gets the Hadoop configuration: one broadcast per
+    * query, made on the driver, as Spark's own `ParquetScan` does (through
+    * `SerializableConfiguration.broadcast`, which is `private[spark]`).
+    * The session conf holds about a thousand properties, about 110 KB
+    * serialized with one gzip stream per property; carried in a reader or
+    * writer factory, every task would decode it again, which costs more
+    * than reading a small workbook. A broadcast is decoded once per
+    * executor. The scan, the stream and the write each broadcast the conf
+    * they list, plan and commit with, so tasks see the session's own
+    * settings. */
+  def broadcastConf(conf: Configuration): Broadcast[SerializableConfiguration] =
+    SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
+
   /** One listed workbook: URI plus the mtime/size its `FileStatus`
     * already carried (no extra RPCs beyond the listing itself). */
   case class Entry(uri: String, mtimeMs: Long, sizeBytes: Long)
 
   /** The canonical listing every surface derives from: path → name-sorted
     * entries (dir: one level by default, excel suffixes only; file:
-    * itself; glob pattern: every match, dirs expanded). `recursive=true`
+    * itself; glob pattern: every matching workbook, matching dirs
+    * expanded). Directory and glob listings skip hidden and temp names
+    * ([[visible]]) and files without an excel suffix. `recursive=true`
     * (the `recursiveFileLookup` option) descends into subdirectories —
     * the date-partitioned `dt=.../part.xlsx` layout object stores use.
     * Missing path → AnalysisException like the reference's error
@@ -46,8 +64,6 @@ object ExcelFiles {
       recursive: Boolean = false, xlsxOnly: Boolean = false): Seq[Entry] = {
     val path = new Path(pathStr)
     val fs = path.getFileSystem(conf)
-    def entry(s: org.apache.hadoop.fs.FileStatus) =
-      Entry(s.getPath.toString, s.getModificationTime, s.getLen)
     if (hasGlob(pathStr)) {
       val matches = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
       if (matches.isEmpty) {
@@ -55,9 +71,12 @@ object ExcelFiles {
           errorClass = "PATH_NOT_FOUND",
           messageParameters = Map("path" -> pathStr))
       }
-      return matches.flatMap { s =>
+      // a match is filtered like a directory's child: a glob over a
+      // sink's output dir must not admit its staging dirs or stray files
+      return matches.filter(visible).flatMap { s =>
         if (s.isDirectory) listDirEntries(fs, s.getPath, recursive, xlsxOnly)
-        else Seq(entry(s))
+        else if (hasExcelSuffix(s.getPath.getName, xlsxOnly)) Seq(entry(s))
+        else Nil
       }.distinctBy(_.uri).sortBy(_.uri)
     }
     if (!fs.exists(path)) {
@@ -82,22 +101,24 @@ object ExcelFiles {
   private def hasGlob(p: String): Boolean =
     p.exists(c => c == '*' || c == '?' || c == '[' || c == '{')
 
+  private def entry(s: FileStatus) =
+    Entry(s.getPath.toString, s.getModificationTime, s.getLen)
+
+  /** Hidden and temp files AND directories are skipped (Spark file-source
+    * convention), so readers never admit a half-written sink temp into an
+    * offset. */
+  private def visible(s: FileStatus): Boolean = {
+    val n = s.getPath.getName
+    !n.startsWith(".") && !n.startsWith("_")
+  }
+
   private def listDirEntries(fs: FileSystem, dir: Path, recursive: Boolean,
       xlsxOnly: Boolean): Seq[Entry] = {
-    val (dirs, files) = fs.listStatus(dir).toSeq.partition(_.isDirectory)
-    // skip hidden/temp files AND directories (Spark file-source convention)
-    // so readers never admit a half-written sink temp into an offset
-    def visible(n: String) = !n.startsWith(".") && !n.startsWith("_")
-    val here = files
-      .filter { s =>
-        val n = s.getPath.getName
-        hasExcelSuffix(n, xlsxOnly) && visible(n)
-      }
-      .map(s => Entry(s.getPath.toString, s.getModificationTime, s.getLen))
+    val (dirs, files) = fs.listStatus(dir).toSeq.filter(visible).partition(_.isDirectory)
+    val here = files.filter(s => hasExcelSuffix(s.getPath.getName, xlsxOnly)).map(entry)
     val below =
       if (!recursive) Seq.empty
-      else dirs.filter(d => visible(d.getPath.getName))
-        .flatMap(d => listDirEntries(fs, d.getPath, recursive = true, xlsxOnly))
+      else dirs.flatMap(d => listDirEntries(fs, d.getPath, recursive = true, xlsxOnly))
     (here ++ below).sortBy(_.uri)
   }
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFacto
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset,
   ReadLimit, ReadMaxFiles, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** Micro-batch file-discovery stream over a directory of xlsx files.
   *
@@ -46,7 +45,12 @@ class ExcelMicroBatchStream(fullSchema: StructType, opts: ExcelOptions,
     checkpointLocation: String)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
 
-  private def conf = SparkSession.active.sessionState.newHadoopConf()
+  // one Hadoop conf and one broadcast of it per stream, as Spark's
+  // FileStreamSource keeps one conf: every listing, plan and micro-batch
+  // reads them. Both are built on first use, which comes after a session
+  // exists, not when the stream is constructed.
+  private lazy val conf = SparkSession.active.sessionState.newHadoopConf()
+  private lazy val confBroadcast = ExcelFiles.broadcastConf(conf)
 
   private val retention: Option[Long] = opts.maxFileAgeMs
 
@@ -145,8 +149,7 @@ class ExcelMicroBatchStream(fullSchema: StructType, opts: ExcelOptions,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    ExcelPartitionReaderFactory(fullSchema, fullSchema, opts, -1,
-      new SerializableConfiguration(conf))
+    ExcelPartitionReaderFactory(fullSchema, fullSchema, opts, -1, confBroadcast)
 
   override def commit(end: Offset): Unit = () // offsets are self-contained
 

@@ -1,5 +1,6 @@
 package graft.sources.excel
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -109,13 +110,16 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
       }
     }
 
+  // one Hadoop conf per scan: the listing, the planner's probes and the
+  // tasks' broadcast all read it
+  private lazy val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
+
   // the path is listed once per scan, by whichever of statistics and
   // planning asks first; a listing that throws is not kept (a lazy val
   // initializer that throws runs again on the next access), so planning
   // retries one that failed inside the statistics
   private lazy val entries: Seq[ExcelFiles.Entry] = ExcelFiles.listEntries(
-    opts.path, SparkSession.active.sessionState.newHadoopConf(),
-    opts.recursiveFileLookup, opts.xlsxOnly)
+    opts.path, hadoopConf, opts.recursiveFileLookup, opts.xlsxOnly)
 
   /** Relation sizing for Catalyst's join planning (CBO/broadcast
     * threshold): sum of the listed files' on-disk bytes — the same
@@ -176,15 +180,12 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     val sheetFilters = runtimeSheets.fold(filters)(allowed =>
       filters :+ org.apache.spark.sql.sources.In(ExcelSchema.SheetColumn,
         allowed.toArray[Any]))
-    ExcelSplitPlanner.plan(files, opts,
-      SparkSession.active.sessionState.newHadoopConf(), sheetFilters)
+    ExcelSplitPlanner.plan(files, opts, hadoopConf, sheetFilters)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    ExcelPartitionReaderFactory(fullSchema, requiredSchema, opts, limit, conf)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    ExcelPartitionReaderFactory(fullSchema, requiredSchema, opts, limit,
+      ExcelFiles.broadcastConf(hadoopConf))
 }
 
 object ExcelScan {
@@ -378,15 +379,19 @@ object ExcelSplitPlanner {
   }
 }
 
+/** Builds every task's reader, for batch scans and micro-batches alike.
+  * The factory is serialized into every task, so it holds the Hadoop conf
+  * only as a broadcast handle ([[ExcelFiles.broadcastConf]]): the conf
+  * itself reaches each executor once per query. */
 case class ExcelPartitionReaderFactory(fullSchema: StructType,
     requiredSchema: StructType,
-    opts: ExcelOptions, limit: Int, conf: SerializableConfiguration)
+    opts: ExcelOptions, limit: Int, conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ExcelInputPartition]
     new ExcelPartitionReader(p.filePath, fullSchema, requiredSchema, opts,
-      limit, conf.value, p.startRow, p.endRowExcl, p.sheet)
+      limit, conf.value.value, p.startRow, p.endRowExcl, p.sheet)
   }
 }
 

@@ -4,6 +4,7 @@ import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
@@ -122,7 +123,11 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
     ExcelWriteMetrics.value(ExcelWriteMetrics.SpliceTimeMs, spliceMs),
     ExcelWriteMetrics.value(ExcelWriteMetrics.SplicedBytes, splicedBytes))
 
-  private def hadoopConf() = SparkSession.active.sessionState.newHadoopConf()
+  // one Hadoop conf per write for the driver's staging, commit and abort,
+  // and one broadcast of it for the tasks: a streaming query asks for a
+  // writer factory every epoch and gets the same broadcast each time
+  private lazy val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
+  private lazy val confBroadcast = ExcelFiles.broadcastConf(hadoopConf)
 
   private val out = new Path(opts.path)
   private val queryId = java.util.UUID.randomUUID().toString.take(8)
@@ -132,8 +137,8 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
   private val streamTmp = new Path(out, ".__graft_stream_tmp")
   private def epochTmp(epochId: Long) =
     new Path(ExcelWrite.epochTmp(streamTmp.toString, epochId))
-  private def factory(tmp: Path) = ExcelDataWriterFactory(schema, opts,
-    tmp.toString, new SerializableConfiguration(hadoopConf()))
+  private def factory(tmp: Path) =
+    ExcelDataWriterFactory(schema, opts, tmp.toString, confBroadcast)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     factory(batchTmp)
@@ -170,7 +175,7 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
     deleteTmp(epochTmp(epochId))
 
   private def deleteTmp(tmp: Path): Unit =
-    tmp.getFileSystem(hadoopConf()).delete(tmp, true)
+    tmp.getFileSystem(hadoopConf).delete(tmp, true)
 
   /** The one publish sequence of every commit. Stages the new output in
     * `tmp`: a merged write's segments spliced into one workbook bound for
@@ -182,7 +187,7 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
   private def publish(tmp: Path, messages: Array[WriterCommitMessage],
       target: Path, shardName: Int => String)(
       replaced: FileSystem => Seq[Path]): Unit = {
-    val fs = tmp.getFileSystem(hadoopConf())
+    val fs = tmp.getFileSystem(hadoopConf)
     try {
       val old = replaced(fs)
       val staged = if (opts.shardedOutput) {
@@ -344,18 +349,21 @@ class ExcelSplicedBytesMetric
     extends ExcelSumMetric(ExcelWriteMetrics.SplicedBytes, "bytes spliced by the driver")
 
 /** Builds every task's writer, batch and streaming alike; a streaming
-  * task stages under its epoch's temp dir. */
+  * task stages under its epoch's temp dir. The factory is serialized into
+  * every task, so it holds the Hadoop conf only as a broadcast handle
+  * ([[ExcelFiles.broadcastConf]]): the conf itself reaches each executor
+  * once per write. */
 case class ExcelDataWriterFactory(schema: StructType, opts: ExcelOptions,
-    tmpDir: String, conf: SerializableConfiguration)
+    tmpDir: String, conf: Broadcast[SerializableConfiguration])
     extends DataWriterFactory with StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ExcelDataWriter(schema, opts, tmpDir, partitionId, taskId, conf.value)
+    new ExcelDataWriter(schema, opts, tmpDir, partitionId, taskId, conf.value.value)
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new ExcelDataWriter(schema, opts, ExcelWrite.epochTmp(tmpDir, epochId),
-      partitionId, taskId, conf.value)
+      partitionId, taskId, conf.value.value)
 }
 
 /** Streams one partition into files under `tmpDir`, in one of two modes.

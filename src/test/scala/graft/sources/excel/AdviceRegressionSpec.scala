@@ -147,6 +147,31 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("glob matches skip hidden, temp and non-excel entries like a dir listing") {
+    val out = new File(tmpDir(), "out")
+    val mk = (rel: String) => {
+      val f = new File(out, rel)
+      f.getParentFile.mkdirs()
+      val w = new XlsxWriter(new FileOutputStream(f))
+      w.writeRow(Seq("id")); w.writeRow(Seq(1L)); w.close()
+    }
+    mk("a.xlsx"); mk(".hidden.xlsx"); mk("_tmp.xlsx")
+    mk(".__graft_tmp_abc/part-00000.xlsx"); mk("_temporary/part-00001.xlsx")
+    Files.write(new File(out, "notes.txt").toPath, "not a workbook".getBytes)
+    val conf = new Configuration()
+    val names = (p: String) => ExcelFiles.list(p, conf).map(p => new File(p).getName)
+    val o = out.getAbsolutePath
+    assert(names(o) == Seq("a.xlsx"))
+    assert(names(s"$o/*") == Seq("a.xlsx"))
+    assert(names(s"$o/*.xlsx") == Seq("a.xlsx"))
+    // a glob matching only skipped entries lists nothing; PATH_NOT_FOUND is
+    // for a glob that matches nothing at all
+    assert(names(s"$o/_*") == Nil)
+    intercept[org.apache.spark.sql.AnalysisException](names(s"$o/nope*"))
+    // end to end: the text file and the staging parts are never opened
+    assert(spark.read.format("excel").load(s"$o/*").count() == 1)
+  }
+
   test("min/max and count(*) stay above the scan") {
     import org.apache.spark.sql.functions._
     val dir = tmpDir()

@@ -323,11 +323,10 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // both must be the SAME per-task writer class — if the two paths ever
     // fork, writer fixes (validation, buffering, temp-file hygiene)
     // silently apply to one side only
-    import org.apache.spark.util.SerializableConfiguration
     val dir = Files.createTempDirectory("graft-writer-reuse").toFile
     val opts = ExcelOptions.fromMap(Map("path" -> dir.getAbsolutePath))
-    val conf = new SerializableConfiguration(
-      new org.apache.hadoop.conf.Configuration())
+    spark.range(1).count() // ensure an active session for the broadcast
+    val conf = ExcelFiles.broadcastConf(new org.apache.hadoop.conf.Configuration())
     val factory = ExcelDataWriterFactory(idName, opts,
       new File(dir, "t").getAbsolutePath, conf)
     val batch = factory.createWriter(0, 0L)
