@@ -13,9 +13,8 @@ object ConnectorQueries {
   def excelRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     val nation = spark.read.parquet(s"$dir/nation.parquet")
-    val out = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_roundtrip_${math.abs(dir.hashCode)}.xlsx").getAbsolutePath
+    val out = new File(StreamGate.batchDir(spark, "excel_roundtrip", dir),
+      "nation.xlsx").getAbsolutePath
     nation.coalesce(1).write.format("excel").mode("overwrite").save(out)
     spark.read.format("excel").schema(nation.schema).load(out)
       .orderBy(col("n_nationkey"))
@@ -37,9 +36,8 @@ object ConnectorQueries {
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
         col("s_acctbal"))
       .orderBy(col("s_suppkey"))
-    val out = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_offset_${math.abs(dir.hashCode)}.xlsx").getAbsolutePath
+    val out = new File(StreamGate.batchDir(spark, "excel_offset_page", dir),
+      "supplier.xlsx").getAbsolutePath
     supplier.coalesce(1).write.format("excel").mode("overwrite").save(out)
     spark.read.format("excel").schema(supplier.schema).load(out)
       .offset(5).limit(10)
@@ -64,9 +62,8 @@ object ConnectorQueries {
     val supplier = spark.read.parquet(s"$dir/supplier.parquet")
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
         col("s_acctbal"))
-    val out = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_topn_${math.abs(dir.hashCode)}").getAbsolutePath
+    val out = new File(StreamGate.batchDir(spark, "excel_topn", dir),
+      "supplier").getAbsolutePath
     supplier.repartition(4).write.format("excel")
       .option("shardedOutput", "true")
       .mode("overwrite").save(out)
@@ -91,9 +88,7 @@ object ConnectorQueries {
     import org.apache.spark.sql.functions.col
     val nation = spark.read.parquet(s"$dir/nation.parquet")
     val base = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_xlsxonly_${math.abs(dir.hashCode)}")
-    StreamGate.deleteTree(base)
+      StreamGate.batchDir(spark, "excel_xlsxonly_listing", dir), "nation")
     base.mkdirs()
     nation.coalesce(1).write.format("excel").mode("overwrite")
       .save(new File(base, "real.xlsx").getAbsolutePath)
@@ -121,9 +116,8 @@ object ConnectorQueries {
     val customer = spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
         col("c_acctbal"))
-    val out = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_sharded_${math.abs(dir.hashCode)}").getAbsolutePath
+    val out = new File(StreamGate.batchDir(spark, "excel_sharded_roundtrip", dir),
+      "customer").getAbsolutePath
     customer.repartition(4).write.format("excel")
       .option("shardedOutput", "true")
       .mode("overwrite").save(out)
@@ -148,9 +142,8 @@ object ConnectorQueries {
     val part = spark.read.parquet(s"$dir/part.parquet")
       .select(col("p_partkey"), col("p_name"), col("p_size"),
         col("p_retailprice"))
-    val out = new File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_excel_arrow_${math.abs(dir.hashCode)}").getAbsolutePath
+    val out = new File(StreamGate.batchDir(spark, "excel_arrow_roundtrip", dir),
+      "part").getAbsolutePath
     part.repartition(2).write.format("excel")
       .option("shardedOutput", "true")
       .mode("overwrite").save(out)

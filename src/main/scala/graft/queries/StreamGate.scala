@@ -19,10 +19,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *    `Trigger.AvailableNow`, and one `[stream]` progress line per run.
   *
   * File ownership. Everything a gate writes lives under
-  * `<tmp>/graft_stream_<gate>_<corpus>/<pid>_<session>/`: the owning JVM's
+  * `<tmp>/graft_<gate>_<corpus>/<pid>_<session>/`: the owning JVM's
   * pid and the caller session's UUID. A staging cache miss removes only
   * that dir plus sibling dirs whose pid is no longer alive, so two live
-  * sessions over one corpus never delete each other's files. A run's
+  * sessions over one corpus never delete each other's files. The batch
+  * `excel_*` gates stage their workbooks under the same rule
+  * ([[batchDir]]), emptied on every run. A run's
   * checkpoint is deleted as soon as its query terminates (a memory-sink
   * readout never reads it). Only [[runToExcel]]'s output dir outlives
   * the call, until the same session's next run of that gate. */
@@ -100,11 +102,28 @@ object StreamGate {
   /** A gate's root dir for one corpus; owner dirs live beneath it. */
   private[queries] def gateRoot(gate: String, dir: String): File =
     new File(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_${gate}_${math.abs(dir.hashCode)}")
+      s"graft_${gate}_${math.abs(dir.hashCode)}")
 
   private def ownerDir(spark: SparkSession, gate: String, dir: String): File =
     new File(gateRoot(gate, dir),
       s"${ProcessHandle.current().pid()}_${graft.SharedPrep.sessionKey(spark)}")
+
+  /** Empties `owner` and deletes its sibling dirs whose process is gone;
+    * a live process's other sessions may still be reading theirs. */
+  private def reclaim(owner: File): File = {
+    deleteTree(owner)
+    Option(owner.getParentFile.listFiles()).foreach(_.foreach { d =>
+      val pid = d.getName.takeWhile(_ != '_').toLongOption
+      if (pid.exists(p => !ProcessHandle.of(p).isPresent)) deleteTree(d)
+    })
+    owner
+  }
+
+  /** A batch gate's dir for the workbooks it writes and reads back: the
+    * caller session's owner dir, emptied, under the same ownership rule
+    * as a stream gate's staging. */
+  def batchDir(spark: SparkSession, gate: String, dir: String): File =
+    reclaim(ownerDir(spark, gate, dir))
 
   /** Stages (or reuses) the gate's sources and opens one excel stream
     * per source on `ss` under `admission`. */
@@ -113,13 +132,7 @@ object StreamGate {
       admission: Admission): (File, Seq[DataFrame]) = {
     val owner = ownerDir(spark, gate, dir)
     val staged = cachedStaging(spark, s"streamGate:$gate:$dir", dir) {
-      // this session's dir, and the dirs of processes that are gone; a
-      // live process's other sessions may still be reading theirs
-      deleteTree(owner)
-      Option(owner.getParentFile.listFiles()).foreach(_.foreach { d =>
-        val pid = d.getName.takeWhile(_ != '_').toLongOption
-        if (pid.exists(p => !ProcessHandle.of(p).isPresent)) deleteTree(d)
-      })
+      reclaim(owner)
       // one count over every batch, so the largest batch's shards stay
       // under the sheet cap
       val k = streamBatchShards(

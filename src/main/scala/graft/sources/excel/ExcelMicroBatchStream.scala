@@ -17,7 +17,9 @@ import org.apache.spark.sql.types.StructType
   * offset IS the state: a sorted list of every file visible at that point,
   * so `planInputPartitions(start, end)` = `end.files − start.files` is a
   * pure function of offsets — replayable from any checkpoint, no driver
-  * state, exactly-once per file.
+  * state, exactly-once per file. Spark asks for the next offset only
+  * through admission control, `latestOffset(start, limit)`; the plain
+  * `latestOffset()` throws, as Spark's own `FileStreamSource` does.
   *
   * Offset size: exact offsets grow with the directory's lifetime file
   * count — fine for thousands of files, a real cost at millions (every
@@ -72,21 +74,14 @@ class ExcelMicroBatchStream(fullSchema: StructType, opts: ExcelOptions,
     availableNowFiles.getOrElse(ExcelFiles.listEntries(opts.path, conf,
       opts.recursiveFileLookup, opts.xlsxOnly))
 
-  private def currentListing(): Seq[(String, Long)] =
-    currentEntries().map(e => e.uri -> e.mtimeMs)
-
   override def initialOffset(): Offset =
     ExcelStreamOffset(Nil, 0L, compacted = retention.isDefined)
 
-  override def latestOffset(): Offset = {
-    val listing = currentListing()
-    retention match {
-      case None => ExcelStreamOffset(listing)
-      case Some(ret) =>
-        val wm = if (listing.isEmpty) 0L else listing.map(_._2).max
-        ExcelStreamOffset(listing.filter(_._2 >= wm - ret), wm, compacted = true)
-    }
-  }
+  /** Spark calls only `latestOffset(start, limit)`: the stream supports
+    * admission control (through [[SupportsTriggerAvailableNow]]), which
+    * the micro-batch engine asks before a plain `latestOffset()`. */
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   /** Admission control: `maxFilesPerTrigger` bounds each micro-batch by
     * COUNT and `maxBytesPerTrigger` by cumulative on-disk VOLUME (both

@@ -111,19 +111,6 @@ final case class ExcelOptions(options: Map[String, String]) {
     * (a sharded shard is one streamed sheet). */
   def sheetColumn: Option[String] = get("sheetcolumn")
 
-  /** Cap on concurrently OPEN per-task sheet writers in [[sheetColumn]]
-    * routing (extension). Each open writer holds a deflater + buffers,
-    * so unbounded distinct routing values per task would exhaust memory /
-    * file handles; past the cap the least-recently-used writer is closed
-    * (its rows are complete — xlsx streams forward-only) and a value that
-    * reappears simply opens a fresh temp segment, spliced in order at
-    * the driver commit. Default 32. */
-  def maxOpenSheetWriters: Int = get("maxopensheetwriters").map { s =>
-    val n = s.toInt
-    require(n > 0, s"maxOpenSheetWriters must be positive, got $n")
-    n
-  }.getOrElse(32)
-
   /** Write-side style extension: render the header row bold (default
     * false = the reference's plain output). */
   def headerBold: Boolean = get("headerbold").exists(_.toBoolean)

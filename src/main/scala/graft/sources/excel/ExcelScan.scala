@@ -4,8 +4,11 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
@@ -15,7 +18,10 @@ import org.apache.spark.util.SerializableConfiguration
   * Every batch scan and stream runs one row reader, [[ExcelPartitionReader]].
   * Pushdown is limited to what skips files, sheets or rows: column pruning
   * (only projected cells are decoded), `_file_path` and `_sheet` filters
-  * (whole files and sheets are never planned) and the limit cap. Filters,
+  * (whole files and sheets are never planned) and the limit cap. Pushed
+  * filters and the join-driven ones Spark hands the scan at run time
+  * (through its `SupportsRuntimeFiltering`) form one list, which one
+  * matcher, [[ExcelScan.mayMatch]], applies to files and sheets. Filters,
   * samples, sorts, offsets and aggregates stay Spark operators above the
   * scan; `count()` reads an empty projection, whose rows the scanner steps
   * over whole.
@@ -28,26 +34,20 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
 
   private var requiredSchema: StructType = fullSchema
   private var limit: Int = -1
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
+  private var pushed: Array[Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     this.requiredSchema = requiredSchema
   }
 
-  /** Keeps the filters planning acts on: those on `_file_path` (when no
-    * data column shadows the metadata column) and on `_sheet` (with
-    * `sheetName="*"`). Every filter also stays post-scan. */
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter]): Array[org.apache.spark.sql.sources.Filter] = {
-    def only(col: String)(f: org.apache.spark.sql.sources.Filter) =
-      f.references.nonEmpty && f.references.forall(_ == col)
-    pushed = filters.filter(f =>
-      (ExcelScan.filePathIsMeta(fullSchema) && only(ExcelSchema.FilePathColumn)(f)) ||
-        (opts.allSheets && only(ExcelSchema.SheetColumn)(f)))
+  /** Keeps the filters planning acts on: those on one of
+    * [[ExcelScan.prunableColumns]]. Every filter also stays post-scan. */
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    pushed = filters.filter(ExcelScan.prunes(ExcelScan.prunableColumns(fullSchema, opts)))
     filters
   }
 
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
+  override def pushedFilters(): Array[Filter] = pushed
 
   override def pushLimit(limit: Int): Boolean = {
     this.limit = limit
@@ -60,55 +60,42 @@ class ExcelScanBuilder(fullSchema: StructType, opts: ExcelOptions)
 
 class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
     opts: ExcelOptions, limit: Int,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+    filters: Array[Filter] = Array.empty)
     extends Scan with Batch with SupportsReportStatistics
-    with SupportsRuntimeV2Filtering {
+    with SupportsRuntimeFiltering {
 
   override def readSchema(): StructType = requiredSchema
 
-  private def filePathIsMeta: Boolean = ExcelScan.filePathIsMeta(fullSchema)
+  private val prunable = ExcelScan.prunableColumns(fullSchema, opts)
 
   // ---- runtime (join-driven) pruning -------------------------------------
-  // Spark materializes the build side of an eligible join, converts its
-  // keys to = / IN predicates on our declared filter attributes, and calls
-  // filter() BEFORE (re)planning input partitions — dynamic partition
-  // pruning for file-grained excel layouts (dt=…/part.xlsx manifests).
-  // State is additive-only and conservative: anything unparsable is
-  // ignored, so runtime filtering can only drop files/sheets Spark proved
-  // irrelevant; results never change.
-  @volatile private var runtimeFiles: Option[Set[String]] = None
-  @volatile private var runtimeSheets: Option[Set[String]] = None
+  // Spark materializes the build side of an eligible join and hands its
+  // keys as = / IN predicates on filterAttributes() before it plans input
+  // partitions again: dynamic partition pruning for file-grained layouts
+  // (dt=…/part.xlsx manifests). SupportsRuntimeFiltering converts them to
+  // the Filters pushFilters takes; they only ever add to the pushed ones.
+  @volatile private var runtimeFilters = Array.empty[Filter]
 
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
-    // only advertise columns that are IN this scan's output: Spark's
-    // PartitionPruning resolves filter attributes against readSchema and
-    // raises if one is absent (a pruned-away `_file_path` can't be a
-    // runtime join key anyway)
-    val fp =
-      if (filePathIsMeta &&
-        requiredSchema.fieldNames.contains(ExcelSchema.FilePathColumn))
-        Seq(org.apache.spark.sql.connector.expressions.Expressions
-          .column(ExcelSchema.FilePathColumn))
-      else Nil
-    val sh =
-      if (opts.allSheets &&
-        requiredSchema.fieldNames.contains(ExcelSchema.SheetColumn))
-        Seq(org.apache.spark.sql.connector.expressions.Expressions
-          .column(ExcelSchema.SheetColumn))
-      else Nil
-    (fp ++ sh).toArray
-  }
+  // only columns in this scan's output: Spark's PartitionPruning resolves
+  // filter attributes against readSchema and raises if one is absent (a
+  // pruned-away `_file_path` can't be a runtime join key anyway)
+  override def filterAttributes(): Array[NamedReference] =
+    prunable.filter(requiredSchema.fieldNames.contains).map(Expressions.column).toArray
 
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
-    predicates.foreach { p =>
-      ExcelScan.eqOrInValues(p).foreach { case (name, values) =>
-        if (name == ExcelSchema.FilePathColumn && filePathIsMeta)
-          runtimeFiles = Some(runtimeFiles.fold(values)(_ intersect values))
-        else if (name == ExcelSchema.SheetColumn && opts.allSheets)
-          runtimeSheets = Some(runtimeSheets.fold(values)(_ intersect values))
-      }
-    }
+  override def filter(fs: Array[Filter]): Unit =
+    runtimeFilters ++= fs.filter(ExcelScan.prunes(prunable))
+
+  // Spark's conversion reads a literal's value in Catalyst's internal
+  // form, as its runtime predicates hold it; a string literal built from a
+  // plain String (`Expressions.literal("x")`) is brought to that form first
+  override def filter(predicates: Array[Predicate]): Unit =
+    super.filter(predicates.map(p =>
+      if (p.name != "=" && p.name != "IN") p
+      else new Predicate(p.name, p.children.map {
+        case l: Literal[_] if l.value.isInstanceOf[String] => Expressions.literal(
+          org.apache.spark.unsafe.types.UTF8String.fromString(l.value.toString))
+        case e => e
+      })))
 
   // one Hadoop conf per scan: the listing, the planner's probes and the
   // tasks' broadcast all read it
@@ -165,22 +152,13 @@ class ExcelScan(fullSchema: StructType, requiredSchema: StructType,
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new ExcelMicroBatchStream(fullSchema, opts, checkpointLocation)
 
+  // a file or sheet that provably fails a pushed or runtime filter is
+  // never staged, opened or parsed; Spark re-applies every filter above the
+  // scan, so pruning only ever saves work
   override def planInputPartitions(): Array[InputPartition] = {
-    val listed = entries.map(_.uri)
-    // file-grained pruning: a file whose URI PROVABLY fails a pushed (or
-    // runtime) `_file_path` predicate is never staged, opened, or parsed.
-    // Conservative keep on anything inexact — Spark re-applies all filters
-    // above the scan, so pruning is an optimization, never correctness.
-    val statically =
-      if (filePathIsMeta && filters.nonEmpty)
-        listed.filter(f => ExcelScan.fileMayMatch(f, filters))
-      else listed
-    val files =
-      runtimeFiles.fold(statically)(allowed => statically.filter(allowed))
-    val sheetFilters = runtimeSheets.fold(filters)(allowed =>
-      filters :+ org.apache.spark.sql.sources.In(ExcelSchema.SheetColumn,
-        allowed.toArray[Any]))
-    ExcelSplitPlanner.plan(files, opts, hadoopConf, sheetFilters)
+    val all = filters ++ runtimeFilters
+    ExcelSplitPlanner.plan(entries.map(_.uri)
+      .filter(ExcelScan.mayMatch(ExcelSchema.FilePathColumn, all)), opts, hadoopConf, all)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -203,40 +181,32 @@ object ExcelScan {
   private[excel] def filePathIsMeta(fullSchema: StructType): Boolean =
     !fullSchema.fieldNames.contains(ExcelSchema.FilePathColumn)
 
-  /** Parse a runtime V2 predicate of shape `col = lit` / `col IN (lits…)`
-    * into (column, allowed string values); None for anything else —
-    * unparsable predicates are simply not used for pruning. */
-  private[excel] def eqOrInValues(
-      p: org.apache.spark.sql.connector.expressions.filter.Predicate)
-      : Option[(String, Set[String])] = p.name() match {
-    case "=" | "IN" =>
-      import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference}
-      val children = p.children()
-      val refs = children.collect { case r: NamedReference => r }
-      val lits = children.collect { case l: V2Literal[_] => l }
-      if (refs.length == 1 && refs(0).fieldNames().length == 1 &&
-        refs.length + lits.length == children.length && lits.nonEmpty)
-        Some(refs(0).fieldNames()(0) ->
-          lits.map(l => String.valueOf(l.value())).toSet)
-      else None
-    case _ => None
-  }
+  /** The columns whose filters prune whole files or sheets: `_file_path`
+    * while it is a metadata column, `_sheet` with `sheetName="*"`. */
+  private[excel] def prunableColumns(fullSchema: StructType,
+      opts: ExcelOptions): Seq[String] =
+    Seq(ExcelSchema.FilePathColumn).filter(_ => filePathIsMeta(fullSchema)) ++
+      Seq(ExcelSchema.SheetColumn).filter(_ => opts.allSheets)
 
-  /** Exactly-evaluable `_file_path` predicates a listed URI must satisfy
-    * to stay planned; inexact shapes conservatively keep the file. */
-  private def fileMayMatch(path: String,
-      filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
+  /** A filter planning acts on: it references one of `columns` only. */
+  private[excel] def prunes(columns: Seq[String])(f: Filter): Boolean =
+    columns.exists(c => f.references.nonEmpty && f.references.forall(_ == c))
+
+  /** Whether a file (`_file_path`) or sheet (`_sheet`) named by the
+    * argument may pass every one of `filters` on `column`. Only
+    * exactly-evaluable shapes decide; any other keeps it. Built once per
+    * plan, so an IN of many values (a join's build-side keys) is one hash
+    * set, not a scan of the list per file. */
+  private[excel] def mayMatch(column: String, filters: Array[Filter]): String => Boolean = {
     import org.apache.spark.sql.sources._
-    val C = ExcelSchema.FilePathColumn
-    filters.forall {
-      case EqualTo(C, v) => v == path
-      case In(C, vs) => vs.contains(path)
-      case StringStartsWith(C, p) => path.startsWith(p)
-      case StringEndsWith(C, s) => path.endsWith(s)
-      case StringContains(C, s) => path.contains(s)
-      case IsNotNull(C) => true // synthesized, never null
-      case _ => true
+    val tests: Array[String => Boolean] = filters.collect {
+      case EqualTo(`column`, v) => (s: String) => v == s
+      case In(`column`, vs) => val set = vs.toSet; (s: String) => set(s)
+      case StringStartsWith(`column`, p) => (s: String) => s.startsWith(p)
+      case StringEndsWith(`column`, x) => (s: String) => s.endsWith(x)
+      case StringContains(`column`, x) => (s: String) => s.contains(x)
     }
+    s => tests.forall(_(s))
   }
 }
 
@@ -255,18 +225,17 @@ object ExcelSplitPlanner {
 
   def plan(files: Seq[String], opts: ExcelOptions,
       conf: org.apache.hadoop.conf.Configuration,
-      filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-      : Array[InputPartition] = {
+      filters: Array[Filter] = Array.empty): Array[InputPartition] = {
     if (!opts.allSheets && opts.maxRowsPerPartition.isEmpty)
       return files.map(f => ExcelInputPartition(f): InputPartition).toArray
+    val keepSheet = ExcelScan.mayMatch(ExcelSchema.SheetColumn, filters)
     // each probe opens + header-parses one workbook — independent work, so
     // a directory of many files probes on a bounded driver-side pool
     // instead of one at a time; results keep the input file order
     probeAll(files, conf) { (f, rd) =>
       val sheets: Seq[(String, XlsxReader.Sheet)] =
         if (opts.allSheets)
-          rd.sheets.map(s => (s.name, s))
-            .filter { case (name, _) => sheetMayMatch(name, filters) }
+          rd.sheets.filter(s => keepSheet(s.name)).map(s => (s.name, s))
         else Seq((null, rd.resolveSheet(opts.sheetName)))
       sheets.flatMap { case (sheetName, sheet) =>
         opts.maxRowsPerPartition match {
@@ -310,23 +279,6 @@ object ExcelSplitPlanner {
           throw e
       }
     } finally pool.shutdown()
-  }
-
-  /** Partition pruning on the synthesized `_sheet` column: a sheet whose
-    * name PROVABLY fails a pushed `_sheet` predicate is never planned,
-    * parsed, or decoded. Only exactly-evaluable shapes prune (EqualTo /
-    * In / IsNotNull on `_sheet`); everything else conservatively keeps the
-    * sheet — Spark re-applies all filters above the scan regardless, so
-    * pruning is a pure optimization, never a correctness risk. */
-  private def sheetMayMatch(name: String,
-      filters: Array[org.apache.spark.sql.sources.Filter]): Boolean = {
-    import org.apache.spark.sql.sources._
-    filters.forall {
-      case EqualTo(ExcelSchema.SheetColumn, v) => v == name
-      case In(ExcelSchema.SheetColumn, vs) => vs.contains(name)
-      case IsNotNull(ExcelSchema.SheetColumn) => true // synthesized, never null
-      case _ => true
-    }
   }
 
   private def probe[T](f: String, conf: org.apache.hadoop.conf.Configuration)(
@@ -492,7 +444,8 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
         values(i) = filePathValue
       } else {
         val cell = if (src >= 0 && src < raw.length) raw(src) else null
-        values(i) = ExcelSchema.convert(cell, requiredSchema.fields(i).dataType)
+        values(i) = ExcelSchema.convert(cell, requiredSchema.fields(i).dataType,
+          reader.date1904)
       }
       i += 1
     }

@@ -189,8 +189,9 @@ object ExcelSchema {
 
   /** Convert one decoded cell to the Catalyst value for `dt`.
     * Lenient like the pandas→Spark path: sensible coercions happen,
-    * impossible ones yield null. */
-  def convert(v: Any, dt: DataType): Any = v match {
+    * impossible ones yield null. A raw serial read as a timestamp counts
+    * from the workbook's epoch (`date1904`). */
+  def convert(v: Any, dt: DataType, date1904: Boolean): Any = v match {
     case null => null
     case _ => dt match {
       case StringType => UTF8String.fromString(v match {
@@ -222,7 +223,7 @@ object ExcelSchema {
           catch { case _: NumberFormatException => null }
         case _ => null
       }
-      case FloatType => convert(v, DoubleType) match {
+      case FloatType => convert(v, DoubleType, date1904) match {
         case null => null
         case d: java.lang.Double => java.lang.Float.valueOf(d.floatValue())
       }
@@ -247,7 +248,7 @@ object ExcelSchema {
         case t: LocalDateTime => java.lang.Long.valueOf(toMicros(t))
         case d: LocalDate => java.lang.Long.valueOf(toMicros(d.atStartOfDay))
         case dd: java.lang.Double => // raw serial under an explicit timestamp schema
-          java.lang.Long.valueOf(toMicros(ExcelSerialDate.toDateTime(dd.doubleValue())))
+          java.lang.Long.valueOf(toMicros(ExcelSerialDate.toDateTime(dd.doubleValue(), date1904)))
         case s: String =>
           try java.lang.Long.valueOf(toMicros(LocalDateTime.parse(s.trim.replace(' ', 'T'))))
           catch { case _: Exception => null }

@@ -200,10 +200,9 @@ class ExcelWrite(schema: StructType, opts: ExcelOptions, truncate: Boolean)
         // whichever task saw a routing value first
         val sheetNames = parts.flatMap(_.segments.map(_.sheet)).distinct.sorted
         // Excel sheet names are case-INSENSITIVE: two routing values
-        // differing only in case came from different tasks' rows and would
+        // differing only in case, from one task's rows or from two, would
         // merge into a workbook Excel refuses to open (our reader would
         // still round-trip it — exactly the silent-corruption hazard).
-        // Within one task the writer already rejects this at the first row.
         val caseCollisions = sheetNames
           .groupBy(_.toLowerCase(java.util.Locale.ROOT))
           .filter(_._2.size > 1)
@@ -401,7 +400,7 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     ExcelWrite.header(shard, schema.fieldNames.toIndexedSeq, opts)
 
   // merged mode: sheet → open segment, kept in LRU order (a routed get
-  // re-inserts). Open segments are capped at opts.maxOpenSheetWriters:
+  // re-inserts). Open segments are capped at MaxOpenSheets:
   // past the cap the least-recently-used one is closed into `finished`; a
   // value that reappears opens a fresh temp segment, and the driver
   // splices a sheet's segments in emission order.
@@ -412,7 +411,7 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     case (w, p) => finished += ExcelSegment(sheet, p.toString, w.close())
   }
   private def openSegment(sheet: String): XlsxRowSegment = {
-    if (open.size >= opts.maxOpenSheetWriters) finish(open.head._1)
+    if (open.size >= ExcelDataWriter.MaxOpenSheets) finish(open.head._1)
     val p = newTemp("deflate")
     val w = new XlsxRowSegment(fs.create(p, true), sheet)
     open.put(sheet, (w, p))
@@ -426,10 +425,6 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     else if (sheetColIdx < 0) openSegment(opts.writeSheetName)
     else null
 
-  // case-insensitive collision guard: Excel sheet names are
-  // case-insensitive, so "Foo" and "foo" routing values would produce a
-  // workbook Excel rejects; fail at the first offending row instead
-  private val lowerSeen = scala.collection.mutable.HashMap.empty[String, String]
   private def routedWriter(row: InternalRow): XlsxRowEncoder = {
     if (row.isNullAt(sheetColIdx))
       throw new org.apache.spark.SparkException(
@@ -441,13 +436,6 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
       case None =>
         ExcelWrite.validateSheetName(sheet,
           s"sheetColumn '${opts.sheetColumn.get}' row value")
-        val lower = sheet.toLowerCase(java.util.Locale.ROOT)
-        lowerSeen.get(lower).filter(_ != sheet).foreach(prev =>
-          throw new org.apache.spark.SparkException(
-            s"sheetColumn values '$prev' and '$sheet' collide " +
-              "case-insensitively (Excel treats sheet names as " +
-              "case-insensitive)"))
-        lowerSeen.update(lower, sheet)
         openSegment(sheet)
     }
   }
@@ -531,4 +519,14 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     open.keys.toList.foreach(finish)
     closed = true
   }
+}
+
+object ExcelDataWriter {
+
+  /** Cap on the sheet segments one task keeps open when `sheetColumn`
+    * routes rows. Each open segment holds a deflater and its buffers;
+    * past the cap the least-recently-used one is closed (its rows are
+    * complete, as xlsx streams forward only) and a value that reappears
+    * opens a fresh segment, spliced in order at the driver commit. */
+  private[excel] val MaxOpenSheets = 32
 }

@@ -308,14 +308,19 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
     new XmlScanner(in, n => counters.sheetBytes += n,
       () => s"$name, sheet '${sheet.name}' (${sheet.entry}), row ${row()}")
 
-  /** The current `<row>`'s `r` attribute, or the one after `last`. */
+  /** The current `<row>`'s `r` attribute, or the one after `last`. A row
+    * past the sheet's last fails: it would read as that many empty rows. */
   private def rowNumber(sc: XmlScanner, last: Int): Int = {
-    while (sc.nextAttr()) if (sc.attrIs('r')) {
-      val n = sc.intValue(trim = false, Int.MinValue)
+    var n = last + 1
+    var more = sc.nextAttr()
+    while (more) if (sc.attrIs('r')) {
+      n = sc.intValue(trim = false, Int.MinValue)
       if (n == Int.MinValue) sc.fail(s"a row number '${sc.value}'")
-      return n
-    }
-    last + 1
+      more = false
+    } else more = sc.nextAttr()
+    if (n > XlsxWriter.MaxRowsPerSheet)
+      sc.fail(s"row number $n past the last row (${XlsxWriter.MaxRowsPerSheet})")
+    n
   }
 
   private def cellKind(sc: XmlScanner): Int =
@@ -604,17 +609,6 @@ object XlsxReader {
       i += 1
     }
     true
-  }
-
-  /** "C5" → 0-based column index 2. */
-  def colIndex(ref: String): Int = {
-    var i = 0
-    var col = 0
-    while (i < ref.length && ref.charAt(i).isLetter) {
-      col = col * 26 + (ref.charAt(i).toUpper - 'A' + 1)
-      i += 1
-    }
-    col - 1
   }
 
   /** Builtin date/time number-format ids (ECMA-376 §18.8.30). */

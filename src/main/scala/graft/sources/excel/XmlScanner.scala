@@ -299,12 +299,16 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
   }
 
   /** The 0-based column of a cell reference value ("C5" → 2), -1 when it
-    * starts with no letter. */
+    * starts with no letter. A column past the sheet's last (XFD) fails
+    * before it can grow a row or overflow. */
   def columnValue: Int = {
     var i = valFrom
     var col = 0
     while (i < valTo && isAsciiLetter(valBuf(i))) {
       col = col * 26 + ((valBuf(i) & 0xdf) - 'A' + 1)
+      if (col > XlsxWriter.MaxColsPerSheet)
+        fail(s"a cell reference '$value' past the last column " +
+          s"(XFD, ${XlsxWriter.MaxColsPerSheet} columns)")
       i += 1
     }
     col - 1

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rows), and file ownership — two live sessions never delete each
   * other's files, dead processes' staging is reclaimed, a run leaves no
   * checkpoint behind, and the memory sink stays out of the caller's
-  * catalog. */
+  * catalog; the batch `excel_*` gates stage under the same ownership. */
 class StagingInfraSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -105,6 +105,25 @@ class StagingInfraSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(live.exists(), "a live process's other session is kept")
     assert(!walk(root).exists(_.getName.startsWith("ckpt")),
       "the checkpoint is deleted once the query terminates")
+  }
+
+  test("each batch excel gate stages per session: two sessions scan two " +
+    "paths and read the same rows") {
+    val gates = Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame](
+      ConnectorQueries.excelRoundtrip, ConnectorQueries.excelOffsetPage,
+      ConnectorQueries.excelTopN, ConnectorQueries.excelXlsxOnlyListing,
+      ConnectorQueries.excelShardedRoundtrip, ConnectorQueries.excelArrowRoundtrip)
+    val Path = """ExcelScan path=(\S+)""".r
+    gates.foreach { gate =>
+      // both sessions write before either reads: at one shared path the
+      // second write would replace the first session's input
+      val dfs = Seq.fill(2)(gate(spark.newSession(), sf))
+      val paths = dfs.map(df =>
+        Path.findFirstMatchIn(df.queryExecution.executedPlan.toString).get.group(1))
+      assert(paths.distinct.size == 2, paths)
+      val rows = dfs.map(_.collect().toSeq)
+      assert(rows.head.nonEmpty && rows.head == rows.last, paths)
+    }
   }
 
   test("excel_stream_join leaves the caller's temp views unchanged") {

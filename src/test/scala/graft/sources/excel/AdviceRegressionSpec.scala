@@ -306,21 +306,22 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("routed writers are capped; evicted sheets keep rows and order") {
     import spark.implicits._
-    // 6 routing values interleaved twice through a cap of 2: every value is
-    // evicted and reopened at least once, so each sheet has 2 temp segments
+    // 40 routing values interleaved twice through the cap of 32: every
+    // value is evicted and reopened, so each sheet has 2 temp segments
+    val n = 40
+    assert(n > ExcelDataWriter.MaxOpenSheets)
     val rows = (0 until 2).flatMap(rep =>
-      (0 until 6).map(s => (rep * 6 + s, s"sheet$s")))
+      (0 until n).map(s => (rep * n + s, s"sheet$s")))
     val out = new File(tmpDir(), "capped.xlsx")
     rows.toDF("id", "region").coalesce(1)
       .sortWithinPartitions("id") // deterministic emission order
       .write.format("excel").option("sheetColumn", "region")
-      .option("maxOpenSheetWriters", "2")
       .mode("overwrite").save(out.getAbsolutePath)
 
     val back = spark.read.format("excel")
       .option("sheetName", "*").load(out.getAbsolutePath)
       .collect().map(r => (r.getInt(0), r.getString(1)))
-    assert(back.length == 12)
+    assert(back.length == 2 * n)
     // all rows present under their routing value
     assert(back.toSet == rows.map { case (i, s) => (i, s) }.toSet)
     // within each sheet, segment concatenation preserved row order

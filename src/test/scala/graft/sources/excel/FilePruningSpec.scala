@@ -114,6 +114,52 @@ class FilePruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scan.toBatch.planInputPartitions().length == 2)
   }
 
+  test("a runtime IN of 10,000 values keeps exactly the listed files among them") {
+    import org.apache.spark.sql.connector.expressions.Expressions
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    val opts = ExcelOptions.fromMap(Map(
+      "path" -> dir.getAbsolutePath, "recursivefilelookup" -> "true"))
+    val files = ExcelFiles.list(dir.getAbsolutePath,
+      spark.sessionState.newHadoopConf(), recursive = true)
+    val b = new ExcelScanBuilder(schema, opts)
+    b.pruneColumns(schema.add(ExcelSchema.FilePathColumn, StringType,
+      nullable = false))
+    val scan = b.build().asInstanceOf[ExcelScan]
+    // a join's build side: one key per file of a large manifest, two of
+    // them this layout's first and last file
+    val keys = (0 until 9998).map(i => s"file:/elsewhere/dt=$i/part.xlsx") :+
+      files.last :+ files.head
+    scan.filter(Array(new Predicate("IN",
+      (Expressions.column("_file_path") +: keys.map(k => Expressions.literal(k)))
+        .toArray[org.apache.spark.sql.connector.expressions.Expression])))
+    val planned = scan.toBatch.planInputPartitions()
+      .map(_.asInstanceOf[ExcelInputPartition].filePath)
+    assert(planned.toSeq == Seq(files.head, files.last))
+  }
+
+  test("a selective manifest join prunes files at run time through Spark") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val files = ExcelFiles.list(dir.getAbsolutePath,
+      spark.sessionState.newHadoopConf(), recursive = true)
+    // a selective filter over a non-local relation: what lets Spark
+    // insert dynamic pruning on the scan side of the broadcast join
+    val manifest = spark.range(files.length).toDF("n")
+      .select(element_at(typedLit(files), col("n").cast("int") + 1).as("file_uri"),
+        col("n"))
+      .where(col("n") === 1)
+    val joined = readAll.join(manifest, col("_file_path") === col("file_uri"))
+      .select("id")
+    assert(joined.collect().map(_.getLong(0)).sorted.toSeq == Seq(11L, 12L))
+    val scans = new AdaptiveSparkPlanHelper {}.collect(joined.queryExecution.executedPlan) {
+      case b: BatchScanExec if b.scan.isInstanceOf[ExcelScan] => b
+    }
+    assert(scans.size == 1 && scans.head.runtimeFilters.nonEmpty,
+      joined.queryExecution.executedPlan)
+    assert(scans.head.inputRDD.partitions.length == 1,
+      "only the manifest's one file may be planned")
+  }
+
   test("a manifest join on _file_path returns exactly the manifest's files") {
     import spark.implicits._
     val conf = spark.sessionState.newHadoopConf()

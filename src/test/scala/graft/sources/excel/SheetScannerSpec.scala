@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The sheet scanner's failure modes, its on-demand shared-strings table
-  * and the scan metrics it reports. */
+/** The sheet scanner's failure modes (the sheet's row and column caps
+  * among them), its on-demand shared-strings table, the epoch of raw
+  * serials and the scan metrics it reports. */
 class SheetScannerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -222,6 +223,49 @@ class SheetScannerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(df.select("c20", "c3").collect().map(r => (r.get(0), r.get(1))).toSeq ==
         (2 to n + 1).map(i => (i * 100 + 20, i * 100 + 3)))
     } finally f.delete()
+  }
+
+  test("a cell past column XFD or a row past 1,048,576 fails, naming the reference and the cap") {
+    def read(rowsXml: String, columns: Array[Boolean]): Vector[Vector[Any]] = {
+      val f = workbook(sheet(rowsXml))
+      try {
+        val r = new XlsxReader(f)
+        try r.rowIterator(r.sheets.head, 1, Int.MaxValue, columns).map(_.toVector).toVector
+        finally r.close()
+      } finally f.delete()
+    }
+    val last = read(s"""<row r="1">${cell("XFD1", "7")}</row>""", null)
+    assert(last.map(_.length) == Vector(XlsxWriter.MaxColsPerSheet))
+    assert(last.head.last == 7.0)
+    // all columns, and a one-column mask that skips the cell's value
+    Seq(null, Array(true)).foreach { columns =>
+      Seq("XFE1", "ZZZZZZ1", "ZZZZZZZ1").foreach { ref =>
+        val e = intercept[SparkException](read(s"""<row r="1">${cell(ref, "1")}</row>""", columns))
+        Seq(ref, "XFD", s"${XlsxWriter.MaxColsPerSheet} columns")
+          .foreach(s => assert(e.getMessage.contains(s), e.getMessage))
+      }
+      val e = intercept[SparkException](
+        read(s"""<row r="1">${cell("A1", "1")}</row><row r="1048577">${cell("A1048577", "2")}</row>""",
+          columns))
+      Seq("1048577", s"${XlsxWriter.MaxRowsPerSheet}")
+        .foreach(s => assert(e.getMessage.contains(s), e.getMessage))
+    }
+    assert(read(s"""<row r="1048576">${cell("A1048576", "3")}</row>""", Array(false))
+      .length == XlsxWriter.MaxRowsPerSheet)
+  }
+
+  test("a raw serial read as a timestamp counts from the workbook's epoch") {
+    val rows = s"""<row r="1">${str("A1", "t")}</row><row r="2">${cell("A2", "100")}</row>"""
+    val schema = StructType(Seq(StructField("t", TimestampType)))
+    Seq(false -> "1900-04-09T00:00", true -> "1904-04-10T00:00").foreach { case (d1904, want) =>
+      val f = XlsxAdversarialProps.zipFile(Seq(XlsxAdversarialProps.workbookXml(d1904),
+        "xl/worksheets/sheet1.xml" -> sheet(rows).getBytes(UTF_8)))
+      try {
+        val got = spark.read.format("excel").schema(schema).load(f.getPath)
+          .collect().map(_.getTimestamp(0).toInstant.toString).toSeq
+        assert(got == Seq(s"${want}:00Z"), s"date1904=$d1904")
+      } finally f.delete()
+    }
   }
 
   test("an undeclared entity fails") {

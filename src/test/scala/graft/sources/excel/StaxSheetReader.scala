@@ -160,7 +160,8 @@ final class StaxSheetReader(reader: XlsxReader) {
       while (!done) r.next() match {
         case XMLStreamConstants.START_ELEMENT if r.getLocalName == "c" =>
           val ref = attr(r, "r")
-          val col = if (ref == null) cells.length else XlsxReader.colIndex(ref)
+          val col = if (ref == null) cells.length
+            else ref.takeWhile(_.isLetter).foldLeft(0)((c, l) => c * 26 + l.toUpper - 'A' + 1) - 1
           while (cells.length < col) cells += null
           val v = readCell()
           if (cells.length == col) cells += v

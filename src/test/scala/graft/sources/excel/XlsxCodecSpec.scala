@@ -14,15 +14,24 @@ class XlsxCodecSpec extends AnyFunSuite {
     f
   }
 
-  test("column ref round-trip A..ZZZ") {
-    val rnd = new scala.util.Random(42)
-    (0 until 1000).map(_ => rnd.nextInt(100000)).foreach { n =>
-      assert(XlsxReader.colIndex(XlsxWriter.colName(n) + "1") == n)
+  /** The column the reader's own parser reads off a cell reference. */
+  private def columnOf(ref: String): Int = {
+    val sc = new XmlScanner(new java.io.ByteArrayInputStream(
+      s"""<c r="$ref"/>""".getBytes("UTF-8")), _ => (), () => "test")
+    try { assert(sc.nextTag() && sc.nextAttr()); sc.columnValue } finally sc.close()
+  }
+
+  test("column ref round-trip A..XFD") {
+    (0 until XlsxWriter.MaxColsPerSheet).foreach { n =>
+      assert(columnOf(XlsxWriter.colName(n) + "1") == n)
     }
     assert(XlsxWriter.colName(0) == "A")
     assert(XlsxWriter.colName(25) == "Z")
     assert(XlsxWriter.colName(26) == "AA")
-    assert(XlsxReader.colIndex("C5") == 2)
+    assert(XlsxWriter.colName(XlsxWriter.MaxColsPerSheet - 1) == "XFD")
+    assert(columnOf("C5") == 2)
+    assert(columnOf("xfd7") == XlsxWriter.MaxColsPerSheet - 1)
+    assert(columnOf("5") == -1)
   }
 
   test("serial date round-trip") {
