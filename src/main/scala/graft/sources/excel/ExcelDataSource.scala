@@ -38,8 +38,8 @@ class ExcelDataSource extends TableProvider with DataSourceRegister {
       throw new org.apache.spark.sql.AnalysisException(
         errorClass = "UNABLE_TO_INFER_SCHEMA",
         messageParameters = Map("format" -> "excel"))
-    ExcelSchema.merge(files.take(math.max(1, opts.inferSampleFiles))
-      .map(f => ExcelSchema.inferFromFile(f, opts, conf)))
+    ExcelSchema.merge(ExcelFiles.probeAll(files.take(math.max(1, opts.inferSampleFiles)))(
+      ExcelSchema.inferFromFile(_, opts, conf)))
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],

@@ -1,5 +1,8 @@
 package graft.sources.excel
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
@@ -46,6 +49,36 @@ object ExcelFiles {
     * settings. */
   def broadcastConf(conf: Configuration): Broadcast[SerializableConfiguration] =
     SparkSession.active.sparkContext.broadcast(new SerializableConfiguration(conf))
+
+  /** The one driver-side prober: `body` on every file, at most
+    * min(files, cores, 16) at a time, results in `files` order. Split
+    * planning and schema inference both open many workbooks on the driver,
+    * often from remote storage, where each open is first a download; one
+    * at a time, a 1000-file directory is 1000 downloads in a row.
+    *
+    * Any `Throwable` a body throws, fatal errors included, fails the probe:
+    * the pool is stopped (in-flight probes interrupted, queued ones
+    * dropped) and the error is rethrown as the body threw it. Results are
+    * awaited in `files` order, so when several files fail, the one reported
+    * is the first in that order. Threads are daemons named `excel-probe-N`,
+    * so a probe that ignores its interrupt cannot keep the JVM alive. */
+  def probeAll[T](files: Seq[String])(body: String => T): Seq[T] = {
+    if (files.lengthCompare(1) <= 0) return files.map(body)
+    val threads = math.min(files.size,
+      math.min(Runtime.getRuntime.availableProcessors(), 16))
+    val started = new AtomicInteger
+    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, s"excel-probe-${started.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val futures = files.map(f => pool.submit((() => body(f)): Callable[T]))
+      futures.map { fu =>
+        try fu.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+    } finally pool.shutdownNow()
+  }
 
   /** One listed workbook: URI plus the mtime/size its `FileStatus`
     * already carried (no extra RPCs beyond the listing itself). */

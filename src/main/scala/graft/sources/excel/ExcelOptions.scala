@@ -46,7 +46,9 @@ final case class ExcelOptions(options: Map[String, String]) {
   /** Rows sampled per file for schema inference (extension). */
   def inferSampleRows: Int = get("infersamplerows").map(_.toInt).getOrElse(100)
 
-  /** Max files to probe when inferring over a directory (extension). */
+  /** Max files to probe when inferring over a directory (extension). The
+    * sample files are probed min(files, cores, 16) at a time, and each probe
+    * keeps O(columns) state, not its sample rows. */
   def inferSampleFiles: Int = get("infersamplefiles").map(_.toInt).getOrElse(1)
 
   /** Streaming admission control: max new files admitted per micro-batch

@@ -229,56 +229,23 @@ object ExcelSplitPlanner {
     if (!opts.allSheets && opts.maxRowsPerPartition.isEmpty)
       return files.map(f => ExcelInputPartition(f): InputPartition).toArray
     val keepSheet = ExcelScan.mayMatch(ExcelSchema.SheetColumn, filters)
-    // each probe opens + header-parses one workbook — independent work, so
-    // a directory of many files probes on a bounded driver-side pool
-    // instead of one at a time; results keep the input file order
-    probeAll(files, conf) { (f, rd) =>
-      val sheets: Seq[(String, XlsxReader.Sheet)] =
-        if (opts.allSheets)
-          rd.sheets.filter(s => keepSheet(s.name)).map(s => (s.name, s))
-        else Seq((null, rd.resolveSheet(opts.sheetName)))
-      sheets.flatMap { case (sheetName, sheet) =>
-        opts.maxRowsPerPartition match {
-          case None => Seq(ExcelInputPartition(f, sheet = sheetName))
-          case Some(maxRows) =>
-            planRowRanges(f, sheetName, rd.lastRowNumber(sheet), maxRows, opts)
+    // each probe opens + header-parses one workbook: independent work,
+    // probed by the bounded driver prober; results keep the file order
+    ExcelFiles.probeAll(files) { f =>
+      probe(f, conf) { rd =>
+        val sheets: Seq[(String, XlsxReader.Sheet)] =
+          if (opts.allSheets)
+            rd.sheets.filter(s => keepSheet(s.name)).map(s => (s.name, s))
+          else Seq((null, rd.resolveSheet(opts.sheetName)))
+        sheets.flatMap { case (sheetName, sheet) =>
+          opts.maxRowsPerPartition match {
+            case None => Seq(ExcelInputPartition(f, sheet = sheetName))
+            case Some(maxRows) =>
+              planRowRanges(f, sheetName, rd.lastRowNumber(sheet), maxRows, opts)
+          }
         }
       }
-    }.toArray
-  }
-
-  /** Probe every file on a bounded thread pool (planning is driver-side;
-    * each probe is an open + header parse, often against remote storage —
-    * serial probing of a 1000-file directory is the planner bottleneck the
-    * scan itself never recovers from). Results preserve `files` order so
-    * partition numbering stays deterministic. */
-  private def probeAll[T](files: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration)(
-      body: (String, XlsxReader) => Seq[T]): Seq[T] = {
-    if (files.lengthCompare(1) <= 0)
-      return files.flatMap(f => probe(f, conf)(rd => body(f, rd)))
-    val parallelism = math.min(files.size,
-      math.min(Runtime.getRuntime.availableProcessors(), 16))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = files.map { f =>
-        scala.concurrent.Future(probe(f, conf)(rd => body(f, rd)))
-      }
-      try
-        futures.flatMap(fu =>
-          scala.concurrent.Await.result(fu, scala.concurrent.duration.Duration.Inf))
-      catch {
-        case e: Throwable =>
-          // first failure aborts planning: interrupt in-flight probes and
-          // drop queued ones instead of letting them run (and fail) into a
-          // dead plan; their own errors are suppressed deliberately —
-          // the first one is what the user needs to see
-          pool.shutdownNow()
-          throw e
-      }
-    } finally pool.shutdown()
+    }.flatten.toArray
   }
 
   private def probe[T](f: String, conf: org.apache.hadoop.conf.Configuration)(

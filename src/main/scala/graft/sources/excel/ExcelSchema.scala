@@ -48,48 +48,59 @@ object ExcelSchema {
     }
   }
 
-  /** Infer a StructType from sample rows (header already stripped). */
-  def inferFromRows(names: Seq[String], rows: Seq[Array[Any]]): StructType = {
-    val fields = names.zipWithIndex.map { case (name, i) =>
-      val values = rows.iterator
-        .map(r => if (i < r.length) r(i) else null)
-        .filter(_ != null)
-        .toSeq
-      StructField(name, inferColumnType(values), nullable = true)
+  /** What a sample has shown of one column, folded one value at a time:
+    * the flags its non-null values kept true, and the type they make. */
+  private final class ColumnType {
+    private var seen = false
+    private var allBool, allNum, allIntegral, fitsInt, allDateLike = true
+    private var anyTime = false
+
+    def add(v: Any): Unit = if (v != null) {
+      seen = true
+      v match {
+        case _: java.lang.Boolean =>
+          allNum = false; allDateLike = false
+        case d: java.lang.Double =>
+          allBool = false; allDateLike = false
+          val x = d.doubleValue()
+          if (x != math.floor(x) || x.isInfinite || x.isNaN) { allIntegral = false; fitsInt = false }
+          else if (x < Int.MinValue || x > Int.MaxValue) fitsInt = false
+        case _: LocalDate =>
+          allBool = false; allNum = false
+        case _: LocalDateTime =>
+          allBool = false; allNum = false; anyTime = true
+        case _ =>
+          allBool = false; allNum = false; allDateLike = false
+      }
     }
-    StructType(fields)
+
+    def dataType: DataType =
+      if (!seen) StringType
+      else if (allBool) BooleanType
+      else if (allNum && allIntegral && fitsInt) IntegerType
+      else if (allNum && allIntegral) LongType
+      else if (allNum) DoubleType
+      else if (allDateLike && anyTime) TimestampType
+      else if (allDateLike) DateType
+      else StringType
   }
 
-  private def inferColumnType(values: Seq[Any]): DataType = {
-    if (values.isEmpty) return StringType
-    var allBool = true
-    var allNum = true
-    var allIntegral = true
-    var fitsInt = true
-    var allDateLike = true
-    var anyTime = false
-    values.foreach {
-      case _: java.lang.Boolean =>
-        allNum = false; allDateLike = false
-      case d: java.lang.Double =>
-        allBool = false; allDateLike = false
-        val v = d.doubleValue()
-        if (v != math.floor(v) || v.isInfinite || v.isNaN) { allIntegral = false; fitsInt = false }
-        else if (v < Int.MinValue || v > Int.MaxValue) fitsInt = false
-      case _: LocalDate =>
-        allBool = false; allNum = false
-      case _: LocalDateTime =>
-        allBool = false; allNum = false; anyTime = true
-      case _ =>
-        allBool = false; allNum = false; allDateLike = false
+  /** A sheet's schema from its header row and the sample rows after it.
+    * Each row is folded into per-column [[ColumnType]]s as it streams by,
+    * so a probe holds O(columns) state, never its sample rows. */
+  private[excel] def inferSample(headerRow: Option[Array[Any]],
+      rows: Iterator[Array[Any]], opts: ExcelOptions): StructType = {
+    val cols = scala.collection.mutable.ArrayBuffer.empty[ColumnType]
+    rows.foreach { r =>
+      while (cols.length < r.length) cols += new ColumnType
+      r.indices.foreach(i => cols(i).add(r(i)))
     }
-    if (allBool) BooleanType
-    else if (allNum && allIntegral && fitsInt) IntegerType
-    else if (allNum && allIntegral) LongType
-    else if (allNum) DoubleType
-    else if (allDateLike && anyTime) TimestampType
-    else if (allDateLike) DateType
-    else StringType
+    val names = columnNames(headerRow,
+      math.max(headerRow.map(_.length).getOrElse(0), cols.length), opts.header)
+    if (!opts.inferSchema) allStrings(names)
+    else StructType(names.zipWithIndex.map { case (name, i) =>
+      StructField(name, cols.lift(i).fold[DataType](StringType)(_.dataType), nullable = true)
+    })
   }
 
   /** All-strings schema (inferSchema=false path — connector.py:85-88). */
@@ -138,11 +149,7 @@ object ExcelSchema {
       opts: ExcelOptions): StructType = {
     val it = reader.rowIterator(sheet)
     val headerRow = if (opts.header && it.hasNext) Some(it.next()) else None
-    val sample = it.take(opts.inferSampleRows).toSeq
-    val width = math.max(headerRow.map(_.length).getOrElse(0),
-      if (sample.isEmpty) 0 else sample.map(_.length).max)
-    val names = columnNames(headerRow, width, opts.header)
-    if (opts.inferSchema) inferFromRows(names, sample) else allStrings(names)
+    inferSample(headerRow, it.take(opts.inferSampleRows), opts)
   }
 
   /** Merge per-file schemas (union of columns in first-seen order, types

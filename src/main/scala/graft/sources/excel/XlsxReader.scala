@@ -111,11 +111,13 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
         } else if (sc.nameIs(SheetData) && sc.selfClosing) return last
         else if (trustDimension && sc.nameIs(Dimension)) {
           while (sc.nextAttr()) if (sc.attrIs(Ref)) {
-            // "A1:H5000" → 5000; "A1" → 1
+            // "A1:H5000" → 5000; "A1" → 1. A row that is no int or lies
+            // past the sheet cap is ignored: the counting scan goes on
             val ref = sc.value
             val lastCell = ref.substring(ref.indexOf(':') + 1)
             val digits = lastCell.dropWhile(_.isLetter)
-            if (digits.nonEmpty && digits.forall(_.isDigit)) return digits.toInt
+            val row = if (digits.forall(_.isDigit)) digits.toIntOption else None
+            if (row.exists(_ <= XlsxWriter.MaxRowsPerSheet)) return row.get
           }
         }
       }

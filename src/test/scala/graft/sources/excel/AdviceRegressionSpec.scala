@@ -283,7 +283,7 @@ class AdviceRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("case-insensitively colliding routing values are rejected") {
     import spark.implicits._
     val dir = tmpDir()
-    // same task sees both → fails at the offending row
+    // one task sees both → the driver commit catches the collision
     val e = intercept[Exception] {
       Seq((1, "East"), (2, "east")).toDF("id", "region")
         .coalesce(1).write.format("excel").option("sheetColumn", "region")

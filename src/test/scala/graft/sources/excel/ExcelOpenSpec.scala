@@ -3,19 +3,24 @@ package graft.sources.excel
 import java.io.{File, FileOutputStream}
 import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{FutureTask, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.SparkException
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The local file system under its own scheme: a file system that is not
   * `file:`, so the connector opens workbooks from it through a temp copy,
-  * as from hdfs or s3. Counts its directory listings. */
+  * as from hdfs or s3. Counts its directory listings, and gauges how many
+  * opens are in flight at once; `openDelayMs` stands in for the latency of
+  * a remote open. */
 class SchemeLocalFileSystem extends RawLocalFileSystem {
   override def getScheme: String = SchemeLocalFileSystem.Scheme
   override def getUri: URI = URI.create(s"${SchemeLocalFileSystem.Scheme}:///")
@@ -23,16 +28,28 @@ class SchemeLocalFileSystem extends RawLocalFileSystem {
     SchemeLocalFileSystem.listings.incrementAndGet()
     super.listStatus(f)
   }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    import SchemeLocalFileSystem._
+    maxOpensInFlight.accumulateAndGet(opensInFlight.incrementAndGet(), math.max)
+    try {
+      Thread.sleep(openDelayMs)
+      super.open(f, bufferSize)
+    } finally opensInFlight.decrementAndGet()
+  }
 }
 
 object SchemeLocalFileSystem {
   val Scheme = "graftlocal"
   val listings = new AtomicInteger
+  val opensInFlight = new AtomicInteger
+  val maxOpensInFlight = new AtomicInteger
+  @volatile var openDelayMs = 0L
 }
 
 /** Opening workbooks: the temp copy of a workbook that is not on the local
-  * file system, the handles and copies a failed read leaves behind, and
-  * how often a scan lists its path. */
+  * file system, the handles and copies a failed read leaves behind, how
+  * often a scan lists its path, and the driver prober that opens inference
+  * samples and split probes many at a time. */
 class ExcelOpenSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = {
@@ -180,5 +197,85 @@ class ExcelOpenSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(messages(e).contains("(sheet columns: id, name, score)"), messages(e))
       assert(!messages(e).contains("Unnamed"), messages(e))
     } finally deleteTree(dir)
+  }
+
+  /** `n` workbooks named f00.xlsx, f01.xlsx, … in listing order; workbook
+    * `i` has the columns `id` and `c<i>`, and earlier ones have more rows,
+    * so their probes tend to finish last. */
+  private def columnPerFile(dir: File, n: Int): Seq[File] = (0 until n).map { i =>
+    val f = new File(dir, f"f$i%02d.xlsx")
+    val w = new XlsxWriter(new FileOutputStream(f), "S")
+    w.writeRow(Seq("id", s"c$i"))
+    (1 to (n - i) * 20).foreach(r => w.writeRow(Seq(if (i % 3 == 0) r + 0.5 else r.toLong, r.toLong)))
+    w.close()
+    f
+  }
+
+  test("parallel inference merges the sample files' schemas in listing order") {
+    val dir = tempDir()
+    try {
+      val files = columnPerFile(dir, 24)
+      val opts = ExcelOptions.fromMap(Map("path" -> dir.getPath, "inferSampleRows" -> "1000"))
+      val serial = ExcelSchema.merge(files.map(f =>
+        ExcelSchema.inferFromFile(f.toURI.toString, opts, new Configuration())))
+      val inferred = spark.read.format("excel").option("inferSampleFiles", "24")
+        .option("inferSampleRows", "1000").load(remote(dir)).schema
+      assert(inferred.fieldNames.toSeq == "id" +: (0 until 24).map(i => s"c$i"))
+      assert(inferred("id").dataType == DoubleType)
+      assert(inferred == serial)
+    } finally deleteTree(dir)
+  }
+
+  test("parallel inference names the first failing sample file in listing order") {
+    val dir = tempDir()
+    try {
+      val files = columnPerFile(dir, 8)
+      // #3 and #6 (1-based) are no zip at all
+      Seq(2, 5).foreach(i => java.nio.file.Files.write(files(i).toPath, "not a zip".getBytes(UTF_8)))
+      (1 to 3).foreach { _ =>
+        val e = intercept[AnalysisException](spark.read.format("excel")
+          .option("inferSampleFiles", "8").load(remote(dir)))
+        assert(e.getCondition == "UNABLE_TO_INFER_SCHEMA", e.getMessage)
+        assert(e.getMessage.contains("f02.xlsx") && !e.getMessage.contains("f05.xlsx"),
+          e.getMessage)
+      }
+    } finally deleteTree(dir)
+  }
+
+  test("inference opens its sample files on the bounded driver prober") {
+    val dir = tempDir()
+    try {
+      columnPerFile(dir, 40)
+      SchemeLocalFileSystem.maxOpensInFlight.set(0)
+      SchemeLocalFileSystem.openDelayMs = 25
+      try spark.read.format("excel").option("inferSampleFiles", "40").load(remote(dir))
+      finally SchemeLocalFileSystem.openDelayMs = 0
+      val most = SchemeLocalFileSystem.maxOpensInFlight.get
+      assert(most >= math.min(2, Runtime.getRuntime.availableProcessors()) && most <= 16,
+        s"at most $most opens in flight")
+    } finally deleteTree(dir)
+  }
+
+  test("a probe's fatal error fails the prober promptly and leaves no probe thread") {
+    def probeThreads(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("excel-probe")).toSet
+    val files = (1 to 32).map(i => s"f$i")
+    val run = new FutureTask[Throwable](() =>
+      try {
+        ExcelFiles.probeAll(files) { f =>
+          if (f == "f5") throw new StackOverflowError("deep")
+          Thread.sleep(200)
+          f
+        }
+        null
+      } catch { case t: Throwable => t })
+    val caller = new Thread(run)
+    caller.setDaemon(true)
+    caller.start()
+    val thrown = run.get(10, TimeUnit.SECONDS)
+    assert(thrown.isInstanceOf[StackOverflowError] && thrown.getMessage == "deep", thrown)
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(5)
+    while (probeThreads().exists(_.isAlive) && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(!probeThreads().exists(_.isAlive), probeThreads())
   }
 }

@@ -178,4 +178,27 @@ class ExcelSplitReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rd.rowIterator(sheet, 7, 100).isEmpty)
     } finally rd.close()
   }
+
+  test("a dimension row that is no int or lies past the row cap is ignored") {
+    val rows = (1 to 10).map(i => s"""<row r="$i"><c r="A$i"><v>$i</v></c></row>""").mkString
+    Seq("A1:A99999999999", "A1:A2000000").foreach { ref =>
+      val f = XlsxAdversarialProps.zipFile(Seq(XlsxAdversarialProps.workbookXml(),
+        "xl/worksheets/sheet1.xml" -> (
+          """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
+          s"""<dimension ref="$ref"/><sheetData>$rows</sheetData></worksheet>""").getBytes("UTF-8")))
+      try {
+        val rd = new XlsxReader(f)
+        try assert(rd.lastRowNumber(rd.sheets.head) == 10, ref) finally rd.close()
+        val opts = Map("header" -> "false", "maxRowsPerPartition" -> "3")
+        val parts = ExcelSplitPlanner.plan(Seq(f.getPath),
+          ExcelOptions.fromMap(opts + ("path" -> f.getPath)),
+          new org.apache.hadoop.conf.Configuration())
+          .map(_.asInstanceOf[ExcelInputPartition])
+        assert(parts.map(_.startRow).toSeq == Seq(1, 4, 7, 10), ref)
+        val df = spark.read.format("excel").options(opts)
+          .schema(StructType(Seq(StructField("v", LongType)))).load(f.getPath)
+        assert(df.collect().map(_.getLong(0)).sorted.toSeq == (1L to 10L), ref)
+      } finally f.delete()
+    }
+  }
 }

@@ -34,7 +34,8 @@ final class StaxSheetReader(reader: XlsxReader) {
               if (ref != null) {
                 val lastCell = ref.substring(ref.indexOf(':') + 1)
                 val digits = lastCell.dropWhile(_.isLetter)
-                if (digits.nonEmpty && digits.forall(_.isDigit)) return digits.toInt
+                val row = if (digits.forall(_.isDigit)) digits.toIntOption else None
+                if (row.exists(_ <= XlsxWriter.MaxRowsPerSheet)) return row.get
               }
             case "row" =>
               val a = attr(r, "r")
