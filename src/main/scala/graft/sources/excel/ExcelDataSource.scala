@@ -38,7 +38,7 @@ class ExcelDataSource extends TableProvider with DataSourceRegister {
       throw new org.apache.spark.sql.AnalysisException(
         errorClass = "UNABLE_TO_INFER_SCHEMA",
         messageParameters = Map("format" -> "excel"))
-    ExcelSchema.merge(ExcelFiles.probeAll(files.take(math.max(1, opts.inferSampleFiles)))(
+    ExcelSchema.merge(ExcelFiles.probeAll(files.take(opts.inferSampleFiles))(
       ExcelSchema.inferFromFile(_, opts, conf)))
   }
 

@@ -17,10 +17,32 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * case-sensitive).
   *
   * Kept as a plain lowercase-keyed Map so it serializes to executors.
+  * Every option is parsed once, when this is built (on the driver, at
+  * `load()` / `save()`), so a bad value fails there naming the option and
+  * the value. The stream-admission options (`maxFilesPerTrigger`,
+  * `maxBytesPerTrigger`, `maxFileAgeMs`) are parsed when the stream first
+  * reads them: a bad one fails the started query.
   */
 final case class ExcelOptions(options: Map[String, String]) {
 
   private def get(key: String): Option[String] = options.get(key.toLowerCase)
+
+  /** A whole number in 1..`max`, if set. */
+  private def positive(key: String, max: Long = Int.MaxValue): Option[Long] =
+    get(key).map { s =>
+      s.trim.toLongOption.filter(n => n > 0 && n <= max).getOrElse(
+        throw new IllegalArgumentException(
+          s"Option '$key' must be positive (a whole number up to $max), got '$s'"))
+    }
+
+  /** `true` or `false` in any case, if set. */
+  private def bool(key: String, default: Boolean): Boolean = get(key) match {
+    case None => default
+    case Some(s) if s.equalsIgnoreCase("true") => true
+    case Some(s) if s.equalsIgnoreCase("false") => false
+    case Some(s) => throw new IllegalArgumentException(
+      s"Option '$key' must be true or false, got '$s'")
+  }
 
   def path: String = get("path").getOrElse(
     throw new IllegalArgumentException(
@@ -39,26 +61,22 @@ final case class ExcelOptions(options: Map[String, String]) {
   /** Write-side sheet name; reference default "Sheet1". */
   def writeSheetName: String = get("sheetname").getOrElse("Sheet1")
 
-  def header: Boolean = get("header").forall(_.toBoolean)
+  val header: Boolean = bool("header", default = true)
 
-  def inferSchema: Boolean = get("inferschema").forall(_.toBoolean)
+  val inferSchema: Boolean = bool("inferSchema", default = true)
 
   /** Rows sampled per file for schema inference (extension). */
-  def inferSampleRows: Int = get("infersamplerows").map(_.toInt).getOrElse(100)
+  val inferSampleRows: Int = positive("inferSampleRows").fold(100)(_.toInt)
 
   /** Max files to probe when inferring over a directory (extension). The
     * sample files are probed min(files, cores, 16) at a time, and each probe
     * keeps O(columns) state, not its sample rows. */
-  def inferSampleFiles: Int = get("infersamplefiles").map(_.toInt).getOrElse(1)
+  val inferSampleFiles: Int = positive("inferSampleFiles").fold(1)(_.toInt)
 
   /** Streaming admission control: max new files admitted per micro-batch
     * (extension; unset = all available; must be positive, matching
     * FileStreamSource's validation). */
-  def maxFilesPerTrigger: Option[Int] = get("maxfilespertrigger").map { s =>
-    val n = s.toInt
-    require(n > 0, s"maxFilesPerTrigger must be positive, got $n")
-    n
-  }
+  lazy val maxFilesPerTrigger: Option[Int] = positive("maxFilesPerTrigger").map(_.toInt)
 
   /** Streaming admission control by VOLUME: max cumulative on-disk bytes
     * of new files admitted per micro-batch (extension, the knob
@@ -67,30 +85,25 @@ final case class ExcelOptions(options: Map[String, String]) {
     * batch sized for fifty 1 MB ones). At least one file is always
     * admitted so an oversized file can't wedge the stream. Composes with
     * `maxFilesPerTrigger`: both bounds apply. */
-  def maxBytesPerTrigger: Option[Long] = get("maxbytespertrigger").map { s =>
-    val n = s.toLong
-    require(n > 0, s"maxBytesPerTrigger must be positive, got $n")
-    n
-  }
+  lazy val maxBytesPerTrigger: Option[Long] = positive("maxBytesPerTrigger", Long.MaxValue)
 
   /** STRICT reference parity for listings: admit `.xlsx` only, erroring
     * out the `.xlsm` superset this connector otherwise accepts (the
     * reference's case-insensitive `.xlsx` suffix filter,
     * connector.py:148-156 / SURVEY B6). Default false = superset. */
-  def xlsxOnly: Boolean = get("xlsxonly").exists(_.toBoolean)
+  val xlsxOnly: Boolean = bool("xlsxOnly", default = false)
 
   /** Write-side extension: `path` is a DIRECTORY and every task writes its
     * own `part-NNNNN.xlsx` shard in parallel (atomic per-file renames at
     * commit) instead of the driver merging one workbook — the scale-out
     * write mode. The reader's directory contract consumes the output
     * as-is. Default false = the reference's single-file contract. */
-  def shardedOutput: Boolean = get("shardedoutput").exists(_.toBoolean)
+  val shardedOutput: Boolean = bool("shardedOutput", default = false)
 
   /** Descend into subdirectories when listing (extension; named after
     * Spark's file-source option; default false = the reference's one-level
     * contract). Hidden (dot/underscore) directories are never entered. */
-  def recursiveFileLookup: Boolean =
-    get("recursivefilelookup").exists(_.toBoolean)
+  val recursiveFileLookup: Boolean = bool("recursiveFileLookup", default = false)
 
   /** Row-range split size for parallel single-file reads (extension;
     * unset = the reference's 1-file-1-partition contract). When set, a
@@ -99,11 +112,7 @@ final case class ExcelOptions(options: Map[String, String]) {
     * re-parses rows 1..start) — planning probes each file's last row number (its `<dimension>`
     * header when present, a tag scan otherwise), so use it for directories
     * of few large workbooks, not thousands of small ones. */
-  def maxRowsPerPartition: Option[Int] = get("maxrowsperpartition").map { s =>
-    val n = s.toInt
-    require(n > 0, s"maxRowsPerPartition must be positive, got $n")
-    n
-  }
+  val maxRowsPerPartition: Option[Int] = positive("maxRowsPerPartition").map(_.toInt)
 
   /** Write-side extension: route each row to a sheet named by this STRING
     * column's value — the workbook analogue of `partitionBy`. The routing
@@ -115,12 +124,12 @@ final case class ExcelOptions(options: Map[String, String]) {
 
   /** Write-side style extension: render the header row bold (default
     * false = the reference's plain output). */
-  def headerBold: Boolean = get("headerbold").exists(_.toBoolean)
+  val headerBold: Boolean = bool("headerBold", default = false)
 
   /** Write-side style extension: per-column widths in characters, e.g.
     * `"id=8,name=32"` (field name = width). Unlisted columns keep Excel's
     * default width; unknown names are rejected at write planning. */
-  def columnWidths: Map[String, Double] =
+  val columnWidths: Map[String, Double] =
     get("columnwidths").map { s =>
       s.split(",").filter(_.nonEmpty).map { kv =>
         val eq = kv.lastIndexOf('=')
@@ -149,18 +158,13 @@ final case class ExcelOptions(options: Map[String, String]) {
     * FileStreamSource `maxFileAge` makes the same one): a file landing
     * with an mtime older than the window is never read. Unset = exact
     * offsets, no expiry. */
-  def maxFileAgeMs: Option[Long] = get("maxfileagems").map { s =>
-    val n = s.toLong
-    require(n > 0, s"maxFileAgeMs must be positive, got $n")
-    n
-  }
+  lazy val maxFileAgeMs: Option[Long] = positive("maxFileAgeMs", Long.MaxValue)
 
   /** When true, a schema column absent from a file reads as nulls instead
     * of erroring (extension — needed for merged multi-file schemas; default
     * false keeps the reference's strict contract, tests/
     * test_excel_connector.py:93-112). */
-  def allowMissingColumns: Boolean =
-    get("allowmissingcolumns").exists(_.toBoolean)
+  val allowMissingColumns: Boolean = bool("allowMissingColumns", default = false)
 }
 
 object ExcelOptions {

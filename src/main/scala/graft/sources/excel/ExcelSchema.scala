@@ -185,13 +185,11 @@ object ExcelSchema {
 
   private def toDays(d: LocalDate): Int = d.toEpochDay.toInt
 
-  /** Integral doubles render without ".0" — pandas/Excel convention,
-    * and what the reference's all-strings mode produces ("1" not "1.0"). */
+  /** A number's text as the writer renders it ("1" not "1.0"), which is
+    * also what the reference's all-strings mode produces. */
   def formatNumericString(d: java.lang.Double): String = {
     val v = d.doubleValue()
-    if (v == math.floor(v) && !v.isInfinite && math.abs(v) < 1e15)
-      v.toLong.toString
-    else v.toString
+    if (XlsxRowEncoder.rendersAsLong(v)) v.toLong.toString else v.toString
   }
 
   /** Convert one decoded cell to the Catalyst value for `dt`.

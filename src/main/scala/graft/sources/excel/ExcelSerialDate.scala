@@ -35,13 +35,19 @@ object ExcelSerialDate {
   def toDate(serial: Double, date1904: Boolean = false): LocalDate =
     epoch(date1904).plusDays(math.floor(serial).toLong)
 
-  def fromDateTime(dt: LocalDateTime, date1904: Boolean = false): Double = {
-    val days = java.time.temporal.ChronoUnit.DAYS
-      .between(epoch(date1904), dt.toLocalDate)
-    val millis = dt.toLocalTime.toNanoOfDay / 1000000L
-    days.toDouble + millis.toDouble / MillisPerDay
+  /** Serials of the 1900 system, floored to the millisecond. Spark's
+    * dates and timestamps (days and microseconds since 1970-01-01 UTC)
+    * convert by arithmetic alone: 1970-01-01 is day 25569. */
+  def fromEpochDay(days: Long): Double = (days + 25569L).toDouble
+
+  def fromEpochMicros(micros: Long): Double = {
+    val millis = Math.floorDiv(micros, 1000L)
+    fromEpochDay(Math.floorDiv(millis, MillisPerDay)) +
+      Math.floorMod(millis, MillisPerDay).toDouble / MillisPerDay
   }
 
-  def fromDate(d: LocalDate, date1904: Boolean = false): Double =
-    java.time.temporal.ChronoUnit.DAYS.between(epoch(date1904), d).toDouble
+  def fromDate(d: LocalDate): Double = fromEpochDay(d.toEpochDay)
+
+  def fromDateTime(dt: LocalDateTime): Double = fromEpochDay(dt.toLocalDate.toEpochDay) +
+    (dt.toLocalTime.toNanoOfDay / 1000000L).toDouble / MillisPerDay
 }

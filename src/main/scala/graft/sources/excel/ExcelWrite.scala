@@ -1,7 +1,5 @@
 package graft.sources.excel
 
-import java.time.{LocalDate, LocalDateTime, ZoneOffset}
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.broadcast.Broadcast
@@ -60,14 +58,7 @@ class ExcelWriteBuilder(schema: StructType, opts: ExcelOptions)
   override def truncate(): WriteBuilder = { this.doTruncate = true; this }
 
   override def build(): Write = {
-    schema.fields.foreach { f =>
-      f.dataType match {
-        case StringType | IntegerType | LongType | DoubleType | FloatType |
-            BooleanType | DateType | TimestampType => ()
-        case other => throw new UnsupportedOperationException(
-          s"Excel sink does not support column '${f.name}' of type $other")
-      }
-    }
+    ExcelDataWriter.cells(schema, -1) // fails on a column type the sink cannot write
     opts.sheetColumn.foreach { c =>
       require(schema.fieldNames.contains(c),
         s"sheetColumn '$c' is not in the write schema ${schema.fieldNames.mkString(", ")}")
@@ -440,47 +431,11 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
     }
   }
 
-  private def mkGetter(f: StructField, i: Int): InternalRow => Any = {
-    val g: InternalRow => Any = f.dataType match {
-      case StringType => r => r.getUTF8String(i).toString
-      case IntegerType => r => java.lang.Long.valueOf(r.getInt(i).toLong)
-      case LongType => r => java.lang.Long.valueOf(r.getLong(i))
-      case DoubleType => r => java.lang.Double.valueOf(r.getDouble(i))
-      case FloatType => r => java.lang.Double.valueOf(r.getFloat(i).toDouble)
-      case BooleanType => r => java.lang.Boolean.valueOf(r.getBoolean(i))
-      case DateType => r => LocalDate.ofEpochDay(r.getInt(i).toLong)
-      case TimestampType => r => LocalDateTime.ofInstant(
-        // microsToInstant, overflow-safe: micros*1000 as nanos overflows a
-        // Long past ~2262 even though Excel serials reach 9999
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToInstant(r.getLong(i)),
-        ZoneOffset.UTC)
-      case other => throw new UnsupportedOperationException(other.toString)
-    }
-    (r: InternalRow) => if (r.isNullAt(i)) null else g(r)
-  }
-
-  /** Getters over the DATA columns: everything except the routing column. */
-  private val getters: Array[InternalRow => Any] =
-    schema.fields.zipWithIndex
-      .filter { case (_, i) => i != sheetColIdx }
-      .map { case (f, i) => mkGetter(f, i) }
-
-  // reusable row buffer: the hot write loop allocates nothing per row
-  // beyond the boxed cell values themselves (XlsxWriter consumes the
-  // values synchronously, so handing it the same wrapper each call is safe)
-  private val rowBuf = new Array[Any](getters.length)
-  private val rowView: collection.Seq[Any] =
-    scala.collection.mutable.ArraySeq.make(rowBuf)
-
-  private def fillRowBuf(row: InternalRow): Unit = {
-    var i = 0
-    while (i < getters.length) { rowBuf(i) = getters(i)(row); i += 1 }
-  }
+  private val cells = ExcelDataWriter.cells(schema, sheetColIdx)
 
   override def write(row: InternalRow): Unit = {
     val w = if (writer != null) writer else routedWriter(row)
-    fillRowBuf(row)
-    w.writeRow(rowView)
+    w.writeSparkRow(row, cells)
     rowsWritten += 1
   }
 
@@ -522,6 +477,27 @@ class ExcelDataWriter(schema: StructType, opts: ExcelOptions, tmpDir: String,
 }
 
 object ExcelDataWriter {
+
+  /** One typed cell call per data column (every column but `skip`), built
+    * once per task from the column's Spark type: the value goes from its
+    * typed getter to the encoder without boxing, and a string as Spark's
+    * UTF-8 bytes. */
+  private[excel] def cells(schema: StructType, skip: Int): Array[XlsxRowEncoder.Cell] =
+    schema.fields.zipWithIndex.filter(_._2 != skip).map { case (f, i) =>
+      val cell: XlsxRowEncoder.Cell = f.dataType match {
+        case StringType => (w, r) => w.stringCell(r.getUTF8String(i))
+        case IntegerType => (w, r) => w.longCell(r.getInt(i))
+        case LongType => (w, r) => w.longCell(r.getLong(i))
+        case DoubleType => (w, r) => w.doubleCell(r.getDouble(i))
+        case FloatType => (w, r) => w.doubleCell(r.getFloat(i))
+        case BooleanType => (w, r) => w.boolCell(r.getBoolean(i))
+        case DateType => (w, r) => w.dateCell(r.getInt(i))
+        case TimestampType => (w, r) => w.timestampCell(r.getLong(i))
+        case other => throw new UnsupportedOperationException(
+          s"Excel sink does not support column '${f.name}' of type $other")
+      }
+      (w: XlsxRowEncoder, r: InternalRow) => if (r.isNullAt(i)) w.nullCell() else cell(w, r)
+    }
 
   /** Cap on the sheet segments one task keeps open when `sheetColumn`
     * routes rows. Each open segment holds a deflater and its buffers;

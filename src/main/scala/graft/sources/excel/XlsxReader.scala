@@ -234,7 +234,7 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
             attrs = (wanted || !sc.attrIs('r')) && sc.nextAttr()
           }
           if (wanted) {
-            val v = readCell(kind, style)
+            val v = readCell(kind, style, col)
             if (col >= cells.length)
               cells = java.util.Arrays.copyOf(cells.asInstanceOf[Array[AnyRef]],
                 math.max(col + 1, cells.length * 2)).asInstanceOf[Array[Any]]
@@ -251,8 +251,9 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
     }
 
     /** The value of the current `<c>`: its `<v>` and `<is>` children
-      * (at any depth; a formula's `<f>` is stepped over). */
-    private def readCell(kind: Int, style: Int): Any = {
+      * (at any depth; a formula's `<f>` is stepped over). A value that does
+      * not decode fails naming its cell, `col` of the current row. */
+    private def readCell(kind: Int, style: Int, col: Int): Any = {
       var v: String = null
       var inlineStr: String = null
       if (!sc.selfClosing) {
@@ -265,8 +266,14 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
           else if (sc.nameIs(F) && !sc.selfClosing) sc.skipTo(F)
         }
       }
-      decodeCell(kind, style, v, inlineStr)
+      try decodeCell(kind, style, v, inlineStr) catch {
+        case e @ (_: NumberFormatException | _: IndexOutOfBoundsException |
+            _: java.time.DateTimeException) => undecodable(col, e)
+      }
     }
+
+    private def undecodable(col: Int, e: Throwable): Nothing =
+      sc.fail(s"cell ${XlsxWriter.colName(col)}$lastRowNum does not decode ($e)", e)
 
     private def finish(): Unit = { exhausted = true; sc.close() }
 

@@ -1,10 +1,10 @@
 package graft.sources.excel
 
 import java.io.{BufferedOutputStream, InputStream, OutputStream}
-import java.nio.{ByteBuffer, CharBuffer}
-import java.nio.charset.CodingErrorAction
-import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{LocalDate, LocalDateTime}
+
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The `<row>` encoding shared by [[XlsxWriter]] (whole workbooks) and
   * [[XlsxRowSegment]] (one task's rows of a merged sheet).
@@ -21,10 +21,16 @@ import java.time.{LocalDate, LocalDateTime}
   * Excel serial numbers with a date or datetime number format; booleans as
   * `t="b"`; numbers bare.
   *
-  * Accepted cell types: String, java.lang.Boolean, numbers (Byte…Double),
-  * LocalDate / LocalDateTime, java.sql.Date / java.sql.Timestamp, null.
+  * Rows are rendered as UTF-8 bytes into one reused buffer that goes to
+  * deflate as it is, through typed cell calls: one per column for Spark's
+  * rows ([[writeSparkRow]]), or dispatched from boxed values by
+  * [[writeRow]]: String, java.lang.Boolean, numbers (Byte…Double),
+  * LocalDate / LocalDateTime, java.sql.Date / java.sql.Timestamp, null;
+  * anything else is written as its `toString`.
   */
 sealed abstract class XlsxRowEncoder {
+  import XlsxRowEncoder._
+  import XlsxWriter.{MaxCellChars, MaxColsPerSheet, MaxRowsPerSheet, colName, rowLimitExceeded}
 
   /** The sheet named in limit errors. */
   protected def sheetLabel: String
@@ -36,121 +42,195 @@ sealed abstract class XlsxRowEncoder {
   /** Compressed bytes written so far (final once closed). */
   def bytesWritten: Long
 
-  protected val sheet = new java.lang.StringBuilder(1 << 16)
+  protected val sheet = new ByteBuilder
   protected var rowNum = 0
+  private var rowStart = 0 // where the open row's bytes begin in `sheet`
+  private var col = 0 // cells of the open row so far, nulls included
+  private var nulls = 0 // interior nulls not yet written: only a later value does
+  private var strOpen = StrOpen // the open row's string cell start: bold in a header
+  private val digits = new java.lang.StringBuilder(32)
 
   /** Append one row; values per the accepted cell types above. */
-  def writeRow(values: Iterable[Any]): Unit = writeRow(values, headerStyle = false)
+  def writeRow(values: Iterable[Any]): Unit = writeValues(values, StrOpen)
 
   /** Append a row rendered with the bold header style (style extension —
     * the data semantics are identical to [[writeRow]]). */
-  def writeHeaderRow(values: Iterable[Any]): Unit = writeRow(values, headerStyle = true)
+  def writeHeaderRow(values: Iterable[Any]): Unit = writeValues(values, BoldStrOpen)
 
-  private def writeRow(values: Iterable[Any], headerStyle: Boolean): Unit = {
-    if (rowNum >= XlsxWriter.MaxRowsPerSheet)
-      throw XlsxWriter.rowLimitExceeded(sheetLabel)
-    rowNum += 1
-    val rowStart = sheet.length
-    val strOpen =
-      if (headerStyle) "<c s=\"3\" t=\"inlineStr\"><is><t xml:space=\"preserve\">"
-      else XlsxWriter.InlineStrOpen
-    sheet.append("<row>")
-    var col = 0
-    var nulls = 0 // interior nulls not yet written: only a later value does
-    values.foreach { v =>
-      if (v == null) nulls += 1
-      else {
-        while (nulls > 0) { sheet.append("<c/>"); nulls -= 1 }
-        v match {
-          case s: String => strCell(strOpen, s, col, rowStart)
-          case b: java.lang.Boolean =>
-            sheet.append(if (b) "<c t=\"b\"><v>1</v></c>" else "<c t=\"b\"><v>0</v></c>")
-          case d: LocalDate => numCell(ExcelSerialDate.fromDate(d), style = 1)
-          case dt: LocalDateTime => numCell(ExcelSerialDate.fromDateTime(dt), style = 2)
-          case d: java.sql.Date =>
-            numCell(ExcelSerialDate.fromDate(d.toLocalDate), style = 1)
-          case ts: java.sql.Timestamp =>
-            numCell(ExcelSerialDate.fromDateTime(ts.toLocalDateTime), style = 2)
-          case n: java.lang.Number =>
-            sheet.append("<c><v>")
-            appendNumber(n)
-            sheet.append("</v></c>")
-          case other =>
-            strCell(XlsxWriter.InlineStrOpen, other.toString, col, rowStart)
-        }
-      }
-      col += 1
+  /** Append a Spark row: one typed cell call per data column, as built by
+    * [[ExcelDataWriter.cells]]. */
+  def writeSparkRow(row: InternalRow, cells: Array[XlsxRowEncoder.Cell]): Unit = {
+    beginRow(StrOpen)
+    var i = 0
+    while (i < cells.length) { cells(i)(this, row); i += 1 }
+    endRow()
+  }
+
+  private def writeValues(values: Iterable[Any], stringOpen: String): Unit = {
+    beginRow(stringOpen)
+    values.foreach {
+      case null => nullCell()
+      case s: String => stringCell(UTF8String.fromString(s))
+      case b: java.lang.Boolean => boolCell(b)
+      case d: LocalDate => numCell(DateOpen, doubleText(ExcelSerialDate.fromDate(d)))
+      case d: LocalDateTime => numCell(DateTimeOpen, doubleText(ExcelSerialDate.fromDateTime(d)))
+      case d: java.sql.Date =>
+        numCell(DateOpen, doubleText(ExcelSerialDate.fromDate(d.toLocalDate)))
+      case t: java.sql.Timestamp =>
+        numCell(DateTimeOpen, doubleText(ExcelSerialDate.fromDateTime(t.toLocalDateTime)))
+      case i: java.lang.Integer => longCell(i.longValue)
+      case l: java.lang.Long => longCell(l)
+      case d: java.lang.Double => doubleCell(d)
+      case f: java.lang.Float => doubleCell(f.doubleValue)
+      case n: java.lang.Number => numCell(NumOpen, n.toString)
+      case other => strCell(UTF8String.fromString(other.toString), StrOpen)
     }
-    if (col > XlsxWriter.MaxColsPerSheet)
-      failRow(rowStart,
-        s"Excel column limit exceeded: row $rowNum of sheet " +
-          s"'$sheetLabel' has $col cells but the xlsx format caps a " +
-          s"sheet at ${XlsxWriter.MaxColsPerSheet} columns (Excel refuses " +
-          "to open wider sheets).")
-    sheet.append("</row>")
+    endRow()
+  }
+
+  private def beginRow(stringOpen: String): Unit = {
+    if (rowNum >= MaxRowsPerSheet) throw rowLimitExceeded(sheetLabel)
+    rowNum += 1
+    rowStart = sheet.length
+    col = 0
+    nulls = 0
+    strOpen = stringOpen
+    sheet.appendAscii("<row>")
+  }
+
+  private def endRow(): Unit = {
+    if (col > MaxColsPerSheet)
+      failRow(s"Excel column limit exceeded: row $rowNum of sheet " +
+        s"'$sheetLabel' has $col cells but the xlsx format caps a " +
+        s"sheet at $MaxColsPerSheet columns (Excel refuses " +
+        "to open wider sheets).")
+    sheet.appendAscii("</row>")
     if (sheet.length > (1 << 16)) flushSheet()
   }
 
   /** Drop the partly written row, so the writer stays usable, and fail. */
-  private def failRow(rowStart: Int, msg: String): Nothing = {
-    sheet.setLength(rowStart)
+  private def failRow(msg: String): Nothing = {
+    sheet.length = rowStart
     rowNum -= 1
     throw new org.apache.spark.SparkException(msg)
   }
 
-  private def strCell(open: String, s: String, col: Int, rowStart: Int): Unit = {
-    if (s.length > XlsxWriter.MaxCellChars)
-      failRow(rowStart,
-        s"Excel cell limit exceeded: column ${XlsxWriter.colName(col)} " +
-          s"(${col + 1}) of row $rowNum in sheet '$sheetLabel' holds " +
-          s"${s.length} characters but an xlsx cell caps text at " +
-          s"${XlsxWriter.MaxCellChars} (Excel truncates or refuses longer " +
-          "cells). Truncate the column upstream (e.g. substring) or write " +
-          "parquet instead.")
-    sheet.append(open)
-    XlsxWriter.appendEscaped(sheet, s)
-    sheet.append("</t></is></c>")
+  /** Starts the next non-null cell, writing the interior nulls before it. */
+  private def openCell(open: String): Unit = {
+    while (nulls > 0) { sheet.appendAscii("<c/>"); nulls -= 1 }
+    sheet.appendAscii(open)
+    col += 1
   }
 
-  private def numCell(serial: Double, style: Int): Unit = {
-    sheet.append("<c s=\"").append(style).append("\"><v>")
-    appendDouble(serial)
-    sheet.append("</v></c>")
+  // ---------------------------------------------------- typed cell calls
+
+  def nullCell(): Unit = { nulls += 1; col += 1 }
+
+  def stringCell(s: UTF8String): Unit = strCell(s, strOpen)
+
+  def longCell(v: Long): Unit = { digits.setLength(0); numCell(NumOpen, digits.append(v)) }
+
+  def doubleCell(v: Double): Unit = numCell(NumOpen, doubleText(v))
+
+  def boolCell(v: Boolean): Unit =
+    openCell(if (v) "<c t=\"b\"><v>1</v></c>" else "<c t=\"b\"><v>0</v></c>")
+
+  /** A Spark date: days since 1970-01-01. */
+  def dateCell(days: Int): Unit =
+    numCell(DateOpen, doubleText(ExcelSerialDate.fromEpochDay(days)))
+
+  /** A Spark timestamp: microseconds since 1970-01-01 UTC. */
+  def timestampCell(micros: Long): Unit =
+    numCell(DateTimeOpen, doubleText(ExcelSerialDate.fromEpochMicros(micros)))
+
+  private def strCell(s: UTF8String, open: String): Unit = {
+    // a cell's UTF-16 length never exceeds its UTF-8 length
+    if (s.numBytes > MaxCellChars && s.toString.length > MaxCellChars)
+      failRow(s"Excel cell limit exceeded: column ${colName(col)} " +
+        s"(${col + 1}) of row $rowNum in sheet '$sheetLabel' holds " +
+        s"${s.toString.length} characters but an xlsx cell caps text at " +
+        s"$MaxCellChars (Excel truncates or refuses longer " +
+        "cells). Truncate the column upstream (e.g. substring) or write " +
+        "parquet instead.")
+    openCell(open)
+    appendEscaped(sheet, s)
+    sheet.appendAscii("</t></is></c>")
   }
 
-  /** Integral numbers without a trailing `.0` (Excel convention; also what
-    * pandas emits for int columns). */
-  private def appendNumber(n: java.lang.Number): Unit = n match {
-    case d: java.lang.Double => appendDouble(d)
-    case f: java.lang.Float => appendDouble(f.doubleValue())
-    case l: java.lang.Long => sheet.append(l.longValue())
-    case i: java.lang.Integer => sheet.append(i.intValue())
-    case other => sheet.append(other.toString)
+  private def numCell(open: String, text: CharSequence): Unit = {
+    openCell(open)
+    sheet.appendAscii(text)
+    sheet.appendAscii("</v></c>")
   }
 
-  private def appendDouble(d: Double): Unit =
-    if (d == math.floor(d) && !d.isInfinite && math.abs(d) < 1e15)
-      sheet.append(d.toLong)
-    else sheet.append(d)
-
-  // UTF-8 encoding through reused buffers, so a flush allocates no copy
-  // of the text (unpaired surrogates become '?', as in String.getBytes)
-  private val utf8 = UTF_8.newEncoder()
-    .onMalformedInput(CodingErrorAction.REPLACE)
-    .onUnmappableCharacter(CodingErrorAction.REPLACE)
-  private var chars = new Array[Char](0)
-  private var bytes = new Array[Byte](0)
+  private def doubleText(d: Double): CharSequence = {
+    digits.setLength(0)
+    if (rendersAsLong(d)) digits.append(d.toLong) else digits.append(d)
+  }
 
   protected def flushSheet(): Unit = if (sheet.length > 0) {
-    val n = sheet.length
-    if (chars.length < n) { chars = new Array[Char](n); bytes = new Array[Byte](3 * n) }
-    sheet.getChars(0, n, chars, 0)
-    val out = ByteBuffer.wrap(bytes)
-    utf8.reset()
-    utf8.encode(CharBuffer.wrap(chars, 0, n), out, true)
-    utf8.flush(out)
-    emit(bytes, out.position())
-    sheet.setLength(0)
+    emit(sheet.bytes, sheet.length)
+    sheet.reset()
+  }
+}
+
+object XlsxRowEncoder {
+  /** One column's typed cell call: reads the column from the row and
+    * hands it to the encoder. */
+  type Cell = (XlsxRowEncoder, InternalRow) => Unit
+
+  private final val StrOpen = "<c t=\"inlineStr\"><is><t xml:space=\"preserve\">"
+  private final val BoldStrOpen = "<c s=\"3\" t=\"inlineStr\"><is><t xml:space=\"preserve\">"
+  private final val NumOpen = "<c><v>"
+  private final val DateOpen = "<c s=\"1\"><v>" // style 1: builtin date
+  private final val DateTimeOpen = "<c s=\"2\"><v>" // style 2: builtin datetime
+
+  /** Integral doubles under 1e15 render without ".0" (Excel convention;
+    * also what pandas emits for int columns): the writer's number cells
+    * and a number read back as a string both keep this text. */
+  private[excel] def rendersAsLong(d: Double): Boolean =
+    d == math.floor(d) && math.abs(d) < 1e15
+
+  /** `s` escaped for element text or an attribute value. */
+  private[excel] def escaped(s: String): String = {
+    val b = new ByteBuilder
+    appendEscaped(b, UTF8String.fromString(s))
+    b.utf8
+  }
+
+  /** Appends `s` escaped as XML text, byte by byte: `&`, `<`, `>`, `"` and
+    * CR become references, other C0 controls but tab and LF become OOXML's
+    * `_xHHHH_`, and the `_` of a literal `_xHHHH_` becomes `_x005F_` so the
+    * text does not decode as a character. Invalid UTF-8 is written as
+    * `toString` decodes it (each bad sequence as U+FFFD). */
+  private[excel] def appendEscaped(out: ByteBuilder, utf8: UTF8String): Unit = {
+    val s = if (utf8.isValid) utf8 else UTF8String.fromString(utf8.toString)
+    var i = 0
+    while (i < s.numBytes) {
+      val c = s.getByte(i)
+      if (c >= '?' && c != '_' || c < 0) out += c // the common case, and non-ASCII
+      else c.toChar match {
+        case '&' => out.appendAscii("&amp;")
+        case '<' => out.appendAscii("&lt;")
+        case '>' => out.appendAscii("&gt;")
+        case '"' => out.appendAscii("&quot;")
+        case '\r' => out.appendAscii("&#13;") // a literal CR would read back as LF
+        case '_' if looksLikeEscape(s, i) => out.appendAscii("_x005F_")
+        case ch if ch < ' ' && ch != '\t' && ch != '\n' => out.appendAscii(f"_x${c.toInt}%04X_")
+        case _ => out += c
+      }
+      i += 1
+    }
+  }
+
+  /** Is byte `i` of `s` the `_` of a literal `_xHHHH_`? */
+  private def looksLikeEscape(s: UTF8String, i: Int): Boolean = {
+    def hex(j: Int): Boolean = {
+      val c = s.getByte(j)
+      (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
+    }
+    i + 6 < s.numBytes && s.getByte(i + 1) == 'x' && s.getByte(i + 6) == '_' &&
+      hex(i + 2) && hex(i + 3) && hex(i + 4) && hex(i + 5)
   }
 }
 
@@ -243,22 +323,21 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
 
   private def startSheetStream(): Unit = {
     zip.beginEntry(s"xl/worksheets/sheet${sheetNames.length}.xml")
-    sheet.append("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""")
-      .append("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""")
+    sheet.appendAscii("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>""" +
+      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""")
     if (columnWidths.nonEmpty) {
-      sheet.append("<cols>")
+      sheet.appendAscii("<cols>")
       columnWidths.sortBy(_._1).foreach { case (idx, w) =>
-        sheet.append("<col min=\"").append(idx + 1).append("\" max=\"")
-          .append(idx + 1).append("\" width=\"").append(w)
-          .append("\" customWidth=\"1\"/>")
+        sheet.appendAscii(
+          s"""<col min="${idx + 1}" max="${idx + 1}" width="$w" customWidth="1"/>""")
       }
-      sheet.append("</cols>")
+      sheet.appendAscii("</cols>")
     }
-    sheet.append("<sheetData>")
+    sheet.appendAscii("<sheetData>")
   }
 
   private def endSheetStream(): Unit = {
-    sheet.append("</sheetData></worksheet>")
+    sheet.appendAscii("</sheetData></worksheet>")
     endPiece(last = true)
     zip.endEntry(partCrc, partBytes)
     partCrc = 0L
@@ -307,7 +386,7 @@ final class XlsxWriter(out: OutputStream, sheetName: String = "Sheet1",
          |<Override PartName="/xl/styles.xml" ContentType="application/vnd.openxmlformats-officedocument.spreadsheetml.styles+xml"/>
          |</Types>""".stripMargin)
     val sheetsXml = sheetNames.zipWithIndex.map { case (n, i) =>
-      s"""<sheet name="${XlsxWriter.escapeXml(n)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
+      s"""<sheet name="${XlsxRowEncoder.escaped(n)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
     }.mkString
     zip.entry("xl/workbook.xml",
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
@@ -395,40 +474,5 @@ object XlsxWriter {
       i = (i - 1) / 26
     }
     sb.toString
-  }
-
-  private[excel] val InlineStrOpen = "<c t=\"inlineStr\"><is><t xml:space=\"preserve\">"
-
-  private def escapeXml(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length + 16)
-    appendEscaped(sb, s)
-    sb.toString
-  }
-
-  /** Is s(i) the start of a literal `_xHHHH_` sequence? */
-  private def looksLikeEscape(s: String, i: Int): Boolean =
-    i + 6 < s.length && s.charAt(i + 1) == 'x' && s.charAt(i + 6) == '_' &&
-      (i + 2 until i + 6).forall { j =>
-        val c = s.charAt(j)
-        (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F')
-      }
-
-  private[excel] def appendEscaped(sb: java.lang.StringBuilder, s: String): Unit = {
-    var i = 0
-    while (i < s.length) {
-      s.charAt(i) match {
-        case '<' => sb.append("&lt;")
-        case '>' => sb.append("&gt;")
-        case '&' => sb.append("&amp;")
-        case '"' => sb.append("&quot;")
-        case '\r' => sb.append("&#13;") // literal CR would be normalized to LF
-        case c if c < ' ' && c != '\t' && c != '\n' =>
-          sb.append("_x").append(f"${c.toInt}%04X").append('_')
-        case '_' if looksLikeEscape(s, i) =>
-          sb.append("_x005F_") // literal "_xHHHH_" text must not decode as a char
-        case c => sb.append(c)
-      }
-      i += 1
-    }
   }
 }

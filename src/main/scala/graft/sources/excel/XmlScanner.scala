@@ -56,8 +56,10 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
 
   detectEncoding()
 
-  def fail(what: String): Nothing =
-    throw new org.apache.spark.SparkException(s"Malformed XML: $what in ${where()}")
+  def fail(what: String): Nothing = fail(what, null)
+
+  def fail(what: String, cause: Throwable): Nothing =
+    throw new org.apache.spark.SparkException(s"Malformed XML: $what in ${where()}", cause)
 
   def truncated(): Nothing =
     throw new org.apache.spark.SparkException(
@@ -545,12 +547,21 @@ private[excel] object XmlScanner {
   }
 }
 
-/** A growable byte array: decoded text on its way to a `String`. */
+/** A growable byte array: decoded text on its way to a `String`, and a
+  * sheet's encoded XML on its way to deflate. */
 private[excel] final class ByteBuilder {
   var bytes = new Array[Byte](256)
   var length = 0
 
   def reset(): Unit = length = 0
+
+  /** Appends ASCII text, one byte a char. */
+  def appendAscii(s: CharSequence): Unit = {
+    if (length + s.length > bytes.length) grow(length + s.length)
+    var i = 0
+    while (i < s.length) { bytes(length + i) = s.charAt(i).toByte; i += 1 }
+    length += s.length
+  }
 
   def +=(b: Byte): Unit = {
     if (length == bytes.length) grow(length + 1)

@@ -377,4 +377,45 @@ class SheetScannerSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(one(ExcelScanMetrics.SheetBytes) > 0, one)
     } finally f.delete()
   }
+
+  /** Reads `sheetXml`'s rows and returns the failure, which must name the
+    * file, the sheet, the row and the cell, and chain a `cause`. */
+  private def cellFailure(sheetXml: String, cellRef: String, row: Int,
+      cause: Class[_], extra: (String, Array[Byte])*): Unit = {
+    val f = workbook(sheetXml, extra: _*)
+    try {
+      val e = intercept[SparkException](rows(f))
+      Seq(f.getPath, "sheet 'S'", s"row $row", s"cell $cellRef").foreach(s =>
+        assert(e.getMessage.contains(s), e.getMessage))
+      assert(cause.isInstance(e.getCause), e.getCause)
+    } finally f.delete()
+  }
+
+  private val oneString = XlsxReader.SharedStringsPart ->
+    ("""<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
+      "<si><t>only</t></si></sst>").getBytes(UTF_8)
+
+  test("a shared-string index past the table names its file, sheet, row and cell") {
+    cellFailure(sheet(
+      s"""<row r="1">${str("A1", "a")}</row><row r="2"><c r="B2" t="s"><v>5</v></c></row>"""),
+      "B2", 2, classOf[IndexOutOfBoundsException], oneString)
+  }
+
+  test("a shared-string index that is not an integer names its cell") {
+    cellFailure(sheet("""<row r="3"><c r="C3" t="s"><v>x1</v></c></row>"""),
+      "C3", 3, classOf[NumberFormatException], oneString)
+  }
+
+  test("a malformed number names its cell") {
+    cellFailure(sheet(s"""<row r="1">${cell("A1", "1")}</row>""" +
+      s"""<row r="2">${cell("A2", "1")}${cell("B2", "12x")}</row>"""),
+      "B2", 2, classOf[NumberFormatException])
+  }
+
+  test("a malformed style index or ISO date names its cell") {
+    cellFailure(sheet("""<row r="4"><c r="D4" s="x1"><v>1</v></c></row>"""),
+      "D4", 4, classOf[NumberFormatException])
+    cellFailure(sheet("""<row r="2"><c r="A2" t="d"><v>2024-13-45</v></c></row>"""),
+      "A2", 2, classOf[java.time.DateTimeException])
+  }
 }
