@@ -3,7 +3,8 @@ package graft.sources.excel
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
@@ -314,12 +315,15 @@ case class ExcelPartitionReaderFactory(fullSchema: StructType,
   }
 }
 
-/** Streams one file's chosen sheet as InternalRows, converting only the
+/** Streams one file's chosen sheet as InternalRows, decoding only the
   * required columns of its row range, at most `limit` rows (-1: all).
   * Column resolution: by header name when header=true (missing required
   * column → error, matching the reference's tested intent,
   * tests/test_excel_connector.py:93-112; extra file columns are ignored,
-  * :73-91); positional when header=false. */
+  * :73-91); positional when header=false. One scan of the sheet part
+  * reads the header row (boxed, every column) and then the data rows,
+  * whose wanted cells go straight to the typed cell readers; so a row
+  * range starts after the header row, as the planner's ranges do. */
 class ExcelPartitionReader(filePath: String, fullSchema: StructType,
     requiredSchema: StructType,
     opts: ExcelOptions, limit: Int, conf: org.apache.hadoop.conf.Configuration,
@@ -335,8 +339,6 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
   private val SheetIdx = -2
   private val FilePathIdx = -3
   private val filePathIsMeta = ExcelScan.filePathIsMeta(fullSchema)
-  private val filePathValue =
-    org.apache.spark.unsafe.types.UTF8String.fromString(filePath)
 
   private val reader = ExcelSplitPlanner.open(filePath, conf)
 
@@ -345,17 +347,15 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
   // that can throw closes the workbook first
   private val resolvedSheet = reader.closeOnError(reader.resolveSheet(
     if (sheetOverride != null) sheetOverride else opts.sheetName))
-  private val sheetNameValue =
-    org.apache.spark.unsafe.types.UTF8String.fromString(resolvedSheet.name)
 
-  // the header (dense row 1) is always read through its own one-row
-  // stream, all columns; the data stream then decodes only the resolved
-  // columns of [first data row or startRow, endRowExcl)
+  private val scan = reader.closeOnError(reader.rowScan(resolvedSheet))
+
+  // the header is dense row 1, every column, boxed
   private val headerRow: Option[Array[Any]] =
     if (!opts.header) None
     else reader.closeOnError {
-      val it = reader.rowIterator(resolvedSheet, 1, 2)
-      if (it.hasNext) Some(it.next()) else None
+      val cells = new BoxedCells(reader)
+      if (scan.next(1, 2, null, cells)) Some(cells.row(scan.width)) else None
     }
 
   private val indices: Array[Int] = reader.closeOnError {
@@ -388,44 +388,243 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
     }
   }
 
-  private val rowIter: Iterator[Array[Any]] = reader.closeOnError {
-    val columns = new Array[Boolean](indices.foldLeft(0)((w, i) => math.max(w, i + 1)))
-    indices.foreach(i => if (i >= 0) columns(i) = true)
-    val dataStart = if (opts.header) 2 else 1
-    val it = reader.rowIterator(resolvedSheet, if (ranged) startRow else dataStart,
-      if (ranged) endRowExcl else Int.MaxValue, columns)
-    if (limit >= 0) it.take(limit) else it
+  // `_sheet` and `_file_path` are the same in every row of the partition
+  private def utf8(s: String) =
+    org.apache.spark.unsafe.types.UTF8String.fromBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  private val cells = new TypedCells(reader, requiredSchema, indices, indices.map {
+    case SheetIdx => utf8(resolvedSheet.name)
+    case FilePathIdx => utf8(filePath)
+    case _ => null
+  })
+
+  private val columns = {
+    val mask = new Array[Boolean](indices.foldLeft(0)((w, i) => math.max(w, i + 1)))
+    indices.foreach(i => if (i >= 0) mask(i) = true)
+    mask
   }
-  private var current: InternalRow = _
+  private val from = if (ranged) startRow else if (opts.header) 2 else 1
+  private val until = if (ranged) endRowExcl else Int.MaxValue
+  private var left = if (limit >= 0) limit.toLong else Long.MaxValue
 
   override def next(): Boolean = {
-    if (!rowIter.hasNext) return false
-    val raw = rowIter.next()
-    val values = new Array[Any](requiredSchema.length)
-    var i = 0
-    while (i < indices.length) {
-      val src = indices(i)
-      if (src == SheetIdx) {
-        values(i) = sheetNameValue
-      } else if (src == FilePathIdx) {
-        values(i) = filePathValue
-      } else {
-        val cell = if (src >= 0 && src < raw.length) raw(src) else null
-        values(i) = ExcelSchema.convert(cell, requiredSchema.fields(i).dataType,
-          reader.date1904)
-      }
-      i += 1
-    }
-    current = new GenericInternalRow(values)
+    if (left == 0) return false
+    cells.startRow()
+    if (!scan.next(from, until, columns, cells)) return false
+    cells.endRow()
+    left -= 1
     true
   }
 
-  override def get(): InternalRow = current
+  override def get(): InternalRow = cells.row
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
     ExcelScanMetrics.values(reader.counters)
 
   override def close(): Unit = reader.close()
+}
+
+/** The typed cell readers of one partition, one per required column,
+  * chosen once from the column's Spark type: each writes a cell's kind,
+  * style and UTF-8 text straight into one reused `UnsafeRow`, and a column
+  * the row did not fill reads as null. `sources(o)` is the sheet column
+  * column `o` reads (-1: none); a non-null `constants(o)` fills it in every
+  * row instead.
+  *
+  * Lenient like the pandas→Spark path: sensible coercions happen,
+  * impossible ones yield null. A raw serial read as a timestamp counts
+  * from the workbook's epoch (`date1904`). The rarely used pairs (number
+  * or date → string, string → number, date or timestamp) go through a
+  * `String`. */
+private[excel] final class TypedCells(reader: XlsxReader, schema: StructType,
+    sources: Array[Int], constants: Array[org.apache.spark.unsafe.types.UTF8String])
+    extends CellSink {
+  import TypedCells._
+  import XlsxReader._
+
+  private val n = schema.length
+  private val types = schema.fields.map(f => typeOf(f.dataType))
+  private val date1904 = reader.date1904
+  private val writer = new UnsafeRowWriter(n, 64)
+  // the first column reading each sheet column, and the next one reading
+  // the same sheet column (-1: none)
+  private val firstOf = Array.fill(sources.foldLeft(0)((w, i) => math.max(w, i + 1)))(-1)
+  private val nextOf = Array.fill(n)(-1)
+  (n - 1 to 0 by -1).foreach { o =>
+    val src = sources(o)
+    if (src >= 0) { nextOf(o) = firstOf(src); firstOf(src) = o }
+  }
+  private val filled = new Array[Int](n) // the row number a column was last given a value in
+  private var rowNo = 0
+  private val unescaped = new ByteBuilder
+
+  def startRow(): Unit = {
+    rowNo += 1
+    writer.reset()
+    writer.zeroOutNullBytes()
+  }
+
+  /** Fills the constant columns and sets every column this row gave no
+    * value to null. */
+  def endRow(): Unit = {
+    var o = 0
+    while (o < n) {
+      if (constants(o) != null) writer.write(o, constants(o))
+      else if (filled(o) != rowNo) writer.setNullAt(o)
+      o += 1
+    }
+  }
+
+  def row: UnsafeRow = writer.getRow
+
+  override def cell(col: Int, kind: Int, style: Int, text: ByteBuilder): Unit = {
+    var o = if (col < firstOf.length) firstOf(col) else -1
+    while (o >= 0) {
+      filled(o) = 0
+      if (text != null) read(o, kind, style, text)
+      o = nextOf(o)
+    }
+  }
+
+  private def read(o: Int, kind: Int, style: Int, t: ByteBuilder): Unit = kind match {
+    case CellNumber =>
+      if (t.length > 0) {
+        val d = parseNumber(t.bytes, 0, t.length)
+        val dateKind = reader.styleKind(style)
+        if (dateKind == DateKind.None) number(o, d)
+        else if (dateKind == DateKind.DateOnly && d == math.floor(d))
+          date(o, ExcelSerialDate.epochDay(d, date1904), -1L)
+        else date(o, ExcelSerialDate.dateTimeDay(d, date1904), ExcelSerialDate.millisOfDay(d))
+      }
+    case CellInline | CellStr =>
+      val u = unescapedUtf8(t, unescaped)
+      text(o, u.bytes, u.length)
+    case CellShared =>
+      val s = reader.sharedString(parseIndex(t))
+      if (types(o) == TString) { writer.write(o, s); filled(o) = rowNo }
+      else { val b = s.getBytes; text(o, b, b.length) }
+    case CellBool => bool(o, isTrue(t))
+    case CellDate => isoDate(t) match {
+      case null => ()
+      case d: java.time.LocalDate => date(o, d.toEpochDay, -1L)
+      case dt: java.time.LocalDateTime => isoDateTime(o, dt)
+    }
+    case _ => () // an error cell (#DIV/0! …) reads as null
+  }
+
+  private def number(o: Int, d: Double): Unit = types(o) match {
+    case TInt => put(o); writer.write(o, d.toInt)
+    case TLong => put(o); writer.write(o, d.toLong)
+    case TDouble => put(o); writer.write(o, d)
+    case TFloat => put(o); writer.write(o, d.toFloat)
+    case TBool => put(o); writer.write(o, d != 0.0)
+    case TString => ascii(o, ExcelSchema.formatNumber(d))
+    case TTimestamp => // a raw serial under an explicit timestamp schema
+      put(o)
+      writer.write(o, ExcelSerialDate.epochMicros(ExcelSerialDate.dateTimeDay(d, date1904),
+        ExcelSerialDate.millisOfDay(d)))
+    case TDate => ()
+    case _ => unsupported(o)
+  }
+
+  /** A date (`millisOfDay` -1) or date-time value. */
+  private def date(o: Int, day: Long, millisOfDay: Long): Unit = types(o) match {
+    case TDate => put(o); writer.write(o, day.toInt)
+    case TTimestamp => put(o); writer.write(o, ExcelSerialDate.epochMicros(day, math.max(0L, millisOfDay)))
+    case TString =>
+      val d = java.time.LocalDate.ofEpochDay(day)
+      ascii(o, if (millisOfDay < 0) d.toString
+        else d.atTime(java.time.LocalTime.ofNanoOfDay(millisOfDay * 1000000L)).toString.replace('T', ' '))
+    case TOther => unsupported(o)
+    case _ => ()
+  }
+
+  /** An ISO date-time cell, which may carry nanoseconds. */
+  private def isoDateTime(o: Int, dt: java.time.LocalDateTime): Unit = types(o) match {
+    case TDate => put(o); writer.write(o, dt.toLocalDate.toEpochDay.toInt)
+    case TTimestamp => put(o); writer.write(o, micros(dt))
+    case TString => ascii(o, dt.toString.replace('T', ' '))
+    case TOther => unsupported(o)
+    case _ => ()
+  }
+
+  private def bool(o: Int, b: Boolean): Unit = types(o) match {
+    case TBool => put(o); writer.write(o, b)
+    case TInt => put(o); writer.write(o, if (b) 1 else 0)
+    case TLong => put(o); writer.write(o, if (b) 1L else 0L)
+    case TDouble => put(o); writer.write(o, if (b) 1.0 else 0.0)
+    case TFloat => put(o); writer.write(o, if (b) 1.0f else 0.0f)
+    case TString => ascii(o, if (b) "True" else "False") // pandas str()
+    case TOther => unsupported(o)
+    case _ => ()
+  }
+
+  /** String text (UTF-8 `b[0, len)`, escapes decoded). */
+  private def text(o: Int, b: Array[Byte], len: Int): Unit = types(o) match {
+    case TString => put(o); writer.write(o, b, 0, len)
+    case TOther => unsupported(o)
+    case t =>
+      val s = new String(b, 0, len, java.nio.charset.StandardCharsets.UTF_8).trim
+      t match {
+        case TInt | TLong | TDouble | TFloat =>
+          try number(o, java.lang.Double.parseDouble(s))
+          catch { case _: NumberFormatException => () }
+        case TBool =>
+          val l = s.toLowerCase
+          if (l == "true" || l == "1") bool(o, b = true)
+          else if (l == "false" || l == "0") bool(o, b = false)
+        case TDate =>
+          try { val d = java.time.LocalDate.parse(s).toEpochDay.toInt; put(o); writer.write(o, d) }
+          catch { case _: Exception => () }
+        case _ =>
+          try { val m = micros(java.time.LocalDateTime.parse(s.replace(' ', 'T'))); put(o); writer.write(o, m) }
+          catch { case _: Exception => () }
+      }
+  }
+
+  private def put(o: Int): Unit = filled(o) = rowNo
+
+  private def ascii(o: Int, s: String): Unit = {
+    put(o)
+    writer.write(o, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** Excel wall-clock datetimes carry no zone; read as UTC (the session
+    * zone in this project's builds). */
+  private def micros(dt: java.time.LocalDateTime): Long =
+    org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(
+      dt.toInstant(java.time.ZoneOffset.UTC))
+
+  private def unsupported(o: Int): Nothing =
+    throw new UnsupportedOperationException(
+      s"Excel source does not support type ${schema(o).dataType} " +
+        "(supported: string, int, bigint, double, float, boolean, date, timestamp)")
+}
+
+private object TypedCells {
+  final val TString = 0
+  final val TInt = 1
+  final val TLong = 2
+  final val TDouble = 3
+  final val TFloat = 4
+  final val TBool = 5
+  final val TDate = 6
+  final val TTimestamp = 7
+  final val TOther = 8
+
+  def typeOf(dt: org.apache.spark.sql.types.DataType): Int = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case StringType => TString
+      case IntegerType => TInt
+      case LongType => TLong
+      case DoubleType => TDouble
+      case FloatType => TFloat
+      case BooleanType => TBool
+      case DateType => TDate
+      case TimestampType => TTimestamp
+      case _ => TOther
+    }
+  }
 }
 
 /** DSv2 scan metrics, summed over a scan's partitions: what the sheet

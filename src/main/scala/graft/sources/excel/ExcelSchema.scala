@@ -1,14 +1,13 @@
 package graft.sources.excel
 
-import java.time.{LocalDate, LocalDateTime, ZoneOffset}
+import java.time.{LocalDate, LocalDateTime}
 
 import org.apache.hadoop.conf.Configuration
 
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Schema inference + cell→Catalyst conversions.
+/** Schema inference and column naming (the scan's typed cell readers,
+  * [[TypedCells]], turn cells into Catalyst values).
   *
   * Reference type system (SURVEY.md §1.2, `/root/reference/src/
   * pyspark_datasource/excel/connector.py:23-44`): String, Integer, Double,
@@ -35,7 +34,7 @@ object ExcelSchema {
             case null => s"Unnamed: $i"
             case s: String if s.isEmpty => s"Unnamed: $i" // pandas names "" positionally too
             case s: String => s
-            case d: java.lang.Double => formatNumericString(d)
+            case d: java.lang.Double => formatNumber(d)
             case other => other.toString
           }
         }
@@ -176,93 +175,8 @@ object ExcelSchema {
     case _ => StringType
   }
 
-  // ------------------------------------------------------- value → Catalyst
-
-  /** Excel wall-clock datetimes carry no zone; interpret as UTC (the
-    * session zone in this project's builds). */
-  private def toMicros(dt: LocalDateTime): Long =
-    DateTimeUtils.instantToMicros(dt.toInstant(ZoneOffset.UTC))
-
-  private def toDays(d: LocalDate): Int = d.toEpochDay.toInt
-
   /** A number's text as the writer renders it ("1" not "1.0"), which is
     * also what the reference's all-strings mode produces. */
-  def formatNumericString(d: java.lang.Double): String = {
-    val v = d.doubleValue()
+  def formatNumber(v: Double): String =
     if (XlsxRowEncoder.rendersAsLong(v)) v.toLong.toString else v.toString
-  }
-
-  /** Convert one decoded cell to the Catalyst value for `dt`.
-    * Lenient like the pandas→Spark path: sensible coercions happen,
-    * impossible ones yield null. A raw serial read as a timestamp counts
-    * from the workbook's epoch (`date1904`). */
-  def convert(v: Any, dt: DataType, date1904: Boolean): Any = v match {
-    case null => null
-    case _ => dt match {
-      case StringType => UTF8String.fromString(v match {
-        case s: String => s
-        case d: java.lang.Double => formatNumericString(d)
-        case b: java.lang.Boolean => if (b) "True" else "False" // pandas str()
-        case d: LocalDate => d.toString
-        case t: LocalDateTime => t.toString.replace('T', ' ')
-        case other => other.toString
-      })
-      case IntegerType => v match {
-        case d: java.lang.Double => java.lang.Integer.valueOf(d.intValue())
-        case b: java.lang.Boolean => java.lang.Integer.valueOf(if (b) 1 else 0)
-        case s: String => try java.lang.Integer.valueOf(s.trim.toDouble.toInt)
-          catch { case _: NumberFormatException => null }
-        case _ => null
-      }
-      case LongType => v match {
-        case d: java.lang.Double => java.lang.Long.valueOf(d.longValue())
-        case b: java.lang.Boolean => java.lang.Long.valueOf(if (b) 1L else 0L)
-        case s: String => try java.lang.Long.valueOf(s.trim.toDouble.toLong)
-          catch { case _: NumberFormatException => null }
-        case _ => null
-      }
-      case DoubleType => v match {
-        case d: java.lang.Double => d
-        case b: java.lang.Boolean => java.lang.Double.valueOf(if (b) 1.0 else 0.0)
-        case s: String => try java.lang.Double.valueOf(s.trim.toDouble)
-          catch { case _: NumberFormatException => null }
-        case _ => null
-      }
-      case FloatType => convert(v, DoubleType, date1904) match {
-        case null => null
-        case d: java.lang.Double => java.lang.Float.valueOf(d.floatValue())
-      }
-      case BooleanType => v match {
-        case b: java.lang.Boolean => b
-        case d: java.lang.Double => java.lang.Boolean.valueOf(d.doubleValue() != 0.0)
-        case s: String =>
-          val t = s.trim.toLowerCase
-          if (t == "true" || t == "1") java.lang.Boolean.TRUE
-          else if (t == "false" || t == "0") java.lang.Boolean.FALSE
-          else null
-        case _ => null
-      }
-      case DateType => v match {
-        case d: LocalDate => java.lang.Integer.valueOf(toDays(d))
-        case t: LocalDateTime => java.lang.Integer.valueOf(toDays(t.toLocalDate))
-        case s: String => try java.lang.Integer.valueOf(toDays(LocalDate.parse(s.trim)))
-          catch { case _: Exception => null }
-        case _ => null
-      }
-      case TimestampType => v match {
-        case t: LocalDateTime => java.lang.Long.valueOf(toMicros(t))
-        case d: LocalDate => java.lang.Long.valueOf(toMicros(d.atStartOfDay))
-        case dd: java.lang.Double => // raw serial under an explicit timestamp schema
-          java.lang.Long.valueOf(toMicros(ExcelSerialDate.toDateTime(dd.doubleValue(), date1904)))
-        case s: String =>
-          try java.lang.Long.valueOf(toMicros(LocalDateTime.parse(s.trim.replace(' ', 'T'))))
-          catch { case _: Exception => null }
-        case _ => null
-      }
-      case other =>
-        throw new UnsupportedOperationException(
-          s"Excel source does not support type $other " +
-            "(supported: string, int, bigint, double, float, boolean, date, timestamp)")
-    }
-  }
 }

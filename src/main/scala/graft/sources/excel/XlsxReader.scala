@@ -1,12 +1,15 @@
 package graft.sources.excel
 
 import java.io.{File, InputStream}
+import java.nio.charset.StandardCharsets
 import java.util.zip.ZipFile
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Streaming `.xlsx` reader on JDK built-ins only — no Apache POI on the
   * classpath (SURVEY.md §7).
@@ -28,8 +31,12 @@ import org.apache.hadoop.fs.Path
   * URI; a workbook off the local file system is read from a temp copy that
   * the reader deletes when it closes, or when it fails to open.
   *
-  * Cell values surface as: `null`, `java.lang.Boolean`, `java.lang.Double`,
-  * `String`, `java.time.LocalDate` (date-only format, no time fraction) or
+  * A row scan ([[XlsxReader.RowScan]]) hands each wanted cell's kind, style
+  * and UTF-8 value text to a [[CellSink]]: the scan's typed cell readers
+  * ([[TypedCells]]) write it into Spark's row, and [[BoxedCells]] (behind
+  * `rowIterator`: inference and the header row) makes a boxed value of it:
+  * `null`, `java.lang.Boolean`, `java.lang.Double`, `String`,
+  * `java.time.LocalDate` (date-only format, no time fraction) or
   * `java.time.LocalDateTime` (any other date/time format). Sparse cells and
   * wholly skipped rows yield nulls, mirroring pandas' NaN fill.
   */
@@ -55,7 +62,9 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
   // scan that decodes no string column never touches the table
   private var sstScanner: XmlScanner = _
   private var sstDone = false
-  private val sstTable = ArrayBuffer.empty[String]
+  private val sstTable = ArrayBuffer.empty[UTF8String]
+  private val sstText = new ByteBuilder
+  private val sstUnescaped = new ByteBuilder
 
   val (sheets: Seq[Sheet], date1904: Boolean) = closeOnError(parseWorkbook(parseRels()))
   /** Each `cellXfs` style index's date kind. */
@@ -136,11 +145,13 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
     rowIterator(sheet, startRow, endRowExcl, null)
 
   /** Stream rows whose dense (1-based) row number is in
-    * [startRow, endRowExcl). Because interior gaps materialize as empty
-    * arrays, the k-th dense row IS sheet row k, so ranges over emitted
-    * positions and over sheet row numbers coincide. Rows before the range
-    * are stepped over without entering a cell, and the stream closes as
-    * soon as a row at/after endRowExcl is seen.
+    * [startRow, endRowExcl), each cell as the boxed value [[BoxedCells]]
+    * makes of it (the adapter inference and the header row read through).
+    * Because interior gaps materialize as empty arrays, the k-th dense row
+    * IS sheet row k, so ranges over emitted positions and over sheet row
+    * numbers coincide. Rows before the range are stepped over without
+    * entering a cell, and the stream closes as soon as a row at/after
+    * endRowExcl is seen.
     *
     * `columns` (null = all) is the mask of 0-based columns to decode: any
     * other cell reads as null without its value being looked at, and when
@@ -148,78 +159,110 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
     * before `</sheetData>` throws rather than reading as fewer rows. */
   def rowIterator(sheet: Sheet, startRow: Int, endRowExcl: Int,
       columns: Array[Boolean]): Iterator[Array[Any]] = {
-    val in = openPart(sheet.entry).getOrElse(
-      throw new IllegalStateException(s"Missing worksheet part ${sheet.entry}"))
-    new RowScan(in, sheet, startRow, endRowExcl, columns)
+    val scan = rowScan(sheet)
+    val cells = new BoxedCells(this)
+    new Iterator[Array[Any]] {
+      private var ahead = read()
+      private def read(): Array[Any] =
+        if (scan.next(startRow, endRowExcl, columns, cells)) cells.row(scan.width)
+        else { scan.close(); null }
+      override def hasNext: Boolean = ahead != null
+      override def next(): Array[Any] = { val out = ahead; ahead = read(); out }
+    }
   }
 
-  private final class RowScan(in: InputStream, sheet: Sheet, startRow: Int,
-      endRowExcl: Int, columns: Array[Boolean])
-      extends Iterator[Array[Any]] with AutoCloseable {
-    private var lastRowNum = 0 // 1-based row number of last seen row
+  /** A scan over the rows of `sheet`, from its first. */
+  private[excel] def rowScan(sheet: Sheet): RowScan = {
+    val in = openPart(sheet.entry).getOrElse(
+      throw new IllegalStateException(s"Missing worksheet part ${sheet.entry}"))
+    new RowScan(in, sheet)
+  }
+
+  /** One pass over a sheet part's rows in dense order: each row number the
+    * part skips reads as an empty row, so the k-th row handed out is sheet
+    * row k. Each [[next]] hands out one row of the range it is given and
+    * each of that row's wanted cells to a [[CellSink]], so one scan can
+    * read a header row, boxed, and then the data rows, typed. */
+  private[excel] final class RowScan(in: InputStream, sheet: Sheet) extends AutoCloseable {
+    private var lastRowNum = 0 // 1-based row number of the last row consumed
     private val sc = sheetScanner(in, sheet, () => lastRowNum)
     private val tags = new PartTags(sc, SheetData)
-    // null decodes every column: a mask that is all true, and true past
-    // its end too, so both modes run the same test on a cell
-    private val mask = if (columns == null) Array.fill(64)(true) else columns
-    private val pastMask = columns == null
-    private val noCells = columns != null && !columns.contains(true)
-    private var cells = new Array[Any](16) // the row being read; null past width
-    private var nextRow: Array[Any] = _
-    private var pendingGap = 0 // in-range empty rows to emit before nextRow
+    private val text = new ByteBuilder  // the value text of the cell being read
+    private val other = new ByteBuilder // a value element the cell's kind does not read
+    private var gapNext = 1             // the first row number no empty row was handed out for
+    private var pending = false         // a `<row>` met but not consumed: `pendingNum`
+    private var pendingNum = 0
+    private var pendingEmpty = false    // that `<row/>` is an empty-element tag
     private var exhausted = false
+    private var maskSeen: Array[Boolean] = _
+    private var noCells = false
 
-    advance()
+    /** One past the last column of the row last handed out (cells not
+      * asked for included); 0 for an empty row. */
+    var width = 0
 
-    private def advance(): Unit = {
-      nextRow = null
-      while (nextRow == null && pendingGap == 0 && !exhausted) {
-        if (!tags.next()) finish()
-        else if (sc.isEnd) { if (sc.nameIs(SheetData)) finish() }
+    /** Hands out the next row of [startRow, endRowExcl), false when the
+      * range holds no more. Rows before `startRow` are stepped over
+      * without entering a cell. Each cell in `columns` (null: every
+      * column) goes to `sink`; when `columns` holds no column, rows are
+      * stepped over whole. A row met at or past `endRowExcl` stays for a
+      * later call with a later range. */
+    def next(startRow: Int, endRowExcl: Int, columns: Array[Boolean], sink: CellSink): Boolean = {
+      if (columns ne maskSeen) {
+        maskSeen = columns
+        noCells = columns != null && !columns.contains(true)
+      }
+      while (true) {
+        if (!pending && (exhausted || !nextRowTag())) return false
+        // the empty rows before the row met, as far as they are in range
+        val gap = math.max(gapNext, startRow)
+        if (gap < math.min(pendingNum, endRowExcl)) {
+          gapNext = gap + 1
+          width = 0
+          return true
+        }
+        if (pendingNum >= endRowExcl) return false
+        pending = false
+        lastRowNum = pendingNum
+        gapNext = pendingNum + 1
+        if (pendingNum >= startRow && !noCells) {
+          readRow(columns, sink)
+          return true
+        }
+        if (!pendingEmpty) sc.skipTo(Row)
+        if (pendingNum >= startRow) { width = 0; return true }
+      }
+      false
+    }
+
+    /** Steps to the next `<row>`, false at the end of the sheet data. */
+    private def nextRowTag(): Boolean = {
+      while (true) {
+        if (!tags.next()) { finish(); return false }
+        if (sc.isEnd) { if (sc.nameIs(SheetData)) { finish(); return false } }
         else if (sc.nameIs(Row)) {
           counters.rows += 1
-          val rowNum = rowNumber(sc, lastRowNum)
-          if (rowNum >= endRowExcl) {
-            // emit any in-range gap before the out-of-range row, then stop
-            pendingGap = gapSize(lastRowNum, endRowExcl)
-            finish()
-          } else {
-            pendingGap = gapSize(lastRowNum, rowNum)
-            lastRowNum = rowNum
-            if (rowNum < startRow || noCells) {
-              if (!sc.selfClosing) sc.skipTo(Row)
-              if (rowNum >= startRow) nextRow = EmptyRow
-            } else nextRow = readRow()
-          }
-        } else if (sc.nameIs(SheetData) && sc.selfClosing) finish()
+          pendingEmpty = sc.selfClosing
+          pendingNum = rowNumber(sc, lastRowNum)
+          pending = true
+          return true
+        } else if (sc.nameIs(SheetData) && sc.selfClosing) { finish(); return false }
       }
+      false
     }
 
-    /** Rows strictly between lastSeen and next that fall in range. */
-    private def gapSize(lastSeen: Int, next: Int): Int = {
-      val from = math.max(lastSeen + 1, startRow)
-      val to = math.min(next - 1, endRowExcl - 1)
-      math.max(0, to - from + 1)
-    }
-
-    /** The cells of the current `<row>`; a cell whose reference repeats
+    /** The cells of the row just consumed; a cell whose reference repeats
       * an earlier column overwrites it. */
-    private def readRow(): Array[Any] = {
-      if (sc.selfClosing) return EmptyRow
-      var width = 0
+    private def readRow(columns: Array[Boolean], sink: CellSink): Unit = {
+      width = 0
+      if (pendingEmpty) return
       while (true) {
         if (!sc.nextTag()) sc.truncated()
         if (sc.isEnd) {
-          if (sc.nameIs(Row)) {
-            val row = java.util.Arrays.copyOf(cells.asInstanceOf[Array[AnyRef]], width)
-            // skipped cells widen the row without growing `cells`
-            java.util.Arrays.fill(cells.asInstanceOf[Array[AnyRef]], 0,
-              math.min(width, cells.length), null)
-            return row.asInstanceOf[Array[Any]]
-          }
+          if (sc.nameIs(Row)) return
         } else if (sc.nameIs(C)) {
           var col = width
-          var wanted = if (col < mask.length) mask(col) else pastMask
+          var wanted = columns == null || col < columns.length && columns(col)
           var kind = CellNumber
           var style = NoStyle
           var attrs = sc.nextAttr()
@@ -227,18 +270,14 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
             if (sc.attrIs('r')) {
               col = sc.columnValue
               if (col < 0) sc.fail("a cell reference without a column")
-              wanted = if (col < mask.length) mask(col) else pastMask
+              wanted = columns == null || col < columns.length && columns(col)
             } else if (sc.attrIs('t')) kind = cellKind(sc)
             else if (sc.attrIs('s')) style = sc.intValue(trim = true, BadStyle)
             // a cell not asked for needs nothing but its column
             attrs = (wanted || !sc.attrIs('r')) && sc.nextAttr()
           }
           if (wanted) {
-            val v = readCell(kind, style, col)
-            if (col >= cells.length)
-              cells = java.util.Arrays.copyOf(cells.asInstanceOf[Array[AnyRef]],
-                math.max(col + 1, cells.length * 2)).asInstanceOf[Array[Any]]
-            cells(col) = v
+            readCell(kind, style, col, sink)
             counters.cellsDecoded += 1
           } else {
             if (!sc.selfClosing) sc.skipTo(C)
@@ -247,45 +286,37 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
           width = math.max(width, col + 1)
         }
       }
-      EmptyRow
     }
 
-    /** The value of the current `<c>`: its `<v>` and `<is>` children
-      * (at any depth; a formula's `<f>` is stepped over). A value that does
-      * not decode fails naming its cell, `col` of the current row. */
-    private def readCell(kind: Int, style: Int, col: Int): Any = {
-      var v: String = null
-      var inlineStr: String = null
+    /** Hands the current `<c>` to `sink`: its value text, that of its `<is>`
+      * for an inline string and of its `<v>` for any other kind (at any
+      * depth; a formula's `<f>` is stepped over), or null when it has
+      * none. The element the kind does not read is still read, so bad
+      * markup in it fails. A value that does not decode fails naming its
+      * cell, `col` of the current row. */
+    private def readCell(kind: Int, style: Int, col: Int, sink: CellSink): Unit = {
+      var present = false
       if (!sc.selfClosing) {
-        var done = false
+        val inline = kind == CellInline
+        present = sc.plainCellValue(inline, text)
+        var done = present
         while (!done) {
           if (!sc.nextTag()) sc.truncated()
           if (sc.isEnd) done = sc.nameIs(C)
-          else if (sc.nameIs(V)) v = sc.text()
-          else if (sc.nameIs(Is)) inlineStr = sc.richText(Is)
+          else if (sc.nameIs(V)) { sc.text(if (inline) other else text); present |= !inline }
+          else if (sc.nameIs(Is)) { sc.richText(Is, if (inline) text else other); present |= inline }
           else if (sc.nameIs(F) && !sc.selfClosing) sc.skipTo(F)
         }
       }
-      try decodeCell(kind, style, v, inlineStr) catch {
+      try sink.cell(col, kind, style, if (present) text else null) catch {
         case e @ (_: NumberFormatException | _: IndexOutOfBoundsException |
-            _: java.time.DateTimeException) => undecodable(col, e)
+            _: java.time.DateTimeException) =>
+          sc.undecodable(s"cell ${XlsxWriter.colName(col)}$lastRowNum ($e)", e)
       }
     }
-
-    private def undecodable(col: Int, e: Throwable): Nothing =
-      sc.fail(s"cell ${XlsxWriter.colName(col)}$lastRowNum does not decode ($e)", e)
 
     private def finish(): Unit = { exhausted = true; sc.close() }
 
-    override def hasNext: Boolean = pendingGap > 0 || nextRow != null
-    override def next(): Array[Any] = {
-      if (pendingGap > 0) { pendingGap -= 1; EmptyRow }
-      else {
-        val out = nextRow
-        advance()
-        out
-      }
-    }
     override def close(): Unit = sc.close()
   }
 
@@ -341,62 +372,21 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
     else if (sc.valueIs(TypeError)) CellError
     else CellNumber
 
-  /** One cell's value from its type (a `Cell*` kind), style index
-    * ([[NoStyle]] when absent, [[BadStyle]] when not a number), `<v>` text
-    * and `<is>` rich text. */
-  private[excel] def decodeCell(kind: Int, style: Int, v: String,
-      inlineStr: String): Any = kind match {
-    case CellInline => if (inlineStr == null) null else unescapeOoxml(inlineStr)
-    case CellShared => if (v == null) null else sharedString(v.trim.toInt)
-    case CellStr =>
-      if (v == null) null else unescapeOoxml(v) // cached formula result
-    case CellBool =>
-      if (v == null) null
-      else java.lang.Boolean.valueOf(v.trim == "1" || v.trim.equalsIgnoreCase("true"))
-    case CellDate => // ISO-8601 date cell (ECMA-376 §18.17.4.7, rare but legal)
-      if (v == null || v.trim.isEmpty) null
-      else {
-        val s = v.trim
-        // xsd ISO-8601 legally carries an optional zone designator
-        // ("…T00:00:00Z", "…+09:00"). Offsets are normalized to UTC
-        // (same instant) for datetimes and dropped for pure dates
-        // (ISO_DATE accepts-and-ignores a trailing offset).
-        if (s.contains("T"))
-          try java.time.LocalDateTime.parse(s,
-            java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
-          catch { case _: java.time.format.DateTimeParseException =>
-            java.time.OffsetDateTime.parse(s,
-                java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
-              .withOffsetSameInstant(java.time.ZoneOffset.UTC)
-              .toLocalDateTime
-          }
-        else
-          java.time.LocalDate.parse(s,
-            java.time.format.DateTimeFormatter.ISO_DATE)
-      }
-    case CellError => null // error cell (#DIV/0! …)
-    case _ => // numeric (or date, per cell style)
-      if (v == null || v.isEmpty) null
-      else {
-        val d = v.trim.toDouble
-        styleKind(style) match {
-          case DateKind.DateOnly if d == math.floor(d) =>
-            ExcelSerialDate.toDate(d, date1904)
-          case DateKind.DateOnly | DateKind.DateTime =>
-            ExcelSerialDate.toDateTime(d, date1904)
-          case DateKind.None => java.lang.Double.valueOf(d)
-        }
-      }
-  }
+  private val styleKindOf: Array[DateKind.Value] = styleKinds.toArray
 
-  private def styleKind(style: Int): DateKind.Value =
-    if (style == BadStyle) throw new NumberFormatException("malformed cell style index")
-    else if (style >= 0 && style < styleKinds.length) styleKinds(style)
+  /** The date kind of a number cell's style index ([[NoStyle]] when it
+    * has none, which like an index past the table means a plain number);
+    * a [[BadStyle]] does not decode. */
+  private[excel] def styleKind(style: Int): DateKind.Value =
+    if (style >= 0 && style < styleKindOf.length) styleKindOf(style)
+    else if (style == BadStyle) throw new NumberFormatException("malformed cell style index")
     else DateKind.None
 
   // ------------------------------------------------------- shared strings
 
-  private def sharedString(i: Int): String = {
+  /** Shared string `i`, as the UTF-8 text a string cell holds: each entry
+    * is decoded once and handed to every cell that names it. */
+  private[excel] def sharedString(i: Int): UTF8String = {
     while (i >= sstTable.length && !sstDone) readSharedString()
     sstTable(i)
   }
@@ -418,7 +408,9 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
         return
       }
       if (!sc.isEnd && sc.nameIs(Si)) {
-        sstTable += unescapeOoxml(sc.richText(Si))
+        sc.richText(Si, sstText)
+        val utf8 = unescapedUtf8(sstText, sstUnescaped)
+        sstTable += UTF8String.fromBytes(java.util.Arrays.copyOf(utf8.bytes, utf8.length))
         counters.sstEntries += 1
         return
       }
@@ -506,6 +498,67 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
     } finally if (staged) file.delete()
 }
 
+/** Where a row scan hands each cell it reads. */
+private[excel] trait CellSink {
+  /** The wanted cell at 0-based column `col` of the current row: its kind
+    * (an `XlsxReader.Cell*`), style index and value text, null when the
+    * cell has none. The text is the scan's buffer, valid during the call
+    * only. A value that does not decode throws a NumberFormatException,
+    * IndexOutOfBoundsException or DateTimeException, which the scan turns
+    * into an error naming the cell. */
+  def cell(col: Int, kind: Int, style: Int, text: ByteBuilder): Unit
+}
+
+/** The boxed adapter: each cell of a row as a boxed value (see
+  * [[XlsxReader]]), through the same byte-level primitives as the typed
+  * readers. Inference and the header row read through it; the scan's data
+  * rows never do. */
+private[excel] final class BoxedCells(reader: XlsxReader) extends CellSink {
+  import XlsxReader._
+
+  private var cells = new Array[AnyRef](16) // the row being read; null past width
+
+  override def cell(col: Int, kind: Int, style: Int, text: ByteBuilder): Unit = {
+    val v = value(kind, style, text)
+    if (col >= cells.length)
+      cells = java.util.Arrays.copyOf(cells, math.max(col + 1, cells.length * 2))
+    cells(col) = v
+  }
+
+  private def value(kind: Int, style: Int, t: ByteBuilder): AnyRef =
+    if (t == null) null
+    else kind match {
+      case CellInline | CellStr => unescapeOoxml(t.utf8)
+      case CellShared => reader.sharedString(parseIndex(t)).toString
+      case CellBool => java.lang.Boolean.valueOf(isTrue(t))
+      case CellDate => isoDate(t)
+      case CellError => null // error cell (#DIV/0! …)
+      case _ => // numeric (or date, per cell style)
+        if (t.length == 0) null
+        else {
+          val d = parseNumber(t.bytes, 0, t.length)
+          val kind = reader.styleKind(style)
+          if (kind == DateKind.None) java.lang.Double.valueOf(d)
+          else if (kind == DateKind.DateOnly && d == math.floor(d))
+            java.time.LocalDate.ofEpochDay(ExcelSerialDate.epochDay(d, reader.date1904))
+          else java.time.LocalDateTime.of(
+            java.time.LocalDate.ofEpochDay(ExcelSerialDate.dateTimeDay(d, reader.date1904)),
+            java.time.LocalTime.ofNanoOfDay(ExcelSerialDate.millisOfDay(d) * 1000000L))
+        }
+    }
+
+  /** The row just read, `width` cells wide; clears the buffer. */
+  def row(width: Int): Array[Any] =
+    if (width == 0) EmptyRow
+    else {
+      val out = java.util.Arrays.copyOf(cells, width)
+      // skipped cells widen the row without growing `cells`
+      java.util.Arrays.fill(cells.asInstanceOf[Array[AnyRef]], 0,
+        math.min(width, cells.length), null)
+      out.asInstanceOf[Array[Any]]
+    }
+}
+
 /** Running totals of one reader's scans. */
 final class ScanCounters {
   var sheetBytes = 0L   // inflated worksheet bytes the scanner read
@@ -587,7 +640,170 @@ object XlsxReader {
   private[excel] final val NoStyle = -1
   private[excel] final val BadStyle = Int.MinValue
 
-  private val EmptyRow = Array.empty[Any]
+  private[excel] val EmptyRow = Array.empty[Any]
+
+  // ------------------------------------------------ cell text primitives
+
+  /** A number cell's text as `String.trim` then `Double.parseDouble` read
+    * it, NumberFormatException included. Plain decimals of at most 15
+    * digits (an optional `-`, digits, at most one `.`) take a loop of
+    * their own: their digits are an exact double m, and `m / 10^k` for
+    * k ≤ 15 fraction digits is one correctly rounded division, the double
+    * `parseDouble` returns. Anything else goes through `parseDouble`. */
+  def parseNumber(b: Array[Byte], from: Int, to: Int): Double = {
+    var p = from
+    var end = to
+    while (p < end && (b(p) & 0xff) <= ' ') p += 1
+    while (end > p && (b(end - 1) & 0xff) <= ' ') end -= 1
+    val neg = p < end && b(p) == '-'
+    var i = if (neg) p + 1 else p
+    if (end - i <= 16) {
+      var m = 0L
+      var digits = 0
+      var point = -1
+      while (i < end && {
+          val c = b(i)
+          if (c >= '0' && c <= '9') { m = m * 10 + (c - '0'); digits += 1; true }
+          else if (c == '.' && point < 0) { point = i; true }
+          else false
+        }) i += 1
+      if (i == end && digits > 0 && digits <= 15) {
+        val v = if (point < 0) m.toDouble else m.toDouble / Pow10(end - point - 1)
+        return if (neg) -v else v
+      }
+    }
+    java.lang.Double.parseDouble(new String(b, p, end - p, StandardCharsets.UTF_8))
+  }
+
+  private val Pow10 = Array.tabulate(16)(k => math.pow(10, k)) // exact up to 1e22
+
+  /** A shared-string cell's index, as `String.trim` then
+    * `Integer.parseInt` read it (NumberFormatException included). */
+  private[excel] def parseIndex(t: ByteBuilder): Int = {
+    var p = 0
+    var end = t.length
+    while (p < end && (t.bytes(p) & 0xff) <= ' ') p += 1
+    while (end > p && (t.bytes(end - 1) & 0xff) <= ' ') end -= 1
+    val i = XmlScanner.parseInt(t.bytes, p, end, Int.MinValue)
+    if (i != Int.MinValue) i else Integer.parseInt(t.utf8.trim)
+  }
+
+  /** A boolean cell's value: its trimmed text is `1` or, in any case,
+    * `true`. */
+  private[excel] def isTrue(t: ByteBuilder): Boolean = {
+    var p = 0
+    var end = t.length
+    val b = t.bytes
+    while (p < end && (b(p) & 0xff) <= ' ') p += 1
+    while (end > p && (b(end - 1) & 0xff) <= ' ') end -= 1
+    // `| 0x20` lowers an ASCII letter and maps no other byte onto one
+    (end - p == 1 && b(p) == '1') || (end - p == 4 && (b(p) | 0x20) == 't' &&
+      (b(p + 1) | 0x20) == 'r' && (b(p + 2) | 0x20) == 'u' && (b(p + 3) | 0x20) == 'e')
+  }
+
+  /** An ISO-8601 date cell (`t="d"`, ECMA-376 §18.17.4.7, rare but legal):
+    * null when blank, else a `LocalDate`, or a `LocalDateTime` when it has
+    * a time. xsd ISO-8601 legally carries an optional zone designator
+    * ("…T00:00:00Z", "…+09:00"). Offsets are normalized to UTC (same
+    * instant) for datetimes and dropped for pure dates (ISO_DATE
+    * accepts-and-ignores a trailing offset). */
+  private[excel] def isoDate(t: ByteBuilder): AnyRef = {
+    val s = t.utf8.trim
+    if (s.isEmpty) null
+    else if (s.contains("T"))
+      try java.time.LocalDateTime.parse(s,
+        java.time.format.DateTimeFormatter.ISO_LOCAL_DATE_TIME)
+      catch { case _: java.time.format.DateTimeParseException =>
+        java.time.OffsetDateTime.parse(s,
+            java.time.format.DateTimeFormatter.ISO_OFFSET_DATE_TIME)
+          .withOffsetSameInstant(java.time.ZoneOffset.UTC)
+          .toLocalDateTime
+      }
+    else java.time.LocalDate.parse(s, java.time.format.DateTimeFormatter.ISO_DATE)
+  }
+
+  /** A string cell's raw text with its `_xHHHH_` escapes decoded, as the
+    * UTF-8 `UTF8String.fromString(unescapeOoxml(raw))` holds: `src`
+    * itself when it holds no escape, else `out`. Two escapes that form a
+    * surrogate pair make one code point; a lone surrogate reads as `?`.
+    * Text that is not valid UTF-8 goes the `String` way, its bad bytes
+    * replaced as the JDK decoder replaces them. */
+  def unescapedUtf8(src: ByteBuilder, out: ByteBuilder): ByteBuilder = {
+    val b = src.bytes
+    val n = src.length
+    var ascii = true
+    var escaped = false
+    var i = 0
+    while (i < n) {
+      val c = b(i)
+      if (c < 0) ascii = false
+      else if (c == '_' && !escaped) escaped = escapeAt(b, i, n) >= 0
+      i += 1
+    }
+    if (!ascii && !validUtf8(b, n)) {
+      val s = unescapeOoxml(src.utf8).getBytes(StandardCharsets.UTF_8)
+      out.reset()
+      out.append(s, 0, s.length)
+      out
+    } else if (!escaped) src
+    else {
+      out.reset()
+      var high = -1 // a high surrogate waiting for its low half
+      i = 0
+      while (i < n) {
+        val c = escapeAt(b, i, n)
+        if (high >= 0 && !(c >= 0xdc00 && c <= 0xdfff)) { out += '?'; high = -1 }
+        if (c < 0) { out += b(i); i += 1 }
+        else {
+          if (high >= 0) { out.appendCodePoint(Character.toCodePoint(high.toChar, c.toChar)); high = -1 }
+          else if (c >= 0xd800 && c <= 0xdbff) high = c
+          else if (c >= 0xdc00 && c <= 0xdfff) out += '?'
+          else out.appendCodePoint(c)
+          i += 7
+        }
+      }
+      if (high >= 0) out += '?'
+      out
+    }
+  }
+
+  /** The char of an `_xHHHH_` escape at `b(i)`, or -1. */
+  private def escapeAt(b: Array[Byte], i: Int, n: Int): Int =
+    if (i + 6 < n && b(i) == '_' && b(i + 1) == 'x' && b(i + 6) == '_') {
+      var v = 0
+      var j = i + 2
+      while (j < i + 6) {
+        val d = Character.digit(b(j).toInt, 16)
+        if (d < 0 || b(j) < 0) return -1
+        v = v * 16 + d
+        j += 1
+      }
+      v
+    } else -1
+
+  /** Well-formed UTF-8 as the JDK decoder accepts it: no overlong form, no
+    * encoded surrogate, nothing past U+10FFFF. */
+  private def validUtf8(b: Array[Byte], n: Int): Boolean = {
+    def cont(i: Int): Boolean = i < n && (b(i) & 0xc0) == 0x80
+    var i = 0
+    while (i < n) {
+      val x = b(i) & 0xff
+      if (x < 0x80) i += 1
+      else if (x >= 0xc2 && x <= 0xdf) { if (!cont(i + 1)) return false; i += 2 }
+      else if (x >= 0xe0 && x <= 0xef) {
+        val y = if (i + 1 < n) b(i + 1) & 0xff else 0
+        if (!cont(i + 1) || !cont(i + 2) || (x == 0xe0 && y < 0xa0) || (x == 0xed && y >= 0xa0))
+          return false
+        i += 3
+      } else if (x >= 0xf0 && x <= 0xf4) {
+        val y = if (i + 1 < n) b(i + 1) & 0xff else 0
+        if (!cont(i + 1) || !cont(i + 2) || !cont(i + 3) || (x == 0xf0 && y < 0x90) ||
+          (x == 0xf4 && y >= 0x90)) return false
+        i += 4
+      } else return false
+    }
+    true
+  }
 
   /** Decode OOXML `_xHHHH_` character escapes (ECMA-376 §22.9.2.19 / the
     * convention openpyxl applies): `_x000D_` → CR etc. A literal leading

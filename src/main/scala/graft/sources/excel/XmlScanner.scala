@@ -52,7 +52,6 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
   private[this] var valFrom = 0
   private[this] var valTo = 0
   private[this] val attrText = new ByteBuilder
-  private[this] val textBuf = new ByteBuilder
 
   detectEncoding()
 
@@ -60,6 +59,11 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
 
   def fail(what: String, cause: Throwable): Nothing =
     throw new org.apache.spark.SparkException(s"Malformed XML: $what in ${where()}", cause)
+
+  /** A well-formed value that does not decode as its cell says it should. */
+  def undecodable(what: String, cause: Throwable): Nothing =
+    throw new org.apache.spark.SparkException(
+      s"Cell value does not decode: $what in ${where()}", cause)
 
   def truncated(): Nothing =
     throw new org.apache.spark.SparkException(
@@ -318,21 +322,21 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
 
   // --------------------------------------------------------------- text
 
-  /** The text of the current element (a start tag): that of all its
-    * descendants, CDATA included, entities decoded, line ends
-    * normalized; "" for an empty-element tag. Leaves `pos` after the
-    * element's end tag. */
-  def text(): String = {
-    textBuf.reset()
-    if (!selfClosing) appendText(textBuf)
-    textBuf.utf8
+  /** The text of the current element (a start tag) as UTF-8 bytes in
+    * `out`, which it replaces: that of all its descendants, CDATA
+    * included, entities decoded, line ends normalized; empty for an
+    * empty-element tag. Leaves `pos` after the element's end tag. */
+  def text(out: ByteBuilder): Unit = {
+    out.reset()
+    if (!selfClosing) appendText(out)
   }
 
-  /** Rich text (`<is>` or `<si>`, the current start tag named `outer`):
-    * the `<t>` runs concatenated, those inside `<rPh>` phonetic runs
-    * excluded — furigana annotations, not cell text (openpyxl's rule). */
-  def richText(outer: Array[Byte]): String = {
-    textBuf.reset()
+  /** Rich text (`<is>` or `<si>`, the current start tag named `outer`)
+    * into `out`, which it replaces: the `<t>` runs concatenated, those
+    * inside `<rPh>` phonetic runs excluded — furigana annotations, not
+    * cell text (openpyxl's rule). */
+  def richText(outer: Array[Byte], out: ByteBuilder): Unit = {
+    out.reset()
     if (!selfClosing) {
       var rPhDepth = 0
       var done = false
@@ -342,13 +346,40 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
           if (nameIs(outer)) done = true
           else if (nameIs(RPh) && rPhDepth > 0) rPhDepth -= 1
         } else if (nameIs(T)) {
-          if (rPhDepth == 0 && !selfClosing) appendText(textBuf)
+          if (rPhDepth == 0 && !selfClosing) appendText(out)
           else if (!selfClosing) skipTo(T)
         } else if (nameIs(RPh) && !selfClosing) rPhDepth += 1
       }
     }
-    textBuf.utf8
   }
+
+  /** The value of the cell whose start tag was just read, when it is
+    * spelled the way writers spell it: `<v>text</v></c>` or, with
+    * `inline`, `<is><t>text</t></is></c>` (the `<t>` may carry
+    * `xml:space="preserve"`), the text free of markup, entities and CR and
+    * already in the window. Then the text replaces `out`, the scanner
+    * steps past `</c>` and the answer is true; otherwise nothing moves and
+    * the caller reads the cell tag by tag. */
+  def plainCellValue(inline: Boolean, out: ByteBuilder): Boolean = {
+    val b = buf
+    val l = lim
+    var p = pos
+    if (!inline && litAt(p, VOpen)) p += VOpen.length
+    else if (inline && litAt(p, IsTOpen)) p += IsTOpen.length
+    else if (inline && litAt(p, IsTPreserveOpen)) p += IsTPreserveOpen.length
+    else return false
+    val from = p
+    while (p < l && { val c = b(p); c != '<' && c != '&' && c != '\r' }) p += 1
+    val close = if (inline) IsTClose else VClose
+    if (p == l || b(p) != '<' || !litAt(p, close)) return false
+    out.reset()
+    out.append(b, from, p - from)
+    pos = p + close.length
+    true
+  }
+
+  private def litAt(p: Int, lit: Array[Byte]): Boolean =
+    p + lit.length <= lim && matchAt(buf, p, lit)
 
   private def appendText(out: ByteBuilder): Unit = {
     var depth = 0
@@ -512,6 +543,11 @@ private[excel] object XmlScanner {
   private val EncodingAttr = """encoding\s*=\s*(["'])([^"']*)\1""".r
   private val T = bytes("t")
   private val RPh = bytes("rPh")
+  private val VOpen = bytes("<v>")
+  private val VClose = bytes("</v></c>")
+  private val IsTOpen = bytes("<is><t>")
+  private val IsTPreserveOpen = bytes("<is><t xml:space=\"preserve\">")
+  private val IsTClose = bytes("</t></is></c>")
 
   private def matchAt(b: Array[Byte], p: Int, lit: Array[Byte]): Boolean = {
     var i = 0
@@ -529,7 +565,7 @@ private[excel] object XmlScanner {
   private def isAsciiLetter(c: Byte): Boolean = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
 
   /** `Integer.parseInt` over ASCII bytes, `bad` where it would throw. */
-  private def parseInt(b: Array[Byte], from: Int, to: Int, bad: Int): Int = {
+  private[excel] def parseInt(b: Array[Byte], from: Int, to: Int, bad: Int): Int = {
     var i = from
     val neg = i < to && b(i) == '-'
     if (i < to && (b(i) == '-' || b(i) == '+')) i += 1
@@ -547,8 +583,8 @@ private[excel] object XmlScanner {
   }
 }
 
-/** A growable byte array: decoded text on its way to a `String`, and a
-  * sheet's encoded XML on its way to deflate. */
+/** A growable byte array: a cell's decoded text on its way to a row, and
+  * a sheet's encoded XML on its way to deflate. */
 private[excel] final class ByteBuilder {
   var bytes = new Array[Byte](256)
   var length = 0
@@ -577,10 +613,22 @@ private[excel] final class ByteBuilder {
     length += n
   }
 
-  def appendCodePoint(cp: Int): Unit = {
-    val s = new String(Character.toChars(cp)).getBytes(StandardCharsets.UTF_8)
-    append(s, 0, s.length)
-  }
+  /** Appends a code point (not a surrogate) as UTF-8. */
+  def appendCodePoint(cp: Int): Unit =
+    if (cp < 0x80) this += cp.toByte
+    else if (cp < 0x800) {
+      this += (0xc0 | cp >> 6).toByte
+      this += (0x80 | cp & 0x3f).toByte
+    } else if (cp < 0x10000) {
+      this += (0xe0 | cp >> 12).toByte
+      this += (0x80 | cp >> 6 & 0x3f).toByte
+      this += (0x80 | cp & 0x3f).toByte
+    } else {
+      this += (0xf0 | cp >> 18).toByte
+      this += (0x80 | cp >> 12 & 0x3f).toByte
+      this += (0x80 | cp >> 6 & 0x3f).toByte
+      this += (0x80 | cp & 0x3f).toByte
+    }
 
   def utf8: String = new String(bytes, 0, length, StandardCharsets.UTF_8)
 

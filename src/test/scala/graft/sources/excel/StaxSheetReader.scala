@@ -8,9 +8,10 @@ import scala.collection.mutable.ArrayBuffer
 /** The StAX sheet and shared-strings reader that [[XmlScanner]] replaced,
   * kept as the executable spec of `XlsxReader.rowIterator`,
   * `lastRowNumber` and the shared-strings table: `SheetScannerProps`
-  * checks the two agree. Cell values go through the same
-  * `XlsxReader.decodeCell`, so what is specified here is the XML reading:
-  * which rows, cells and texts a part holds. Shared strings are parsed
+  * checks the two agree. Cell values go through [[CellSpec.decodeCell]],
+  * the decoding the scanner's byte-level cell primitives replaced, so the
+  * comparison covers both the XML reading (which rows, cells and texts a
+  * part holds) and the boxed values made of them. Shared strings are parsed
   * whole, up front, from this reader's own StAX pass.
   */
 final class StaxSheetReader(reader: XlsxReader) {
@@ -152,7 +153,7 @@ final class StaxSheetReader(reader: XlsxReader) {
       }
       if (kind == XlsxReader.CellShared)
         (if (v == null) null else sharedStrings(v.trim.toInt))
-      else reader.decodeCell(kind, style, v, inlineStr)
+      else CellSpec.decodeCell(reader, kind, style, v, inlineStr)
     }
 
     def readRow(): Array[Any] = {
