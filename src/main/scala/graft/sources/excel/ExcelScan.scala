@@ -389,11 +389,9 @@ class ExcelPartitionReader(filePath: String, fullSchema: StructType,
   }
 
   // `_sheet` and `_file_path` are the same in every row of the partition
-  private def utf8(s: String) =
-    org.apache.spark.unsafe.types.UTF8String.fromBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   private val cells = new TypedCells(reader, requiredSchema, indices, indices.map {
-    case SheetIdx => utf8(resolvedSheet.name)
-    case FilePathIdx => utf8(filePath)
+    case SheetIdx => org.apache.spark.unsafe.types.UTF8String.fromString(resolvedSheet.name)
+    case FilePathIdx => org.apache.spark.unsafe.types.UTF8String.fromString(filePath)
     case _ => null
   })
 
@@ -489,9 +487,9 @@ private[excel] final class TypedCells(reader: XlsxReader, schema: StructType,
     case CellNumber =>
       if (t.length > 0) {
         val d = parseNumber(t.bytes, 0, t.length)
-        val dateKind = reader.styleKind(style)
+        val dateKind = reader.serialKind(style, d)
         if (dateKind == DateKind.None) number(o, d)
-        else if (dateKind == DateKind.DateOnly && d == math.floor(d))
+        else if (dateKind == DateKind.DateOnly)
           date(o, ExcelSerialDate.epochDay(d, date1904), -1L)
         else date(o, ExcelSerialDate.dateTimeDay(d, date1904), ExcelSerialDate.millisOfDay(d))
       }

@@ -298,8 +298,7 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
       var present = false
       if (!sc.selfClosing) {
         val inline = kind == CellInline
-        present = sc.plainCellValue(inline, text)
-        var done = present
+        var done = false
         while (!done) {
           if (!sc.nextTag()) sc.truncated()
           if (sc.isEnd) done = sc.nameIs(C)
@@ -374,13 +373,17 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
 
   private val styleKindOf: Array[DateKind.Value] = styleKinds.toArray
 
-  /** The date kind of a number cell's style index ([[NoStyle]] when it
-    * has none, which like an index past the table means a plain number);
-    * a [[BadStyle]] does not decode. */
-  private[excel] def styleKind(style: Int): DateKind.Value =
-    if (style >= 0 && style < styleKindOf.length) styleKindOf(style)
-    else if (style == BadStyle) throw new NumberFormatException("malformed cell style index")
-    else DateKind.None
+  /** What a number cell with style index `style` and value `d` reads as:
+    * a plain number ([[NoStyle]], or an index past the table), a date (a
+    * date-only format and a whole serial) or a date-time (any other date
+    * or time format). A [[BadStyle]] does not decode. */
+  private[excel] def serialKind(style: Int, d: Double): DateKind.Value = {
+    val kind =
+      if (style >= 0 && style < styleKindOf.length) styleKindOf(style)
+      else if (style == BadStyle) throw new NumberFormatException("malformed cell style index")
+      else DateKind.None
+    if (kind == DateKind.DateOnly && d != math.floor(d)) DateKind.DateTime else kind
+  }
 
   // ------------------------------------------------------- shared strings
 
@@ -537,9 +540,9 @@ private[excel] final class BoxedCells(reader: XlsxReader) extends CellSink {
         if (t.length == 0) null
         else {
           val d = parseNumber(t.bytes, 0, t.length)
-          val kind = reader.styleKind(style)
+          val kind = reader.serialKind(style, d)
           if (kind == DateKind.None) java.lang.Double.valueOf(d)
-          else if (kind == DateKind.DateOnly && d == math.floor(d))
+          else if (kind == DateKind.DateOnly)
             java.time.LocalDate.ofEpochDay(ExcelSerialDate.epochDay(d, reader.date1904))
           else java.time.LocalDateTime.of(
             java.time.LocalDate.ofEpochDay(ExcelSerialDate.dateTimeDay(d, reader.date1904)),
@@ -645,11 +648,12 @@ object XlsxReader {
   // ------------------------------------------------ cell text primitives
 
   /** A number cell's text as `String.trim` then `Double.parseDouble` read
-    * it, NumberFormatException included. Plain decimals of at most 15
-    * digits (an optional `-`, digits, at most one `.`) take a loop of
-    * their own: their digits are an exact double m, and `m / 10^k` for
-    * k ≤ 15 fraction digits is one correctly rounded division, the double
-    * `parseDouble` returns. Anything else goes through `parseDouble`. */
+    * it, NumberFormatException included. Plain decimals (an optional `-`,
+    * then at most 18 digits and at most one `.`) whose digits make an
+    * integer m ≤ 2^53 take a loop of their own: m and 10^k (k ≤ 17
+    * fraction digits) are exact doubles, so `m / 10^k` is one correctly
+    * rounded division, the double `parseDouble` returns. Anything else
+    * goes through `parseDouble`. */
   def parseNumber(b: Array[Byte], from: Int, to: Int): Double = {
     var p = from
     var end = to
@@ -657,7 +661,7 @@ object XlsxReader {
     while (end > p && (b(end - 1) & 0xff) <= ' ') end -= 1
     val neg = p < end && b(p) == '-'
     var i = if (neg) p + 1 else p
-    if (end - i <= 16) {
+    if (end - i <= 18) {
       var m = 0L
       var digits = 0
       var point = -1
@@ -667,7 +671,7 @@ object XlsxReader {
           else if (c == '.' && point < 0) { point = i; true }
           else false
         }) i += 1
-      if (i == end && digits > 0 && digits <= 15) {
+      if (i == end && digits > 0 && m <= (1L << 53)) {
         val v = if (point < 0) m.toDouble else m.toDouble / Pow10(end - point - 1)
         return if (neg) -v else v
       }
@@ -675,7 +679,7 @@ object XlsxReader {
     java.lang.Double.parseDouble(new String(b, p, end - p, StandardCharsets.UTF_8))
   }
 
-  private val Pow10 = Array.tabulate(16)(k => math.pow(10, k)) // exact up to 1e22
+  private val Pow10 = Array.tabulate(18)(k => math.pow(10, k)) // exact up to 1e22
 
   /** A shared-string cell's index, as `String.trim` then
     * `Integer.parseInt` read it (NumberFormatException included). */

@@ -353,34 +353,6 @@ private[excel] final class XmlScanner(raw: InputStream, onBytes: Int => Unit,
     }
   }
 
-  /** The value of the cell whose start tag was just read, when it is
-    * spelled the way writers spell it: `<v>text</v></c>` or, with
-    * `inline`, `<is><t>text</t></is></c>` (the `<t>` may carry
-    * `xml:space="preserve"`), the text free of markup, entities and CR and
-    * already in the window. Then the text replaces `out`, the scanner
-    * steps past `</c>` and the answer is true; otherwise nothing moves and
-    * the caller reads the cell tag by tag. */
-  def plainCellValue(inline: Boolean, out: ByteBuilder): Boolean = {
-    val b = buf
-    val l = lim
-    var p = pos
-    if (!inline && litAt(p, VOpen)) p += VOpen.length
-    else if (inline && litAt(p, IsTOpen)) p += IsTOpen.length
-    else if (inline && litAt(p, IsTPreserveOpen)) p += IsTPreserveOpen.length
-    else return false
-    val from = p
-    while (p < l && { val c = b(p); c != '<' && c != '&' && c != '\r' }) p += 1
-    val close = if (inline) IsTClose else VClose
-    if (p == l || b(p) != '<' || !litAt(p, close)) return false
-    out.reset()
-    out.append(b, from, p - from)
-    pos = p + close.length
-    true
-  }
-
-  private def litAt(p: Int, lit: Array[Byte]): Boolean =
-    p + lit.length <= lim && matchAt(buf, p, lit)
-
   private def appendText(out: ByteBuilder): Unit = {
     var depth = 0
     while (true) {
@@ -543,11 +515,6 @@ private[excel] object XmlScanner {
   private val EncodingAttr = """encoding\s*=\s*(["'])([^"']*)\1""".r
   private val T = bytes("t")
   private val RPh = bytes("rPh")
-  private val VOpen = bytes("<v>")
-  private val VClose = bytes("</v></c>")
-  private val IsTOpen = bytes("<is><t>")
-  private val IsTPreserveOpen = bytes("<is><t xml:space=\"preserve\">")
-  private val IsTClose = bytes("</t></is></c>")
 
   private def matchAt(b: Array[Byte], p: Int, lit: Array[Byte]): Boolean = {
     var i = 0

@@ -77,7 +77,9 @@ object CellReaderProps extends Properties("excel.cellReaders") {
       "0.999999999", "0.9999999999", "-0.5", "2147483648", "-2147483649",
       "9223372036854775808", "1e15", "-1e15", "365241780471", "-365243219162", "3.7e11",
       "-3.7e11", "1e17", "-9.3e18", "٣", "0x1p3", "1d", "1_000", "--1", "-", ".", "1.", ".5", "-.5", "1..2", "0.1.", "-0.0",
-      "000000000000000.1", "123456789012345.", "0.123456789012345", "9007199254740993"))
+      "000000000000000.1", "123456789012345.", "0.123456789012345", "9007199254740993",
+      "9007199254740992", "900719925474099.3", "0.9007199254740993", "-9.007199254740992",
+      "41407.25745370371", "1241197.2119140625"))
 
   private val stringText: Gen[String] = Gen.chooseNum(0, 6).flatMap(n =>
     Gen.listOfN(n, Gen.frequency(

@@ -3,15 +3,20 @@ package graft.sources.excel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint, not a value test: the scan takes a sheet's bytes to
-  * Spark's row through typed cell readers. A `GenericInternalRow`, the
-  * boxed `ExcelSchema.convert`, a `UTF8String.fromString` or a boxed
-  * `Double`/`Integer`/`Long` on the scan path would bring back the per-cell
-  * detours that path removed.
+  * Spark's row through typed cell readers. A `GenericInternalRow` or the
+  * boxed `ExcelSchema.convert` on the scan path, or a
+  * `UTF8String.fromString` or a boxed `Double`/`Integer`/`Long` in its
+  * per-cell code, would bring back the per-cell detours that path removed.
   *
   * The scan path is `ExcelScan.scala` from `ExcelPartitionReader` through
   * `TypedCells`, and all of `XlsxReader.scala` but the boxed adapter,
   * `BoxedCells`, which inference and the header row read through and
-  * which is exempt by name. */
+  * which is exempt by name. Its per-cell code is `TypedCells` and the same
+  * part of `XlsxReader.scala` (the `RowScan` loop and the cell text
+  * primitives). `ExcelPartitionReader`'s own code runs once a partition
+  * (the two constant columns are made there with `UTF8String.fromString`)
+  * or hands each row on from `TypedCells`, so the boxing rule leaves it
+  * out. */
 class ReadPathLintSpec extends AnyFunSuite {
 
   private val dir = java.nio.file.Paths.get("src/main/scala/graft/sources/excel")
@@ -32,20 +37,23 @@ class ReadPathLintSpec extends AnyFunSuite {
     start until (if (end < 0) ls.length else end)
   }
 
-  /** The scan path: (file, line numbers). */
-  private def scanPath: Seq[(String, IndexedSeq[String], Seq[Int])] = {
+  /** The scan path and its per-cell code: (file, lines, line numbers). */
+  private def regions: (Seq[(String, IndexedSeq[String], Seq[Int])],
+      Seq[(String, IndexedSeq[String], Seq[Int])]) = {
     val scan = lines("ExcelScan.scala")
     val reader = lines("XlsxReader.scala")
     val boxed = region(reader, "class BoxedCells", "class ")
     assert(boxed.length > 1)
-    Seq(("ExcelScan.scala", scan,
-        region(scan, "class ExcelPartitionReader", "object ExcelScanMetrics")),
-      ("XlsxReader.scala", reader, reader.indices.filterNot(boxed.contains)))
+    val readerPath = ("XlsxReader.scala", reader, reader.indices.filterNot(boxed.contains))
+    (Seq(("ExcelScan.scala", scan,
+        region(scan, "class ExcelPartitionReader", "object ExcelScanMetrics")), readerPath),
+      Seq(("ExcelScan.scala", scan, region(scan, "class TypedCells", "object TypedCells")),
+        readerPath))
   }
 
-  private val Site = ("""\bGenericInternalRow\b|\bExcelSchema\s*\.\s*convert\b|""" +
-    """\bUTF8String\s*\.\s*fromString\b|\bDouble\s*\.\s*valueOf\b|\bInteger\s*\.\s*valueOf\b|""" +
-    """\bLong\s*\.\s*valueOf\b""").r
+  private val RowSite = """\bGenericInternalRow\b|\bExcelSchema\s*\.\s*convert\b""".r
+  private val CellSite = ("""\bUTF8String\s*\.\s*fromString\b|\bDouble\s*\.\s*valueOf\b|""" +
+    """\bInteger\s*\.\s*valueOf\b|\bLong\s*\.\s*valueOf\b""").r
 
   private def code(line: String): String = {
     val t = line.trim
@@ -56,21 +64,27 @@ class ReadPathLintSpec extends AnyFunSuite {
     }
   }
 
+  private def sites(paths: Seq[(String, IndexedSeq[String], Seq[Int])],
+      site: scala.util.matching.Regex): Seq[String] = for {
+    (name, ls, range) <- paths
+    i <- range
+    m <- site.findFirstIn(code(ls(i)))
+  } yield s"$name:${i + 1} ($m)"
+
   test("the scan path neither builds generic rows nor boxes cells") {
-    val sites = for {
-      (name, ls, range) <- scanPath
-      i <- range
-      m <- Site.findFirstIn(code(ls(i)))
-    } yield s"$name:${i + 1} ($m)"
-    assert(sites.isEmpty, s"found: ${sites.mkString("; ")}")
+    val (scanPath, perCell) = regions
+    val found = sites(scanPath, RowSite) ++ sites(perCell, CellSite)
+    assert(found.isEmpty, s"found: ${found.mkString("; ")}")
   }
 
   test("the lint sees the scan path and the boxed adapter it exempts") {
-    val paths = scanPath
-    assert(paths.head._3.exists(i => paths.head._2(i).contains("class TypedCells")))
+    val (scanPath, perCell) = regions
+    assert(scanPath.head._3.exists(i => scanPath.head._2(i).contains("class TypedCells")))
+    assert(perCell.head._3.exists(i => perCell.head._2(i).contains("def cell(")))
+    assert(!perCell.head._3.exists(i => perCell.head._2(i).contains("class ExcelPartitionReader")))
     val reader = lines("XlsxReader.scala")
     val boxed = region(reader, "class BoxedCells", "class ")
-    assert(boxed.exists(i => Site.findFirstIn(code(reader(i))).nonEmpty),
+    assert(boxed.exists(i => CellSite.findFirstIn(code(reader(i))).nonEmpty),
       "the boxed adapter boxes, so the region exempts what it should")
   }
 }
