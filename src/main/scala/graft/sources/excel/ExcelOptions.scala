@@ -19,9 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Kept as a plain lowercase-keyed Map so it serializes to executors.
   * Every option is parsed once, when this is built (on the driver, at
   * `load()` / `save()`), so a bad value fails there naming the option and
-  * the value. The stream-admission options (`maxFilesPerTrigger`,
-  * `maxBytesPerTrigger`, `maxFileAgeMs`) are parsed when the stream first
-  * reads them: a bad one fails the started query.
+  * the value.
   */
 final case class ExcelOptions(options: Map[String, String]) {
 
@@ -76,7 +74,7 @@ final case class ExcelOptions(options: Map[String, String]) {
   /** Streaming admission control: max new files admitted per micro-batch
     * (extension; unset = all available; must be positive, matching
     * FileStreamSource's validation). */
-  lazy val maxFilesPerTrigger: Option[Int] = positive("maxFilesPerTrigger").map(_.toInt)
+  val maxFilesPerTrigger: Option[Int] = positive("maxFilesPerTrigger").map(_.toInt)
 
   /** Streaming admission control by VOLUME: max cumulative on-disk bytes
     * of new files admitted per micro-batch (extension, the knob
@@ -85,7 +83,7 @@ final case class ExcelOptions(options: Map[String, String]) {
     * batch sized for fifty 1 MB ones). At least one file is always
     * admitted so an oversized file can't wedge the stream. Composes with
     * `maxFilesPerTrigger`: both bounds apply. */
-  lazy val maxBytesPerTrigger: Option[Long] = positive("maxBytesPerTrigger", Long.MaxValue)
+  val maxBytesPerTrigger: Option[Long] = positive("maxBytesPerTrigger", Long.MaxValue)
 
   /** STRICT reference parity for listings: admit `.xlsx` only, erroring
     * out the `.xlsm` superset this connector otherwise accepts (the
@@ -158,7 +156,7 @@ final case class ExcelOptions(options: Map[String, String]) {
     * FileStreamSource `maxFileAge` makes the same one): a file landing
     * with an mtime older than the window is never read. Unset = exact
     * offsets, no expiry. */
-  lazy val maxFileAgeMs: Option[Long] = positive("maxFileAgeMs", Long.MaxValue)
+  val maxFileAgeMs: Option[Long] = positive("maxFileAgeMs", Long.MaxValue)
 
   /** When true, a schema column absent from a file reads as nulls instead
     * of erroring (extension — needed for merged multi-file schemas; default

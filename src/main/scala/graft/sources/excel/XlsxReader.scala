@@ -33,8 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A row scan ([[XlsxReader.RowScan]]) hands each wanted cell's kind, style
   * and UTF-8 value text to a [[CellSink]]: the scan's typed cell readers
-  * ([[TypedCells]]) write it into Spark's row, and [[BoxedCells]] (behind
-  * `rowIterator`: inference and the header row) makes a boxed value of it:
+  * ([[TypedCells]]) write it into Spark's row, inference's sink
+  * ([[SampleCells]]) folds its kind into a column type, and [[BoxedCells]]
+  * (the header row, and `rowIterator`) makes a boxed value of it:
   * `null`, `java.lang.Boolean`, `java.lang.Double`, `String`,
   * `java.time.LocalDate` (date-only format, no time fraction) or
   * `java.time.LocalDateTime` (any other date/time format). Sparse cells and
@@ -146,7 +147,7 @@ final class XlsxReader private (file: File, name: String, staged: Boolean)
 
   /** Stream rows whose dense (1-based) row number is in
     * [startRow, endRowExcl), each cell as the boxed value [[BoxedCells]]
-    * makes of it (the adapter inference and the header row read through).
+    * makes of it.
     * Because interior gaps materialize as empty arrays, the k-th dense row
     * IS sheet row k, so ranges over emitted positions and over sheet row
     * numbers coincide. Rows before the range are stepped over without
@@ -514,8 +515,9 @@ private[excel] trait CellSink {
 
 /** The boxed adapter: each cell of a row as a boxed value (see
   * [[XlsxReader]]), through the same byte-level primitives as the typed
-  * readers. Inference and the header row read through it; the scan's data
-  * rows never do. */
+  * readers. The header row (of a scan and of inference) and `rowIterator`
+  * read through it; the scan's data rows and inference's sample rows never
+  * do. */
 private[excel] final class BoxedCells(reader: XlsxReader) extends CellSink {
   import XlsxReader._
 

@@ -181,14 +181,9 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("non-positive maxBytesPerTrigger is rejected") {
     val dir = Files.createTempDirectory("graft-negb").toFile
     writeFile(dir, "x.xlsx", Seq(1 -> "a"))
-    val q = spark.readStream.format("excel").schema(idName)
+    val e = intercept[Exception](spark.readStream.format("excel").schema(idName)
       .option("maxBytesPerTrigger", "-5")
-      .load(dir.getAbsolutePath)
-      .writeStream.format("noop")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-negb-ck").toFile.getAbsolutePath)
-      .start()
-    val e = intercept[Exception](q.processAllAvailable())
+      .load(dir.getAbsolutePath))
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("must be positive")), e.toString)
@@ -197,16 +192,10 @@ class ExcelStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("non-positive maxFilesPerTrigger is rejected") {
     val dir = Files.createTempDirectory("graft-neg").toFile
     writeFile(dir, "x.xlsx", Seq(1 -> "a"))
-    // the option is read on the streaming thread → failure surfaces when
-    // the first batch is awaited, as a terminated query
-    val q = spark.readStream.format("excel").schema(idName)
+    // options are parsed when `load()` builds them, before any query starts
+    val e = intercept[Exception](spark.readStream.format("excel").schema(idName)
       .option("maxFilesPerTrigger", "0")
-      .load(dir.getAbsolutePath)
-      .writeStream.format("noop")
-      .option("checkpointLocation",
-        Files.createTempDirectory("graft-neg-ck").toFile.getAbsolutePath)
-      .start()
-    val e = intercept[Exception](q.processAllAvailable())
+      .load(dir.getAbsolutePath))
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("must be positive")), e.toString)

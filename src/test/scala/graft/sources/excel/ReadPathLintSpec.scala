@@ -3,20 +3,25 @@ package graft.sources.excel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source lint, not a value test: the scan takes a sheet's bytes to
-  * Spark's row through typed cell readers. A `GenericInternalRow` or the
-  * boxed `ExcelSchema.convert` on the scan path, or a
-  * `UTF8String.fromString` or a boxed `Double`/`Integer`/`Long` in its
-  * per-cell code, would bring back the per-cell detours that path removed.
+  * Spark's row through typed cell readers, and inference folds them into
+  * column types. A `GenericInternalRow` or the boxed
+  * `ExcelSchema.convert` on the scan path, a `UTF8String.fromString` or a
+  * boxed `Double`/`Integer`/`Long` in its per-cell code, or a decoded
+  * string, a boxed value or a `java.time` value in inference's per-cell
+  * code would bring back the per-cell detours those paths removed.
   *
   * The scan path is `ExcelScan.scala` from `ExcelPartitionReader` through
   * `TypedCells`, and all of `XlsxReader.scala` but the boxed adapter,
-  * `BoxedCells`, which inference and the header row read through and
+  * `BoxedCells`, which the header row and `rowIterator` read through and
   * which is exempt by name. Its per-cell code is `TypedCells` and the same
   * part of `XlsxReader.scala` (the `RowScan` loop and the cell text
   * primitives). `ExcelPartitionReader`'s own code runs once a partition
   * (the two constant columns are made there with `UTF8String.fromString`)
   * or hands each row on from `TypedCells`, so the boxing rule leaves it
-  * out. */
+  * out. Inference's per-cell code is `ExcelSchema.scala` from the typed
+  * `ColumnType` through its sink, `SampleCells`: it opens no shared
+  * string, unescapes and decodes no text, and makes no boxed or
+  * `java.time` value. */
 class ReadPathLintSpec extends AnyFunSuite {
 
   private val dir = java.nio.file.Paths.get("src/main/scala/graft/sources/excel")
@@ -51,9 +56,22 @@ class ReadPathLintSpec extends AnyFunSuite {
         readerPath))
   }
 
+  /** Inference's per-cell code: `ExcelSchema.scala` from the typed
+    * `ColumnType` to the file's end, where its sink `SampleCells` is. */
+  private def inference: (String, IndexedSeq[String], Seq[Int]) = {
+    val schema = lines("ExcelSchema.scala")
+    val start = schema.indexWhere(l => !l.startsWith(" ") && l.contains("class ColumnType"))
+    assert(start >= 0, "no top-level 'class ColumnType'")
+    ("ExcelSchema.scala", schema, start until schema.length)
+  }
+
   private val RowSite = """\bGenericInternalRow\b|\bExcelSchema\s*\.\s*convert\b""".r
   private val CellSite = ("""\bUTF8String\s*\.\s*fromString\b|\bDouble\s*\.\s*valueOf\b|""" +
     """\bInteger\s*\.\s*valueOf\b|\bLong\s*\.\s*valueOf\b""").r
+
+  private val InferSite = ("""\bsharedString\b|\bunescapeOoxml\b|\bunescapedUtf8\b|\.\s*utf8\b|""" +
+    """\bDouble\s*\.\s*valueOf\b|\bBoolean\s*\.\s*valueOf\b|\bLocalDate\s*\.\s*ofEpochDay\b|""" +
+    """\bLocalDateTime\s*\.\s*of\b""").r
 
   private def code(line: String): String = {
     val t = line.trim
@@ -77,6 +95,11 @@ class ReadPathLintSpec extends AnyFunSuite {
     assert(found.isEmpty, s"found: ${found.mkString("; ")}")
   }
 
+  test("inference decodes no string and boxes no value per cell") {
+    val found = sites(Seq(inference), InferSite)
+    assert(found.isEmpty, s"found: ${found.mkString("; ")}")
+  }
+
   test("the lint sees the scan path and the boxed adapter it exempts") {
     val (scanPath, perCell) = regions
     assert(scanPath.head._3.exists(i => scanPath.head._2(i).contains("class TypedCells")))
@@ -86,5 +109,10 @@ class ReadPathLintSpec extends AnyFunSuite {
     val boxed = region(reader, "class BoxedCells", "class ")
     assert(boxed.exists(i => CellSite.findFirstIn(code(reader(i))).nonEmpty),
       "the boxed adapter boxes, so the region exempts what it should")
+    assert(boxed.exists(i => InferSite.findFirstIn(code(reader(i))).nonEmpty),
+      "the boxed adapter decodes strings, so the inference rule would see one")
+    val (_, schema, range) = inference
+    Seq("class SampleCells", "def cell(", "def add(").foreach(decl =>
+      assert(range.exists(i => schema(i).contains(decl)), s"the inference region holds '$decl'"))
   }
 }
